@@ -2,8 +2,9 @@ package graft
 
 import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload}
 import graft.sinks.{CircuitBreaker, EventSink, FailoverSink, ParquetDirSink, RetryPolicy}
-import graft.streaming.PipelineMonitor
+import graft.streaming.{PipelineMonitor, StreamingCollector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, octet_length}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The assembled collector dataflow — what a reference operator would run
@@ -14,7 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *            → good sink (with R1-R4 retry/failover)
   *   envelopes → bad rows (F6/F7) → bad sink
   *
-  * plus a [[PipelineMonitor]] listener for /health (R5/R9). Sources and
+  * The two legs run as [[StreamingCollector.collect]]'s one micro-batch
+  * body, overlapped like every other collector entry point, plus a
+  * [[PipelineMonitor]] listener for /health (R5/R9). Sources and
   * sinks are injected: parquet/file here, Kafka/Kinesis adapters in prod
   * (same `EventSink` contract).
   */
@@ -35,28 +38,19 @@ object CollectorApp {
     val monitor = new PipelineMonitor
     spark.streams.addListener(monitor)
 
-    val query = envelopes.writeStream
+    // the reference's sink gate (`SplitBatch.scala:87`): only events
+    // whose SERIALIZED size fits go to the good stream — the size is
+    // already on the encoded row, no second serialization. Oversized
+    // events surface in badRows (SizeViolation); splittable POSTs would
+    // re-enter as sub-records via SplitBatch.splitTp2/routeWire
+    // (conservative here: bad-row them — no record on the good wire ever
+    // exceeds maxBytes, the contract every sink assumes).
+    val query = StreamingCollector.collect(envelopes, checkpointDir, trigger)(
+      (batch, id) => goodSink.write(
+        ThriftPayload.encode(CollectorPipeline.payloads(batch, cfg)).toDF()
+          .filter(octet_length(col("thrift")) < cfg.maxBytes), id),
+      (batch, id) => badSink.write(CollectorPipeline.badRows(batch, cfg), id))
       .queryName("graft-collector")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          // the reference's sink gate (`SplitBatch.scala:87`): only events
-          // whose SERIALIZED size fits go to the good stream — the size is
-          // already on the encoded row, no second serialization. Oversized
-          // events surface in badRows (SizeViolation); splittable POSTs
-          // would re-enter as sub-records via SplitBatch.splitTp2/routeWire
-          // (conservative here: bad-row them — no record on the good wire
-          // ever exceeds maxBytes, the contract every sink assumes).
-          val wire = ThriftPayload.encode(CollectorPipeline.payloads(batch, cfg)).toDF()
-            .filter(org.apache.spark.sql.functions.octet_length(
-              org.apache.spark.sql.functions.col("thrift")) < cfg.maxBytes)
-          goodSink.write(wire, batchId)
-          badSink.write(CollectorPipeline.badRows(batch, cfg), batchId)
-        } finally batch.unpersist()
-        ()
-      }
       .start()
     Running(query, monitor)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** One tracker element's placement after splitting: element `idx` of
   * request `event_id` lands in sub-batch `batch_idx` (-1 = irreducible,
@@ -83,149 +84,103 @@ object SplitBatch {
     }
   }
 
+  /** The reference's bad-row messages, one per branch of the decision
+    * tree (the stable prefix — exception detail suffixes omitted). */
+  val GetNotSplittable = "GET requests cannot be split"
+  val NotJson = "cannot split POST requests which are not json"
+  val NotSelfDescribing = "cannot split POST requests which are not self-describing"
+  val NoDataArray = "cannot split POST requests which do not contain a data array"
+  val StrippedTooBig =
+    "cannot split this POST request because event without \"data\" field is still too big"
+  val SplitTooLarge = "this POST request split is still too large"
+
+  /** Where one payload lands in the reference's decision tree. */
+  private sealed trait Decision
+  private case object Fits extends Decision
+  /** One bad row carrying the whole event's wire size. */
+  private final case class Unsplittable(reason: String) extends Decision
+  /** The data elements' serialized sizes and their greedy placement
+    * (-1 = irreducible: one [[SplitTooLarge]] bad row each). */
+  private final case class Split(sizes: IndexedSeq[Long], assigned: IndexedSeq[Int])
+      extends Decision
+
   /** The reference's FULL `splitAndSerializePayload` decision tree
-    * (`core/.../utils/SplitBatch.scala:81-113`) per payload, summarized as
-    * one [[WireRoute]] row:
-    *  - serialized size < maxBytes → good, 1 wire record;
-    *  - oversized GET (no body) → 1 SizeViolation;
+    * (`core/.../utils/SplitBatch.scala:81-113`) for one payload whose
+    * serialized size is `whole`:
+    *  - serialized size < maxBytes → fits;
+    *  - oversized GET (no body) → unsplittable;
     *  - oversized POST: parse the self-describing body (real Jackson
     *    parse), strip `data`, re-check the stripped event, greedy-pack the
     *    elements into sub-batches under the reference's adjusted budget
-    *    (`maxBytes − wholeBytes + dataBytes`), elements that can't fit
-    *    alone → SizeViolation each;
-    *  - unparseable / non-self-describing / no-array bodies → 1
-    *    SizeViolation with the reference's message prefix (exception
-    *    detail suffix omitted — deterministic subset).
-    * [[CollectorPipeline.badRows]] stays the flat pre-split size gate
-    * (its byte-exact golden is the no-split path); this operator is the
-    * split-aware disposition the sink actually acts on. Same typed
-    * mapPartitions shape as [[ThriftPayload.encode]]. */
-  def routeWire(payloads: DataFrame, maxBytes: Int): Dataset[WireRoute] = {
-    val spark = payloads.sparkSession
-    implicit val enc0 = org.apache.spark.sql.Encoders.product[WireRoute]
-    Spread(payloads)
-      .select(
-        col("event_id"), col("schema_uri"), col("ip"),
-        col("timestamp_ms"), col("encoding"), col("collector"), col("user_agent"),
-        col("referer_uri"), col("path"), col("querystring"), col("body"),
-        col("headers"), col("content_type"),
-        col("hostname"), col("network_userid"))
-      .mapPartitions { it =>
-        val ser = new ThriftPayload.Serializer
-        val mapper = new ObjectMapper
-        val UTF8 = java.nio.charset.StandardCharsets.UTF_8
-        it.map { r =>
-          def s(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-          val rec = PayloadRecord(
-            s(1), s(2), r.getLong(3), s(4), s(5), s(6), s(7), s(8), s(9),
-            s(10), if (r.isNullAt(11)) null else r.getSeq[String](11),
-            s(12), s(13), s(14))
-          val id = r.getLong(0)
-          val whole = ser(rec).length
-          def bad(reason: String) = WireRoute(id, "bad", 0, 1, reason)
-          if (whole < maxBytes) WireRoute(id, "good", 1, 0, null)
-          else if (rec.body == null) bad("GET requests cannot be split")
-          else {
-            val root = try mapper.readTree(rec.body) catch { case _: Exception => null }
-            if (root == null) bad("cannot split POST requests which are not json")
-            else {
-              val schema = root.get("schema")
-              val data = root.get("data")
-              if (schema == null || !schema.isTextual || data == null)
-                bad("cannot split POST requests which are not self-describing")
-              else if (!data.isArray)
-                bad("cannot split POST requests which do not contain a data array")
-              else {
-                val elems = (0 until data.size).map(i => mapper.writeValueAsString(data.get(i)))
-                val dataBytes = elems.mkString("[", ",", "]").getBytes(UTF8).length
-                if (whole - dataBytes >= maxBytes)
-                  bad("cannot split this POST request because event without \"data\" field is still too big")
-                else {
-                  val budget = (maxBytes - whole + dataBytes).toLong
-                  val assigned = pack(
-                    elems.map(_.getBytes(UTF8).length.toLong).toIndexedSeq,
-                    base = 0L, join = 1L, max = budget)
-                  val nBad = assigned.count(_ == -1)
-                  val nGood = assigned.filter(_ >= 0).distinct.size
-                  WireRoute(id, if (nGood > 0) "split" else "bad", nGood, nBad,
-                    if (nBad > 0) "this POST request split is still too large" else null)
-                }
-              }
-            }
-          }
+    *    (`maxBytes − wholeBytes + dataBytes`);
+    *  - unparseable / non-self-describing / no-array bodies, or a stripped
+    *    event still too big → unsplittable with the branch's message. */
+  private def decide(mapper: ObjectMapper, body: String, whole: Int, maxBytes: Int): Decision =
+    if (whole < maxBytes) Fits
+    else if (body == null) Unsplittable(GetNotSplittable)
+    else {
+      val root = try mapper.readTree(body) catch { case _: Exception => null }
+      lazy val schema = root.get("schema")
+      lazy val data = root.get("data")
+      if (root == null) Unsplittable(NotJson)
+      else if (schema == null || !schema.isTextual || data == null) Unsplittable(NotSelfDescribing)
+      else if (!data.isArray) Unsplittable(NoDataArray)
+      else {
+        val elems = (0 until data.size).map(i => mapper.writeValueAsString(data.get(i)))
+        val dataBytes = elems.mkString("[", ",", "]").getBytes(UTF_8).length
+        if (whole - dataBytes >= maxBytes) Unsplittable(StrippedTooBig)
+        else {
+          val sizes = elems.map(_.getBytes(UTF_8).length.toLong)
+          Split(sizes, pack(sizes, base = 0L, join = 1L, max = (maxBytes - whole + dataBytes).toLong))
         }
       }
-  }
+    }
+
+  /** [[decide]] per payload, summarized as one [[WireRoute]] row — the
+    * split-aware disposition the sink acts on.
+    * [[CollectorPipeline.badRows]] stays the flat pre-split size gate (its
+    * byte-exact golden is the no-split path). A [[ThriftPayload.payloadPass]]
+    * projection with one ObjectMapper per partition. */
+  def routeWire(payloads: DataFrame, maxBytes: Int): Dataset[WireRoute] =
+    ThriftPayload.payloadPass[WireRoute](payloads) { () =>
+      val mapper = new ObjectMapper
+      (r, rec, wire) => Iterator.single {
+        val id = r.getLong(0)
+        decide(mapper, rec.body, wire.length, maxBytes) match {
+          case Fits => WireRoute(id, "good", 1, 0, null)
+          case Unsplittable(reason) => WireRoute(id, "bad", 0, 1, reason)
+          case Split(_, assigned) =>
+            val nBad = assigned.count(_ == -1)
+            val nGood = assigned.filter(_ >= 0).distinct.size
+            WireRoute(id, if (nGood > 0) "split" else "bad", nGood, nBad,
+              if (nBad > 0) SplitTooLarge else null)
+        }
+      }
+    }
 
   /** The bad-row STREAM (vs [[routeWire]]'s per-event summary): one output
     * row per bad row the reference's bad sink would receive
     * (`core/.../utils/SplitBatch.scala:81-145`). Unsplittable events emit
-    * one row carrying the whole event's wire size and the branch's fold
+    * one row carrying the whole event's wire size and the branch's
     * message; a split whose elements are irreducibly large emits one row
-    * PER failed element carrying that element's serialized size and
-    * "this POST request split is still too large". Every row keeps
-    * maxBytes/10 chars of the whole event's thrift toString() — the
-    * reference's debugging truncation. Same embarrassingly-parallel typed
-    * mapPartitions shape as [[routeWire]]; flatMap, no shuffle. */
-  def badRowFields(payloads: DataFrame, maxBytes: Int): Dataset[BadRowFields] = {
-    val spark = payloads.sparkSession
-    implicit val enc0 = org.apache.spark.sql.Encoders.product[BadRowFields]
-    Spread(payloads)
-      .select(
-        col("event_id"), col("schema_uri"), col("ip"),
-        col("timestamp_ms"), col("encoding"), col("collector"), col("user_agent"),
-        col("referer_uri"), col("path"), col("querystring"), col("body"),
-        col("headers"), col("content_type"),
-        col("hostname"), col("network_userid"))
-      .mapPartitions { it =>
-        val ser = new ThriftPayload.Serializer
-        val mapper = new ObjectMapper
-        val UTF8 = java.nio.charset.StandardCharsets.UTF_8
-        it.flatMap { r =>
-          def s(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-          val rec = PayloadRecord(
-            s(1), s(2), r.getLong(3), s(4), s(5), s(6), s(7), s(8), s(9),
-            s(10), if (r.isNullAt(11)) null else r.getSeq[String](11),
-            s(12), s(13), s(14))
-          val id = r.getLong(0)
-          val ts = r.getLong(3)
-          val whole = ser(rec).length
-          lazy val prefix = ThriftPayload.toStringRepr(rec).take(maxBytes / 10)
-          def one(reason: String, size: Long) =
-            List(BadRowFields(id, ts, reason, size, prefix))
-          if (whole < maxBytes) Nil
-          else if (rec.body == null) one("GET requests cannot be split", whole.toLong)
-          else {
-            val root = try mapper.readTree(rec.body) catch { case _: Exception => null }
-            if (root == null) one("cannot split POST requests which are not json", whole.toLong)
-            else {
-              val schema = root.get("schema")
-              val data = root.get("data")
-              if (schema == null || !schema.isTextual || data == null)
-                one("cannot split POST requests which are not self-describing", whole.toLong)
-              else if (!data.isArray)
-                one("cannot split POST requests which do not contain a data array", whole.toLong)
-              else {
-                val elems = (0 until data.size).map(i => mapper.writeValueAsString(data.get(i)))
-                val dataBytes = elems.mkString("[", ",", "]").getBytes(UTF8).length
-                if (whole - dataBytes >= maxBytes)
-                  one("cannot split this POST request because event without \"data\" field is still too big", whole.toLong)
-                else {
-                  val sizes = elems.map(_.getBytes(UTF8).length.toLong).toIndexedSeq
-                  val budget = (maxBytes - whole + dataBytes).toLong
-                  pack(sizes, base = 0L, join = 1L, max = budget)
-                    .zipWithIndex
-                    .collect { case (-1, i) =>
-                      BadRowFields(id, ts, "this POST request split is still too large",
-                        sizes(i), prefix)
-                    }
-                }
-              }
-            }
-          }
+    * PER failed element carrying that element's serialized size. Every row
+    * keeps maxBytes/10 chars of the whole event's thrift toString() — the
+    * reference's debugging truncation. Same projection as [[routeWire]]. */
+  def badRowFields(payloads: DataFrame, maxBytes: Int): Dataset[BadRowFields] =
+    ThriftPayload.payloadPass[BadRowFields](payloads) { () =>
+      val mapper = new ObjectMapper
+      (r, rec, wire) => {
+        lazy val prefix = ThriftPayload.toStringRepr(rec).take(maxBytes / 10)
+        def row(reason: String, size: Long) =
+          BadRowFields(r.getLong(0), rec.timestamp, reason, size, prefix)
+        decide(mapper, rec.body, wire.length, maxBytes) match {
+          case Fits => Iterator.empty
+          case Unsplittable(reason) => Iterator.single(row(reason, wire.length.toLong))
+          case Split(sizes, assigned) =>
+            assigned.indices.iterator.filter(assigned(_) == -1).map(i => row(SplitTooLarge, sizes(i)))
         }
       }
-  }
+    }
 
   /** Split tp2 self-describing bodies: parse JSON for real (Jackson — one
     * ObjectMapper per partition, the Spark analog of the reference's

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.thrift.protocol.{TBinaryProtocol, TField, TList, TStruct, TType}
 import org.apache.thrift.transport.TMemoryBuffer
+import scala.reflect.runtime.universe.TypeTag
 
 /** The 14-field CollectorPayload record (SURVEY §1.2). */
 final case class PayloadRecord(
@@ -204,39 +205,18 @@ object ThriftPayload {
     * the gate is the SERIALIZED event size (`wholeEventBytes >= maxBytes`),
     * `actual_size` reports that wire size, and `payload_prefix` keeps
     * `maxBytes / 10` characters of the thrift `toString()` rendering.
-    * Same typed mapPartitions shape as [[encode]] — one reused serializer
-    * per partition, `toString` rendered only for violating rows. This is
-    * the serialization the sink pays anyway (measured: cheaper than
-    * evaluating the equivalent [[wireSizeCol]] column formula, whose
-    * pushed-filter copy re-evaluates the payload build per reference);
-    * the formula remains the spec/oracle-side mirror with asserted byte
-    * parity (SplitBatchSpec). */
-  def sizeViolations(payloads: DataFrame, maxBytes: Int): Dataset[SizeViolationRow] = {
-    val spark = payloads.sparkSession
-    implicit val enc0 = org.apache.spark.sql.Encoders.product[SizeViolationRow]
-    Spread(payloads)
-      .select(
-        col("event_id"), col("schema_uri"), col("ip"),
-        col("timestamp_ms"), col("encoding"), col("collector"), col("user_agent"),
-        col("referer_uri"), col("path"), col("querystring"), col("body"),
-        col("headers"), col("content_type"),
-        col("hostname"), col("network_userid"))
-      .mapPartitions { it =>
-        val ser = new Serializer
-        it.flatMap { r =>
-          def s(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-          val rec = PayloadRecord(
-            s(1), s(2), r.getLong(3), s(4), s(5), s(6), s(7), s(8), s(9),
-            s(10), if (r.isNullAt(11)) null else r.getSeq[String](11),
-            s(12), s(13), s(14))
-          val n = ser(rec).length
-          if (n >= maxBytes)
-            Some(SizeViolationRow(
-              r.getLong(0), "SizeViolation", toStringRepr(rec).take(maxBytes / 10), n.toLong))
-          else None
-        }
-      }
-  }
+    * A [[payloadPass]] projection — `toString` rendered only for violating
+    * rows. This is the serialization the sink pays anyway (measured:
+    * cheaper than evaluating the equivalent [[wireSizeCol]] column
+    * formula, whose pushed-filter copy re-evaluates the payload build per
+    * reference); the formula remains the spec/oracle-side mirror with
+    * asserted byte parity (SplitBatchSpec). */
+  def sizeViolations(payloads: DataFrame, maxBytes: Int): Dataset[SizeViolationRow] =
+    payloadPass[SizeViolationRow](payloads) { () => (r, rec, wire) =>
+      if (wire.length < maxBytes) Iterator.empty
+      else Iterator.single(SizeViolationRow(
+        r.getLong(0), "SizeViolation", toStringRepr(rec).take(maxBytes / 10), wire.length.toLong))
+    }
 
   /** One decoded wire record for the oracle-checked round-trip query:
     * event_id (carried beside the bytes) + every thrift field, headers
@@ -257,19 +237,18 @@ object ThriftPayload {
     * spec pins the bytes themselves, closing the symmetric-bug loophole a
     * round-trip-only check would leave). */
   def decode(wire: Dataset[WirePayload]): Dataset[DecodedPayload] = {
-    val spark = wire.sparkSession
-    implicit val enc0 = org.apache.spark.sql.Encoders.product[DecodedPayload]
-    wire.mapPartitions { it =>
-      it.map { w =>
-        val r = deserialize(w.thrift)
-        DecodedPayload(
-          w.event_id, r.schema, r.ipAddress, r.timestamp, r.encoding,
-          r.collector, r.userAgent, r.refererUri, r.path, r.querystring,
-          r.body,
-          if (r.headers == null) null else r.headers.mkString("|"),
-          r.contentType, r.hostname, r.networkUserId)
-      }
-    }
+    implicit val enc0 = Encoders.product[DecodedPayload]
+    wire.mapPartitions(_.map(decoded))
+  }
+
+  private def decoded(w: WirePayload): DecodedPayload = {
+    val r = deserialize(w.thrift)
+    DecodedPayload(
+      w.event_id, r.schema, r.ipAddress, r.timestamp, r.encoding,
+      r.collector, r.userAgent, r.refererUri, r.path, r.querystring,
+      r.body,
+      if (r.headers == null) null else r.headers.mkString("|"),
+      r.contentType, r.hostname, r.networkUserId)
   }
 
   /** [[decode]] with the production consumer's tolerance: a record whose
@@ -279,22 +258,10 @@ object ThriftPayload {
     * of the reference consumers' corrupt-thrift bad rows. One hostile
     * record must never wedge a 1000-executor read job. */
   def decodeSafe(wire: Dataset[WirePayload]): DataFrame = {
-    val spark = wire.sparkSession
-    implicit val enc0 =
-      org.apache.spark.sql.Encoders.product[(Long, Option[DecodedPayload])]
+    implicit val enc0 = Encoders.product[(Long, Option[DecodedPayload])]
     wire.mapPartitions { it =>
       it.map { w =>
-        val dec =
-          try {
-            val r = deserialize(w.thrift)
-            Some(DecodedPayload(
-              w.event_id, r.schema, r.ipAddress, r.timestamp, r.encoding,
-              r.collector, r.userAgent, r.refererUri, r.path, r.querystring,
-              r.body,
-              if (r.headers == null) null else r.headers.mkString("|"),
-              r.contentType, r.hostname, r.networkUserId))
-          } catch { case _: Exception => None }
-        (w.event_id, dec)
+        (w.event_id, try Some(decoded(w)) catch { case _: Exception => None })
       }
     }.toDF("event_id", "decoded")
       .select(
@@ -349,31 +316,45 @@ object ThriftPayload {
     r
   }
 
-  /** Payload DataFrame (CollectorPipeline.payloads shape) → wire records.
-    * `mapPartitions` over raw Rows (positional access — the Tuple16
-    * encoder deserialization costs more than the thrift write itself)
-    * with per-partition protocol buffers, the Spark analog of the
-    * reference's thread-local TSerializer. Narrow. */
-  def encode(payloads: DataFrame): Dataset[WirePayload] = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    implicit val enc0 = org.apache.spark.sql.Encoders.product[WirePayload]
+  /** The 14 payload columns in [[PayloadRecord]] field order. */
+  private val RecordCols = Seq(
+    "schema_uri", "ip", "timestamp_ms", "encoding", "collector", "user_agent",
+    "referer_uri", "path", "querystring", "body", "headers", "content_type",
+    "hostname", "network_userid")
+
+  /** The one serializer pass behind [[encode]], [[sizeViolations]],
+    * [[SplitBatch.routeWire]] and [[SplitBatch.badRowFields]]: select
+    * `event_id`, the `lead` columns and the 14 record columns (nothing
+    * else), read each Row positionally into a [[PayloadRecord]] (a typed
+    * encoder's deserialization costs more than the thrift write itself),
+    * serialize it with one reused [[Serializer]] per partition — the Spark
+    * analog of the reference's thread-local TSerializer — and hand
+    * (row, record, wire bytes) to the per-partition function `mk` builds.
+    * Narrow; `lead` column `i` is at row position `1 + i`. */
+  private[operators] def payloadPass[T <: Product : TypeTag](payloads: DataFrame, lead: String*)(
+      mk: () => (Row, PayloadRecord, Array[Byte]) => Iterator[T]): Dataset[T] = {
+    implicit val enc: org.apache.spark.sql.Encoder[T] = Encoders.product[T]
+    val at = 1 + lead.size
     Spread(payloads)
-      .select(
-        col("event_id"), col("partition_key"), col("schema_uri"), col("ip"),
-        col("timestamp_ms"), col("encoding"), col("collector"), col("user_agent"),
-        col("referer_uri"), col("path"), col("querystring"), col("body"),
-        col("headers"), col("content_type"),
-        col("hostname"), col("network_userid"))
+      .select((("event_id" +: lead) ++ RecordCols).map(col): _*)
       .mapPartitions { it =>
         val ser = new Serializer
-        it.map { r =>
-          def s(i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-          WirePayload(r.getLong(0), s(1), ser(PayloadRecord(
-            s(2), s(3), r.getLong(4), s(5), s(6), s(7), s(8), s(9), s(10),
-            s(11), if (r.isNullAt(12)) null else r.getSeq[String](12),
-            s(13), s(14), s(15))))
+        val f = mk()
+        it.flatMap { r =>
+          def s(i: Int): String = r.getString(at + i)
+          val rec = PayloadRecord(
+            s(0), s(1), r.getLong(at + 2), s(3), s(4), s(5), s(6), s(7), s(8), s(9),
+            if (r.isNullAt(at + 10)) null else r.getSeq[String](at + 10),
+            s(11), s(12), s(13))
+          f(r, rec, ser(rec))
         }
       }
   }
+
+  /** Payload DataFrame (CollectorPipeline.payloads shape) → wire records:
+    * the [[payloadPass]] that also carries `partition_key`. */
+  def encode(payloads: DataFrame): Dataset[WirePayload] =
+    payloadPass[WirePayload](payloads, "partition_key") { () => (r, _, wire) =>
+      Iterator.single(WirePayload(r.getLong(0), r.getString(1), wire))
+    }
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.operators.SplitBatch
+
 /** DuckDB oracles for [[Collector]].
   *
   * The envelope stream is a pure function of the `events` table
@@ -17,6 +19,14 @@ object CollectorOracles {
       s"substr(md5($e),13,4) || '-' || substr(md5($e),17,4) || '-' || substr(md5($e),21,12)"
 
   private val NilUuid = "00000000-0000-0000-0000-000000000000"
+  /** The bad-row message of each decision-tree `kind` — the operator's own
+    * reason strings (SplitBatchSpec pins them to the reference's text). */
+  private val SplitReason =
+    s"""CASE kind WHEN 'get' THEN '${SplitBatch.GetNotSplittable}'
+       |  WHEN 'notsd' THEN '${SplitBatch.NotSelfDescribing}'
+       |  WHEN 'stripped' THEN '${SplitBatch.StrippedTooBig}'
+       |  WHEN 'allbig' THEN '${SplitBatch.SplitTooLarge}' END""".stripMargin
+
   /** Wire-route cap — single source of truth with the Spark query. */
   private val WireMax = graft.operators.CollectorConfig.wireRouteScale.maxBytes
   private val Tp2Prefix =
@@ -339,16 +349,12 @@ object CollectorOracles {
          |  FROM rr),
          |bb AS (
          |  SELECT event_id, timestamp_ms, payload_prefix,
-         |    CASE kind
-         |      WHEN 'get' THEN 'GET requests cannot be split'
-         |      WHEN 'notsd' THEN 'cannot split POST requests which are not self-describing'
-         |      WHEN 'stripped' THEN 'cannot split this POST request because event without "data" field is still too big'
-         |    END AS reason,
+         |    $SplitReason AS reason,
          |    wire_size AS actual_size
          |  FROM dd WHERE kind IN ('get', 'notsd', 'stripped')
          |  UNION ALL
          |  SELECT event_id, timestamp_ms, payload_prefix,
-         |    'this POST request split is still too large' AS reason,
+         |    '${SplitBatch.SplitTooLarge}' AS reason,
          |    elem_size AS actual_size
          |  FROM dd, UNNEST(range(n_elems)) AS t(u) WHERE kind = 'allbig')
          |SELECT event_id,
@@ -471,12 +477,7 @@ object CollectorOracles {
          |  CAST(CASE WHEN kind = 'good' OR kind = 'split' THEN 0
          |            WHEN kind = 'allbig' THEN n_elems
          |            ELSE 1 END AS INT) AS n_bad,
-         |  CASE kind
-         |    WHEN 'get' THEN 'GET requests cannot be split'
-         |    WHEN 'notsd' THEN 'cannot split POST requests which are not self-describing'
-         |    WHEN 'stripped' THEN 'cannot split this POST request because event without "data" field is still too big'
-         |    WHEN 'allbig' THEN 'this POST request split is still too large'
-         |  END AS reason
+         |  $SplitReason AS reason
          |FROM f""".stripMargin,
 
     "c_response" ->

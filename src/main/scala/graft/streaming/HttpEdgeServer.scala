@@ -215,43 +215,35 @@ final class HttpEdgeServer(
     if (i > 0 && host.drop(i + 1).forall(_.isDigit)) host.substring(0, i) else host
   }
 
-  private def handle(ex: HttpExchange, secure: Boolean): Unit =
+  /** Answer a request the routes never produced a response for — the
+    * 414/413 request-limit gates and the 500 of an unexpected failure —
+    * and count it under the status actually sent. A response already
+    * committed (headers sent) is left alone and not counted again. */
+  private def reject(ex: HttpExchange, status: Int, body: String, t0: Long): Unit =
+    if (ex.getResponseCode == -1) {
+      val msg = body.getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(status, if (msg.isEmpty) -1L else msg.length.toLong)
+      if (msg.nonEmpty) ex.getResponseBody.write(msg)
+      metrics.record(ex.getRequestMethod.toUpperCase, status, System.nanoTime() - t0)
+      ex.close()
+    }
+
+  private def handle(ex: HttpExchange, secure: Boolean): Unit = {
+    val t0 = System.nanoTime()
     try {
-      val t0 = System.nanoTime()
       // R10 pekko `parsing.max-uri-length` parity: gate on the WIRE
       // request line (never the trusted test header) before any envelope
-      // work — an over-long URI answers 414 and is never recorded
-      val wireUri = ex.getRequestURI.toString
-      if (wireUri.length > cfg.maxUriLength) {
-        val msg = "414 URI Too Long".getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(414, msg.length.toLong)
-        ex.getResponseBody.write(msg)
-        ex.close()
-        metrics.record(ex.getRequestMethod.toUpperCase, 414, System.nanoTime() - t0)
-        return
-      }
+      // work — an over-long URI answers 414 and is never spooled
+      if (ex.getRequestURI.toString.length > cfg.maxUriLength)
+        return reject(ex, 414, "414 URI Too Long", t0)
       // declared Content-Length past the cap: reject before reading a byte
       val declaredLen =
         Option(ex.getRequestHeaders.getFirst("Content-Length")).flatMap(_.toLongOption)
-      if (declaredLen.exists(_ > cfg.maxContentLength)) {
-        val msg = "413 Payload Too Large".getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(413, msg.length.toLong)
-        ex.getResponseBody.write(msg)
-        ex.close()
-        metrics.record(ex.getRequestMethod.toUpperCase, 413, System.nanoTime() - t0)
-        return
-      }
+      if (declaredLen.exists(_ > cfg.maxContentLength))
+        return reject(ex, 413, "413 Payload Too Large", t0)
       val req =
         try buildRequest(ex)
-        catch {
-          case _: BodyTooLarge =>
-            val msg = "413 Payload Too Large".getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(413, msg.length.toLong)
-            ex.getResponseBody.write(msg)
-            ex.close()
-            metrics.record(ex.getRequestMethod.toUpperCase, 413, System.nanoTime() - t0)
-            return
-        }
+        catch { case _: BodyTooLarge => return reject(ex, 413, "413 Payload Too Large", t0) }
       val forwardedProto =
         Option(ex.getRequestHeaders.getFirst("X-Forwarded-Proto")).map(_.toLowerCase)
       val resp =
@@ -289,10 +281,10 @@ final class HttpEdgeServer(
     } catch {
       case scala.util.control.NonFatal(_) =>
         // a hostile request must never kill the edge (FuzzSpec discipline)
-        try {
-          ex.sendResponseHeaders(500, -1L); ex.close()
-        } catch { case scala.util.control.NonFatal(_) => () }
+        try reject(ex, 500, "", t0)
+        catch { case scala.util.control.NonFatal(_) => () }
     }
+  }
 
   private def append(line: String): Unit = synchronized {
     buf.append(line).append('\n')
@@ -323,7 +315,7 @@ final class HttpEdgeServer(
   }
 
   /** The spool as a streaming envelope DataFrame — feed it straight to
-    * [[StreamingCollector.start]]. */
+    * [[graft.CollectorApp.start]], as `CollectorMain --http` does. */
   def stream(spark: SparkSession): DataFrame =
     spark.readStream.schema(HttpEdge.envelopeSchema).json(spoolDir)
 }

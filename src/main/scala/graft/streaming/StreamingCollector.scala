@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload}
 import graft.sinks.EventSink
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, date_format, timestamp_millis}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** The collector pipeline under Structured Streaming.
   *
@@ -17,8 +18,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * process) to replayable exactly-once-per-sink-write (SURVEY §7.4.4).
   *
   * Good/bad dual routing (reference `CollectorSinks`, `model.scala:37`)
-  * happens in one `foreachBatch`: the batch is cached once, both legs
-  * write from it, so the source is read once per micro-batch.
+  * happens in one `foreachBatch` body ([[collect]]) shared by every
+  * collector entry point, [[graft.CollectorApp.start]] included: the
+  * batch is cached once, the good and bad legs write from it overlapped,
+  * so the source is read once per micro-batch. The entry points differ
+  * only in what their two legs write.
   *
   * State store at scale: the stateful operators (Sessionize, StreamJoin,
   * StreamingDedup) default to Spark's heap-backed store — fine locally,
@@ -32,29 +36,48 @@ object StreamingCollector {
   /** Default trigger = the reference's buffer.timeLimit (5000 ms). */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
-  /** r18b (guide §2.6 "overlap independent jobs"): the good and bad legs
-    * of one micro-batch are independent jobs over the same persisted
-    * batch — writing them sequentially left the cluster idle through
-    * each leg's tail. Both legs are AWAITED before the batch returns to
-    * the engine, so the checkpoint commit still happens-after both sink
-    * writes (the exactly-once-per-sink-write replay contract is
-    * untouched; a failure in either leg fails the batch exactly as
-    * before). Cache-block locking makes the concurrent first
-    * materialization of the persisted batch compute each partition
-    * once. */
-  private def overlap(legs: (() => Unit)*): Unit =
-    // A/B lever (same-JVM measurement protocol): -Dgraft.seq=1 runs the
-    // legs sequentially — the pre-r18b shape — so the overlap's effect
-    // can be isolated inside one warm JVM.
-    if (sys.props.get("graft.seq").contains("1")) legs.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fs = legs.map(l => Future(l()))
-      fs.foreach(f => Await.ready(f, Duration.Inf))
-      fs.foreach(f => Await.result(f, Duration.Inf))
-    }
+  /** The one micro-batch body every collector entry point runs
+    * ([[start]], [[startToLake]], [[startWithSinks]] and
+    * [[graft.CollectorApp.start]]): persist the batch, run the good and
+    * bad legs overlapped, join both before rethrowing either's error,
+    * unpersist.
+    *
+    * The legs are independent jobs over the same persisted batch; run one
+    * after the other they leave the cluster idle through each leg's tail.
+    * The good leg runs on the query thread and the bad leg on a fresh
+    * thread, which inherits the batch's Spark local properties (job group,
+    * query and batch ids), so stopping the query cancels both legs' jobs.
+    * Both legs end before the batch returns to the engine, so the
+    * checkpoint commit still happens-after both sink writes (the
+    * exactly-once-per-sink-write replay contract), and a failure in either
+    * leg fails the batch. Cache-block locking makes the concurrent first
+    * materialization of the persisted batch compute each partition once. */
+  private[graft] def collect(envelopes: DataFrame, checkpointDir: String, trigger: Trigger)(
+      good: (DataFrame, Long) => Unit,
+      bad: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    envelopes.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        batch.persist()
+        try {
+          var badErr: Throwable = null
+          val badLeg = new Thread(
+            () => try bad(batch, id) catch { case t: Throwable => badErr = t },
+            "collector-bad-leg")
+          badLeg.start()
+          try good(batch, id)
+          catch {
+            case t: Throwable =>
+              badLeg.join()
+              if (badErr != null) t.addSuppressed(badErr)
+              throw t
+          }
+          badLeg.join()
+          if (badErr != null) throw badErr
+        } finally batch.unpersist()
+        ()
+      }
 
   def start(
       envelopes: DataFrame,
@@ -62,25 +85,10 @@ object StreamingCollector {
       goodDir: String,
       badDir: String,
       checkpointDir: String,
-      trigger: Trigger = DefaultTrigger,
-      badRowsSelfDescribing: Boolean = false): StreamingQuery =
-    envelopes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try overlap(
-          () => CollectorPipeline.payloads(batch, cfg)
-            .write.mode("append").parquet(goodDir),
-          // self-describing mode writes what the reference's bad stream
-          // actually carries — `badRow.compact` iglu envelopes — instead
-          // of the flat diagnostic summary
-          () => (if (badRowsSelfDescribing) CollectorPipeline.badRowsJson(batch, cfg)
-                 else CollectorPipeline.badRows(batch, cfg))
-            .write.mode("append").parquet(badDir))
-        finally batch.unpersist()
-        ()
-      }
+      trigger: Trigger = DefaultTrigger): StreamingQuery =
+    collect(envelopes, checkpointDir, trigger)(
+      (batch, _) => CollectorPipeline.payloads(batch, cfg).write.mode("append").parquet(goodDir),
+      (batch, _) => CollectorPipeline.badRows(batch, cfg).write.mode("append").parquet(badDir))
       .start()
 
   /** Streaming ingest straight into the date-partitioned lake: good
@@ -97,35 +105,22 @@ object StreamingCollector {
       lakeDir: String,
       badDir: String,
       checkpointDir: String,
-      trigger: Trigger = DefaultTrigger,
-      badRowsSelfDescribing: Boolean = false): StreamingQuery =
-    envelopes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try overlap(
-          () => {
-            import org.apache.spark.sql.functions.{col, date_format, timestamp_millis}
-            CollectorPipeline.payloads(batch, cfg)
-              .withColumn("event_date",
-                date_format(timestamp_millis(col("timestamp_ms")), "yyyy-MM-dd"))
-              // R10: ONE exchange on the partition key before the
-              // partitioned write — without it every task writes a file
-              // per day it happens to see (tasks × days × micro-batches
-              // small files, the classic lake-ingest file explosion); with
-              // it each day's rows land in few tasks and the listing stays
-              // proportional to days, not task fan-out. The standard
-              // dynamic-partition-write discipline at 100 TB.
-              .repartition(col("event_date"))
-              .write.mode("append").partitionBy("event_date").parquet(lakeDir)
-          },
-          () => (if (badRowsSelfDescribing) CollectorPipeline.badRowsJson(batch, cfg)
-                 else CollectorPipeline.badRows(batch, cfg))
-            .write.mode("append").parquet(badDir))
-        finally batch.unpersist()
-        ()
-      }
+      trigger: Trigger = DefaultTrigger): StreamingQuery =
+    collect(envelopes, checkpointDir, trigger)(
+      (batch, _) =>
+        CollectorPipeline.payloads(batch, cfg)
+          .withColumn("event_date",
+            date_format(timestamp_millis(col("timestamp_ms")), "yyyy-MM-dd"))
+          // R10: ONE exchange on the partition key before the
+          // partitioned write — without it every task writes a file
+          // per day it happens to see (tasks × days × micro-batches
+          // small files, the classic lake-ingest file explosion); with
+          // it each day's rows land in few tasks and the listing stays
+          // proportional to days, not task fan-out. The standard
+          // dynamic-partition-write discipline at 100 TB.
+          .repartition(col("event_date"))
+          .write.mode("append").partitionBy("event_date").parquet(lakeDir),
+      (batch, _) => CollectorPipeline.badRows(batch, cfg).write.mode("append").parquet(badDir))
       .start()
 
   /** The PRODUCTION wiring: config-selected [[EventSink]]s instead of raw
@@ -145,17 +140,9 @@ object StreamingCollector {
       badSink: EventSink,
       checkpointDir: String,
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    envelopes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.persist()
-        try overlap(
-          () => goodSink.write(
-            ThriftPayload.encode(CollectorPipeline.payloads(batch, cfg)).toDF(), id),
-          () => badSink.write(CollectorPipeline.badRowsJson(batch, cfg), id))
-        finally batch.unpersist()
-        ()
-      }
+    collect(envelopes, checkpointDir, trigger)(
+      (batch, id) => goodSink.write(
+        ThriftPayload.encode(CollectorPipeline.payloads(batch, cfg)).toDF(), id),
+      (batch, id) => badSink.write(CollectorPipeline.badRowsJson(batch, cfg), id))
       .start()
 }

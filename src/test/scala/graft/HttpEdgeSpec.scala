@@ -701,6 +701,20 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
     }
   }
 
+  test("live: an unexpected handler failure answers 500 and is counted as a 500") {
+    val spool = Files.createTempDirectory("edge-500").toString
+    val server = new HttpEdgeServer(testScale, spool,
+      healthSource = Some(() => throw new IllegalStateException("monitor unavailable")))
+    val port = server.start()
+    try {
+      val (status, _, body) = rawHttp(port, "GET", "/health")
+      assert(status === 500)
+      assert(body.isEmpty)
+      assert(server.metrics.requestCounts(("GET", 500)) === 1L)
+      assert(server.metrics.requestCounts.values.sum === 1L)
+    } finally server.stop()
+  }
+
   test("live: hostile raw bytes never kill the edge (fuzz discipline over real sockets)") {
     withServer(testScale) { (server, port, _) =>
       val hostile = Seq[Array[Byte]](

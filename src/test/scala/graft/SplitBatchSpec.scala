@@ -134,6 +134,88 @@ class SplitBatchSpec extends AnyFunSuite with WallBudget {
     }
   }
 
+  /** Payload rows of the `CollectorPipeline.payloads` shape, hand-built. */
+  private def payloadRows(recs: Seq[(Long, PayloadRecord)]): org.apache.spark.sql.DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    recs.map { case (id, r) =>
+      (id, r.schema, r.ipAddress, r.timestamp, r.encoding, r.collector, r.userAgent,
+        r.refererUri, r.path, r.querystring, r.body, r.headers, r.contentType,
+        r.hostname, r.networkUserId)
+    }.toDF("event_id", "schema_uri", "ip", "timestamp_ms", "encoding", "collector",
+      "user_agent", "referer_uri", "path", "querystring", "body", "headers",
+      "content_type", "hostname", "network_userid")
+  }
+
+  test("split decision: each branch's reason, bad rows and disposition on hand-built payloads") {
+    val max = 300
+    def pad(n: Int) = "x" * n
+    def el(n: Int) = s"""{"a":"${pad(n)}"}""" // serializes to n + 8 bytes
+    def sd(elems: String*) =
+      s"""{"schema":"iglu:com.acme/p/jsonschema/1-0-0","data":[${elems.mkString(",")}]}"""
+    def rec(path: String, qs: String, body: String) = PayloadRecord(
+      "iglu:s", "10.0.0.1", 1700000000000L + path.length, "UTF-8", "c", null, null,
+      path, qs, body, Seq("Host: h"), null, "h", "n")
+    val tooLarge = "this POST request split is still too large"
+    // id -> (payload, disposition, reason, bad-row actual sizes; -1 = whole wire size)
+    val cases = Map(
+      1L -> ((rec("/i", "e=pv", null), "good", null, Seq.empty[Long])),
+      2L -> ((rec("/i", "e=pv&p=" + pad(400), null), "bad",
+        "GET requests cannot be split", Seq(-1L))),
+      3L -> ((rec("/tp2", null, pad(400)), "bad",
+        "cannot split POST requests which are not json", Seq(-1L))),
+      4L -> ((rec("/tp2", null, s"""{"data":[${el(400)}]}"""), "bad",
+        "cannot split POST requests which are not self-describing", Seq(-1L))),
+      5L -> ((rec("/tp2", null, s"""{"schema":"iglu:x","data":${el(400)}}"""), "bad",
+        "cannot split POST requests which do not contain a data array", Seq(-1L))),
+      6L -> ((rec("/" + pad(400), null, sd(el(5))), "bad",
+        "cannot split this POST request because event without \"data\" field is still too big",
+        Seq(-1L))),
+      7L -> ((rec("/tp2", null, sd(el(10), el(400), el(10))), "split", tooLarge, Seq(408L))),
+      8L -> ((rec("/tp2", null, sd(el(100), el(100), el(100))), "split", null, Seq.empty[Long])),
+      9L -> ((rec("/tp2", null, sd(el(400), el(400))), "bad", tooLarge, Seq(408L, 408L))))
+    val p = payloadRows(cases.toSeq.map { case (id, c) => id -> c._1 })
+    val routes = SplitBatch.routeWire(p, max).collect().map(r => r.event_id -> r).toMap
+    val bad = SplitBatch.badRowFields(p, max).collect().groupBy(_.event_id)
+    val violations = ThriftPayload.sizeViolations(p, max).collect().map(_.event_id).toSet
+    assert(routes.keySet === cases.keySet)
+    cases.foreach { case (id, (r, disposition, reason, sizes)) =>
+      val whole = ThriftPayload.serialize(r).length.toLong
+      val route = routes(id)
+      val rows = bad.getOrElse(id, Array.empty[graft.operators.BadRowFields])
+      assert((whole < max) === (id == 1L), s"event $id")
+      assert(route.disposition === disposition, s"event $id")
+      assert(route.reason === reason, s"event $id")
+      assert(route.n_bad === rows.length, s"event $id")
+      assert((disposition == "good") === (route.n_good == 1 && rows.isEmpty), s"event $id")
+      assert(rows.isEmpty === (reason == null), s"event $id")
+      assert(rows.map(_.actual_size).toSeq === sizes.map(s => if (s < 0) whole else s), s"event $id")
+      rows.foreach { b =>
+        assert(b.reason === reason && b.timestamp_ms === r.timestamp, s"event $id")
+        assert(b.payload_prefix === ThriftPayload.toStringRepr(r).take(max / 10), s"event $id")
+      }
+      assert(violations.contains(id) === (disposition != "good"), s"event $id")
+    }
+    assert(routes(8L).n_good === 3) // 108-byte elements, ~200-byte budget: one per sub-batch
+    assert(routes(7L).n_good === 1 && routes(9L).n_good === 0)
+  }
+
+  test("wireRouteScale fixture: sizeViolations ids are routeWire's non-good ids") {
+    import graft.sources.EventEnvelopeAdapter
+    val cfg = CollectorConfig.wireRouteScale
+    val p = CollectorPipeline.payloads(
+      EventEnvelopeAdapter.envelopes(TestSpark.spark, TestSpark.Sf), cfg)
+    val routes = SplitBatch.routeWire(p, cfg.maxBytes).collect()
+    val nonGood = routes.filter(_.disposition != "good").map(_.event_id).toSet
+    val violations =
+      ThriftPayload.sizeViolations(p, cfg.maxBytes).collect().map(_.event_id).toSet
+    assert(nonGood.nonEmpty)
+    assert(violations === nonGood)
+    val badCounts = SplitBatch.badRowFields(p, cfg.maxBytes).collect()
+      .groupBy(_.event_id).map { case (id, rows) => id -> rows.length }
+    routes.foreach(r => assert(r.n_bad === badCounts.getOrElse(r.event_id, 0), s"event ${r.event_id}"))
+  }
+
   test("splitTp2 packs the synthetic bodies into ≤2-element batches") {
     import graft.sources.EventEnvelopeAdapter
     val env = EventEnvelopeAdapter.envelopes(TestSpark.spark, TestSpark.Sf)

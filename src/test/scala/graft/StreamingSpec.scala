@@ -150,6 +150,50 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(bad.count() === badExpected.count())
   }
 
+  test("collector batch body: legs overlap and a failing leg fails the batch after its sibling ends") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
+    val srcDir = tmp("legs-src")
+    envBatch.write.mode("overwrite").parquet(srcDir)
+    def sink(f: () => Unit) = new graft.sinks.EventSink {
+      def name = "test"
+      def write(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = f()
+    }
+    def failure(good: graft.sinks.EventSink, bad: graft.sinks.EventSink): Throwable = {
+      val q = StreamingCollector.startWithSinks(
+        spark.readStream.schema(envBatch.schema).parquet(srcDir),
+        CollectorConfig.testScale, good, bad, tmp("legs-ckpt"),
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(120000))
+    }
+    def messages(t: Throwable) =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+    // the good leg fails at once; the bad leg is still running
+    val goodStarted = new CountDownLatch(1)
+    val overlapped = new AtomicBoolean(false)
+    val badFinished = new AtomicBoolean(false)
+    val e1 = failure(
+      sink { () => goodStarted.countDown(); throw new IllegalStateException("good sink down") },
+      sink { () =>
+        overlapped.set(goodStarted.await(60, TimeUnit.SECONDS))
+        Thread.sleep(300)
+        badFinished.set(true)
+      })
+    assert(messages(e1).contains("good sink down"))
+    assert(overlapped.get, "the bad leg ran while the good leg was running")
+    assert(badFinished.get, "the batch failed before its bad leg ended")
+
+    // the bad leg fails while the good leg succeeds
+    val goodFinished = new AtomicBoolean(false)
+    val e2 = failure(
+      sink { () => Thread.sleep(300); goodFinished.set(true) },
+      sink { () => throw new IllegalStateException("bad sink down") })
+    assert(messages(e2).contains("bad sink down"))
+    assert(goodFinished.get)
+  }
+
   test("CORS, Set-Cookie and wire-route transforms run unchanged on a stream") {
     // the r3 operators are pure projections/mapPartitions, so the SAME
     // functions must produce batch-identical output under micro-batching
