@@ -16,8 +16,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   envelopes → bad rows (F6/F7) → bad sink
   *
   * The two legs run as [[StreamingCollector.collect]]'s one micro-batch
-  * body, overlapped like every other collector entry point, plus a
-  * [[PipelineMonitor]] listener for /health (R5/R9). Sources and
+  * body: a [[graft.streaming.BatchArms]] scope per batch with the good
+  * leg on the query thread and the bad leg as its arm, joined before the
+  * batch commits. A [[PipelineMonitor]] listener serves /health (R5/R9)
+  * and detaches itself once this query has terminated. Sources and
   * sinks are injected: parquet/file here, Kafka/Kinesis adapters in prod
   * (same `EventSink` contract).
   */
@@ -52,6 +54,7 @@ object CollectorApp {
       (batch, id) => badSink.write(CollectorPipeline.badRows(batch, cfg), id))
       .queryName("graft-collector")
       .start()
+    monitor.detachAfter(spark.streams, query.id)
     Running(query, monitor)
   }
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.Trigger
   * the ingress tier itself is out of engine scope, SURVEY §7.1). Good
   * records land as thrift wire bytes + partition key, bad rows as
   * structured bad-row rows; swap the sinks for
-  * [[graft.sinks.ClientSinks.goodSinkFor]] with SDK-backed client
+  * [[graft.sinks.ClientSinks.sinkFromSettings]] with SDK-backed client
   * factories in a real deployment.
   */
 object CollectorMain {

@@ -499,17 +499,14 @@ object QualityRules {
     // r18c (guide §2.6): the two loss arms are INDEPENDENT until the
     // doc_id join, and both run eager Spark work at construction time —
     // the perceptron's 12 sequential SGD step jobs and the LM arm's
-    // one-pass gram pin. Built serially they stacked end to end; the
-    // futures overlap the LM pin with the SGD loop (values unchanged:
-    // both are pure functions of `docs`).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fM = Future(
-      perceptronTestMargins(docs, trainUpto, valUpto, salt, epochs, miniBatches))
-    val fS = Future(
-      NgramLm.surprisal(docs).select(col("doc_id"), col("bits_x1000")))
-    val m = Await.result(fM, scala.concurrent.duration.Duration.Inf)
-    val s = Await.result(fS, scala.concurrent.duration.Duration.Inf)
+    // one-pass gram pin. Built serially they stacked end to end; the LM
+    // pin runs as an arm beside the SGD loop on the caller's thread
+    // (values unchanged: both are pure functions of `docs`).
+    val (m, s) = graft.streaming.BatchArms(docs.sparkSession) { arms =>
+      val lm = arms.fork("rho: LM surprisal")(
+        NgramLm.surprisal(docs).select(col("doc_id"), col("bits_x1000")))
+      (perceptronTestMargins(docs, trainUpto, valUpto, salt, epochs, miniBatches), lm.join())
+    }
     val ym = when(col("pos"), col("margin")).otherwise(-col("margin"))
     // NOT pinned, measured: the max-normalizer aggregate and the final
     // projection both consume this relation, but its subtree ends in

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Bitext, Bpe, Decontaminate, Dedup, DocSim, Dsir, Html, Hybrid, Multimodal, NgramLm, QualityRules, Retrieval, Sampling, SeqPack, Similarity, TextOps, UnigramLm, UrlOps, Warc, WordPiece}
+import graft.streaming.BatchArms
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -611,39 +612,37 @@ object Training {
     * materialized per-stage verdict table (the lake pattern). */
   private def pinVerdict(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  /** Pin several INDEPENDENT gate verdicts concurrently: each
-    * localCheckpoint is its own Spark job, and the gates share no state,
-    * so running them sequentially leaves the cluster idle between jobs
-    * — concurrent submission lets the scheduler interleave their stages
-    * (same results; each pin materializes per-partition regardless of
-    * ordering).
+  /** Pin several INDEPENDENT named gate verdicts concurrently, one
+    * [[BatchArms]] arm each: each localCheckpoint is its own Spark job,
+    * and the gates share no state, so running them sequentially leaves
+    * the cluster idle between jobs — concurrent submission lets the
+    * scheduler interleave their stages (same results; each pin
+    * materializes per-partition regardless of ordering). A failing gate
+    * cancels its siblings' jobs.
     *
     * r18c (guide §2.6): takes THUNKS, not DataFrames — gate CONSTRUCTION
-    * moves inside the futures too. This matters for exactly one gate:
+    * moves inside the arms too. This matters for exactly one gate:
     * [[graft.operators.Dedup.dedupKeep]]'s connected-components loop runs
     * its iteration jobs EAGERLY when the DataFrame is built, so passing
     * it by value serialized the whole pair-derivation + CC fixpoint on
     * the caller's thread BEFORE any other gate's pin started — the
     * measured core-count-invariant serial prefix of t_pipeline* (VERDICT
-    * r17 item 2). Construction order inside a future changes no values:
+    * r17 item 2). Construction order inside an arm changes no values:
     * each gate is a pure function of `dset`. */
-  private def pinVerdicts(dfs: (() => DataFrame)*): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(dfs.map(mk => Future(pinVerdict(mk())))),
-      scala.concurrent.duration.Duration.Inf)
-  }
+  private def pinVerdicts(spark: SparkSession, gates: (String, () => DataFrame)*): Seq[DataFrame] =
+    BatchArms(spark) { arms =>
+      gates.map { case (name, mk) => arms.fork(s"pin $name")(pinVerdict(mk())) }.map(_.join())
+    }
 
   val tPipeline: Q = (s, d) => {
     val dset = docs(s, d)
     val sampled = Sampling.sampleWithSplits(dset, SampleRates, SampleDefault,
       SampleSalt, SplitTrain, SplitVal, SplitSalt)
-    val Seq(keep, contaminated, ntok) = pinVerdicts(
-      () => Dedup.dedupKeep(dset).select("doc_id"),
-      () => Decontaminate.contamination(dset, SplitTrain, SplitVal, SplitSalt)
-        .filter(col("contaminated")).select("doc_id"),
-      () => dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens")))
+    val Seq(keep, contaminated, ntok) = pinVerdicts(s,
+      "dedup_keep" -> (() => Dedup.dedupKeep(dset).select("doc_id")),
+      "contam" -> (() => Decontaminate.contamination(dset, SplitTrain, SplitVal, SplitSalt)
+        .filter(col("contaminated")).select("doc_id")),
+      "ntok" -> (() => dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens"))))
     sampled
       .join(keep, Seq("doc_id"), "left_semi")
       .join(contaminated, Seq("doc_id"), "left_anti")
@@ -721,13 +720,13 @@ object Training {
     val dset = docs(s, d)
     val sampled = Sampling.sampleWithSplits(dset, SampleRates, SampleDefault,
       SampleSalt, SplitTrain, SplitVal, SplitSalt)
-    val Seq(keep, contaminated, gopher, c4, ntok) = pinVerdicts(
-      () => Dedup.dedupKeep(dset).select("doc_id"),
-      () => Decontaminate.contamination(dset, SplitTrain, SplitVal, SplitSalt)
-        .filter(col("contaminated")).select("doc_id"),
-      () => QualityRules.gopherKeep(dset).filter(col("keep")).select("doc_id"),
-      () => QualityRules.c4Rules(dset).filter(col("keep")).select("doc_id"),
-      () => dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens")))
+    val Seq(keep, contaminated, gopher, c4, ntok) = pinVerdicts(s,
+      "dedup_keep" -> (() => Dedup.dedupKeep(dset).select("doc_id")),
+      "contam" -> (() => Decontaminate.contamination(dset, SplitTrain, SplitVal, SplitSalt)
+        .filter(col("contaminated")).select("doc_id")),
+      "gopher_keep" -> (() => QualityRules.gopherKeep(dset).filter(col("keep")).select("doc_id")),
+      "c4_keep" -> (() => QualityRules.c4Rules(dset).filter(col("keep")).select("doc_id")),
+      "ntok" -> (() => dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens"))))
     sampled
       .join(keep, Seq("doc_id"), "left_semi")
       .join(contaminated, Seq("doc_id"), "left_anti")
@@ -758,11 +757,13 @@ object Training {
     * materialized lake form ([[materializeVerdicts]]). Each is
     * doc_id-keyed and text-free. r18c: THUNKS, so the one gate whose
     * construction runs Spark jobs eagerly (dedup_keep's CC loop) builds
-    * inside its consumer's concurrent future, not on the caller's
-    * thread — see [[pinVerdicts]]. */
-  private def gateVerdicts(dset: DataFrame): Seq[(String, () => DataFrame)] = {
+    * inside its consumer's arm, not on the caller's thread — see
+    * [[pinVerdicts]]. Each thunk builds its gate at most once, however
+    * often it is called. */
+  private[graft] def gateVerdicts(dset: DataFrame): Seq[(String, () => DataFrame)] = {
+    def once(mk: => DataFrame): () => DataFrame = { lazy val df = mk; () => df }
     def flag(set: => DataFrame, name: String): () => DataFrame =
-      () => set.withColumn(name, lit(true))
+      once(set.withColumn(name, lit(true)))
     val gates = Seq(
       "dedup_keep" -> flag(Dedup.dedupKeep(dset).select("doc_id"), "dedup_keep"),
       "contam" -> flag(Decontaminate.contamination(dset, SplitTrain, SplitVal, SplitSalt)
@@ -773,8 +774,8 @@ object Training {
         QualityRules.c4Rules(dset).filter(col("keep")).select("doc_id"), "c4_keep"),
       "clf_keep" -> flag(
         QualityRules.hashedClassifier(dset).filter(col("keep")).select("doc_id"), "clf_keep"),
-      "ntok" -> (() => dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens"))),
-      "clean" -> (() => Dedup.spanDedup(dset)
+      "ntok" -> once(dset.select(col("doc_id"), TextOps.nTokens(col("text")).as("n_tokens"))),
+      "clean" -> once(Dedup.spanDedup(dset)
         .select(col("doc_id"), TextOps.nTokens(col("clean_text")).as("n_tokens_clean"))))
     require(gates.map(_._1) == GateNames,
       "gateVerdicts and GateNames drifted — update both together")
@@ -826,9 +827,9 @@ object Training {
     val fused0 = () => Dedup.spanDedupCarryingNTokens(dset)
       .select(col("doc_id"), col("n_tokens"),
         TextOps.nTokens(col("clean_text")).as("n_tokens_clean"))
-    val Seq(keep, contaminated, gopher, c4, clf, fused) = pinVerdicts(
-      gv("dedup_keep"), gv("contam"), gv("gopher_keep"), gv("c4_keep"),
-      gv("clf_keep"), fused0)
+    val flags = Seq("dedup_keep", "contam", "gopher_keep", "c4_keep", "clf_keep")
+    val Seq(keep, contaminated, gopher, c4, clf, fused) =
+      pinVerdicts(s, flags.map(n => n -> gv(n)) :+ ("ntok+clean" -> fused0): _*)
     assembleManifest(sampled, Seq(keep, contaminated, gopher, c4, clf,
       fused.select(col("doc_id"), col("n_tokens")),
       fused.select(col("doc_id"), col("n_tokens_clean"))))
@@ -842,15 +843,12 @@ object Training {
     * incremental (re-running one changed gate rewrites one narrow table,
     * never the corpus), and the stages are submitted concurrently like
     * [[pinVerdicts]]. Each table reads text exactly once, at write. */
-  def materializeVerdicts(dset: DataFrame, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(gateVerdicts(dset).map { case (name, mk) =>
-        Future(mk().write.mode("overwrite").parquet(s"$dir/$name"))
-      }),
-      scala.concurrent.duration.Duration.Inf)
-  }
+  def materializeVerdicts(dset: DataFrame, dir: String): Unit =
+    BatchArms(dset.sparkSession) { arms =>
+      gateVerdicts(dset).foreach { case (name, mk) =>
+        arms.fork(s"materialize $name")(mk().write.mode("overwrite").parquet(s"$dir/$name"))
+      }
+    }
 
   /** The manifest served FROM the materialized verdict lake: identical
     * rows to [[tPipeline3]] (spec-proven), but every gate is a plain

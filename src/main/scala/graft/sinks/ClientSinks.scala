@@ -320,38 +320,15 @@ object ClientSinks {
     }
   }
 
-  /** Feature-flag wiring: the good-stream sink for a config. Default
-    * stays the durable parquet lake; `kinesis`/`sqs` switch to the
-    * client-backed sinks (factories must be supplied by the deployment —
-    * the SDK-backed implementations — or by tests with mocks). */
-  def goodSinkFor(
-      kind: String,
-      parquetDir: => String,
-      kinesis: => Option[(String, () => KinesisClient)] = None,
-      sqs: => Option[(String, () => SqsClient)] = None): EventSink = kind match {
-    case "kinesis" =>
-      val (stream, f) = kinesis.getOrElse(
-        throw new IllegalArgumentException("kinesis sink enabled but no client factory"))
-      new KinesisEventSink(stream, f)
-    case "sqs" =>
-      val (queue, f) = sqs.getOrElse(
-        throw new IllegalArgumentException("sqs sink enabled but no client factory"))
-      new SqsEventSink(queue, f)
-    case _ => new ParquetDirSink(parquetDir)
-  }
-
   /** A deterministic backoff SCHEDULE from a loaded config's numbers:
     * the reference's jitter formula (`max(uniform[min,max], last·2/3)`,
     * [[graft.sinks.RetryPolicy]]) unrolled driver-side into one Long per
     * retry, so the executor-side closure is stateless and serializable
     * while the delay sequence stays reference-shaped. */
-  def backoffSchedule(s: graft.operators.SinkSettings, seed: Long = 17L): Int => Long = {
-    val policy = new RetryPolicy(s.minBackoffMs, s.maxBackoffMs, s.maxRetries, seed)
-    val schedule = Vector.fill(math.max(s.maxRetries, 1))(policy.nextBackoffMs())
-    attempt => schedule(math.min(math.max(attempt - 1, 0), schedule.length - 1))
-  }
+  def backoffSchedule(s: graft.operators.SinkSettings, seed: Long = 17L): Int => Long =
+    backoffScheduleFor(s.minBackoffMs, s.maxBackoffMs, s.maxRetries, seed)
 
-  /** CONFIG-driven wiring: the same dispatch, but every retry/backoff
+  /** CONFIG-driven wiring: the one kind → sink dispatch; every retry/backoff
     * number comes from the parsed [[graft.operators.SinkSettings]] (the
     * reference's `streams.sink` block — so a loaded
     * `config.kinesis.extended.hocon` actually drives the runtime sink,
@@ -535,8 +512,9 @@ object ClientSinks {
     () => AwsSqsClient(mode, region)
   }
 
-  /** A deterministic schedule from explicit numbers (the kafka backup
-    * block's own backoffPolicy rather than the sink-level one). */
+  /** The one schedule builder, from explicit numbers ([[backoffSchedule]]
+    * passes the sink-level ones; the kafka backup block passes its own
+    * backoffPolicy). */
   def backoffScheduleFor(
       minBackoffMs: Long, maxBackoffMs: Long, maxRetries: Int,
       seed: Long = 17L): Int => Long = {

@@ -137,15 +137,3 @@ object CommitProtocol {
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
       .toSet
 }
-
-/** r18b (guide §1.5): label the Spark jobs a serve phase submits so the
-  * UI / listener-based probes attribute per-batch wall to phases. Job
-  * descriptions are thread-local — safe under the overlapped commits. */
-object JobLabel {
-  def apply[A](spark: org.apache.spark.sql.SparkSession, label: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try body finally sc.setJobDescription(prev)
-  }
-}

@@ -110,7 +110,7 @@ object CrawlPipeline {
     * pages the gates dropped (they never reached the indexes), and the
     * ESD columns −1/"" for pages that never entered the corpus. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: CrawlConfig, rules: DataFrame): DataFrame = {
+                 cfg: CrawlConfig, rules: DataFrame): DataFrame = BatchArms(spark) { arms =>
     import spark.implicits._
     // container walk + extraction: one narrow kernel per shard
     val pages = batch.select(col("content")).as[Array[Byte]]
@@ -150,8 +150,6 @@ object CrawlPipeline {
     val gated = JobLabel(spark, s"crawl b$batchId: gated pin") { gated0.localCheckpoint() }
     val keeps = gated.filter(col("kept"))
       .select(col("doc_id"), col("main_text").as("text"))
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
     // r18b NEGATIVE experiment, reverted (see OPTIMIZATION_r18.md):
     // running the substr window+store probe CONCURRENTLY over `keeps`
     // (a superset of the admitted docs) while IngestDedup computed
@@ -159,13 +157,12 @@ object CrawlPipeline {
     // driver-scheduling bound, and the admitted restriction the overlap
     // forced (a doc_id semi-join under every probe consumer) added more
     // stages than the overlap saved.
-    // r18 (judge r17 #2): the three stores' commits OVERLAP downstream
-    // compute (see IngestDedup.serveBatchStaged — pinned verdicts, per-
-    // store fences, the reordered half-crash replay is spec-pinned);
-    // all are awaited below before this batch returns to the engine.
-    val (dedupV, awaitDedup) =
-      IngestDedup.serveBatchStaged(spark, keeps, batchId, cfg.ingest)
-    val dedup = dedupV
+    // r18 (judge r17 #2): the three stores' commits are arms of this
+    // call's scope and OVERLAP downstream compute (see
+    // IngestDedup.serveBatchStaged — pinned verdicts, per-store fences,
+    // the reordered half-crash replay is spec-pinned); the scope joins
+    // them all before this batch returns to the engine.
+    val dedup = IngestDedup.serveBatchStaged(arms, spark, keeps, batchId, cfg.ingest)
       .select(col("doc_id"), col("exact_new"), col("near_new"), col("is_new"))
     // span-level ESD over the docs that actually ENTER the corpus —
     // the production stage order (whole-doc dedup first keeps the
@@ -174,18 +171,15 @@ object CrawlPipeline {
     // the text the corpus finally stores
     val admitted = keeps.join(
       dedup.filter(col("is_new")).select("doc_id"), Seq("doc_id"), "left_semi")
-    val (spansV, commitSubstr) =
-      SubstrIndex.serveBatchStaged(spark, admitted, batchId, cfg.substr)
-    val fSubstr = Future(commitSubstr())
-    val spans = spansV
+    val spans = SubstrIndex.serveBatchStaged(arms, spark, admitted, batchId, cfg.substr)
       .select(col("doc_id"), col("n_removed").as("n_span_removed"),
         col("kept_md5").as("corpus_md5"))
     // r18c (guide §2.6): the output manifest reads ONLY pinned relations
     // (gated/exact/near pins) plus the store-free substr reassembly over
     // the pinned probe — no plan below ever touches a mutating store —
-    // so its materialization overlaps the commits' tail instead of
-    // running serially after both awaits; the caller's sink write then
-    // scans a batch-sized pin instead of re-planning the 3-way join.
+    // so its materialization overlaps the commit arms' tail instead of
+    // running serially after them; the caller's sink write then scans a
+    // batch-sized pin instead of re-planning the 3-way join.
     val out0 = gated.drop("main_text").join(dedup, Seq("doc_id"), "left")
       .join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"), col("host"), col("n_tokens"),
@@ -195,10 +189,6 @@ object CrawlPipeline {
         (col("kept") && coalesce(col("is_new"), lit(false))).as("corpus_new"),
         coalesce(col("n_span_removed"), lit(-1L)).as("n_span_removed"),
         coalesce(col("corpus_md5"), lit("")).as("corpus_md5"))
-    val fOut = Future(JobLabel(spark, s"crawl b$batchId: output pin") {
-      out0.localCheckpoint() })
-    awaitDedup()
-    scala.concurrent.Await.result(fSubstr, scala.concurrent.duration.Duration.Inf)
-    scala.concurrent.Await.result(fOut, scala.concurrent.duration.Duration.Inf)
+    JobLabel(spark, s"crawl b$batchId: output pin") { out0.localCheckpoint() }
   }
 }

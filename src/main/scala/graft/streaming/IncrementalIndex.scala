@@ -161,30 +161,29 @@ object IncrementalIndex {
     * index mutates so the returned frame never re-reads its own
     * appends. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: IndexConfig): DataFrame = {
-    val (verdicts, commit) = serveBatchStaged(spark, batch, batchId, cfg)
-    commit()
-    verdicts
-  }
+                 cfg: IndexConfig): DataFrame =
+    BatchArms(spark)(serveBatchStaged(_, spark, batch, batchId, cfg))
 
   /** r18 (judge r17 #2): the compute/commit SPLIT of [[serveBatch]] —
-    * verdicts are computed and pinned exactly as before, but the
-    * store-mutating commit comes back as a thunk the caller runs
-    * whenever it likes before the micro-batch completes. Composed serves
-    * ([[IngestDedup]], [[graft.streaming.CrawlPipeline]]) overlap it
-    * with the NEXT stage's compute (guide §2.6 — downstream stages never
-    * read this store, and the verdicts they consume are pinned before
-    * any mutation), which takes the append + sketch jobs off the
-    * per-batch critical path. Crash exactness is unchanged: the commit
-    * is the same intent/commit-fenced unit, only its position in the
-    * batch's wall-clock changes, and every interleaving a crash can now
-    * expose (this store pending while a LATER stage committed) replays
-    * exactly — each store recovers independently and verdicts recompute
-    * against index-minus-own-appends (StreamingSpec pins the reordered
+    * verdicts are computed and pinned exactly as before, and the
+    * store-mutating commit is FORKED into the caller's [[BatchArms]]
+    * scope, which joins it before the micro-batch completes. Composed
+    * serves ([[IngestDedup]], [[graft.streaming.CrawlPipeline]]) overlap
+    * it with the NEXT stage's compute (guide §2.6 — downstream stages
+    * never read this store, and the verdicts they consume are pinned
+    * before any mutation), which takes the append + sketch jobs off the
+    * per-batch critical path. The per-batch Bloom broadcast is destroyed
+    * by the scope once the verdict pin and the commit have both ended.
+    * Crash exactness is unchanged: the commit is the same
+    * intent/commit-fenced unit, only its position in the batch's
+    * wall-clock changes, and every interleaving a crash can now expose
+    * (this store pending while a LATER stage committed) replays exactly
+    * — each store recovers independently and verdicts recompute against
+    * index-minus-own-appends (StreamingSpec pins the reordered
     * half-crash). */
   private[streaming] def serveBatchStaged(
-      spark: SparkSession, batch: DataFrame, batchId: Long,
-      cfg: IndexConfig): (DataFrame, () => Unit) = {
+      arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
+      cfg: IndexConfig): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r12: intent/commit fencing — a crash between the parquet append
     // and the commit marker is rolled back HERE (orphan files deleted)
@@ -216,6 +215,7 @@ object IncrementalIndex {
     // are bit-identical; mightContainLong on a broadcast filter is the
     // exact shape guide §3.2 prescribes.
     val bfB = spark.sparkContext.broadcast(BloomFilter.readFrom(bloomBytes))
+    arms.release(bfB.destroy())
     val mightSeen = udf((h: Long) => bfB.value.mightContainLong(h))
     def maybeSeen: Column = mightSeen(xxhash64(col("fingerprint")))
 
@@ -232,24 +232,22 @@ object IncrementalIndex {
     val verdicts = JobLabel(spark, s"exact b$batchId: verdicts pin") {
       definitelyNew.unionByName(verified).localCheckpoint() }
 
-    val commit: () => Unit =
-      if (replay) () => ()
-      else () => proto.commit { JobLabel(spark, s"exact b$batchId: commit") {
-        val newFps = verdicts.filter(col("is_new")).select("fingerprint")
-        newFps.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(cfg.fingerprintsDir)
-        // sketch merge INSIDE the fence: a crash after the merge but
-        // before the commit marker re-runs the batch against the
-        // rolled-back index — the stale extra bits only route rows to
-        // the verification join, which answers exactly
-        sketchBytes(newFps, cfg).foreach { batchSketch =>
-          val merged = BloomFilter.readFrom(bloomBytes)
-          merged.mergeInPlace(BloomFilter.readFrom(batchSketch))
-          val out = new java.io.ByteArrayOutputStream()
-          merged.writeTo(out)
-          writeFile(cfg.bloomPath, out.toByteArray)
-        }
-      } }
-    (verdicts, commit)
+    if (!replay) arms.fork(s"exact b$batchId: commit") { proto.commit {
+      val newFps = verdicts.filter(col("is_new")).select("fingerprint")
+      newFps.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(cfg.fingerprintsDir)
+      // sketch merge INSIDE the fence: a crash after the merge but
+      // before the commit marker re-runs the batch against the
+      // rolled-back index — the stale extra bits only route rows to
+      // the verification join, which answers exactly
+      sketchBytes(newFps, cfg).foreach { batchSketch =>
+        val merged = BloomFilter.readFrom(bloomBytes)
+        merged.mergeInPlace(BloomFilter.readFrom(batchSketch))
+        val out = new java.io.ByteArrayOutputStream()
+        merged.writeTo(out)
+        writeFile(cfg.bloomPath, out.toByteArray)
+      }
+    } }
+    verdicts
   }
 }

@@ -55,44 +55,39 @@ object IngestDedup {
     * stages. Call from `foreachBatch` with the stream's batchId.
     * r18c (guide §2.6): the composed verdict join reads only the two
     * stages' PINNED verdict relations (never a store), so it is
-    * materialized concurrently with the commits' tail — the caller's
-    * sink write then scans a batch-sized pin instead of re-planning the
-    * exact⟕near join after the awaits. */
+    * materialized on the caller's thread while the commit arms run —
+    * the caller's sink write then scans a batch-sized pin instead of
+    * re-planning the exact⟕near join after the commits end. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: IngestConfig): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val (verdicts, await) = serveBatchStaged(spark, batch, batchId, cfg)
-    val fPin = Future(JobLabel(spark, s"ingest b$batchId: verdicts pin") {
-      verdicts.localCheckpoint() })
-    await()
-    Await.result(fPin, scala.concurrent.duration.Duration.Inf)
-  }
+                 cfg: IngestConfig): DataFrame =
+    BatchArms(spark) { arms =>
+      val verdicts = serveBatchStaged(arms, spark, batch, batchId, cfg)
+      JobLabel(spark, s"ingest b$batchId: verdicts pin") { verdicts.localCheckpoint() }
+    }
 
   /** r18 (judge r17 #2): the OVERLAPPED composition — each stage's
     * store-mutating commit (parquet append + sketch merge, 1-2 Spark
-    * jobs each) runs on a background thread WHILE the next stage
-    * computes (guide §2.6: independent jobs back-fill the scheduler).
-    * This is safe because (a) verdicts and band relations are pinned
-    * (`localCheckpoint`) before any commit exists, so no downstream
-    * plan ever reads a mutating store, and (b) the near stage reads
-    * only ITS OWN store + the pinned exact verdicts — the exact
-    * store's append is invisible to it. Crash exactness: each commit
-    * keeps its own intent/commit fence; the only NEW interleaving a
-    * crash can expose is "a later stage committed while an earlier
-    * one is still pending", and each store recovers independently on
-    * replay (rollback the pending half-append, recompute verdicts
-    * against index-minus-own-appends) — StreamingSpec forges exactly
-    * that reordered half-crash and pins bit-identical verdicts.
-    * Returned thunk AWAITS both commits; it must run (and is run, by
-    * [[serveBatch]] / [[CrawlPipeline.serveBatch]]) before the
-    * micro-batch returns to the streaming engine, so the engine's own
-    * batch commit still happens-after every store commit. */
+    * jobs each) is an arm of the caller's [[BatchArms]] scope, running
+    * WHILE the next stage computes (guide §2.6: independent jobs
+    * back-fill the scheduler). This is safe because (a) verdicts and
+    * band relations are pinned (`localCheckpoint`) before any commit
+    * exists, so no downstream plan ever reads a mutating store, and (b)
+    * the near stage reads only ITS OWN store + the pinned exact
+    * verdicts — the exact store's append is invisible to it. Crash
+    * exactness: each commit keeps its own intent/commit fence; the only
+    * NEW interleaving a crash can expose is "a later stage committed
+    * while an earlier one is still pending", and each store recovers
+    * independently on replay (rollback the pending half-append,
+    * recompute verdicts against index-minus-own-appends) — StreamingSpec
+    * forges exactly that reordered half-crash and pins bit-identical
+    * verdicts. The scope ([[serveBatch]] / [[CrawlPipeline.serveBatch]])
+    * joins both commits before the micro-batch returns to the streaming
+    * engine, so the engine's own batch commit still happens-after every
+    * store commit; a failed commit cancels the scope's other jobs and
+    * fails the batch. */
   private[streaming] def serveBatchStaged(
-      spark: SparkSession, batch: DataFrame, batchId: Long,
-      cfg: IngestConfig): (DataFrame, () => Unit) = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
+      arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
+      cfg: IngestConfig): DataFrame = {
     // r18b NEGATIVE experiment, reverted (see OPTIMIZATION_r18.md):
     // deriving the near bands CONCURRENTLY over the whole batch (a
     // superset of the survivors) while the exact stage computed measured
@@ -101,24 +96,18 @@ object IngestDedup {
     // overlap only interleaved job scheduling, and the survivor
     // restriction it forced (a doc_id semi-join under every band
     // consumer) added more stages than the overlap saved.
-    val (exactV, commitExact) =
-      IncrementalIndex.serveBatchStaged(spark, batch, batchId, cfg.exact)
-    // exact's append+sketch overlaps the near stage's banding/probe
-    val fExact = Future(commitExact())
-    val exact = exactV
+    // exact's append+sketch arm overlaps the near stage's banding/probe
+    val exact = IncrementalIndex.serveBatchStaged(arms, spark, batch, batchId, cfg.exact)
       .select(col("doc_id"), col("fingerprint"), col("is_new").as("exact_new"))
     // only first copies of unseen content reach the band join — the
     // survivors relation is doc_id-keyed and text-free, so the gate is
     // one semi-join before the near stage's own corpus pass
     val survivors = batch.join(
       exact.filter(col("exact_new")).select("doc_id"), Seq("doc_id"), "left_semi")
-    val (nearV, commitNear) =
-      NearDupIndex.serveBatchStaged(spark, survivors, batchId, cfg.near)
-    val fNear = Future(commitNear())
-    val near = nearV
+    val near = NearDupIndex.serveBatchStaged(arms, spark, survivors, batchId, cfg.near)
       .select(col("doc_id"), col("is_new").as("near_new"),
         col("n_matches"), col("best_match"))
-    val verdicts = exact.join(near, Seq("doc_id"), "left")
+    exact.join(near, Seq("doc_id"), "left")
       .select(
         col("doc_id"), col("fingerprint"), col("exact_new"),
         // exact-rejected docs never reached the near stage (false);
@@ -127,13 +116,6 @@ object IngestDedup {
         (col("exact_new") && coalesce(col("near_new"), lit(true))).as("is_new"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("best_match"), lit(-1L)).as("best_match"))
-    val await: () => Unit = () => {
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence(Seq(fExact, fNear)), Duration.Inf)
-      ()
-    }
-    (verdicts, await)
   }
 
   /** R14: maintenance hook for the composed ingest — compacts whichever

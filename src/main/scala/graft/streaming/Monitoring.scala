@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryManager}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** One query's latest progress snapshot. */
@@ -39,6 +39,17 @@ final class PipelineMonitor extends StreamingQueryListener {
     state.put(e.id, prev.getOrElse(
       QueryHealth(e.id.toString, -1, 0, 0.0, alive = false, None))
       .copy(alive = false, error = e.exception))
+    owner.foreach { case (streams, id) => if (id == e.id) streams.removeListener(this) }
+  }
+
+  @volatile private var owner: Option[(StreamingQueryManager, java.util.UUID)] = None
+
+  /** Remove this monitor from `streams` once query `id` has terminated,
+    * so a stopped query's monitor stops folding later queries' events;
+    * [[snapshot]] and [[healthy]] keep reporting that query's last state. */
+  def detachAfter(streams: StreamingQueryManager, id: java.util.UUID): Unit = {
+    owner = Some((streams, id))
+    if (Option(state.get(id)).exists(!_.alive)) streams.removeListener(this)
   }
 
   /** Snapshot for a health endpoint / metrics export. */

@@ -99,17 +99,14 @@ object NearDupIndex {
     * they replay exactly; a half-committed crash is rolled back by the
     * intent marker before anything is read). */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: NearDupConfig): DataFrame = {
-    val (verdicts, commit) = serveBatchStaged(spark, batch, batchId, cfg)
-    commit()
-    verdicts
-  }
+                 cfg: NearDupConfig): DataFrame =
+    BatchArms(spark)(serveBatchStaged(_, spark, batch, batchId, cfg))
 
   /** r18: the compute/commit split of [[serveBatch]] — see
     * [[IncrementalIndex.serveBatchStaged]] for the contract (verdicts
-    * and the signature relation are pinned before the thunk exists, so
-    * running the commit concurrently with a LATER stage's compute
-    * changes nothing a crash can observe beyond the
+    * and the signature relation are pinned before the commit is forked
+    * into the caller's scope, so running it concurrently with a LATER
+    * stage's compute changes nothing a crash can observe beyond the
     * store-pending-vs-committed interleavings, each of which replays
     * exactly on its own fence).
     *
@@ -120,8 +117,8 @@ object NearDupIndex {
     * verdict domain is the pin's doc_id column DIRECTLY — the former
     * `bands.select("doc_id").distinct()` exchange is gone. */
   private[streaming] def serveBatchStaged(
-      spark: SparkSession, batch: DataFrame, batchId: Long,
-      cfg: NearDupConfig): (DataFrame, () => Unit) = {
+      arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
+      cfg: NearDupConfig): DataFrame = {
     ensureTable(spark, cfg)
     val proto = CommitProtocol(cfg.bandsDir, cfg.commitsDir, batchId)
     val replay = proto.beginOrRecover()
@@ -170,16 +167,14 @@ object NearDupIndex {
     val verdicts = JobLabel(spark, s"near b$batchId: verdicts pin") {
       verdicts0.localCheckpoint() } // pin BEFORE the index these plans read mutates
 
-    val commit: () => Unit =
-      if (replay) () => ()
-      else () => proto.commit { JobLabel(spark, s"near b$batchId: commit") {
-        appendBands(
-          bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
-            .select(col("band_idx"), col("band_val"), col("doc_id"),
-              lit(batchId).as("batch_id")),
-          cfg)
-      } }
-    (verdicts, commit)
+    if (!replay) arms.fork(s"near b$batchId: commit") { proto.commit {
+      appendBands(
+        bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
+          .select(col("band_idx"), col("band_val"), col("doc_id"),
+            lit(batchId).as("batch_id")),
+        cfg)
+    } }
+    verdicts
   }
 
   /** The per-doc match election over a (doc_id, old_id) pair multiset —

@@ -19,10 +19,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *
   * Good/bad dual routing (reference `CollectorSinks`, `model.scala:37`)
   * happens in one `foreachBatch` body ([[collect]]) shared by every
-  * collector entry point, [[graft.CollectorApp.start]] included: the
-  * batch is cached once, the good and bad legs write from it overlapped,
-  * so the source is read once per micro-batch. The entry points differ
-  * only in what their two legs write.
+  * collector entry point, [[graft.CollectorApp.start]] included: one
+  * [[BatchArms]] scope per batch caches the batch once and writes the
+  * good and bad legs from it overlapped, so the source is read once per
+  * micro-batch and the batch commits only after both legs ended. The
+  * entry points differ only in what their two legs write.
   *
   * State store at scale: the stateful operators (Sessionize, StreamJoin,
   * StreamingDedup) default to Spark's heap-backed store — fine locally,
@@ -38,20 +39,20 @@ object StreamingCollector {
 
   /** The one micro-batch body every collector entry point runs
     * ([[start]], [[startToLake]], [[startWithSinks]] and
-    * [[graft.CollectorApp.start]]): persist the batch, run the good and
-    * bad legs overlapped, join both before rethrowing either's error,
-    * unpersist.
+    * [[graft.CollectorApp.start]]): one [[BatchArms]] scope per batch
+    * that persists the batch, runs the good leg on the query thread and
+    * the bad leg as the scope's one arm, and unpersists once both ended.
     *
     * The legs are independent jobs over the same persisted batch; run one
     * after the other they leave the cluster idle through each leg's tail.
-    * The good leg runs on the query thread and the bad leg on a fresh
-    * thread, which inherits the batch's Spark local properties (job group,
-    * query and batch ids), so stopping the query cancels both legs' jobs.
-    * Both legs end before the batch returns to the engine, so the
+    * The arm inherits the batch's Spark local properties (job group,
+    * query and batch ids), so stopping the query cancels both legs' jobs,
+    * and a failure in either leg cancels the other's jobs and fails the
+    * batch. The scope returns only after both legs ended, so the
     * checkpoint commit still happens-after both sink writes (the
-    * exactly-once-per-sink-write replay contract), and a failure in either
-    * leg fails the batch. Cache-block locking makes the concurrent first
-    * materialization of the persisted batch compute each partition once. */
+    * exactly-once-per-sink-write replay contract). Cache-block locking
+    * makes the concurrent first materialization of the persisted batch
+    * compute each partition once. */
   private[graft] def collect(envelopes: DataFrame, checkpointDir: String, trigger: Trigger)(
       good: (DataFrame, Long) => Unit,
       bad: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
@@ -59,24 +60,12 @@ object StreamingCollector {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.persist()
-        try {
-          var badErr: Throwable = null
-          val badLeg = new Thread(
-            () => try bad(batch, id) catch { case t: Throwable => badErr = t },
-            "collector-bad-leg")
-          badLeg.start()
-          try good(batch, id)
-          catch {
-            case t: Throwable =>
-              badLeg.join()
-              if (badErr != null) t.addSuppressed(badErr)
-              throw t
-          }
-          badLeg.join()
-          if (badErr != null) throw badErr
-        } finally batch.unpersist()
-        ()
+        BatchArms(batch.sparkSession) { arms =>
+          batch.persist()
+          arms.release(batch.unpersist())
+          arms.fork("collector bad leg")(bad(batch, id))
+          good(batch, id)
+        }
       }
 
   def start(

@@ -75,29 +75,26 @@ object SubstrIndex {
     * unless this batchId already committed.
     * r18c (guide §2.6): the verdict reassembly reads only the pinned
     * probe + the batch text (never this store — the single-probe fusion
-    * made that structural), so it is materialized concurrently with the
-    * commit instead of serially by the caller's sink write afterward. */
+    * made that structural), so it is materialized on the caller's
+    * thread while the commit arm runs, instead of serially by the
+    * caller's sink write afterward. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: SubstrConfig): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val (verdicts, commit) = serveBatchStaged(spark, batch, batchId, cfg)
-    val fPin = Future(JobLabel(spark, s"substr b$batchId: verdicts pin") {
-      verdicts.localCheckpoint() })
-    commit()
-    Await.result(fPin, scala.concurrent.duration.Duration.Inf)
-  }
+                 cfg: SubstrConfig): DataFrame =
+    BatchArms(spark) { arms =>
+      val verdicts = serveBatchStaged(arms, spark, batch, batchId, cfg)
+      JobLabel(spark, s"substr b$batchId: verdicts pin") { verdicts.localCheckpoint() }
+    }
 
   /** r18: the compute/commit split of [[serveBatch]] — see
     * [[IncrementalIndex.serveBatchStaged]] for the contract. The
     * appended relation (the probe's miss arm) is pinned before the
-    * thunk exists, so the commit can run concurrently with anything
-    * that never reads this store. Composed as
+    * commit is forked into the caller's scope, so it runs concurrently
+    * with anything that never reads this store. Composed as
     * [[probeStaged]] → [[verdictsFromProbe]]. */
   private[streaming] def serveBatchStaged(
-      spark: SparkSession, batch: DataFrame, batchId: Long,
-      cfg: SubstrConfig): (DataFrame, () => Unit) =
-    verdictsFromProbe(spark, batch, None,
+      arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
+      cfg: SubstrConfig): DataFrame =
+    verdictsFromProbe(arms, spark, batch, None,
       probeStaged(spark, batch, batchId, cfg), batchId, cfg)
 
   /** The PROBE half of a serve, pinned (r18b, guide §2.4/§2.6): the
@@ -135,15 +132,15 @@ object SubstrIndex {
     ProbeStage(probe, proto, replay)
   }
 
-  /** The VERDICT half: election + span removal + commit thunk over a
-    * pinned [[probeStaged]] result. `docs` are the documents the
+  /** The VERDICT half: election + span removal over a pinned
+    * [[probeStaged]] result, with the commit forked into `arms`. `docs` are the documents the
     * verdicts cover; `members` (when the probe ran over a superset)
     * restricts every probe consumer — hit losers, the fresh election,
     * the append — to those doc_ids, which is exactly the relation a
     * members-only probe would have produced. */
   private[streaming] def verdictsFromProbe(
-      spark: SparkSession, docs: DataFrame, members: Option[DataFrame],
-      st: ProbeStage, batchId: Long, cfg: SubstrConfig): (DataFrame, () => Unit) = {
+      arms: BatchArms, spark: SparkSession, docs: DataFrame, members: Option[DataFrame],
+      st: ProbeStage, batchId: Long, cfg: SubstrConfig): DataFrame = {
     val probe = members match {
       case Some(m) => st.probe.join(m.select("doc_id"), Seq("doc_id"), "left_semi")
       case None => st.probe
@@ -180,11 +177,18 @@ object SubstrIndex {
     val dropStarts = knownLosers.unionByName(freshLosers)
       .groupBy("doc_id").agg(sort_array(collect_list(col("pos"))).as("drop_starts"))
 
+    // r18b: the verdict relation is deliberately NOT pinned — since the
+    // single-probe fusion, its plan reads only the pinned probe and the
+    // batch text, never this store, so the commit's concurrent append
+    // cannot be observed through it and its (single) consumer inlines
+    // the reassembly into its own execution: one fewer serial query
+    // execution per micro-batch in both the standalone serve and the
+    // composed crawl pipeline.
     // reassembly: the batch text crosses one doc_id exchange, each doc
     // filters its locally re-derived tokens against its loser starts
     // (span-merged linear kernel — see Dedup.keptAfterDrops)
     val w = cfg.w
-    val verdicts0 = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+    val verdicts = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .join(dropStarts, Seq("doc_id"), "left")
       .withColumn("drop_starts",
         coalesce(col("drop_starts"), array().cast("array<int>")))
@@ -195,23 +199,12 @@ object SubstrIndex {
         size(col("toks")).cast("long").as("n_tokens"),
         (size(col("toks")) - size(col("kept_arr"))).cast("long").as("n_removed"),
         md5(array_join(col("kept_arr"), " ")).as("kept_md5"))
-    // r18b: the verdict relation is deliberately NOT pinned — since the
-    // single-probe fusion, its plan reads only the pinned probe and the
-    // batch text, never this store, so the commit's concurrent append
-    // cannot be observed through it and its (single) consumer inlines
-    // the reassembly into its own execution: one fewer serial query
-    // execution per micro-batch in both the standalone serve and the
-    // composed crawl pipeline.
-    val verdicts = verdicts0
-
-    val commit: () => Unit =
-      if (st.replay) () => ()
-      else () => st.proto.commit { JobLabel(spark, s"substr b$batchId: commit") {
-        BandStore.append(
-          fresh.select("band_val").distinct().withColumn("batch_id", lit(batchId)),
-          cfg.tableName, cfg.fpsDir, cfg.buckets)
-      } }
-    (verdicts, commit)
+    if (!st.replay) arms.fork(s"substr b$batchId: commit") { st.proto.commit {
+      BandStore.append(
+        fresh.select("band_val").distinct().withColumn("batch_id", lit(batchId)),
+        cfg.tableName, cfg.fpsDir, cfg.buckets)
+    } }
+    verdicts
   }
 
   /** Plan snapshot surface (r18, [[graft.streaming.ProbeSubstrPlans]]):

@@ -80,9 +80,9 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
   }
 
   test("app wired to the kinesis client sink delivers every good wire record") {
-    // the production wiring: goodSinkFor flag selects the client-backed
-    // sink; the mock wire client receives exactly the size-gated good
-    // records with their partition keys
+    // the production wiring with the client-backed kinesis sink: the
+    // mock wire client receives exactly the size-gated good records with
+    // their partition keys
     import graft.sinks.ClientSinks
     MockClients.reset()
     val cfg = CollectorConfig.testScale
@@ -95,8 +95,7 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       spark,
       spark.readStream.schema(envBatch.schema).parquet(srcDir),
       cfg,
-      goodSink = ClientSinks.goodSinkFor("kinesis", badDir,
-        kinesis = Some(("events", () => MockClients.kinesis(0)))),
+      goodSink = new ClientSinks.KinesisEventSink("events", () => MockClients.kinesis(0)),
       badSink = new ParquetDirSink(badDir, "bad"),
       checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -110,5 +109,33 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
     val decoded = ThriftPayload.deserialize(stored.head.payload)
     assert(decoded.collector === cfg.collectorName)
     assert(stored.forall(_.key.nonEmpty))
+  }
+
+  test("start/stop cycles on one session leave no monitor listener behind; " +
+    "each monitor keeps its own query's last state") {
+    val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf).limit(50)
+    val srcDir = Files.createTempDirectory("cycle-src").toString
+    envBatch.write.mode("overwrite").parquet(srcDir)
+    def dir(p: String) = Files.createTempDirectory(p).toString
+    val before = spark.streams.listListeners().length
+    val monitors = (1 to 3).map { _ =>
+      val running = CollectorApp.start(
+        spark,
+        spark.readStream.schema(envBatch.schema).parquet(srcDir),
+        CollectorConfig.testScale,
+        goodSink = new ParquetDirSink(dir("cycle-good"), "good"),
+        badSink = new ParquetDirSink(dir("cycle-bad"), "bad"),
+        checkpointDir = dir("cycle-ckpt"),
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
+      running.query.stop()
+      org.apache.spark.SparkTestAccess.drainListeners(spark.sparkContext)
+      running.monitor
+    }
+    assert(spark.streams.listListeners().length === before)
+    monitors.foreach { m =>
+      val last = m.snapshot
+      assert(last.keySet === Set("graft-collector"))
+      assert(!last("graft-collector").alive && m.healthy)
+    }
   }
 }

@@ -232,6 +232,25 @@ class QualitySpec extends AnyFunSuite with WallBudget {
     assert(again.except(pinned).count() === 0 && pinned.except(again).count() === 0)
   }
 
+  test("a v3 gate thunk builds its gate once: a second call returns the same DataFrame and runs no job") {
+    import graft.queries.Training
+    val sc = spark.sparkContext
+    val gate = Training.gateVerdicts(Tables.documents(spark, TestSpark.Sf)).toMap.apply("dedup_keep")
+    val jobs = new JobStarts(sc)
+    try {
+      sc.setJobGroup("gate-first-call", "first call")
+      val first = gate()
+      sc.setJobGroup("gate-second-call", "second call")
+      val second = gate()
+      sc.clearJobGroup()
+      assert(second eq first)
+      assert(jobs.where("spark.jobGroup.id", _ == "gate-first-call").nonEmpty,
+        "dedup_keep's connected-components loop runs its jobs when the gate is built")
+      assert(jobs.where("spark.jobGroup.id", _ == "gate-second-call").isEmpty,
+        "a second call must not rebuild the gate")
+    } finally { sc.clearJobGroup(); jobs.close() }
+  }
+
   test("AUC rank arithmetic: separable 1.0, inverted 0.0, ties half-credit, mixed exact") {
     import graft.operators.QualityRules
     def auc(rows: (Long, Boolean)*): (Long, Long, Long, Double) = {

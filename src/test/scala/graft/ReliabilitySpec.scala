@@ -186,16 +186,6 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       sleeper = MockClients.recordBackoff).write(df, 1L))
   }
 
-  test("goodSinkFor: flag selects the client sink, default stays parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("flag").toString
-    assert(ClientSinks.goodSinkFor("parquet", dir).name === "parquet")
-    assert(ClientSinks.goodSinkFor("kinesis", dir,
-      kinesis = Some(("s1", () => MockClients.kinesis(0)))).name === "kinesis(s1)")
-    assert(ClientSinks.goodSinkFor("sqs", dir,
-      sqs = Some(("q1", () => MockClients.sqs()))).name === "sqs(q1)")
-    assertThrows[IllegalArgumentException](ClientSinks.goodSinkFor("kinesis", dir))
-  }
-
   test("open breaker skips primary straight to fallback (fast failover R3)") {
     val primary = new CollectingSink("p", failFirst = 100)
     val fallback = new CollectingSink("f")

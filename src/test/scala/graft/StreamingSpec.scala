@@ -194,6 +194,20 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(goodFinished.get)
   }
 
+  test("one concurrency path: no scala.concurrent or Await in src/main outside BatchArms") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "BatchArms.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("scala.concurrent") || l.contains("Await.") => s"$p:${i + 1}: $l"
+        }
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("CORS, Set-Cookie and wire-route transforms run unchanged on a stream") {
     // the r3 operators are pure projections/mapPartitions, so the SAME
     // functions must produce batch-identical output under micro-batching
@@ -1633,6 +1647,74 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       .filter(c("batch_id") === 1L).select("fingerprint").distinct().count() ===
       spark.read.parquet(cfg.exact.fingerprintsDir).filter(c("batch_id") === 1L).count(),
       "exact store must hold each batch-1 fingerprint exactly once after recovery")
+  }
+
+  test("composed ingest dedup: a failed commit arm fails the batch, ends every tagged job " +
+    "before returning, and re-serving gives the clean run's verdicts") {
+    import graft.streaming.{DurableFs, IngestDedup}
+    import graft.streaming.IngestDedup.IngestConfig
+    val idx = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight nine ten")).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (11L, "one two three four five six seven eight nine eleven"),
+      (12L, "completely different words entirely novel tokens"),
+      (13L, "completely different words entirely novel tokens")).toDF("doc_id", "text")
+    def serve(cfg: IngestConfig) =
+      IngestDedup.serveBatch(spark, batch, 1L, cfg).collect().map(_.toSeq).toSet
+    val clean = IngestConfig(tmp("ingest-clean"))
+    IngestDedup.init(spark, idx, clean)
+    val expected = serve(clean)
+
+    // the near store's commit marker write fails after its append ran
+    val cfg = IngestConfig(tmp("ingest-fault"))
+    IngestDedup.init(spark, idx, cfg)
+    val marker = s"${cfg.near.commitsDir}/1"
+    val failing = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+          replication: Short, blockSize: Long,
+          progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream =
+        if (f.toUri.getPath == s"$marker.tmp") throw new java.io.IOException("injected commit failure")
+        else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    }
+    failing.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val jobs = new JobStarts(spark.sparkContext)
+    val (e, returnedAt) = try {
+      val e = intercept[java.io.IOException] {
+        DurableFs.fsOverride.withValue(Some(failing))(IngestDedup.serveBatch(spark, batch, 1L, cfg))
+      }
+      val returnedAt = System.currentTimeMillis()
+      Thread.sleep(1000) // room for a straggling arm to submit a job
+      (e, returnedAt)
+    } finally jobs.close()
+    assert(e.getMessage === "injected commit failure")
+    val tagged = jobs.where("spark.job.tags", _.contains("graft-arms-"))
+    assert(tagged.nonEmpty)
+    assert(tagged.forall(_._1 <= returnedAt), "a job of the failed batch started after serveBatch returned")
+    assert(!DurableFs.exists(marker), "the failed store must not read as committed")
+    assert(serve(cfg) === expected, "re-serving the batch recovers the clean run's verdicts")
+  }
+
+  test("incremental dedup index: the per-batch Bloom broadcast dies with its batch over a long drain") {
+    import graft.streaming.IncrementalIndex
+    val cfg = IncrementalIndex.IndexConfig(tmp("bloom-drain"))
+    IncrementalIndex.init(spark, Seq((1L, "seed corpus doc")).toDF("doc_id", "text"), cfg)
+    def blooms = org.apache.spark.SparkTestAccess.broadcastValues(
+      classOf[org.apache.spark.util.sketch.BloomFilter])
+    val before = blooms
+    // checked after every batch, not only at the end: a leaked broadcast
+    // also dies once the JVM collects its handle, so only a prompt
+    // per-batch count tells destroy() from garbage collection
+    val leftover = (1 to 20).map { b =>
+      IncrementalIndex.serveBatch(spark,
+        Seq((b * 10L, s"drain batch $b doc"), (b * 10L + 1, "seed corpus doc")).toDF("doc_id", "text"),
+        b.toLong, cfg).count()
+      // destroy() removes the blocks asynchronously
+      val deadline = System.nanoTime() + 1000000000L
+      while (blooms > before && System.nanoTime() < deadline) Thread.sleep(50)
+      blooms - before
+    }
+    assert(leftover.forall(_ <= 0), s"live Bloom broadcasts above the start after each batch: $leftover")
   }
 
   test("CommitProtocol: marker atomicity, stale-intent cleanup, torn temp files ignored") {
