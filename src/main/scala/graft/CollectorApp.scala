@@ -1,33 +1,43 @@
 package graft
 
-import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload}
+import graft.operators.{CollectorConfig, CollectorPipeline}
 import graft.sinks.{CircuitBreaker, EventSink, FailoverSink, ParquetDirSink, RetryPolicy}
 import graft.streaming.{PipelineMonitor, StreamingCollector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, octet_length}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The assembled collector dataflow — what a reference operator would run
   * instead of the Pekko service (reference `Collector.scala:94-204` run
   * loop → one Structured Streaming query):
   *
-  *   envelopes → payload build (P1-P7, F1-F8) → thrift wire (P14)
-  *            → good sink (with R1-R4 retry/failover)
-  *   envelopes → bad rows (F6/F7) → bad sink
+  *   envelopes → route (payload build P1-P7 + F1-F8, one thrift pass P14,
+  *               size gate F6) ─┬→ good wire rows → good sink (R1-R4)
+  *                              └→ bad rows       → bad sink
   *
-  * The two legs run as [[StreamingCollector.collect]]'s one micro-batch
-  * body: a [[graft.streaming.BatchArms]] scope per batch with the good
-  * leg on the query thread and the bad leg as its arm, joined before the
-  * batch commits. A [[PipelineMonitor]] listener serves /health (R5/R9)
-  * and detaches itself once this query has terminated. Sources and
-  * sinks are injected: parquet/file here, Kafka/Kinesis adapters in prod
-  * (same `EventSink` contract).
+  * A [[PipelineMonitor]] listener serves /health (R5/R9) and detaches
+  * itself once this query has terminated. Sources and sinks are
+  * injected: parquet/file here, Kafka/Kinesis adapters in prod (same
+  * `EventSink` contract).
   */
 object CollectorApp {
 
   final case class Running(query: StreamingQuery, monitor: PipelineMonitor)
 
-  /** Wire and start the dataflow on an unbounded envelope DataFrame. */
+  /** Wire and start the dataflow on an unbounded envelope DataFrame.
+    *
+    * [[CollectorPipeline.route]] is part of the streaming plan: each
+    * envelope's payload is built and serialized once per trigger, and the
+    * micro-batch the engine hands [[StreamingCollector.collect]] is
+    * already the narrow routed rows (no bodies or headers, no exchange).
+    * The collect body persists them and writes its two legs overlapped —
+    * the good leg ([[CollectorPipeline.goodLeg]]: only events whose
+    * serialized size is below `maxBytes`, the reference's sink gate
+    * `SplitBatch.scala:87`) on the query thread and the bad leg
+    * ([[CollectorPipeline.badLeg]]: GenericError + SizeViolation) as its
+    * arm — so a micro-batch runs two jobs, one per sink write. Oversized
+    * splittable POSTs are bad-rowed whole here (no record on the good wire
+    * ever exceeds maxBytes, the contract every sink assumes); the
+    * split-aware routing is [[graft.operators.SplitBatch.routeWire]]. */
   def start(
       spark: SparkSession,
       envelopes: DataFrame,
@@ -39,19 +49,10 @@ object CollectorApp {
 
     val monitor = new PipelineMonitor
     spark.streams.addListener(monitor)
-
-    // the reference's sink gate (`SplitBatch.scala:87`): only events
-    // whose SERIALIZED size fits go to the good stream — the size is
-    // already on the encoded row, no second serialization. Oversized
-    // events surface in badRows (SizeViolation); splittable POSTs would
-    // re-enter as sub-records via SplitBatch.splitTp2/routeWire
-    // (conservative here: bad-row them — no record on the good wire ever
-    // exceeds maxBytes, the contract every sink assumes).
-    val query = StreamingCollector.collect(envelopes, checkpointDir, trigger)(
-      (batch, id) => goodSink.write(
-        ThriftPayload.encode(CollectorPipeline.payloads(batch, cfg)).toDF()
-          .filter(octet_length(col("thrift")) < cfg.maxBytes), id),
-      (batch, id) => badSink.write(CollectorPipeline.badRows(batch, cfg), id))
+    val routed = CollectorPipeline.route(envelopes, cfg)
+    val query = StreamingCollector.collect(routed, checkpointDir, trigger)(
+      (batch, id) => goodSink.write(CollectorPipeline.goodLeg(batch), id),
+      (batch, id) => badSink.write(CollectorPipeline.badLeg(batch), id))
       .queryName("graft-collector")
       .start()
     monitor.detachAfter(spark.streams, query.id)

@@ -3,6 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** One envelope's outcome in [[CollectorPipeline.route]]: a good wire
+  * record (`partition_key` + `thrift`) or one bad row (`bad_row_type` +
+  * `payload_prefix` + `actual_size`); the other side's fields are null. */
+final case class Routed(
+    event_id: Long, good: Boolean, partition_key: String, thrift: Array[Byte],
+    bad_row_type: String, payload_prefix: String, actual_size: Option[Long])
+
 /** The collector dataflow (reference semantics, Spark-first shapes).
   *
   * Input: the request-envelope DataFrame from
@@ -212,50 +219,82 @@ object CollectorPipeline {
     env
       .filter(!dntSuppressed(cfg) && qsValid(col("querystring")) &&
         !bounceSuppressed(cfg))
-      .select(
-        col("event_id"),
-        lit(CollectorConfig.PayloadSchemaUri).as("schema_uri"),
-        ip.as("ip"),
-        col("timestamp_ms"),
-        lit("UTF-8").as("encoding"),
-        lit(cfg.collectorName).as("collector"),
-        col("querystring"),
-        col("body"),
-        remappedPath(cfg).as("path"),
-        col("user_agent"),
-        col("referer").as("referer_uri"),
-        col("hostname"),
-        (if (cfg.bounceEnabled) networkUserIdWithBounce(cfg) else networkUserId)
-          .as("network_userid"),
-        col("content_type"),
-        partitionKey(cfg).as("partition_key"),
-        array_join(filteredHeaders, "|").as("headers_str"),
-        // the true list — headers_str is a display/oracle projection only
-        // (a '|' inside a header value would corrupt a split-based rebuild)
-        filteredHeaders.as("headers"))
+      .select(payloadCols(cfg, lit(CollectorConfig.PayloadSchemaUri)): _*)
 
-  /** Bad-row routing: GenericError for malformed querystrings (F7, gated
-    * before the payload build) and SizeViolation for oversized payloads
-    * (F6), with the reference's exact semantics (`SplitBatch.scala:81-145`):
-    * the gate is the SERIALIZED event size (`wholeEventBytes >= maxBytes`),
-    * `actual_size` reports that wire size, and `payload_prefix` keeps
-    * `maxBytes / 10` characters of the thrift `toString()` rendering —
-    * byte/golden parity asserted in SplitBatchSpec. The size gate runs in
-    * [[ThriftPayload.sizeViolations]]'s typed mapPartitions — the same
-    * serialization the sink pays anyway; both branches are narrow scans. */
-  def badRows(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val qsBad = !qsValid(col("querystring"))
-    val generic = env
-      .filter(qsBad)
-      .select(
-        col("event_id"),
-        lit("GenericError").as("bad_row_type"),
-        col("querystring").as("payload_prefix"),
-        octet_length(col("querystring")).cast("long").as("actual_size"))
-    val oversized =
-      ThriftPayload.sizeViolations(payloads(env, cfg), cfg.maxBytes).toDF()
-    generic.unionByName(oversized)
+  /** [[payloads]]' columns, with `schema_uri` given by the caller. */
+  private def payloadCols(cfg: CollectorConfig, schemaUri: Column): Seq[Column] = Seq(
+    col("event_id"),
+    schemaUri.as("schema_uri"),
+    ip.as("ip"),
+    col("timestamp_ms"),
+    lit("UTF-8").as("encoding"),
+    lit(cfg.collectorName).as("collector"),
+    col("querystring"),
+    col("body"),
+    remappedPath(cfg).as("path"),
+    col("user_agent"),
+    col("referer").as("referer_uri"),
+    col("hostname"),
+    (if (cfg.bounceEnabled) networkUserIdWithBounce(cfg) else networkUserId)
+      .as("network_userid"),
+    col("content_type"),
+    partitionKey(cfg).as("partition_key"),
+    array_join(filteredHeaders, "|").as("headers_str"),
+    // the true list — headers_str is a display/oracle projection only
+    // (a '|' inside a header value would corrupt a split-based rebuild)
+    filteredHeaders.as("headers"))
+
+  /** The collector's one routing pass over envelopes — the reference's
+    * serialize once, then route (`SplitBatch.scala:81-113`). At most one
+    * row per envelope:
+    *  - a malformed querystring (F7) gives a GenericError row
+    *    (`payload_prefix` = the querystring, `actual_size` = its bytes).
+    *    It is decided first, so DNT does not suppress it;
+    *  - DNT- (F1) and bounce-suppressed (F2) requests emit nothing;
+    *  - every other request's payload is serialized once. It is a good row
+    *    (`partition_key` + `thrift`) when its wire size is below
+    *    `maxBytes`, else a SizeViolation row (F6: `actual_size` = the wire
+    *    size, `payload_prefix` = `maxBytes / 10` chars of the thrift
+    *    toString()) — the reference's gate `wholeEventBytes >= maxBytes`.
+    * One [[ThriftPayload.payloadPass]] with no exchange on a stream, so it
+    * runs inside the streaming plan ([[graft.CollectorApp.start]]) as
+    * well as over a batch. [[goodLeg]] and [[badLeg]] are its two legs. */
+  def route(env: DataFrame, cfg: CollectorConfig): DataFrame = {
+    val qsOk = qsValid(col("querystring"))
+    val maxBytes = cfg.maxBytes
+    val rows = env
+      .filter(!qsOk || (!dntSuppressed(cfg) && !bounceSuppressed(cfg)))
+      .select(payloadCols(cfg, when(qsOk, lit(CollectorConfig.PayloadSchemaUri))) :+
+        octet_length(col("querystring")).cast("long").as("qs_bytes"): _*)
+    ThriftPayload.payloadPass[Routed](rows, "partition_key", "querystring", "qs_bytes") { () =>
+      (r, rec, wire) => {
+        def bad(kind: String, prefix: String, size: Long) =
+          Routed(r.getLong(0), good = false, null, null, kind, prefix, Some(size))
+        Iterator.single(
+          if (rec == null) bad("GenericError", r.getString(2), r.getLong(3))
+          else if (wire.length < maxBytes)
+            Routed(r.getLong(0), good = true, r.getString(1), wire, null, null, None)
+          else bad("SizeViolation", ThriftPayload.toStringRepr(rec).take(maxBytes / 10), wire.length))
+      }
+    }.toDF()
   }
+
+  /** [[route]]'s good leg: the wire records every good sink ships
+    * (`event_id`, `partition_key`, `thrift` — [[WirePayload]]'s shape). */
+  def goodLeg(routed: DataFrame): DataFrame =
+    routed.filter(col("good")).select("event_id", "partition_key", "thrift")
+
+  /** [[route]]'s bad leg: [[badRows]]' four columns. */
+  def badLeg(routed: DataFrame): DataFrame =
+    routed.filter(!col("good")).select("event_id", "bad_row_type", "payload_prefix", "actual_size")
+
+  /** The flat bad-row stream over envelopes: GenericError rows for
+    * malformed querystrings (F7) and SizeViolation rows for payloads whose
+    * serialized size reaches `maxBytes` (F6), with the reference's exact
+    * semantics (`SplitBatch.scala:81-145`; byte/golden parity asserted in
+    * SplitBatchSpec). The bad projection of [[route]], so the batch query
+    * and the live collector share one routing definition. */
+  def badRows(env: DataFrame, cfg: CollectorConfig): DataFrame = badLeg(route(env, cfg))
 
   /** The SELF-DESCRIBING bad-row stream: each bad row as the reference's
     * full JSON envelope (`badRow.compact` —

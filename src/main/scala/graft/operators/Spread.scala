@@ -26,6 +26,12 @@ import org.apache.spark.sql.DataFrame
   * scan. Without this check, `encode(payloads(Spread(events)))` paid two
   * stacked round-robin exchanges for one rebalance (r3 plan audit,
   * c_bad_rows/c_thrift_wire).
+  *
+  * The identity on a streaming plan too: `inputFiles` cannot see a
+  * micro-batch's files there, so the count would always read zero and
+  * every trigger would pay the exchange. A stream's parallelism is its
+  * source's (one task per new file or offset range); a kernel placed in
+  * the streaming query, like `CollectorPipeline.route`, stays narrow.
   */
 object Spread {
   def apply(df: DataFrame): DataFrame = {
@@ -34,7 +40,7 @@ object Spread {
       case _: RepartitionOperation | _: Aggregate | _: Join => true
       case _ => false
     }
-    if (alreadyWide) df
+    if (df.isStreaming || alreadyWide) df
     else {
       val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val files = try df.inputFiles.length catch { case _: Throwable => target }

@@ -27,10 +27,6 @@ final case class PayloadRecord(
   * reference hands every sink — `Sink.scala:34`). */
 final case class WirePayload(event_id: Long, partition_key: String, thrift: Array[Byte])
 
-/** One SizeViolation bad row (reference `SplitBatch.scala:132-145`). */
-final case class SizeViolationRow(
-    event_id: Long, bad_row_type: String, payload_prefix: String, actual_size: Long)
-
 /** P14: Thrift wire serialization of CollectorPayload
   * (reference `SplitBatch.scala:36-38,82-83` — `TSerializer.serialize`,
   * TBinaryProtocol). Implemented against libthrift directly with the field
@@ -201,23 +197,6 @@ object ThriftPayload {
       lit(")"))
   }
 
-  /** F6 with the reference's exact semantics (`SplitBatch.scala:81-145`):
-    * the gate is the SERIALIZED event size (`wholeEventBytes >= maxBytes`),
-    * `actual_size` reports that wire size, and `payload_prefix` keeps
-    * `maxBytes / 10` characters of the thrift `toString()` rendering.
-    * A [[payloadPass]] projection — `toString` rendered only for violating
-    * rows. This is the serialization the sink pays anyway (measured:
-    * cheaper than evaluating the equivalent [[wireSizeCol]] column
-    * formula, whose pushed-filter copy re-evaluates the payload build per
-    * reference); the formula remains the spec/oracle-side mirror with
-    * asserted byte parity (SplitBatchSpec). */
-  def sizeViolations(payloads: DataFrame, maxBytes: Int): Dataset[SizeViolationRow] =
-    payloadPass[SizeViolationRow](payloads) { () => (r, rec, wire) =>
-      if (wire.length < maxBytes) Iterator.empty
-      else Iterator.single(SizeViolationRow(
-        r.getLong(0), "SizeViolation", toStringRepr(rec).take(maxBytes / 10), wire.length.toLong))
-    }
-
   /** One decoded wire record for the oracle-checked round-trip query:
     * event_id (carried beside the bytes) + every thrift field, headers
     * joined for the comparable projection. */
@@ -322,15 +301,19 @@ object ThriftPayload {
     "referer_uri", "path", "querystring", "body", "headers", "content_type",
     "hostname", "network_userid")
 
-  /** The one serializer pass behind [[encode]], [[sizeViolations]],
-    * [[SplitBatch.routeWire]] and [[SplitBatch.badRowFields]]: select
-    * `event_id`, the `lead` columns and the 14 record columns (nothing
-    * else), read each Row positionally into a [[PayloadRecord]] (a typed
-    * encoder's deserialization costs more than the thrift write itself),
-    * serialize it with one reused [[Serializer]] per partition — the Spark
-    * analog of the reference's thread-local TSerializer — and hand
-    * (row, record, wire bytes) to the per-partition function `mk` builds.
-    * Narrow; `lead` column `i` is at row position `1 + i`. */
+  /** The one serializer pass behind [[CollectorPipeline.route]],
+    * [[encode]], [[SplitBatch.routeWire]] and [[SplitBatch.badRowFields]]:
+    * select `event_id`, the `lead` columns and the 14 record columns
+    * (nothing else), read each Row positionally into a [[PayloadRecord]]
+    * (a typed encoder's deserialization costs more than the thrift write
+    * itself), serialize it with one reused [[Serializer]] per partition —
+    * the Spark analog of the reference's thread-local TSerializer — and
+    * hand (row, record, wire bytes) to the per-partition function `mk`
+    * builds. A row whose `schema_uri` is null carries no CollectorPayload
+    * (route's malformed-querystring rows): it reaches `f` with a null
+    * record and null wire bytes. Narrow, and inside a streaming plan
+    * too ([[Spread]] is the identity there); `lead` column `i` is at row
+    * position `1 + i`. */
   private[operators] def payloadPass[T <: Product : TypeTag](payloads: DataFrame, lead: String*)(
       mk: () => (Row, PayloadRecord, Array[Byte]) => Iterator[T]): Dataset[T] = {
     implicit val enc: org.apache.spark.sql.Encoder[T] = Encoders.product[T]
@@ -342,11 +325,14 @@ object ThriftPayload {
         val f = mk()
         it.flatMap { r =>
           def s(i: Int): String = r.getString(at + i)
-          val rec = PayloadRecord(
-            s(0), s(1), r.getLong(at + 2), s(3), s(4), s(5), s(6), s(7), s(8), s(9),
-            if (r.isNullAt(at + 10)) null else r.getSeq[String](at + 10),
-            s(11), s(12), s(13))
-          f(r, rec, ser(rec))
+          if (r.isNullAt(at)) f(r, null, null)
+          else {
+            val rec = PayloadRecord(
+              s(0), s(1), r.getLong(at + 2), s(3), s(4), s(5), s(6), s(7), s(8), s(9),
+              if (r.isNullAt(at + 10)) null else r.getSeq[String](at + 10),
+              s(11), s(12), s(13))
+            f(r, rec, ser(rec))
+          }
         }
       }
   }

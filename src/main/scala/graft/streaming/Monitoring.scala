@@ -3,14 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryManager}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-/** One query's latest progress snapshot. */
+/** One query's latest progress snapshot. `durationMs` is that progress's
+  * per-phase breakdown of its trigger (triggerExecution, latestOffset,
+  * getBatch, queryPlanning, walCommit, addBatch, commitOffsets). */
 final case class QueryHealth(
     name: String,
     batchId: Long,
     numInputRows: Long,
     processedRowsPerSecond: Double,
     alive: Boolean,
-    error: Option[String])
+    error: Option[String],
+    durationMs: Map[String, Long] = Map.empty)
 
 /** R5/R9: health + metrics via `StreamingQueryListener` — the engine
   * analog of the reference's background sink health checks
@@ -29,9 +32,11 @@ final class PipelineMonitor extends StreamingQueryListener {
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
+    import scala.jdk.CollectionConverters._
     state.put(p.id, QueryHealth(
       Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
-      p.processedRowsPerSecond, alive = true, None))
+      p.processedRowsPerSecond, alive = true, None,
+      p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap))
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
@@ -133,7 +138,8 @@ object GracefulShutdown {
 
 /** R9: metrics export — snapshot → StatsD line protocol (what the
   * reference's pekko-http-metrics registry pushes; transport injected
-  * like Telemetry's). */
+  * like Telemetry's). Each query also reports its latest trigger's
+  * `durationMs` phases as timers. */
 object StatsdExport {
   private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9_.-]", "_")
 
@@ -144,7 +150,8 @@ object StatsdExport {
         s"$b.batch_id:${q.batchId}|g",
         s"$b.input_rows:${q.numInputRows}|c",
         s"$b.rows_per_sec:${q.processedRowsPerSecond}|g",
-        s"$b.alive:${if (q.alive) 1 else 0}|g")
+        s"$b.alive:${if (q.alive) 1 else 0}|g") ++
+        q.durationMs.toSeq.sorted.map { case (k, ms) => s"$b.duration_ms.${sanitize(k)}:$ms|ms" }
     }
 
   /** R9's HTTP dimension (reference pekko-http-metrics: request counts

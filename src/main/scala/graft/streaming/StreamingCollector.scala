@@ -18,12 +18,17 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * process) to replayable exactly-once-per-sink-write (SURVEY §7.4.4).
   *
   * Good/bad dual routing (reference `CollectorSinks`, `model.scala:37`)
-  * happens in one `foreachBatch` body ([[collect]]) shared by every
+  * ends in one `foreachBatch` body ([[collect]]) shared by every
   * collector entry point, [[graft.CollectorApp.start]] included: one
   * [[BatchArms]] scope per batch caches the batch once and writes the
   * good and bad legs from it overlapped, so the source is read once per
   * micro-batch and the batch commits only after both legs ended. The
-  * entry points differ only in what their two legs write.
+  * entry points differ in what the streaming plan hands the body and in
+  * what their two legs write. `CollectorApp.start` routes inside the
+  * streaming plan ([[CollectorPipeline.route]]: one payload build and one
+  * thrift pass per event), so its batch is the narrow routed rows and its
+  * legs are two filters over them; the entry points here hand the body
+  * raw envelopes and build their outputs per leg.
   *
   * State store at scale: the stateful operators (Sessionize, StreamJoin,
   * StreamingDedup) default to Spark's heap-backed store — fine locally,
@@ -40,8 +45,10 @@ object StreamingCollector {
   /** The one micro-batch body every collector entry point runs
     * ([[start]], [[startToLake]], [[startWithSinks]] and
     * [[graft.CollectorApp.start]]): one [[BatchArms]] scope per batch
-    * that persists the batch, runs the good leg on the query thread and
-    * the bad leg as the scope's one arm, and unpersists once both ended.
+    * that persists the batch (`envelopes` as the streaming plan delivers
+    * it — raw envelopes, or [[CollectorPipeline.route]]'s rows), runs the
+    * good leg on the query thread and the bad leg as the scope's one arm,
+    * and unpersists once both ended.
     *
     * The legs are independent jobs over the same persisted batch; run one
     * after the other they leave the cluster idle through each leg's tail.

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload}
 import graft.sinks.ParquetDirSink
 import graft.sources.EventEnvelopeAdapter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,10 @@ import java.nio.file.Files
   * output + bad rows, with health green afterwards. */
 class CollectorAppSpec extends AnyFunSuite with WallBudget {
   private lazy val spark = TestSpark.spark
+
+  /** Payloads the size gate bad-rows (serialized size >= maxBytes). */
+  private def sizeViolations(env: DataFrame, cfg: CollectorConfig): Long =
+    CollectorPipeline.badRows(env, cfg).filter(col("bad_row_type") === "SizeViolation").count()
 
   test("assembled collector app processes the full envelope stream") {
     val cfg = CollectorConfig.testScale
@@ -39,8 +44,7 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
     // good wire = payloads minus the size-gated (reference `SplitBatch
     // .scala:87`: only events whose serialized size fits are sunk whole)
     val payloadCount = CollectorPipeline.payloads(envBatch, cfg).count()
-    val oversized = graft.operators.ThriftPayload
-      .sizeViolations(CollectorPipeline.payloads(envBatch, cfg), cfg.maxBytes).count()
+    val oversized = sizeViolations(envBatch, cfg)
     assert(good.count() === payloadCount - oversized)
     assert(oversized > 0) // the gate is exercised at testScale
     // no record on the good wire exceeds the cap — the sink contract
@@ -71,9 +75,8 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
     running.query.awaitTermination(120000)
     val cfg = CollectorConfig.testScale
-    val payloads = CollectorPipeline.payloads(envBatch, cfg)
-    val expectedGood = payloads.count() -
-      graft.operators.ThriftPayload.sizeViolations(payloads, cfg.maxBytes).count()
+    val expectedGood =
+      CollectorPipeline.payloads(envBatch, cfg).count() - sizeViolations(envBatch, cfg)
     assert(spark.read.parquet(goodDir).count() === expectedGood)
     assert(spark.read.parquet(badDir).count() ===
       CollectorPipeline.badRows(envBatch, cfg).count())
@@ -100,9 +103,8 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     running.query.awaitTermination(120000)
-    val payloads = CollectorPipeline.payloads(envBatch, cfg)
-    val expected = payloads.count() -
-      graft.operators.ThriftPayload.sizeViolations(payloads, cfg.maxBytes).count()
+    val expected =
+      CollectorPipeline.payloads(envBatch, cfg).count() - sizeViolations(envBatch, cfg)
     val stored = MockClients.kinesisStored
     assert(stored.size.toLong === expected)
     // every stored record decodes and carries its row's partition key
@@ -137,5 +139,38 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       assert(last.keySet === Set("graft-collector"))
       assert(!last("graft-collector").alive && m.healthy)
     }
+  }
+
+  test("a collector micro-batch runs two jobs, the good and the bad write, and its " +
+    "streaming plan holds no exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
+    val srcDir = Files.createTempDirectory("budget-src").toString
+    envBatch.write.mode("overwrite").parquet(srcDir)
+    def dir(p: String) = Files.createTempDirectory(p).toString
+    val jobs = new JobStarts(spark.sparkContext)
+    try {
+      val running = CollectorApp.start(
+        spark,
+        spark.readStream.schema(envBatch.schema).parquet(srcDir),
+        CollectorConfig.testScale,
+        goodSink = new ParquetDirSink(dir("budget-good"), "good"),
+        badSink = new ParquetDirSink(dir("budget-bad"), "bad"),
+        checkpointDir = dir("budget-ckpt"),
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      running.query.awaitTermination(120000)
+      val id = running.query.id.toString
+      val perBatch = jobs.where("sql.streaming.queryId", _ == id)
+        .groupBy { case (_, p) => p.getProperty("streaming.sql.batchId") }
+        .map { case (batch, starts) => batch -> starts.size }
+      assert(perBatch.nonEmpty)
+      assert(perBatch.values.forall(_ == 2), s"jobs per batch: $perBatch")
+      val plan = running.query.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case m: MapPartitionsExec => m }.size === 1, plan.treeString)
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
+    } finally jobs.close()
   }
 }

@@ -177,7 +177,6 @@ class SplitBatchSpec extends AnyFunSuite with WallBudget {
     val p = payloadRows(cases.toSeq.map { case (id, c) => id -> c._1 })
     val routes = SplitBatch.routeWire(p, max).collect().map(r => r.event_id -> r).toMap
     val bad = SplitBatch.badRowFields(p, max).collect().groupBy(_.event_id)
-    val violations = ThriftPayload.sizeViolations(p, max).collect().map(_.event_id).toSet
     assert(routes.keySet === cases.keySet)
     cases.foreach { case (id, (r, disposition, reason, sizes)) =>
       val whole = ThriftPayload.serialize(r).length.toLong
@@ -194,21 +193,22 @@ class SplitBatchSpec extends AnyFunSuite with WallBudget {
         assert(b.reason === reason && b.timestamp_ms === r.timestamp, s"event $id")
         assert(b.payload_prefix === ThriftPayload.toStringRepr(r).take(max / 10), s"event $id")
       }
-      assert(violations.contains(id) === (disposition != "good"), s"event $id")
     }
     assert(routes(8L).n_good === 3) // 108-byte elements, ~200-byte budget: one per sub-batch
     assert(routes(7L).n_good === 1 && routes(9L).n_good === 0)
   }
 
-  test("wireRouteScale fixture: sizeViolations ids are routeWire's non-good ids") {
+  test("wireRouteScale fixture: route's SizeViolation ids are routeWire's non-good ids") {
     import graft.sources.EventEnvelopeAdapter
+    import org.apache.spark.sql.functions.col
     val cfg = CollectorConfig.wireRouteScale
-    val p = CollectorPipeline.payloads(
-      EventEnvelopeAdapter.envelopes(TestSpark.spark, TestSpark.Sf), cfg)
+    val env = EventEnvelopeAdapter.envelopes(TestSpark.spark, TestSpark.Sf)
+    val p = CollectorPipeline.payloads(env, cfg)
     val routes = SplitBatch.routeWire(p, cfg.maxBytes).collect()
     val nonGood = routes.filter(_.disposition != "good").map(_.event_id).toSet
-    val violations =
-      ThriftPayload.sizeViolations(p, cfg.maxBytes).collect().map(_.event_id).toSet
+    val violations = CollectorPipeline.route(env, cfg)
+      .filter(col("bad_row_type") === "SizeViolation")
+      .select("event_id").collect().map(_.getLong(0)).toSet
     assert(nonGood.nonEmpty)
     assert(violations === nonGood)
     val badCounts = SplitBatch.badRowFields(p, cfg.maxBytes).collect()

@@ -91,6 +91,36 @@ class ThriftMonitorSpec extends AnyFunSuite with WallBudget {
     } finally spark.streams.removeListener(mon)
   }
 
+  test("PipelineMonitor keeps the latest trigger's durationMs; StatsD exports each phase as a timer") {
+    val mon = new PipelineMonitor
+    spark.streams.addListener(mon)
+    try {
+      val src = java.nio.file.Files.createTempDirectory("dur-src").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("dur-ckpt").toString
+      import spark.implicits._
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite").parquet(src)
+      val q = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        .writeStream.option("checkpointLocation", ckpt)
+        .queryName("dur-test")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .format("noop").start()
+      q.awaitTermination(60000)
+      org.apache.spark.SparkTestAccess.drainListeners(spark.sparkContext)
+      val phases = Seq("triggerExecution", "addBatch", "latestOffset", "getBatch",
+        "walCommit", "queryPlanning", "commitOffsets")
+      val health = mon.snapshot("dur-test")
+      val last = q.lastProgress.durationMs
+      phases.foreach { k =>
+        assert(health.durationMs.get(k) === Some(last.get(k).longValue), k)
+      }
+      assert(health.durationMs("triggerExecution") >= health.durationMs("addBatch"))
+      val statsd = graft.streaming.StatsdExport.lines(mon.snapshot)
+      phases.foreach { k =>
+        assert(statsd.contains(s"graft.dur-test.duration_ms.$k:${health.durationMs(k)}|ms"), k)
+      }
+    } finally spark.streams.removeListener(mon)
+  }
+
   test("graceful shutdown flips health BEFORE the drain sleep and the query stop") {
     import graft.streaming.{GracefulShutdown, PipelineMonitor}
     val mon = new PipelineMonitor
