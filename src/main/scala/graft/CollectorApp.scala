@@ -17,7 +17,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * A [[PipelineMonitor]] listener serves /health (R5/R9) and detaches
   * itself once this query has terminated. Sources and sinks are
   * injected: parquet/file here, Kafka/Kinesis adapters in prod (same
-  * `EventSink` contract).
+  * `EventSink` contract). Behind the live edge the source is
+  * [[graft.streaming.HttpEdgeServer.stream]], which publishes the edge's
+  * buffered envelopes at each trigger, so a request waits at most one
+  * trigger for its batch. Checkpoint logs and parquet sink files go
+  * through the session's fork-free `file:` classes
+  * ([[GraftSession]]), so a trigger starts no `chmod`/`readlink` process.
   */
 object CollectorApp {
 

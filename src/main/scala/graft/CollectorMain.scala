@@ -41,7 +41,8 @@ object CollectorMain {
   }
 
   /** LIVE HTTP mode — the full reference shape in one process: bind the
-    * [[graft.streaming.HttpEdgeServer]] edge, stream its spool through the
+    * [[graft.streaming.HttpEdgeServer]] edge, stream its spool (whose
+    * buffered tail the source publishes at every trigger) through the
     * assembled dataflow, answer `/health` from the pipeline monitor, and
     * honor the reference's SIGTERM order (health down BEFORE the drain
     * window and query stop — `Collector.scala:206-233`). Returns
@@ -123,17 +124,10 @@ object CollectorMain {
     val triggerMs = if (rest.length >= 5) rest(4).toLong else 5000L
     val trigger = Trigger.ProcessingTime(triggerMs) // reference buffer.timeLimit
     if (http) {
+      // the spool source publishes the edge's buffered tail at every
+      // trigger: the time-limit analog of the reference's buffer flush
       val (server, running) =
         wireHttp(spark, rest(0), rest(1), rest(2), rest(3), trigger, cfg)
-      // time-limit analog of the reference's buffer flush: publish the
-      // spool tail even under low traffic (flushEvery is the record limit)
-      val flusher = new Thread(() => {
-        while (!running.monitor.isShuttingDown) {
-          Thread.sleep(triggerMs); server.flush()
-        }
-      }, "edge-spool-flusher")
-      flusher.setDaemon(true)
-      flusher.start()
       sys.addShutdownHook {
         // reference SIGTERM order: health flips down first (the monitor's
         // healthy goes false on requestShutdown, which /health serves),

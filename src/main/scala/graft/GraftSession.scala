@@ -14,10 +14,21 @@ import org.apache.spark.sql.SparkSession
   *    splits — raise toward 512m for scan-heavy jobs to cut task count.
   *  - graft extensions: native functions (graft_dot) available in SQL.
   *  - unchunked base64: wire parity (chunked CRLF breaks strict decoders).
+  *  - `file:` through [[ForkFreeLocalFileSystem]] and [[ForkFreeLocalFs]]:
+  *    without the native Hadoop library, Hadoop's local file system falls
+  *    back to its `Shell` and starts a `chmod` process per permission set
+  *    and a `readlink` per `FileContext` rename — about 30 one after
+  *    another on the query thread of every micro-batch (checkpoint logs,
+  *    committer dirs) and 4 in every parquet write task. These classes
+  *    keep the stock permission bits and `.crc` sidecars but start no
+  *    process; other schemes (HDFS, S3A) are untouched.
+  *
+  * `conf` adds session settings (a test warehouse dir, say).
   */
 object GraftSession {
-  def build(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession =
-    SparkSession.builder()
+  def build(master: String, shufflePartitions: Int, appName: String = "graft",
+      conf: Seq[(String, String)] = Nil): SparkSession = {
+    val b = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
@@ -38,5 +49,8 @@ object GraftSession {
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    (ForkFreeLocalFs.hadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v } ++ conf)
+      .foldLeft(b) { case (s, (k, v)) => s.config(k, v) }
       .getOrCreate()
+  }
 }

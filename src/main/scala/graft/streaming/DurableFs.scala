@@ -13,10 +13,11 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *
   *  - **Local FS** (default, all specs): `rename` delegates to POSIX
   *    `rename(2)` — atomic, same as the previous `Files.move(...,
-  *    ATOMIC_MOVE)`. The `file:` scheme is pinned to
-  *    `RawLocalFileSystem` so no `.crc` checksum sidecars appear next
-  *    to markers (preserving the exact on-disk layout the r12/r13
-  *    crash-forging specs pin).
+  *    ATOMIC_MOVE)`. The `file:` scheme is pinned to the raw
+  *    [[graft.ForkFreeRawLocalFileSystem]] (the session's local file
+  *    system minus its checksums) so no `.crc` checksum sidecars appear
+  *    next to markers (preserving the exact on-disk layout the r12/r13
+  *    crash-forging specs pin) and a marker write starts no `chmod`.
   *  - **HDFS**: `rename` is atomic by contract; the protocol is
   *    unchanged.
   *  - **S3A / object stores**: rename is COPY + DELETE — not atomic.
@@ -40,7 +41,7 @@ private[graft] object DurableFs {
     val c = new org.apache.hadoop.conf.Configuration()
     // raw local: POSIX renames, no checksum sidecar files — the layout
     // the java.nio implementation produced and the specs pin
-    c.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    c.set("fs.file.impl", classOf[graft.ForkFreeRawLocalFileSystem].getName)
     // r16: the pin must bypass the process-wide FileSystem cache — it
     // keys on (scheme, authority) ONLY, so whichever component creates
     // `file:` first wins for everyone (a Hive-touched JVM seeds it with

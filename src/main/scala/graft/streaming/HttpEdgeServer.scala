@@ -51,20 +51,23 @@ final class EdgeMetrics {
   *    (pixel GIF, 302 redirects with the nuid macro, Set-Cookie / CORS /
   *    P3P headers, ops endpoints — all column-parity-pinned);
   *  - every TRACKING request appends one envelope record to a JSONL
-  *    spool, atomically published (write-temp + rename) in
-  *    `flushEvery`-request files so [[stream]] — a plain
-  *    `readStream.json` file source — only ever lists complete files.
+  *    spool, atomically published (write-temp + rename) in files of at
+  *    most `flushEvery` requests so [[stream]] — the `json` file source
+  *    over the spool — only ever lists complete files. [[stream]] also
+  *    publishes the buffered tail at every trigger.
   *
   * The spool is the local analog of the reference's sink buffer
   * (`KinesisSink.scala:87-142` byte/record/time flush): `flushEvery`
-  * plays recordLimit, and a production deployment would point the same
-  * envelope schema at Kafka (`sources/KafkaEnvelopeSource`) instead of
-  * files. Exactly-once from the spool onward is the file-source +
-  * checkpoint contract. The HTTP→spool hop is AT-MOST-ONCE for the
-  * buffered tail: up to `flushEvery - 1` envelopes whose 200s were
-  * already sent sit only in the in-memory buffer and are lost on crash —
-  * the same acknowledged-but-buffered regime as the reference's sink
-  * buffers (SURVEY §7.4.4), with the loss bounded by `flushEvery`.
+  * plays recordLimit and the trigger interval plays timeLimit, and a
+  * production deployment would point the same envelope schema at Kafka
+  * (`sources/KafkaEnvelopeSource`) instead of files. Exactly-once from
+  * the spool onward is the file-source + checkpoint contract. The
+  * HTTP→spool hop is AT-MOST-ONCE for the buffered tail: envelopes whose
+  * 200s were already sent sit only in the in-memory buffer until the
+  * next trigger (or `flushEvery` records) publishes them, and are lost
+  * on crash — the same acknowledged-but-buffered regime as the
+  * reference's sink buffers (SURVEY §7.4.4), with the loss bounded by
+  * `flushEvery - 1` envelopes and by one trigger interval.
   *
   * `trustRawRequestUri`: the reference's `Raw-Request-URI` is synthesized
   * by pekko-http from the wire bytes, NOT read from client headers. The
@@ -90,6 +93,9 @@ final class HttpEdgeServer(
     sslContext: Option[javax.net.ssl.SSLContext] = None) {
 
   private val spool: Path = Files.createDirectories(Paths.get(spoolDir))
+  /** This edge's key in [[HttpEdgeServer.streamed]] while [[stream]]'s
+    * source may publish through it. */
+  private val streamKey = java.util.UUID.randomUUID().toString
   private val nextId = new AtomicLong(1L)
   private val nextFile = new AtomicLong(0L)
   private val healthy = new AtomicBoolean(true)
@@ -307,15 +313,36 @@ final class HttpEdgeServer(
       buffered = 0
     }
 
+  /** Publish the tail, unbind, and drop the handle [[stream]]'s source
+    * publishes through, so nothing outlives the edge. */
   def stop(): Unit = synchronized {
     flushLocked()
     if (server != null) server.stop(0)
     httpsServerOpt.foreach(_.stop(0))
     if (pool != null) pool.shutdown()
+    HttpEdgeServer.live.remove(streamKey)
   }
 
+  /** True while a [[stream]] source can publish through this edge. */
+  private[graft] def streaming: Boolean = HttpEdgeServer.live.containsKey(streamKey)
+
   /** The spool as a streaming envelope DataFrame — feed it straight to
-    * [[graft.CollectorApp.start]], as `CollectorMain --http` does. */
-  def stream(spark: SparkSession): DataFrame =
-    spark.readStream.schema(HttpEdge.envelopeSchema).json(spoolDir)
+    * [[graft.CollectorApp.start]], as `CollectorMain --http` does. Its
+    * source ([[SpoolSourceProvider]]) is the `json` file source over the
+    * spool that calls [[flush]] before each offset query, so every
+    * envelope received before a trigger lands in that trigger's batch
+    * and no flusher thread is needed. */
+  def stream(spark: SparkSession): DataFrame = {
+    HttpEdgeServer.live.put(streamKey, this)
+    spark.readStream.format(classOf[SpoolSourceProvider].getName)
+      .option("edge", streamKey)
+      .load(spoolDir)
+  }
+}
+
+object HttpEdgeServer {
+  /** Edges with a [[HttpEdgeServer.stream]] source, by key, until stopped. */
+  private val live = new java.util.concurrent.ConcurrentHashMap[String, HttpEdgeServer]()
+
+  private[streaming] def streamed(key: String): Option[HttpEdgeServer] = Option(live.get(key))
 }

@@ -10,7 +10,7 @@ import java.nio.file.Files
   * driven through Hadoop's CHECKSUMMED `LocalFileSystem` — the default
   * `file:` implementation real clusters inherit, with `.name.crc`
   * sidecar files and the ChecksumFileSystem rename/delete code paths —
-  * alongside the pinned `RawLocalFileSystem` every other spec runs on.
+  * alongside the pinned raw local file system every other spec runs on.
   * No MiniDFSCluster jar ships in this sandbox (declared in
   * [[graft.streaming.DurableFs]]), so the checksummed scheme is the
   * cheap stand-in for API-semantics drift: it exercises exactly the
@@ -140,13 +140,14 @@ class DurableFsContractSpec extends AnyFunSuite with WallBudget {
 
   test("fsOverride is thread-scoped: a concurrent thread keeps production " +
     "raw-local resolution while a contract body runs checksummed (r16 advisor)") {
-    import org.apache.hadoop.fs.{ChecksumFileSystem, RawLocalFileSystem}
+    import org.apache.hadoop.fs.ChecksumFileSystem
     import java.util.concurrent.CountDownLatch
     // DurableFs.conf disables the file-scheme FileSystem cache (r16), so
     // the raw pin holds even in a full-suite JVM where Hive seeded the
     // process-wide cache with the checksummed LocalFileSystem first —
-    // production resolution is RawLocalFileSystem unconditionally
-    val productionFs: Class[_] = classOf[RawLocalFileSystem]
+    // production resolution is the fork-free raw local file system
+    // unconditionally
+    val productionFs: Class[_] = classOf[graft.ForkFreeRawLocalFileSystem]
     assert(DurableFs.fs("file:///tmp/x").getClass === productionFs)
     @volatile var otherThreadFs: Class[_] = null
     @volatile var insideFs: Class[_] = null

@@ -652,6 +652,33 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
     }
   }
 
+  test("live: a lone request below flushEvery reaches the good sink by the next " +
+    "trigger with no flusher running; stop() drops the edge's source handle") {
+    val spool = Files.createTempDirectory("edge-tail-spool").toString
+    val good = Files.createTempDirectory("edge-tail-good").toString
+    val bad = Files.createTempDirectory("edge-tail-bad").toString
+    val ckpt = Files.createTempDirectory("edge-tail-ckpt").toString
+    val (server, running) = graft.CollectorMain.wireHttp(
+      spark, spool, good, bad, ckpt,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L),
+      cfg = CollectorConfig.testScale)
+    try {
+      assert(server.streaming)
+      assert(rawHttp(server.port, "GET", "/i?e=pv&aid=tail")._1 === 200)
+      // one envelope, 255 short of wireHttp's flushEvery: only the
+      // source's publish-at-trigger can put it in a batch
+      val deadline = System.nanoTime() + 60000000000L
+      while (!running.query.recentProgress.exists(_.numInputRows > 0) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      assert(running.query.recentProgress.map(_.numInputRows).sum === 1L)
+      assert(spark.read.parquet(good).count() === 1L)
+    } finally {
+      running.query.stop()
+      server.stop()
+    }
+    assert(!server.streaming)
+  }
+
   test("live: R8 warmup cycles grow until maxCycles, saturate cleanly, and fail loudly on a dead port") {
     import graft.operators.WarmupSettings
     import graft.streaming.EdgeWarmup

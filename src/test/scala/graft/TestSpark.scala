@@ -8,19 +8,12 @@ import org.scalatest.{Canceled, Outcome, TestSuite, TestSuiteMixin}
 object TestSpark {
   @volatile private var created = false
 
+  /** The production session ([[GraftSession.build]]) on `local[4]`, plus
+    * a throwaway warehouse dir. */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.chunkBase64String.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN") // see GraftSession
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("local[4]", 4, "graft-test", Seq(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("ERROR")
     created = true
     s
