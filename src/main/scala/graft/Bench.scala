@@ -380,18 +380,23 @@ object Bench {
     val wanted = (n: String) => only.forall(_.contains(n))
     val out = Seq.newBuilder[(String, Option[Double])]
 
+    // the collector legs run CollectorApp.start, the one collector
+    // dataflow (route in the streaming plan, size-gated good leg, bad leg
+    // with its JSON envelope); only their sinks differ
+    def collector(name: String, envelopes: org.apache.spark.sql.DataFrame,
+        good: graft.sinks.EventSink): Unit =
+      CollectorApp.start(spark, envelopes, graft.operators.CollectorConfig.testScale,
+        good, new graft.sinks.ParquetDirSink(dir(s"$name-bad"), "bad"), dir(s"$name-ckpt"),
+        Trigger.AvailableNow()).query.awaitTermination()
+
     if (wanted("stream_collector")) {
-      // full payload build + size gate + good/bad dual parquet sink
-      val cfg = graft.operators.CollectorConfig.testScale
+      // route + size gate + good/bad dual parquet sink
       out ++= leg("stream_collector") {
         graft.sources.EventEnvelopeAdapter.envelopes(spark, sfDir)
           .write.mode("overwrite").parquet(dir("env-src"))
       } {
-        val q = graft.streaming.StreamingCollector.start(
-          fileStream(dir("env-src")), cfg,
-          dir("good"), dir("bad"), dir("ckpt-collector"),
-          trigger = Trigger.AvailableNow())
-        q.awaitTermination()
+        collector("collector", fileStream(dir("env-src")),
+          new graft.sinks.ParquetDirSink(dir("good"), "good"))
         require(spark.read.parquet(dir("good")).count() > 0)
       }
     }
@@ -400,16 +405,11 @@ object Bench {
       // same ingest as stream_collector, but the good leg lands in the
       // date-partitioned lake (dynamic per-batch partitions) — measures
       // the partitioned-append overhead on top of the flat sink
-      val cfg = graft.operators.CollectorConfig.testScale
       out ++= leg("stream_lake") {
         graft.sources.EventEnvelopeAdapter.envelopes(spark, sfDir)
           .write.mode("overwrite").parquet(dir("lake-src"))
       } {
-        val q = graft.streaming.StreamingCollector.startToLake(
-          fileStream(dir("lake-src")), cfg,
-          dir("lake-good"), dir("lake-bad"), dir("ckpt-lake"),
-          trigger = Trigger.AvailableNow())
-        q.awaitTermination()
+        collector("lake", fileStream(dir("lake-src")), new graft.sinks.LakeSink(dir("lake-good")))
         require(spark.read.parquet(dir("lake-good")).count() > 0)
       }
     }
@@ -507,18 +507,14 @@ object Bench {
       // + drain, so the number reads directly as single-node ingest
       // throughput (requests capped — the HTTP tier measures per-request
       // cost, not corpus size).
-      val cfg = graft.operators.CollectorConfig.testScale
       out ++= leg("stream_http") { renderHttpReqs() } {
         val server = edgeServer(dir("http-spool"))
         val port = server.start()
         try {
           require(driveHttp(port, threads = 8) == 0L, "server errors")
           server.flush()
-          val q = graft.streaming.StreamingCollector.start(
-            server.stream(spark), cfg,
-            dir("http-good"), dir("http-bad"), dir("ckpt-http"),
-            trigger = Trigger.AvailableNow())
-          q.awaitTermination()
+          collector("http", server.stream(spark),
+            new graft.sinks.ParquetDirSink(dir("http-good"), "good"))
           require(spark.read.parquet(dir("http-good")).count() > 0)
         } finally server.stop()
       }
@@ -544,19 +540,15 @@ object Bench {
     if (wanted("stream_http_lake")) {
       // R10 end-to-end anchor: live HTTP in → date-partitioned lake out,
       // bad leg routed — the two proven halves (HttpEdgeServer.stream →
-      // StreamingCollector.startToLake) composed as one measured job.
-      val cfg = graft.operators.CollectorConfig.testScale
+      // CollectorApp.start into a LakeSink) composed as one measured job.
       out ++= leg("stream_http_lake") { renderHttpReqs() } {
         val server = edgeServer(dir("lakehttp-spool"))
         val port = server.start()
         try {
           require(driveHttp(port, threads = 8) == 0L, "server errors")
           server.flush()
-          val q = graft.streaming.StreamingCollector.startToLake(
-            server.stream(spark), cfg,
-            dir("lakehttp-good"), dir("lakehttp-bad"), dir("ckpt-lakehttp"),
-            trigger = Trigger.AvailableNow())
-          q.awaitTermination()
+          collector("lakehttp", server.stream(spark),
+            new graft.sinks.LakeSink(dir("lakehttp-good")))
           // the lake layout actually materialized: date partition dirs
           val dirs = new java.io.File(dir("lakehttp-good")).listFiles()
           require(dirs != null && dirs.exists(_.getName.startsWith("event_date=")),

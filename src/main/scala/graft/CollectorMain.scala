@@ -15,11 +15,13 @@ import org.apache.spark.sql.streaming.Trigger
   * <checkpointDir> [triggerMs]`. Envelopes arrive as parquet files
   * dropped into `envelopeDir` — the file-source analog of the HTTP
   * listener (Kafka in prod via [[graft.sources.KafkaEnvelopeSource]];
-  * the ingress tier itself is out of engine scope, SURVEY §7.1). Good
-  * records land as thrift wire bytes + partition key, bad rows as
-  * structured bad-row rows; swap the sinks for
-  * [[graft.sinks.ClientSinks.sinkFromSettings]] with SDK-backed client
-  * factories in a real deployment.
+  * the ingress tier itself is out of engine scope, SURVEY §7.1). Both
+  * modes run [[CollectorApp.start]] with parquet sinks and do not read
+  * `cfg.sink`: good records land as thrift wire bytes + partition key +
+  * request time, bad rows as flat bad-row columns plus their
+  * self-describing JSON. A deployment that ships to a client stream calls
+  * [[CollectorApp.start]] with [[graft.sinks.ClientSinks.sinkFromSettings]]
+  * and [[graft.sinks.ClientSinks.badSinkFromSettings]] instead.
   */
 object CollectorMain {
 
@@ -121,8 +123,8 @@ object CollectorMain {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(s"local[$cpus]", cpus.toInt, "graft-collector")
     spark.sparkContext.setLogLevel("WARN")
-    val triggerMs = if (rest.length >= 5) rest(4).toLong else 5000L
-    val trigger = Trigger.ProcessingTime(triggerMs) // reference buffer.timeLimit
+    val trigger =
+      if (rest.length >= 5) Trigger.ProcessingTime(rest(4).toLong) else CollectorApp.DefaultTrigger
     if (http) {
       // the spool source publishes the edge's buffered tail at every
       // trigger: the time-limit analog of the reference's buffer flush

@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** One envelope's outcome in [[CollectorPipeline.route]]: a good wire
   * record (`partition_key` + `thrift`) or one bad row (`bad_row_type` +
-  * `payload_prefix` + `actual_size`); the other side's fields are null. */
+  * `payload_prefix` + `actual_size`, and the size gate's `reason` on a
+  * SizeViolation); the other side's fields are null. `timestamp_ms` is the
+  * request time on both sides. */
 final case class Routed(
     event_id: Long, good: Boolean, partition_key: String, thrift: Array[Byte],
-    bad_row_type: String, payload_prefix: String, actual_size: Option[Long])
+    timestamp_ms: Long, bad_row_type: String, payload_prefix: String,
+    actual_size: Option[Long], reason: String)
 
 /** The collector dataflow (reference semantics, Spark-first shapes).
   *
@@ -246,7 +249,7 @@ object CollectorPipeline {
 
   /** The collector's one routing pass over envelopes — the reference's
     * serialize once, then route (`SplitBatch.scala:81-113`). At most one
-    * row per envelope:
+    * row per envelope, each carrying the request's `timestamp_ms`:
     *  - a malformed querystring (F7) gives a GenericError row
     *    (`payload_prefix` = the querystring, `actual_size` = its bytes).
     *    It is decided first, so DNT does not suppress it;
@@ -256,6 +259,11 @@ object CollectorPipeline {
     *    `maxBytes`, else a SizeViolation row (F6: `actual_size` = the wire
     *    size, `payload_prefix` = `maxBytes / 10` chars of the thrift
     *    toString()) — the reference's gate `wholeEventBytes >= maxBytes`.
+    *    Its `reason` is [[SplitBatch.GetNotSplittable]] for a bodiless
+    *    event and [[SplitBatch.PostNotSplit]] for a POST: this flat gate
+    *    bad-rows an oversized POST whole where the reference would try to
+    *    split it (a declared divergence; the split-aware routing is
+    *    [[SplitBatch.routeWire]]).
     * One [[ThriftPayload.payloadPass]] with no exchange on a stream, so it
     * runs inside the streaming plan ([[graft.CollectorApp.start]]) as
     * well as over a batch. [[goodLeg]] and [[badLeg]] are its two legs. */
@@ -266,27 +274,35 @@ object CollectorPipeline {
       .filter(!qsOk || (!dntSuppressed(cfg) && !bounceSuppressed(cfg)))
       .select(payloadCols(cfg, when(qsOk, lit(CollectorConfig.PayloadSchemaUri))) :+
         octet_length(col("querystring")).cast("long").as("qs_bytes"): _*)
-    ThriftPayload.payloadPass[Routed](rows, "partition_key", "querystring", "qs_bytes") { () =>
+    ThriftPayload.payloadPass[Routed](rows, "partition_key", "querystring", "qs_bytes", "timestamp_ms") { () =>
       (r, rec, wire) => {
-        def bad(kind: String, prefix: String, size: Long) =
-          Routed(r.getLong(0), good = false, null, null, kind, prefix, Some(size))
+        val ts = r.getLong(4)
+        def bad(kind: String, prefix: String, size: Long, reason: String) =
+          Routed(r.getLong(0), good = false, null, null, ts, kind, prefix, Some(size), reason)
         Iterator.single(
-          if (rec == null) bad("GenericError", r.getString(2), r.getLong(3))
+          if (rec == null) bad("GenericError", r.getString(2), r.getLong(3), null)
           else if (wire.length < maxBytes)
-            Routed(r.getLong(0), good = true, r.getString(1), wire, null, null, None)
-          else bad("SizeViolation", ThriftPayload.toStringRepr(rec).take(maxBytes / 10), wire.length))
+            Routed(r.getLong(0), good = true, r.getString(1), wire, ts, null, null, None, null)
+          else bad("SizeViolation", ThriftPayload.toStringRepr(rec).take(maxBytes / 10), wire.length,
+            if (rec.body == null) SplitBatch.GetNotSplittable else SplitBatch.PostNotSplit))
       }
     }.toDF()
   }
 
   /** [[route]]'s good leg: the wire records every good sink ships
-    * (`event_id`, `partition_key`, `thrift` — [[WirePayload]]'s shape). */
+    * (`event_id`, `partition_key`, `thrift` — [[WirePayload]]'s shape)
+    * plus the request's `timestamp_ms`, which the date-partitioned lake
+    * ([[graft.sinks.LakeSink]]) partitions by. */
   def goodLeg(routed: DataFrame): DataFrame =
-    routed.filter(col("good")).select("event_id", "partition_key", "thrift")
+    routed.filter(col("good")).select("event_id", "partition_key", "thrift", "timestamp_ms")
 
-  /** [[route]]'s bad leg: [[badRows]]' four columns. */
-  def badLeg(routed: DataFrame): DataFrame =
-    routed.filter(!col("good")).select("event_id", "bad_row_type", "payload_prefix", "actual_size")
+  /** [[route]]'s bad leg: [[badRows]]' four columns plus `bad_row_json`,
+    * the row's self-describing envelope ([[badRowJson]]), so every bad
+    * sink — parquet or a client stream — receives one shape. */
+  def badLeg(routed: DataFrame, cfg: CollectorConfig): DataFrame =
+    routed.filter(!col("good")).select(
+      col("event_id"), col("bad_row_type"), col("payload_prefix"), col("actual_size"),
+      badRowJson(cfg).as("bad_row_json"))
 
   /** The flat bad-row stream over envelopes: GenericError rows for
     * malformed querystrings (F7) and SizeViolation rows for payloads whose
@@ -294,55 +310,57 @@ object CollectorPipeline {
     * semantics (`SplitBatch.scala:81-145`; byte/golden parity asserted in
     * SplitBatchSpec). The bad projection of [[route]], so the batch query
     * and the live collector share one routing definition. */
-  def badRows(env: DataFrame, cfg: CollectorConfig): DataFrame = badLeg(route(env, cfg))
+  def badRows(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    badLeg(route(env, cfg), cfg).drop("bad_row_json")
 
-  /** The SELF-DESCRIBING bad-row stream: each bad row as the reference's
-    * full JSON envelope (`badRow.compact` —
+  /** One bad row as the reference's full JSON envelope (`badRow.compact` —
     * `CollectorService.scala:185-189,321`, `utils/SplitBatch.scala:132-145`),
-    * so anything downstream that consumes Snowplow bad rows can consume
-    * ours. GenericError wraps the unparseable querystring; SizeViolation
-    * (split-aware, via [[SplitBatch.badRowFields]]) carries the size gate
-    * + the branch's fold message as `expectation` and maxBytes/10 chars of
-    * the thrift toString() as `payload`. Declared divergences: the failure
-    * `timestamp` is the REQUEST time (deterministic, replayable) where the
-    * reference stamps sink-side wall clock (`Instant.now()`), and the
-    * GenericError message is a stable string where the reference surfaces
-    * the HTTP library's exception text. The envelope is built with
-    * `to_json(struct(...))` — a codegen'd projection, no UDF. */
-  def badRowsJson(env: DataFrame, cfg: CollectorConfig): DataFrame = {
+    * over the columns `bad_row_type`, `timestamp_ms`, `payload_prefix`,
+    * `actual_size` and `reason`. GenericError wraps the unparseable
+    * querystring; SizeViolation carries the size gate + `reason` as
+    * `expectation` and the thrift toString() prefix as `payload`. Declared
+    * divergences: the failure `timestamp` is the REQUEST time
+    * (deterministic, replayable) where the reference stamps sink-side wall
+    * clock (`Instant.now()`), and the GenericError message is a stable
+    * string where the reference surfaces the HTTP library's exception
+    * text. `to_json(struct(...))` — a codegen'd projection, no UDF. */
+  private def badRowJson(cfg: CollectorConfig): Column = {
     val processor =
       struct(lit(cfg.appName).as("artifact"), lit(cfg.appVersion).as("version"))
-    def iso(ms: Column) =
-      date_format(timestamp_millis(ms), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+    val timestamp = date_format(timestamp_millis(col("timestamp_ms")),
+      "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").as("timestamp")
+    def envelope(schema: String, payload: Column, failure: Column*) =
+      to_json(struct(
+        lit(schema).as("schema"),
+        struct(
+          processor.as("processor"),
+          struct(timestamp +: failure: _*).as("failure"),
+          payload.as("payload")).as("data")))
+    when(col("bad_row_type") === "GenericError",
+      envelope(CollectorConfig.GenericErrorSchemaUri, coalesce(col("payload_prefix"), lit("")),
+        array(lit("querystring is not parseable")).as("errors")))
+      .otherwise(envelope(CollectorConfig.SizeViolationSchemaUri, col("payload_prefix"),
+        lit(cfg.maxBytes).as("maximumAllowedSizeBytes"),
+        col("actual_size").cast("int").as("actualSizeBytes"),
+        concat(lit("oversized collector payload: "), col("reason")).as("expectation")))
+  }
+
+  /** The SELF-DESCRIBING bad-row stream over envelopes, split-aware: each
+    * bad row the reference's bad sink would receive, as [[badRowJson]].
+    * GenericError rows for malformed querystrings; SizeViolation rows from
+    * [[SplitBatch.badRowFields]], which carry the split decision tree's
+    * branch message as `reason` and, on the split path, one row per
+    * irreducible element. */
+  def badRowsJson(env: DataFrame, cfg: CollectorConfig): DataFrame = {
     val generic = env
       .filter(!qsValid(col("querystring")))
       .select(
-        col("event_id"),
-        to_json(struct(
-          lit(CollectorConfig.GenericErrorSchemaUri).as("schema"),
-          struct(
-            processor.as("processor"),
-            struct(
-              iso(col("timestamp_ms")).as("timestamp"),
-              array(lit("querystring is not parseable")).as("errors")).as("failure"),
-            coalesce(col("querystring"), lit("")).as("payload")).as("data")))
-          .as("bad_row_json"))
+        col("event_id"), lit("GenericError").as("bad_row_type"), col("timestamp_ms"),
+        col("querystring").as("payload_prefix"), lit(null).cast("long").as("actual_size"),
+        lit(null).cast("string").as("reason"))
     val size = SplitBatch.badRowFields(payloads(env, cfg), cfg.maxBytes).toDF()
-      .select(
-        col("event_id"),
-        to_json(struct(
-          lit(CollectorConfig.SizeViolationSchemaUri).as("schema"),
-          struct(
-            processor.as("processor"),
-            struct(
-              iso(col("timestamp_ms")).as("timestamp"),
-              lit(cfg.maxBytes).as("maximumAllowedSizeBytes"),
-              col("actual_size").cast("int").as("actualSizeBytes"),
-              concat(lit("oversized collector payload: "), col("reason"))
-                .as("expectation")).as("failure"),
-            col("payload_prefix").as("payload")).as("data")))
-          .as("bad_row_json"))
-    generic.unionByName(size)
+      .withColumn("bad_row_type", lit("SizeViolation"))
+    generic.unionByName(size).select(col("event_id"), badRowJson(cfg).as("bad_row_json"))
   }
 
   /** P9: the Set-Cookie response header (reference

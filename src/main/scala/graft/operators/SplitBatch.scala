@@ -93,6 +93,9 @@ object SplitBatch {
   val StrippedTooBig =
     "cannot split this POST request because event without \"data\" field is still too big"
   val SplitTooLarge = "this POST request split is still too large"
+  /** Not a reference message: the live collector's flat size gate
+    * ([[CollectorPipeline.route]]) bad-rows an oversized POST whole. */
+  val PostNotSplit = "the live collector does not split POST requests"
 
   /** Where one payload lands in the reference's decision tree. */
   private sealed trait Decision

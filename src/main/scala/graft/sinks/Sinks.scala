@@ -24,6 +24,26 @@ final class ParquetDirSink(dir: String, override val name: String = "parquet") e
     batch.write.mode("append").parquet(dir)
 }
 
+/** Date-partitioned lake sink: good wire rows land under
+  * `event_date=YYYY-MM-DD/` directories (the session-time-zone day of the
+  * row's own `timestamp_ms`, UTC in every shipped session), so downstream
+  * readers get listing-time partition pruning and runtime DPP (LakeSpec)
+  * over data that is seconds old. The lake stores the wire rows plus
+  * `event_date`; `ThriftPayload.decode` gives the payload back.
+  *
+  * One exchange on the partition key before the partitioned write:
+  * without it every task writes a file per day it happens to see (tasks
+  * × days × micro-batches small files, the lake-ingest file explosion);
+  * with it each day's rows land in few tasks and the listing stays
+  * proportional to days, not task fan-out. */
+final class LakeSink(dir: String, override val name: String = "lake") extends EventSink {
+  def write(batch: DataFrame, batchId: Long): Unit =
+    batch
+      .withColumn("event_date", date_format(timestamp_millis(col("timestamp_ms")), "yyyy-MM-dd"))
+      .repartition(col("event_date"))
+      .write.mode("append").partitionBy("event_date").parquet(dir)
+}
+
 /** K9 stdout sink: one base64 line per payload, printed executor-side
   * (reference `stdout/.../StdoutSink.scala:24-40` — the GOOD stream
   * prints to stdout, the BAD stream to stderr). `col` must be binary

@@ -469,7 +469,7 @@ object HttpEdge {
 
   /** One JSONL envelope record with exactly the
     * [[graft.sources.EventEnvelopeAdapter.envelopes]] schema, so the spool
-    * is a drop-in streaming source for [[StreamingCollector]]. The
+    * is a drop-in streaming source for [[graft.CollectorApp.start]]. The
     * `cookie_sp` / `cookie_dnt` columns carry the request cookies under
     * the CONFIGURED names (the pipeline reads them positionally). */
   def envelopeJson(req: EdgeRequest, cfg: CollectorConfig): String = {

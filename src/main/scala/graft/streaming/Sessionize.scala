@@ -29,6 +29,13 @@ final case class SessionRow(
   * Scale: state is one [[OpenSession]] per active user key, hash
   * partitioned across executors; timeouts garbage-collect idle keys, so
   * state size tracks *active* users, not history.
+  *
+  * State store at scale: the stateful operators (this one, [[StreamJoin]]
+  * and [[StreamingDedup]]) default to Spark's heap-backed store — fine
+  * locally, but a 100 TB deployment should set
+  * `spark.sql.streaming.stateStore.providerClass` to
+  * `RocksDBStateStoreProvider` so state lives off-heap with incremental
+  * checkpointing (measured at parity locally — BASELINE.md r7 A/B).
   */
 object Sessionize {
 

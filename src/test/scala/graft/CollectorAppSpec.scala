@@ -31,7 +31,9 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
 
     val running = CollectorApp.start(
       spark,
-      spark.readStream.schema(envBatch.schema).parquet(srcDir),
+      spark.readStream.schema(envBatch.schema)
+        .option("maxFilesPerTrigger", "2") // force multiple micro-batches
+        .parquet(srcDir),
       cfg,
       goodSink = CollectorApp.defaultGoodSink(goodDir, fbDir),
       badSink = new ParquetDirSink(badDir, "bad"),
@@ -47,6 +49,8 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
     val oversized = sizeViolations(envBatch, cfg)
     assert(good.count() === payloadCount - oversized)
     assert(oversized > 0) // the gate is exercised at testScale
+    def ids(df: DataFrame) = df.select("event_id").collect().map(_.getLong(0)).toSet
+    assert(ids(good) === ids(CollectorPipeline.goodLeg(CollectorPipeline.route(envBatch, cfg))))
     // no record on the good wire exceeds the cap — the sink contract
     assert(good.filter(org.apache.spark.sql.functions.octet_length(
       org.apache.spark.sql.functions.col("thrift")) >= cfg.maxBytes).count() === 0)
@@ -57,7 +61,9 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
     assert(decoded.encoding === "UTF-8")
 
     val bad = spark.read.parquet(badDir)
-    assert(bad.count() === CollectorPipeline.badRows(envBatch, cfg).count())
+    val expectedBad = CollectorPipeline.badRows(envBatch, cfg)
+    assert(bad.count() === expectedBad.count())
+    assert(ids(bad) === ids(expectedBad))
     assert(bad.select("bad_row_type").distinct().count() === 2)
 
     assert(running.monitor.healthy)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload}
+import graft.operators.{CollectorConfig, CollectorPipeline, SplitBatch, ThriftPayload}
 import graft.sources.EventEnvelopeAdapter
 import graft.streaming.HttpEdge
 import org.apache.spark.sql.{DataFrame, Row}
@@ -40,7 +40,7 @@ class CollectorRouteSpec extends AnyFunSuite with WallBudget {
     try {
       val good = CollectorPipeline.goodLeg(routed).collect().toSeq
         .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq))
-      val bad = CollectorPipeline.badLeg(routed).collect().toSeq
+      val bad = CollectorPipeline.badLeg(routed, cfg).collect().toSeq
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       (good, bad)
     } finally routed.unpersist()
@@ -89,6 +89,8 @@ class CollectorRouteSpec extends AnyFunSuite with WallBudget {
     assert(!over.getAs[Boolean]("good") && over.getAs[Array[Byte]]("thrift") === null)
     assert(over.getAs[String]("bad_row_type") === "SizeViolation")
     assert(over.getAs[Long]("actual_size") === size.toLong)
+    assert(over.getAs[String]("reason") === SplitBatch.GetNotSplittable)
+    assert(over.getAs[Long]("timestamp_ms") === 1700000000000L)
     assert(over.getAs[String]("payload_prefix") === ThriftPayload.toStringRepr(
       ThriftPayload.deserialize(fits.getAs[Array[Byte]]("thrift"))).take(size / 10))
 
@@ -113,5 +115,44 @@ class CollectorRouteSpec extends AnyFunSuite with WallBudget {
     val noQs = routed(envelopes(pixel(6, null, cookieSp = "sp-6")), cfg)(6)
     assert(noQs.getAs[Boolean]("good"))
     assert(ThriftPayload.deserialize(noQs.getAs[Array[Byte]]("thrift")).querystring === null)
+  }
+
+  test("bad leg JSON: badRowsJson's envelope for generic rows and oversized GETs; " +
+    "an oversized POST names the live gate and carries its request time") {
+    val cfg = CollectorConfig.wireRouteScale
+    // the corpus holds no oversized bodiless event at this scale: add one
+    val bigGet = envelopes(pixel(1, "e=pv&aid=" + "a" * cfg.maxBytes, cookieSp = "sp-1"))
+    def legAndSplit(env: DataFrame) =
+      (CollectorPipeline.badLeg(CollectorPipeline.route(env, cfg), cfg)
+        .join(env.select(col("event_id"), col("body").isNull.as("bodiless"), col("timestamp_ms")), "event_id")
+        .collect().toSeq,
+        CollectorPipeline.badRowsJson(env, cfg).collect().toSeq.groupMap(_.getLong(0))(_.getString(1)))
+    val env = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf).cache()
+    try {
+      val (corpusLeg, corpusSplit) = legAndSplit(env)
+      val (getLeg, getSplit) = legAndSplit(bigGet)
+      val (whole, posts) = corpusLeg.partition(r =>
+        r.getAs[String]("bad_row_type") == "GenericError" || r.getAs[Boolean]("bodiless"))
+      assert(whole.map(_.getAs[String]("bad_row_type")).toSet === Set("GenericError") && posts.nonEmpty)
+      assert(getLeg.map(r => (r.getAs[String]("bad_row_type"), r.getAs[Boolean]("bodiless"))) ===
+        Seq(("SizeViolation", true)))
+      (whole.map(_ -> corpusSplit) ++ getLeg.map(_ -> getSplit)).foreach { case (r, split) =>
+        assert(split(r.getLong(0)) === Seq(r.getAs[String]("bad_row_json")), r.getLong(0))
+      }
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+      val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+        .withZone(java.time.ZoneOffset.UTC)
+      posts.foreach { r =>
+        val json = mapper.readTree(r.getAs[String]("bad_row_json"))
+        val failure = json.get("data").get("failure")
+        assert(json.get("schema").asText === CollectorConfig.SizeViolationSchemaUri)
+        assert(failure.get("expectation").asText ===
+          "oversized collector payload: " + SplitBatch.PostNotSplit)
+        assert(failure.get("actualSizeBytes").asLong === r.getAs[Long]("actual_size"))
+        assert(failure.get("timestamp").asText ===
+          iso.format(java.time.Instant.ofEpochMilli(r.getAs[Long]("timestamp_ms"))))
+        assert(json.get("data").get("payload").asText === r.getAs[String]("payload_prefix"))
+      }
+    } finally env.unpersist()
   }
 }

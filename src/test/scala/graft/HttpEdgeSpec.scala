@@ -2,7 +2,8 @@ package graft
 
 import graft.operators.{CollectorConfig, CollectorPipeline}
 import graft.sources.EventEnvelopeAdapter
-import graft.streaming.{EdgeRequest, HttpEdge, HttpEdgeServer, StreamingCollector}
+import graft.sinks.ParquetDirSink
+import graft.streaming.{EdgeRequest, HttpEdge, HttpEdgeServer}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -596,17 +597,18 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
       val good = Files.createTempDirectory("edge-good").toString
       val bad = Files.createTempDirectory("edge-bad").toString
       val ckpt = Files.createTempDirectory("edge-ckpt").toString
-      val q = StreamingCollector.start(
-        server.stream(spark), testScale, good, bad, ckpt,
+      graft.CollectorApp.start(
+        spark, server.stream(spark), testScale,
+        new ParquetDirSink(good, "good"), new ParquetDirSink(bad, "bad"), ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination(120000)
+        .query.awaitTermination(120000)
 
       val goodDf = spark.read.parquet(good)
       val badDf = spark.read.parquet(bad)
       // batch reference: the same spool through the same batch pipeline
       val batchEnv = spark.read.schema(HttpEdge.envelopeSchema).json(spool)
       assert(goodDf.count() ===
-        CollectorPipeline.payloads(batchEnv, testScale).count())
+        CollectorPipeline.goodLeg(CollectorPipeline.route(batchEnv, testScale)).count())
       assert(badDf.count() ===
         CollectorPipeline.badRows(batchEnv, testScale).count())
       assert(goodDf.count() === 12L) // 8 POSTs + 4 clean pixels; DNT + bad qs withheld
@@ -637,10 +639,11 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
       rawHttp(port, "GET", "/i?e=pv")
       server.flush()
       running.query.processAllAvailable()
-      // good leg carries thrift wire bytes + partition key (CollectorApp)
+      // good leg carries thrift wire bytes + partition key and the request
+      // time (CollectorApp)
       val wire = spark.read.parquet(good)
       assert(wire.count() === 7L)
-      assert(wire.columns.toSet === Set("event_id", "partition_key", "thrift"))
+      assert(wire.columns.toSet === Set("event_id", "partition_key", "thrift", "timestamp_ms"))
       // reference SIGTERM order: health flips down BEFORE queries stop
       running.monitor.requestShutdown()
       val (ds, _, _) = rawHttp(port, "GET", "/health")

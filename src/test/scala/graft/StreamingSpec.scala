@@ -1,8 +1,9 @@
 package graft
 
-import graft.operators.{CollectorConfig, CollectorPipeline}
+import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload, WirePayload}
+import graft.sinks.{LakeSink, ParquetDirSink}
 import graft.sources.EventEnvelopeAdapter
-import graft.streaming.{SessEvent, Sessionize, StreamingCollector, WindowedAgg}
+import graft.streaming.{SessEvent, Sessionize, WindowedAgg}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,11 +16,11 @@ import java.sql.Timestamp
   * local-mode executor tasks record into the same queue the assertions
   * read, same pattern as [[MockClients]]. */
 object StreamRecorder extends graft.sinks.ClientSinks.KinesisClient {
-  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, graft.sinks.ClientSinks.OutRecord)]()
   def reset(): Unit = calls.clear()
   def putRecords(stream: String,
       records: Seq[graft.sinks.ClientSinks.OutRecord]): Seq[Option[String]] = {
-    calls.add((stream, records.size)); records.map(_ => None)
+    records.foreach(r => calls.add((stream, r))); records.map(_ => None)
   }
 }
 
@@ -57,30 +58,55 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val good = graft.sinks.ClientSinks.sinkFromSettings(
       cfg.sink, parquetDir = sys.error("config selected kinesis"),
       kinesis = Some(() => StreamRecorder))
-    val bad = new graft.sinks.ClientSinks.KinesisEventSink(
-      cfg.sink.badStream, () => StreamRecorder,
-      payloadCol = "bad_row_json", keyCol = "event_id",
-      maxRetries = cfg.sink.maxRetries)
+    val bad = graft.sinks.ClientSinks.badSinkFromSettings(
+      cfg.sink, parquetDir = sys.error("config selected kinesis"),
+      kinesis = Some(() => StreamRecorder))
 
     val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
     val srcDir = tmp("cfg-e2e-src")
     envBatch.write.mode("overwrite").parquet(srcDir)
-    val q = StreamingCollector.startWithSinks(
+    val running = CollectorApp.start(
+      spark,
       spark.readStream.schema(envBatch.schema)
         .option("maxFilesPerTrigger", "4").parquet(srcDir),
       cfg, good, bad, tmp("cfg-e2e-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination(180000)
+    running.query.awaitTermination(180000)
 
-    // every good payload and every bad row reached its CONFIGURED stream
+    // every good wire record and every bad row reached its CONFIGURED stream
     import scala.jdk.CollectionConverters._
-    val byStream = StreamRecorder.calls.asScala.toSeq
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    assert(byStream.getOrElse("cfg-good", 0) ===
-      CollectorPipeline.payloads(envBatch, cfg).count())
-    assert(byStream.getOrElse("cfg-bad", 0) ===
-      CollectorPipeline.badRowsJson(envBatch, cfg).count())
+    val byStream = StreamRecorder.calls.asScala.toSeq.groupMap(_._1)(_._2)
     assert(byStream.keySet === Set("cfg-good", "cfg-bad"))
+    val recordedGood = byStream("cfg-good")
+    val recordedBad = byStream("cfg-bad")
+    val goodRows = CollectorPipeline.goodLeg(CollectorPipeline.route(envBatch, cfg)).collect().toSeq
+    assert(recordedGood.size === goodRows.size)
+    // the size gate holds on the good stream: no record reaches maxBytes
+    assert(recordedGood.forall(_.payload.length < cfg.maxBytes))
+    // the good stream carries exactly the good leg's (key, wire bytes),
+    // so its event ids are the good leg's
+    def bag[A](xs: Seq[A]) = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(bag(recordedGood.map(r => (r.key, r.payload.toSeq))) ===
+      bag(goodRows.map(r => (r.getString(1), r.getAs[Array[Byte]](2).toSeq))))
+    // good and bad together cover every non-suppressed envelope exactly once
+    val ids = goodRows.map(_.getLong(0)) ++ recordedBad.map(_.key.toLong)
+    val expectedIds = envBatch
+      .filter(!(CollectorPipeline.qsValid(col("querystring")) &&
+        (CollectorPipeline.dntSuppressed(cfg) || CollectorPipeline.bounceSuppressed(cfg))))
+      .select("event_id").as[Long].collect().toSeq
+    assert(ids.sorted === expectedIds.sorted)
+    // each bad record is the self-describing JSON of its bad-row type
+    val typeOf = CollectorPipeline.badRows(envBatch, cfg).select("event_id", "bad_row_type")
+      .as[(Long, String)].collect().toMap
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    assert(typeOf.values.toSet === Set("GenericError", "SizeViolation"))
+    recordedBad.foreach { r =>
+      val schema = mapper.readTree(new String(r.payload, "UTF-8")).get("schema").asText
+      assert(schema === (typeOf(r.key.toLong) match {
+        case "GenericError" => CollectorConfig.GenericErrorSchemaUri
+        case _ => CollectorConfig.SizeViolationSchemaUri
+      }), r.key)
+    }
   }
 
   test("streaming ingest into the date-partitioned lake: pruned reads over fresh data") {
@@ -89,21 +115,30 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val srcDir = tmp("lake-stream-src")
     envBatch.write.mode("overwrite").parquet(srcDir)
     val lakeDir = tmp("lake-stream-good"); val badDir = tmp("lake-stream-bad")
-    val q = graft.streaming.StreamingCollector.startToLake(
+    val running = CollectorApp.start(
+      spark,
       spark.readStream.schema(envBatch.schema)
         .option("maxFilesPerTrigger", "4").parquet(srcDir),
-      cfg, lakeDir, badDir, tmp("lake-stream-ckpt"),
+      cfg, new LakeSink(lakeDir), new ParquetDirSink(badDir, "bad"), tmp("lake-stream-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination(180000)
+    running.query.awaitTermination(180000)
 
-    // the lake is laid out by event day and holds exactly the batch output
+    // the lake is laid out by event day and holds exactly the good leg
     val dirs = new java.io.File(lakeDir).listFiles
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("event_date="))
     assert(dirs.length > 1, s"expected multiple day partitions, got ${dirs.toSeq}")
-    val expected = CollectorPipeline.payloads(envBatch, cfg)
+    val expected = CollectorPipeline.goodLeg(CollectorPipeline.route(envBatch, cfg))
     val lake = spark.read.parquet(lakeDir)
     assert(lake.count() === expected.count())
     assert(lake.select("event_id").except(expected.select("event_id")).count() === 0)
+    // each row sits in the day of its own request time, and its wire
+    // bytes decode back to the payload
+    assert(lake.filter(date_format(timestamp_millis(col("timestamp_ms")), "yyyy-MM-dd") =!=
+      col("event_date")).count() === 0)
+    val decoded = ThriftPayload.decode(lake.as[WirePayload]).toDF()
+    val decodedExpected = ThriftPayload.decode(expected.as[WirePayload]).toDF()
+    assert(decoded.except(decodedExpected).count() === 0)
+    assert(decodedExpected.except(decoded).count() === 0)
     // r10 small-file discipline: the pre-write repartition on the
     // partition key means each micro-batch writes at most ONE file per
     // day (without it: one per task per day per batch — the lake-ingest
@@ -126,30 +161,6 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(one.count() > 0)
   }
 
-  test("streaming collector matches batch good/bad outputs") {
-    val cfg = CollectorConfig.testScale
-    val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
-    val srcDir = tmp("env-src")
-    envBatch.write.mode("overwrite").parquet(srcDir)
-
-    val goodDir = tmp("good"); val badDir = tmp("bad"); val ckpt = tmp("ckpt")
-    val envStream = spark.readStream
-      .schema(envBatch.schema)
-      .option("maxFilesPerTrigger", "2") // force multiple micro-batches
-      .parquet(srcDir)
-    val q = StreamingCollector.start(envStream, cfg, goodDir, badDir, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination(120000)
-
-    val goodExpected = CollectorPipeline.payloads(envBatch, cfg)
-    val good = spark.read.parquet(goodDir)
-    assert(good.count() === goodExpected.count())
-    assert(good.select("event_id").except(goodExpected.select("event_id")).count() === 0)
-    val badExpected = CollectorPipeline.badRows(envBatch, cfg)
-    val bad = spark.read.parquet(badDir)
-    assert(bad.count() === badExpected.count())
-  }
-
   test("collector batch body: legs overlap and a failing leg fails the batch after its sibling ends") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicBoolean
@@ -161,11 +172,13 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       def write(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = f()
     }
     def failure(good: graft.sinks.EventSink, bad: graft.sinks.EventSink): Throwable = {
-      val q = StreamingCollector.startWithSinks(
+      val running = CollectorApp.start(
+        spark,
         spark.readStream.schema(envBatch.schema).parquet(srcDir),
         CollectorConfig.testScale, good, bad, tmp("legs-ckpt"),
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(120000))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        running.query.awaitTermination(120000))
     }
     def messages(t: Throwable) =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
@@ -598,23 +611,24 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val badDir = tmp("resume-bad"); val ckpt = tmp("resume-ckpt")
     def stream = spark.readStream.schema(envBatch.schema).parquet(srcDir)
 
+    def run(): Unit = CollectorApp.start(spark, stream, cfg,
+      new ParquetDirSink(goodDir, "good"), new ParquetDirSink(badDir, "bad"), ckpt,
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).query.awaitTermination(120000)
+    def goodCount(env: org.apache.spark.sql.DataFrame) =
+      CollectorPipeline.goodLeg(CollectorPipeline.route(env, cfg)).count()
+
     // run 1: only the first half exists
     firstHalf.write.mode("append").parquet(srcDir)
-    val q1 = StreamingCollector.start(stream, cfg, goodDir, badDir, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    run()
     val afterFirst = spark.read.parquet(goodDir).count()
-    assert(afterFirst === CollectorPipeline.payloads(firstHalf, cfg).count())
+    assert(afterFirst === goodCount(firstHalf))
 
     // "process restart": new query, same checkpoint, more data arrived
     secondHalf.write.mode("append").parquet(srcDir)
-    val q2 = StreamingCollector.start(stream, cfg, goodDir, badDir, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    run()
 
     val good = spark.read.parquet(goodDir)
-    val expected = CollectorPipeline.payloads(envBatch, cfg)
-    assert(good.count() === expected.count()) // nothing lost
+    assert(good.count() === goodCount(envBatch)) // nothing lost
     assert(good.select("event_id").distinct().count() === good.count()) // nothing replayed
   }
 
