@@ -815,9 +815,8 @@ object Bench {
             docs.filter(pmod(col("doc_id"), lit(12)) === b * 3L), b.toLong, scCfg
           ).count()
       } {
-        SubstrIndex.compact(spark, scCfg)
-        require(graft.streaming.CommitProtocol.listParquet(scCfg.fpsDir).size ==
-          scCfg.buckets)
+        scCfg.store.compact(spark)
+        require(scCfg.store.files.size == scCfg.store.width)
       }
     }
 

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.TextOps
 
@@ -23,10 +22,9 @@ import graft.operators.TextOps
   * re-served batch reconstructs the total as of BEFORE itself by
   * folding only `batch_id < its own` (strictly-before, the gradient-log
   * discipline sharpened: exclusion-by-inequality would also shed any
-  * later rows, so out-of-order replays stay honest too). Appends are
-  * fenced by [[CommitProtocol]] (a crash between append and marker
-  * rolls back); [[compact]] rewrites accreted FILES with rows and
-  * batch_ids intact.
+  * later rows, so out-of-order replays stay honest too). The ledger is
+  * a plain [[DurableStore]] (`tok, batch_id` rows, rewritten into 1
+  * file).
   *
   * LAW (spec-pinned): serving the corpus as N ordered micro-batches IS
   * the sequential PER-BATCH PREFIX admission over admitted-so-far —
@@ -46,33 +44,17 @@ import graft.operators.TextOps
 object BudgetStream {
 
   final case class BudgetConfig(dir: String, budget: Long) {
-    def ledgerDir: String = s"$dir/ledger"
-    def commitsDir: String = s"$dir/commits"
+    def store: DurableStore =
+      DurableStore.plain(dir, "ledger", "tok BIGINT, batch_id BIGINT", width = 1)
   }
 
-  private val LedgerSchema = StructType(Seq(
-    StructField("tok", LongType),
-    StructField("batch_id", LongType)))
-
-  /** Fresh gate: empty ledger + cleared markers. */
-  def init(spark: SparkSession, cfg: BudgetConfig): Unit = {
-    CommitProtocol.resetMarkers(cfg.commitsDir)
-    DurableFs.deleteTree(cfg.ledgerDir)
-    spark.createDataFrame(new java.util.ArrayList[Row](), LedgerSchema)
-      .write.mode("overwrite").parquet(cfg.ledgerDir)
-  }
-
-  private def ledger(spark: SparkSession, cfg: BudgetConfig): DataFrame = {
-    val files = CommitProtocol.listParquet(cfg.ledgerDir).toSeq.sorted
-      .map(n => s"${cfg.ledgerDir}/$n")
-    if (files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), LedgerSchema)
-    else spark.read.schema(LedgerSchema).parquet(files: _*)
-  }
+  /** Fresh gate: an empty ledger. */
+  def init(spark: SparkSession, cfg: BudgetConfig): Unit =
+    cfg.store.reset(cfg.store.empty(spark))
 
   /** Tokens admitted so far — the ledger fold (1 row). */
   def spent(spark: SparkSession, cfg: BudgetConfig): DataFrame =
-    ledger(spark, cfg).agg(coalesce(sum("tok"), lit(0L)).as("tok"))
+    cfg.store.rows(spark).agg(coalesce(sum("tok"), lit(0L)).as("tok"))
 
   /** Serve one micro-batch of docs `(doc_id, text, …)`: returns
     * `(doc_id, n_tokens, cum, kept)` — kept iff the running admitted
@@ -82,12 +64,10 @@ object BudgetStream {
     * committed (replay). Call from `foreachBatch`. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  cfg: BudgetConfig): DataFrame = {
-    recoverSwap(cfg)
-    val proto = CommitProtocol(cfg.ledgerDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
+    val store = cfg.store.open(spark, batchId)
     // spent-before-me: fold of strictly-earlier batches only, so a
     // replayed batch sees exactly the total the original saw
-    val prior = ledger(spark, cfg).filter(col("batch_id") < lit(batchId))
+    val prior = store.rows.filter(col("batch_id") < lit(batchId))
       .agg(coalesce(sum("tok"), lit(0L)).as("prior_tok"))
     val base = batch
       .select(col("doc_id"),
@@ -110,51 +90,8 @@ object BudgetStream {
         (col("prior_tok") + col("bcum")).as("cum"),
         (col("prior_tok") + col("bcum") <= cfg.budget).as("kept"))
       .localCheckpoint()
-    if (!replay) {
-      proto.commit {
-        verdicts.filter(col("kept"))
-          .agg(coalesce(sum("n_tokens"), lit(0L)).as("tok"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(cfg.ledgerDir)
-      }
-    }
+    store.commit(verdicts.filter(col("kept"))
+      .agg(coalesce(sum("n_tokens"), lit(0L)).as("tok")))
     verdicts
-  }
-
-  /** Rewrite the append-accreted ledger files into `width` files — rows
-    * and batch_ids preserved, the staged-swap protocol. Safe between
-    * batches. R15 (advisor): rolls back any pending crashed commit
-    * FIRST ([[CommitProtocol.recoverPending]]) — folding an orphaned
-    * half-append into the rewrite would later make that batch's replay
-    * recovery delete the compacted ledger itself — and reads the input
-    * through the committed-file listing, not the raw directory. */
-  def compact(spark: SparkSession, cfg: BudgetConfig, width: Int = 1): Unit = {
-    val dir = cfg.ledgerDir
-    val staging = dir.stripSuffix("/") + ".compacting"
-    val old = dir.stripSuffix("/") + ".old"
-    recoverSwap(cfg)
-    CommitProtocol.recoverPending(dir, cfg.commitsDir)
-    DurableFs.deleteTree(staging); DurableFs.deleteTree(old)
-    ledger(spark, cfg)
-      .repartition(width)
-      .write.mode("overwrite").parquet(staging)
-    DurableFs.move(dir, old)
-    DurableFs.move(staging, dir)
-    DurableFs.deleteTree(old)
-  }
-
-  private def recoverSwap(cfg: BudgetConfig): Unit = {
-    val dir = cfg.ledgerDir
-    val old = dir.stripSuffix("/") + ".old"
-    if (!DurableFs.isDirectory(dir) && DurableFs.isDirectory(old))
-      DurableFs.move(old, dir)
-  }
-
-  /** Policy hook: compact only past `maxFiles` accreted files. */
-  def maybeCompact(spark: SparkSession, cfg: BudgetConfig,
-                   maxFiles: Int, width: Int = 1): Boolean = {
-    val n = CommitProtocol.listParquet(cfg.ledgerDir).size
-    if (n > maxFiles) { compact(spark, cfg, width); true }
-    else false
   }
 }

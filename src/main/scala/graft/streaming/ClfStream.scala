@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.QualityRules
 
@@ -17,10 +16,8 @@ import graft.operators.QualityRules
   * ([[model]]). The log form is what makes replay exact — a re-served
   * batch reconstructs its pre-update model by summing the log MINUS its
   * own rows (`batch_id =!= batchId`, the IncrementalIndex row-exclusion
-  * discipline), which a collapsed vector cannot do. Appends are fenced
-  * by [[CommitProtocol]] (crash between append and marker rolls back);
-  * [[compact]] rewrites accreted FILES with rows and batch_ids intact,
-  * so exclusion survives maintenance.
+  * discipline), which a collapsed vector cannot do. The log is a plain
+  * [[DurableStore]] (`bucket, g, batch_id` rows, rewritten 4 files wide).
   *
   * Verdicts are PREQUENTIAL (test-then-train, the online-learning
   * evaluation standard): each batch is scored against the model as of
@@ -42,35 +39,17 @@ import graft.operators.QualityRules
 object ClfStream {
 
   final case class ClfConfig(dir: String) {
-    def gradsDir: String = s"$dir/grads"
-    def commitsDir: String = s"$dir/commits"
+    def store: DurableStore =
+      DurableStore.plain(dir, "grads", "bucket BIGINT, g BIGINT, batch_id BIGINT", width = 4)
   }
 
-  private val GradSchema = StructType(Seq(
-    StructField("bucket", LongType),
-    StructField("g", LongType),
-    StructField("batch_id", LongType)))
-
-  /** Fresh model: empty gradient log + cleared markers (stale markers
-    * would make the first re-served batchIds skip their updates). */
-  def init(spark: SparkSession, cfg: ClfConfig): Unit = {
-    CommitProtocol.resetMarkers(cfg.commitsDir)
-    DurableFs.deleteTree(cfg.gradsDir)
-    spark.createDataFrame(new java.util.ArrayList[Row](), GradSchema)
-      .write.mode("overwrite").parquet(cfg.gradsDir)
-  }
-
-  private def gradLog(spark: SparkSession, cfg: ClfConfig): DataFrame = {
-    val files = CommitProtocol.listParquet(cfg.gradsDir).toSeq.sorted
-      .map(n => s"${cfg.gradsDir}/$n")
-    if (files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), GradSchema)
-    else spark.read.schema(GradSchema).parquet(files: _*)
-  }
+  /** Fresh model: an empty gradient log. */
+  def init(spark: SparkSession, cfg: ClfConfig): Unit =
+    cfg.store.reset(cfg.store.empty(spark))
 
   /** The CURRENT model — the gradient log folded per bucket. */
   def model(spark: SparkSession, cfg: ClfConfig): DataFrame =
-    gradLog(spark, cfg).groupBy("bucket").agg(sum("g").as("w"))
+    cfg.store.rows(spark).groupBy("bucket").agg(sum("g").as("w"))
 
   /** Serve one micro-batch of labeled docs `(doc_id, text, pos)`:
     * returns prequential verdicts `(doc_id, pos, keep, margin, update)`
@@ -79,13 +58,10 @@ object ClfStream {
     * committed (replay). Call from `foreachBatch`. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  cfg: ClfConfig): DataFrame = {
-    recoverSwap(cfg) // a crash mid-compaction must restore before any read
-    val proto = CommitProtocol(cfg.gradsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
+    val store = cfg.store.open(spark, batchId)
     // pre-update model: the log minus this batch's own rows, so a
     // replayed batch scores against exactly the model the original saw
-    val w = gradLog(spark, cfg).filter(col("batch_id") =!= lit(batchId))
-      .groupBy("bucket").agg(sum("g").as("w"))
+    val w = store.prior.groupBy("bucket").agg(sum("g").as("w"))
     // feats feed the margin pass AND the gradient pass — pin once (the
     // perceptronTrain discipline)
     val feats = QualityRules.perceptronFeatures(batch).localCheckpoint()
@@ -97,49 +73,8 @@ object ClfStream {
       col("doc_id"), (col("y") === 1L).as("pos"),
       (col("margin") > 0).as("keep"), col("margin"),
       (col("y") * col("margin") <= 0).as("update")).localCheckpoint()
-    if (!replay) {
-      proto.commit {
-        feats.join(verdicts.filter(col("update")).select("doc_id"), "doc_id")
-          .groupBy("bucket").agg(sum(col("y") * col("cnt")).as("g"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(cfg.gradsDir)
-      }
-    }
+    store.commit(feats.join(verdicts.filter(col("update")).select("doc_id"), "doc_id")
+      .groupBy("bucket").agg(sum(col("y") * col("cnt")).as("g")))
     verdicts
-  }
-
-  /** Rewrite the append-accreted log files into `width` files — rows
-    * and batch_ids preserved (replay exclusion survives), the
-    * IncrementalIndex staged-swap protocol. Safe between batches. */
-  def compact(spark: SparkSession, cfg: ClfConfig, width: Int = 4): Unit = {
-    val dir = cfg.gradsDir
-    val staging = dir.stripSuffix("/") + ".compacting"
-    val old = dir.stripSuffix("/") + ".old"
-    recoverSwap(cfg)
-    // r15: roll back any crashed half-append BEFORE the rewrite reads
-    // the directory (see CommitProtocol.recoverPending).
-    CommitProtocol.recoverPending(dir, cfg.commitsDir)
-    DurableFs.deleteTree(staging); DurableFs.deleteTree(old)
-    spark.read.schema(GradSchema).parquet(dir)
-      .repartition(width)
-      .write.mode("overwrite").parquet(staging)
-    DurableFs.move(dir, old)
-    DurableFs.move(staging, dir)
-    DurableFs.deleteTree(old)
-  }
-
-  private def recoverSwap(cfg: ClfConfig): Unit = {
-    val dir = cfg.gradsDir
-    val old = dir.stripSuffix("/") + ".old"
-    if (!DurableFs.isDirectory(dir) && DurableFs.isDirectory(old))
-      DurableFs.move(old, dir)
-  }
-
-  /** Policy hook: compact only past `maxFiles` accreted files. */
-  def maybeCompact(spark: SparkSession, cfg: ClfConfig,
-                   maxFiles: Int, width: Int = 4): Boolean = {
-    val n = CommitProtocol.listParquet(cfg.gradsDir).size
-    if (n > maxFiles) { compact(spark, cfg, width); true }
-    else false
   }
 }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** R14: the GENERIC streaming near-dup index over 64-bit perceptual hex
-  * codes — the machinery [[ImageDupIndex]] proved (band_val-bucketed
-  * [[BandStore]], zero index-side probe exchange, in-batch
+  * codes — the machinery [[ImageDupIndex]] proved (a bucketed
+  * [[DurableStore]], zero index-side probe exchange, in-batch
   * arrival-order election, hamming-≤maxDist verification inside the
-  * probe join, [[CommitProtocol]] replay fencing) factored over the
-  * code column, so every modality whose fingerprint is a 16-hex-char
-  * code serves from ONE implementation: images ([[Multimodal.phashOf]]
+  * probe join) factored over the code column, so every modality whose
+  * fingerprint is a 16-hex-char code serves from ONE implementation:
+  * images ([[Multimodal.phashOf]]
   * WHT codes, via the [[ImageDupIndex]] wrapper, behavior-identical)
   * and audio ([[Multimodal.audioFpOf]] energy-delta codes, via
   * [[AudioDupIndex]]). 4×16-bit pigeonhole banding: complete at
@@ -23,9 +23,6 @@ object CodeDupIndex {
 
   final case class CodeDupConfig(dir: String, prefix: String, codeName: String,
       maxDist: Int = 3, buckets: Int = 8) {
-    def bandsDir: String = s"$dir/bands"
-    def commitsDir: String = s"$dir/commits"
-    def tableName: String = BandStore.tableName(prefix, dir)
     // r18 store schema v2 (judge r17 #3): the code is stored PRE-PARSED
     // as one BIGINT (the four 16-bit chunks packed high-to-low) and the
     // band key is the salted chunk as an INT — the probe verify becomes
@@ -34,8 +31,9 @@ object CodeDupIndex {
     // at 4x and removed), and both columns shuffle/store narrower
     // (guide §2.3). A pre-v2 store (hex strings) must re-init; nothing
     // re-binds across schemas.
-    def tableCols: String =
-      s"band_idx INT, band_val INT, doc_id BIGINT, $codeName BIGINT, batch_id BIGINT"
+    def store: DurableStore = DurableStore.bucketed(dir, "bands",
+      s"band_idx INT, band_val INT, doc_id BIGINT, $codeName BIGINT, batch_id BIGINT",
+      buckets, prefix)
   }
 
   /** The 16-hex-char code packed into one signed BIGINT (chunk 0 lands
@@ -55,20 +53,15 @@ object CodeDupIndex {
         lit(c * 65536)).cast("int")): _*)
 
   /** The 4-band relation of a `(doc_id, code)` batch. */
-  private def bandsOf(codes: DataFrame, codeName: String): DataFrame =
+  private[graft] def bandsOf(codes: DataFrame, codeName: String): DataFrame =
     codes
       .select(col("doc_id"), codeLongOf(codeName).as(codeName),
         posexplode(intBandsOf(codeName)).as(Seq("band_idx", "band_val")))
       .select(col("band_idx"), col("band_val"), col("doc_id"), col(codeName))
 
-  private def ensureTable(spark: SparkSession, cfg: CodeDupConfig): Unit =
-    BandStore.ensure(spark, cfg.tableName, cfg.tableCols, cfg.bandsDir, cfg.buckets)
-
-  /** Freeze an initial index from a `(doc_id, code)` snapshot
-    * (batch_id −1 = pre-stream); markers reset too. */
+  /** Freeze an initial index from a `(doc_id, code)` snapshot. */
   def init(spark: SparkSession, codes: DataFrame, cfg: CodeDupConfig): Unit =
-    BandStore.reset(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir,
-      bandsOf(codes, cfg.codeName).withColumn("batch_id", lit(-1L)), cfg.buckets)
+    cfg.store.reset(bandsOf(codes, cfg.codeName))
 
   /** Serve one micro-batch of `(doc_id, code)` rows: one verdict row per
     * doc — `(doc_id, is_new, n_matches, best_match, best_hamming)`,
@@ -78,20 +71,9 @@ object CodeDupIndex {
   def serveBatch(spark: SparkSession, codes: DataFrame, batchId: Long,
                  cfg: CodeDupConfig): DataFrame = {
     val codeName = cfg.codeName
-    ensureTable(spark, cfg)
-    val proto = CommitProtocol(cfg.bandsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
-    if (proto.rolledBack) spark.catalog.refreshTable(cfg.tableName)
-
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), col("doc_id").as("old_id"),
-        col(codeName).as("old_code"))
-
+    val store = cfg.store.open(spark, batchId)
     val bands = bandsOf(codes, codeName).localCheckpoint() // 3 consumers below
-    val idxCand = bands.join(idx, Seq("band_val"))
-      .select(col("doc_id"), col(codeName).as("code"),
-        col("old_id"), col("old_code"))
+    val idxCand = probe(bands, store, codeName)
     val inBatchCand = bands.as("a").join(
       bands.as("b"),
       col("a.band_idx") === col("b.band_idx") &&
@@ -121,36 +103,19 @@ object CodeDupIndex {
         coalesce(col("best_hamming"), lit(-1)).as("best_hamming"))
       .localCheckpoint() // pin BEFORE the index these plans read mutates
 
-    if (!replay) {
-      proto.commit {
-        BandStore.append(
-          bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
-            .select(col("band_idx"), col("band_val"), col("doc_id"),
-              col(codeName), lit(batchId).as("batch_id")),
-          cfg.tableName, cfg.bandsDir, cfg.buckets)
-      }
-    }
+    store.commit(
+      bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id")))
     verdicts
   }
 
-  def compact(spark: SparkSession, cfg: CodeDupConfig): Unit =
-    BandStore.compact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets)
-
-  def maybeCompact(spark: SparkSession, cfg: CodeDupConfig,
-                   maxFiles: Int): Boolean =
-    BandStore.maybeCompact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets, maxFiles)
-
-  /** The probe join over the CURRENT index — the assertion surface for
-    * the zero-index-exchange claim. */
-  def probeJoin(spark: SparkSession, codes: DataFrame, batchId: Long,
-                cfg: CodeDupConfig): DataFrame = {
-    ensureTable(spark, cfg)
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), col("doc_id").as("old_id"))
-    bandsOf(codes, cfg.codeName).join(idx, Seq("band_val"))
-      .select(col("doc_id"), col("old_id"))
-  }
+  /** The serve's store probe: the batch's bands joined to every other
+    * batch's stored bands (with their pre-parsed codes) on the bucket
+    * key — zero index-side exchange (StreamingSpec plans this). */
+  private[graft] def probe(bands: DataFrame, store: DurableStore.Batch,
+                           codeName: String): DataFrame =
+    bands.join(store.prior.select(col("band_val"), col("doc_id").as("old_id"),
+        col(codeName).as("old_code")), Seq("band_val"))
+      .select(col("doc_id"), col(codeName).as("code"), col("old_id"), col("old_code"))
 }
 
 /** R14: streaming AUDIO near-dup — the fourth modality's ingest index
@@ -175,6 +140,7 @@ object AudioDupIndex {
   final case class AudioDupConfig(dir: String, maxDist: Int = 3, buckets: Int = 8) {
     def cfg: CodeDupIndex.CodeDupConfig = CodeDupIndex.CodeDupConfig(
       dir, "graft_audiodup_bands", "afp", maxDist, buckets)
+    def store: DurableStore = cfg.store
   }
 
   /** Base fingerprint codes of a doc batch — decode through the real
@@ -199,10 +165,4 @@ object AudioDupIndex {
   def serveCodes(spark: SparkSession, codes: DataFrame, batchId: Long,
                  c: AudioDupConfig): DataFrame =
     CodeDupIndex.serveBatch(spark, codes, batchId, c.cfg)
-
-  def compact(spark: SparkSession, c: AudioDupConfig): Unit =
-    CodeDupIndex.compact(spark, c.cfg)
-
-  def maybeCompact(spark: SparkSession, c: AudioDupConfig, maxFiles: Int): Boolean =
-    CodeDupIndex.maybeCompact(spark, c.cfg, maxFiles)
 }

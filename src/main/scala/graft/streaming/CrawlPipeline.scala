@@ -94,11 +94,9 @@ object CrawlPipeline {
     * exact-substring windows) has accreted past `maxFiles` append
     * generations; cheap (three directory listings) when idle. Returns
     * whether any compaction ran. */
-  def maintain(spark: SparkSession, cfg: CrawlConfig, maxFiles: Int): Boolean = {
-    val a = IngestDedup.maintain(spark, cfg.ingest, maxFiles)
-    val b = SubstrIndex.maybeCompact(spark, cfg.substr, maxFiles)
-    a || b
-  }
+  def maintain(spark: SparkSession, cfg: CrawlConfig, maxFiles: Int): Boolean =
+    Seq(cfg.ingest.exact.store, cfg.ingest.near.store, cfg.substr.store)
+      .foldLeft(false)((ran, store) => store.maybeCompact(spark, maxFiles) || ran)
 
   /** Serve one micro-batch of binaryFile rows (`content` = one WARC
     * shard's bytes). Returns one verdict row per page in the batch:

@@ -2,39 +2,21 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-/** R14 (judge r13 #6): the ONE durability surface [[CommitProtocol]] and
-  * [[BandStore]] stand on — every marker write, staged-swap rename,
-  * listing, and recursive delete goes through the Hadoop `FileSystem`
-  * API instead of `java.nio.file`, so the same protocol shape runs on
-  * local disk (today's behavior and specs, byte-for-byte), HDFS, or an
-  * S3A-style object store.
-  *
-  * Semantics by backend, stated where atomicity assumptions change:
-  *
-  *  - **Local FS** (default, all specs): `rename` delegates to POSIX
-  *    `rename(2)` — atomic, same as the previous `Files.move(...,
-  *    ATOMIC_MOVE)`. The `file:` scheme is pinned to the raw
-  *    [[graft.ForkFreeRawLocalFileSystem]] (the session's local file
-  *    system minus its checksums) so no `.crc` checksum sidecars appear
-  *    next to markers (preserving the exact on-disk layout the r12/r13
-  *    crash-forging specs pin) and a marker write starts no `chmod`.
-  *  - **HDFS**: `rename` is atomic by contract; the protocol is
-  *    unchanged.
-  *  - **S3A / object stores**: rename is COPY + DELETE — not atomic.
-  *    The marker protocol stays SAFE (not torn) because every rename
-  *    here is create-side: a crash mid-rename leaves the destination
-  *    marker absent, which every reader treats as "not committed" /
-  *    "no intent" — the conservative state. The [[BandStore.compact]]
-  *    directory swap, however, briefly exposes a missing live dir on a
-  *    non-atomic store; deployments there should point `ensure()` at a
-  *    versioned-prefix layout or the store's conditional-put, as the
-  *    [[CommitProtocol]] scaladoc already prescribes.
+/** The file-system surface [[DurableStore]] stands on — every marker
+  * write, staged-swap rename, listing and recursive delete goes through
+  * the Hadoop `FileSystem` API, so the same protocol runs on local disk,
+  * HDFS or an S3A-style object store ([[DurableStore]] states what each
+  * backend's rename semantics mean for the protocol). The `file:` scheme
+  * is pinned to the raw [[graft.ForkFreeRawLocalFileSystem]] (the
+  * session's local file system minus its checksums), so no `.crc`
+  * sidecars appear next to markers (the exact layout the crash-forging
+  * specs pin) and a marker write starts no `chmod`.
   *
   * Replacing an EXISTING destination is delete-then-rename (Hadoop
   * rename refuses existing destinations). The window between the two is
-  * crash-safe for markers by the same conservative-read argument: a
-  * vanished marker never un-commits data files, it only re-runs a
-  * recovery path that is idempotent. */
+  * crash-safe for markers by the conservative-read argument: a vanished
+  * marker never un-commits data files, it only re-runs a recovery path
+  * that is idempotent. */
 private[graft] object DurableFs {
 
   private lazy val conf = {

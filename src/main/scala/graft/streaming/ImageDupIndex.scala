@@ -13,7 +13,7 @@ import graft.operators.Multimodal
   * only perceptually-novel images are accepted and appended.
   *
   * Durable state is the BAND relation of every accepted image — a
-  * bucketed external parquet table (`bands/`: `band_idx, band_val,
+  * bucketed [[DurableStore]] (`bands/`: `band_idx, band_val,
   * doc_id, phash, batch_id`, 4 rows per image: the 4 salt-prefixed
   * 16-bit chunks of the 64-bit code, [[Multimodal.hexBands]]) bucketed
   * by `band_val` so the per-batch probe join co-locates with ZERO
@@ -33,11 +33,6 @@ import graft.operators.Multimodal
   * best_hamming)` — best = lowest hamming, lowest prior id on ties,
   * (-1, -1) when novel.
   *
-  * Replay/crash protocol: identical [[CommitProtocol]] intent/commit
-  * fencing as the other two indexes — verdicts replay exactly
-  * (recomputed against the index minus this batch's own appends), a
-  * half-committed crash rolls back before anything is read.
-  *
   * At 100 TB: per-batch work is O(batch bands) shuffled once into the
   * bucket layout; band-bucket occupancy stays hamming-signal sized
   * because the EXACT index (byte-identical images,
@@ -47,25 +42,21 @@ import graft.operators.Multimodal
 object ImageDupIndex {
 
   final case class ImageDupConfig(dir: String, maxDist: Int = 3, buckets: Int = 8) {
-    def bandsDir: String = s"$dir/bands"
-    def commitsDir: String = s"$dir/commits"
-    def tableName: String = BandStore.tableName("graft_imagedup_bands", dir)
     /** r14: the generic [[CodeDupIndex]] view of this config — same
       * prefix, table schema, and dirs, so existing stores re-bind. */
     def cfg: CodeDupIndex.CodeDupConfig = CodeDupIndex.CodeDupConfig(
       dir, "graft_imagedup_bands", "phash", maxDist, buckets)
+    def store: DurableStore = cfg.store
   }
 
   /** The 4-band relation of an image batch (codes from the per-doc
     * synthesized BMPs — a real deployment feeds
     * [[Multimodal.readMediaFiles]] output through [[Multimodal.phashOf]]
     * instead; the band/probe machinery is unchanged). */
-  private def codesOf(docs: DataFrame): DataFrame =
+  private[graft] def codesOf(docs: DataFrame): DataFrame =
     Multimodal.phashes(docs).toDF().select(col("doc_id"), col("phash"))
 
-  /** Freeze an initial index: every index image accepted as-is
-    * (batch_id −1 = pre-stream). Markers reset too — stale ones would
-    * make re-served batchIds skip their appends. */
+  /** Freeze an initial index: every index image accepted as-is. */
   def init(spark: SparkSession, indexDocs: DataFrame, cfg: ImageDupConfig): Unit =
     CodeDupIndex.init(spark, codesOf(indexDocs), cfg.cfg)
 
@@ -76,23 +67,4 @@ object ImageDupIndex {
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  cfg: ImageDupConfig): DataFrame =
     CodeDupIndex.serveBatch(spark, codesOf(batch), batchId, cfg.cfg)
-
-  /** Rewrite the accreted append files into one file per bucket — rows,
-    * bucket spec, replay semantics and commit markers all preserved
-    * ([[BandStore.compact]]). Run between micro-batches. */
-  def compact(spark: SparkSession, cfg: ImageDupConfig): Unit =
-    CodeDupIndex.compact(spark, cfg.cfg)
-
-  /** Policy form: compact only past `maxFiles` accreted files
-    * ([[BandStore.maybeCompact]]). */
-  def maybeCompact(spark: SparkSession, cfg: ImageDupConfig,
-                   maxFiles: Int): Boolean =
-    CodeDupIndex.maybeCompact(spark, cfg.cfg, maxFiles)
-
-  /** The probe join over the CURRENT index, exactly as [[serveBatch]]
-    * builds it — the assertion surface for the zero-index-exchange
-    * claim. */
-  def probeJoin(spark: SparkSession, batch: DataFrame, batchId: Long,
-                cfg: ImageDupConfig): DataFrame =
-    CodeDupIndex.probeJoin(spark, codesOf(batch), batchId, cfg.cfg)
 }

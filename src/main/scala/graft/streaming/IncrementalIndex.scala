@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.operators.TextOps
@@ -37,23 +36,12 @@ import graft.operators.TextOps
   * numHashFunctions) is pinned in [[IndexConfig]] at init time so every
   * per-batch sketch is merge-compatible with the persisted one.
   *
-  * Replay correctness (checkpoint recovery re-delivers the last
-  * uncommitted micro-batch): every index row carries the `batch_id`
-  * that appended it (r14 — the BandStore discipline, replacing the r12
-  * file-name exclusion that made the index un-rewritable). A replayed
-  * batch sees its commit marker, SKIPS the index/sketch mutation
-  * (bloom OR is idempotent anyway, but the file append is not), and
-  * verifies against the index MINUS its own rows
-  * (`batch_id =!= batchId`) — recomputed verdicts identical to the
-  * original run's even though the index already contains the batch's
-  * fingerprints, and IDENTICAL ACROSS COMPACTIONS, because the rewrite
-  * preserves rows with their batch_ids where a file-name list would be
-  * orphaned. The sketch needs no rollback: its extra bits only route
-  * the replayed rows to the verification join, which the row-excluded
-  * index answers exactly. r12: the append itself is fenced by
-  * [[CommitProtocol]]'s intent marker — a crash BETWEEN the parquet
-  * append and the commit marker is detected on restart and the
-  * half-committed files are deleted before anything is read.
+  * The fingerprint index is a plain [[DurableStore]] (`fingerprint,
+  * batch_id` rows, rewritten 8 files wide), which owns replay, crash
+  * rollback and compaction. The sketch merge runs inside the store's
+  * commit fence and needs no rollback: a replayed or rolled-back batch's
+  * extra bits only route its rows to the verification join, which the
+  * row-excluded index answers exactly.
   *
   * At 100 TB: the index relation shuffles nothing at serve time (the
   * verification join is keyed on fingerprint and the maybe leg is
@@ -68,25 +56,18 @@ object IncrementalIndex {
     * numBits and numHashFunctions for the life of the index — the
     * merge-compatibility contract. */
   final case class IndexConfig(dir: String, capacity: Long = 4000000L, fpp: Double = 0.01) {
-    def fingerprintsDir: String = s"$dir/fingerprints"
+    def store: DurableStore =
+      DurableStore.plain(dir, "fingerprints", "fingerprint STRING, batch_id BIGINT", width = 8)
     def bloomPath: String = s"$dir/bloom.bin"
-    def commitsDir: String = s"$dir/commits"
     def numBits: Long = BloomFilter.optimalNumOfBits(capacity, fpp)
   }
-
-  private val FpSchema = StructType(Seq(
-    StructField("fingerprint", StringType),
-    StructField("batch_id", org.apache.spark.sql.types.LongType)))
 
   /** Freeze an initial index: distinct fingerprints of `indexDocs` →
     * parquet, plus the one-pass sketch over the persisted relation. */
   def init(spark: SparkSession, indexDocs: DataFrame, cfg: IndexConfig): Unit = {
-    CommitProtocol.resetMarkers(cfg.commitsDir) // stale markers = skipped appends
-    indexDocs.select(TextOps.fingerprint(col("text")).as("fingerprint")).distinct()
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").parquet(cfg.fingerprintsDir)
-    val sketch = sketchBytes(spark.read.parquet(cfg.fingerprintsDir), cfg)
-      .getOrElse(emptySketch(cfg))
+    cfg.store.reset(
+      indexDocs.select(TextOps.fingerprint(col("text")).as("fingerprint")).distinct())
+    val sketch = sketchBytes(cfg.store.rows(spark), cfg).getOrElse(emptySketch(cfg))
     writeFile(cfg.bloomPath, sketch)
   }
 
@@ -110,47 +91,6 @@ object IncrementalIndex {
     * [[DurableFs]] like every other durable artifact. */
   private def writeFile(path: String, bytes: Array[Byte]): Unit =
     DurableFs.writeAtomicBytes(path, bytes)
-
-  /** If a [[compact]] crashed between its two swap renames, the `.old`
-    * copy IS the index — restore it before anything reads. */
-  private def recoverSwap(cfg: IndexConfig): Unit = {
-    val dir = cfg.fingerprintsDir
-    val old = dir.stripSuffix("/") + ".old"
-    if (!DurableFs.isDirectory(dir) && DurableFs.isDirectory(old))
-      DurableFs.move(old, dir)
-  }
-
-  /** R14: rewrite the append-accreted fingerprint files into `width`
-    * files — rows AND their batch_ids preserved, so replay exclusion
-    * and the commit markers stay valid across the rewrite (the
-    * BandStore staged-swap protocol: the live dir is never the only
-    * copy mid-rewrite, a mid-swap crash recovers from `.old`). Safe
-    * between micro-batches. */
-  def compact(spark: SparkSession, cfg: IndexConfig, width: Int = 8): Unit = {
-    recoverSwap(cfg)
-    // r15: roll back any crashed half-append BEFORE the rewrite reads
-    // the directory — folding an orphan in would make that batch's
-    // later replay recovery delete the compacted files themselves.
-    CommitProtocol.recoverPending(cfg.fingerprintsDir, cfg.commitsDir)
-    val dir = cfg.fingerprintsDir
-    val staging = dir.stripSuffix("/") + ".compacting"
-    val old = dir.stripSuffix("/") + ".old"
-    DurableFs.deleteTree(staging); DurableFs.deleteTree(old)
-    spark.read.schema(FpSchema).parquet(dir)
-      .repartition(width)
-      .write.mode("overwrite").parquet(staging)
-    DurableFs.move(dir, old)
-    DurableFs.move(staging, dir)
-    DurableFs.deleteTree(old)
-  }
-
-  /** Policy form: compact only past `maxFiles` accreted files. */
-  def maybeCompact(spark: SparkSession, cfg: IndexConfig,
-                   maxFiles: Int, width: Int = 8): Boolean = {
-    val n = CommitProtocol.listParquet(cfg.fingerprintsDir).size
-    if (n > maxFiles) { compact(spark, cfg, width); true }
-    else false
-  }
 
   /** Serve one micro-batch of `(doc_id, text, ...)` documents: returns
     * `(doc_id, fingerprint, is_new)` verdicts — identical semantics to
@@ -185,22 +125,8 @@ object IncrementalIndex {
       arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
       cfg: IndexConfig): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r12: intent/commit fencing — a crash between the parquet append
-    // and the commit marker is rolled back HERE (orphan files deleted)
-    // before anything is read, so the batch re-runs against the exact
-    // pre-append index and never double-appends (ADVICE r11)
-    recoverSwap(cfg)
-    val proto = CommitProtocol(cfg.fingerprintsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
-    val idxFiles = CommitProtocol.listParquet(cfg.fingerprintsDir).toSeq.sorted
-      .map(n => s"${cfg.fingerprintsDir}/$n")
-    // replay exclusion is ROW-based (batch_id), so it survives compaction
-    val idx =
-      (if (idxFiles.isEmpty) spark.createDataFrame(
-        new java.util.ArrayList[Row](), FpSchema)
-      else spark.read.schema(FpSchema).parquet(idxFiles: _*))
-        .filter(col("batch_id") =!= lit(batchId))
-        .select("fingerprint")
+    val store = cfg.store.open(spark, batchId)
+    val idx = store.prior.select("fingerprint")
 
     val bloomBytes = DurableFs.readBytes(cfg.bloomPath)
     // r18b (guide §3.2 manual-Bloom recipe, §5 "very large query plans"):
@@ -232,22 +158,20 @@ object IncrementalIndex {
     val verdicts = JobLabel(spark, s"exact b$batchId: verdicts pin") {
       definitelyNew.unionByName(verified).localCheckpoint() }
 
-    if (!replay) arms.fork(s"exact b$batchId: commit") { proto.commit {
+    if (!store.replay) arms.fork(s"exact b$batchId: commit") {
       val newFps = verdicts.filter(col("is_new")).select("fingerprint")
-      newFps.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(cfg.fingerprintsDir)
       // sketch merge INSIDE the fence: a crash after the merge but
       // before the commit marker re-runs the batch against the
       // rolled-back index — the stale extra bits only route rows to
       // the verification join, which answers exactly
-      sketchBytes(newFps, cfg).foreach { batchSketch =>
+      store.commit(newFps, sketchBytes(newFps, cfg).foreach { batchSketch =>
         val merged = BloomFilter.readFrom(bloomBytes)
         merged.mergeInPlace(BloomFilter.readFrom(batchSketch))
         val out = new java.io.ByteArrayOutputStream()
         merged.writeTo(out)
         writeFile(cfg.bloomPath, out.toByteArray)
-      }
-    } }
+      })
+    }
     verdicts
   }
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * domain).
   *
   * Crash/replay correctness composes from the parts: each stage owns
-  * its own [[CommitProtocol]]-fenced store, and both recompute replayed
+  * its own [[DurableStore]], and both recompute replayed
   * verdicts against their index minus their own appends, so the
   * composition replays exactly (spec-proven, including the
   * stage-2-crashed half-replay: stage 1 sees its commit marker and
@@ -116,19 +116,5 @@ object IngestDedup {
         (col("exact_new") && coalesce(col("near_new"), lit(true))).as("is_new"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("best_match"), lit(-1L)).as("best_match"))
-  }
-
-  /** R14: maintenance hook for the composed ingest — compacts whichever
-    * of the two stages has accreted past `maxFiles` files: the near-dup
-    * BAND store ([[BandStore.maybeCompact]]) and, since the exact
-    * stage's replay exclusion moved from file names to per-row
-    * batch_ids (r14b), the fingerprint index too
-    * ([[IncrementalIndex.maybeCompact]] — rows keep their batch_ids, so
-    * replay and markers survive the rewrite). Returns whether any
-    * compaction ran. */
-  def maintain(spark: SparkSession, cfg: IngestConfig, maxFiles: Int): Boolean = {
-    val a = IncrementalIndex.maybeCompact(spark, cfg.exact, maxFiles)
-    val b = NearDupIndex.maybeCompact(spark, cfg.near, maxFiles)
-    a || b
   }
 }

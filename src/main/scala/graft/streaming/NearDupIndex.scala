@@ -11,15 +11,10 @@ import graft.operators.Dedup
   * the LSH half that catches reworded boilerplate and template pages).
   *
   * Durable state is the BAND relation of every accepted doc — a
-  * BUCKETED external parquet table (`bands/`: `band_idx, band_val,
-  * doc_id, batch_id`, 4 rows per doc, the 4 salted minhashes
-  * [[Dedup.minhashSignatures]] computes), bucketed by `band_val` so the
-  * per-batch probe join co-locates against the index with ZERO
-  * index-side exchange: the shuffle that matters at scale is paid once
-  * at append time, never per probe (r12 — the r11 version wrote plain
-  * parquet and re-shuffled the whole index every batch). The table is
-  * registered in the session catalog (CREATE TABLE ... CLUSTERED BY) so
-  * a restarted session re-binds to the same files and bucket spec.
+  * bucketed [[DurableStore]] (`bands/`: `band_idx, band_val, doc_id,
+  * batch_id`, 4 rows per doc, the 4 salted minhashes
+  * [[Dedup.minhashSignatures]] computes), so the per-batch probe join
+  * co-locates against the index with ZERO index-side exchange.
   *
   * Per micro-batch ([[serveBatch]]): the batch's bands join the
   * persisted band relation keyed on `band_val` (each band's minhash is
@@ -37,17 +32,6 @@ import graft.operators.Dedup
   * C matches rejected A and A matched B, C is (transitively) a dup of
   * the accepted B with high probability.
   *
-  * Replay/crash protocol (r12, shared shape with [[IncrementalIndex]]):
-  * every commit is fenced by an INTENT marker written atomically BEFORE
-  * the parquet append and a COMMIT marker (listing the appended files)
-  * written atomically after. A crash between append and commit leaves
-  * the intent marker: the restart diffs the live file listing against
-  * the intent's snapshot, DELETES the orphaned half-commit, and
-  * re-runs the batch cleanly — so verdicts replay exactly and the index
-  * never carries a double append. A batch whose commit marker exists
-  * skips mutation and verifies against the index minus its own appends
-  * (`batch_id` filter — cheap and exact).
-  *
   * At 100 TB: the per-batch work is O(batch bands) shuffled once into
   * the index's bucket layout; band-bucket occupancy stays Jaccard-signal
   * sized because the exact index ([[IncrementalIndex]]) runs FIRST in
@@ -61,43 +45,28 @@ import graft.operators.Dedup
 object NearDupIndex {
 
   final case class NearDupConfig(dir: String, minMatches: Int = 3, buckets: Int = 8) {
-    def bandsDir: String = s"$dir/bands"
-    def commitsDir: String = s"$dir/commits"
-    def tableName: String = BandStore.tableName("graft_neardup_bands", dir)
+    // band_val is the 32-hex md5 minhash (TextOps.minhash); at 100 TB a
+    // deployment would re-key to the first 8 bytes to shrink the exchange
+    def store: DurableStore = DurableStore.bucketed(dir, "bands",
+      "band_idx INT, band_val STRING, doc_id BIGINT, batch_id BIGINT", buckets,
+      "graft_neardup_bands")
   }
 
-  // band_val is the 32-hex md5 minhash (TextOps.minhash); at 100 TB a
-  // deployment would re-key to the first 8 bytes to shrink the exchange
-  private val TableCols =
-    "band_idx INT, band_val STRING, doc_id BIGINT, batch_id BIGINT"
-
   /** The 4-band relation of a doc batch. */
-  private def bandsOf(docs: DataFrame): DataFrame =
+  private[graft] def bandsOf(docs: DataFrame): DataFrame =
     Dedup.minhashSignatures(docs)
       .select(col("doc_id"), posexplode(array(
         col("sig0"), col("sig1"), col("sig2"), col("sig3"))).as(Seq("band_idx", "band_val")))
       .select(col("band_idx"), col("band_val"), col("doc_id"))
 
-  private def ensureTable(spark: SparkSession, cfg: NearDupConfig): Unit =
-    BandStore.ensure(spark, cfg.tableName, TableCols, cfg.bandsDir, cfg.buckets)
-
-  private def appendBands(bands: DataFrame, cfg: NearDupConfig): Unit =
-    BandStore.append(bands, cfg.tableName, cfg.bandsDir, cfg.buckets)
-
-  /** Freeze an initial index: every index doc is accepted as-is
-    * (batch_id −1 = pre-stream). Markers reset too — stale ones would
-    * make re-served batchIds skip their appends. */
+  /** Freeze an initial index: every index doc is accepted as-is. */
   def init(spark: SparkSession, indexDocs: DataFrame, cfg: NearDupConfig): Unit =
-    BandStore.reset(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir,
-      bandsOf(indexDocs).withColumn("batch_id", lit(-1L)), cfg.buckets)
+    cfg.store.reset(bandsOf(indexDocs))
 
   /** Serve one micro-batch: returns `(doc_id, is_new, n_matches,
     * best_match)` — `best_match` the strongest (most bands, then lowest
     * id) prior doc, `-1` when none — and commits the accepted docs'
-    * bands unless this batchId already committed (replay: verdicts are
-    * recomputed against the index MINUS this batch's own appends, so
-    * they replay exactly; a half-committed crash is rolled back by the
-    * intent marker before anything is read). */
+    * bands unless this batchId already committed. */
   def serveBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  cfg: NearDupConfig): DataFrame =
     BatchArms(spark)(serveBatchStaged(_, spark, batch, batchId, cfg))
@@ -119,21 +88,7 @@ object NearDupIndex {
   private[streaming] def serveBatchStaged(
       arms: BatchArms, spark: SparkSession, batch: DataFrame, batchId: Long,
       cfg: NearDupConfig): DataFrame = {
-    ensureTable(spark, cfg)
-    val proto = CommitProtocol(cfg.bandsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
-    // a rollback deletes half-committed files out from under the
-    // catalog's cached listing — refresh before any read of the table
-    // (normal batches skip it: saveAsTable appends refresh themselves)
-    if (proto.rolledBack) spark.catalog.refreshTable(cfg.tableName)
-
-    // batch_id filter excludes this batch's own committed appends on
-    // replay; for a first run it's vacuous. The bucketed scan survives
-    // the filter, so the probe join plans NO index-side exchange.
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), col("doc_id"))
-
+    val store = cfg.store.open(spark, batchId)
     val sigs = JobLabel(spark, s"near b$batchId: sigs pin") {
       Dedup.minhashSignatures(batch).localCheckpoint() }
     // the band explode is re-derived per consumer from the pin (column-
@@ -143,11 +98,7 @@ object NearDupIndex {
       sigs.select(col("doc_id").as(doc), posexplode(array(
         col("sig0"), col("sig1"), col("sig2"), col("sig3"))).as(Seq(bi, bv)))
     val bands = bandsAs("doc_id", "band_idx", "band_val")
-    // single-column probe key == the bucket key (band_val is salt-
-    // prefixed per band index, so equality implies same band)
-    val idxPairs = bands.join(
-      idx.withColumnRenamed("doc_id", "old_id"), Seq("band_val"))
-      .select(col("doc_id"), col("old_id"))
+    val idxPairs = probe(bands, store)
     val inBatchPairs = bands.join(
       bandsAs("b_doc", "b_idx", "b_val"),
       col("band_idx") === col("b_idx") &&
@@ -167,15 +118,22 @@ object NearDupIndex {
     val verdicts = JobLabel(spark, s"near b$batchId: verdicts pin") {
       verdicts0.localCheckpoint() } // pin BEFORE the index these plans read mutates
 
-    if (!replay) arms.fork(s"near b$batchId: commit") { proto.commit {
-      appendBands(
-        bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
-          .select(col("band_idx"), col("band_val"), col("doc_id"),
-            lit(batchId).as("batch_id")),
-        cfg)
-    } }
+    if (!store.replay) arms.fork(s"near b$batchId: commit") {
+      store.commit(
+        bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id")))
+    }
     verdicts
   }
+
+  /** The serve's store probe: the batch's bands joined to every other
+    * batch's stored bands on the single-column key, which is the bucket
+    * key (band_val is salt-prefixed per band index, so equality implies
+    * the same band) — the batch_id filter keeps the scan bucketed, so the
+    * join plans NO index-side exchange (StreamingSpec plans this). */
+  private[graft] def probe(bands: DataFrame, store: DurableStore.Batch): DataFrame =
+    bands.join(store.prior.select(col("band_val"), col("doc_id").as("old_id")),
+      Seq("band_val"))
+      .select(col("doc_id"), col("old_id"))
 
   /** The per-doc match election over a (doc_id, old_id) pair multiset —
     * one row per band agreement. Returns `(doc_id, n_matches,
@@ -225,31 +183,5 @@ object NearDupIndex {
       .filter(col("h.n_matches") > lit(0L))
       .select(col("doc_id"), col("h.n_matches").as("n_matches"),
         col("h.best_match").as("best_match"))
-  }
-
-  /** Rewrite the accreted append files into one file per bucket — rows,
-    * bucket spec, replay semantics and commit markers all preserved
-    * ([[BandStore.compact]]). Run between micro-batches. */
-  def compact(spark: SparkSession, cfg: NearDupConfig): Unit =
-    BandStore.compact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets)
-
-  /** Policy form: compact only past `maxFiles` accreted files
-    * ([[BandStore.maybeCompact]]). */
-  def maybeCompact(spark: SparkSession, cfg: NearDupConfig,
-                   maxFiles: Int): Boolean =
-    BandStore.maybeCompact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets, maxFiles)
-
-  /** The probe join over the CURRENT index, exactly as [[serveBatch]]
-    * builds it — the assertion surface for the zero-index-exchange
-    * claim (spec use: walk the executed plan and check no shuffle sits
-    * between the join and the bucketed index scan). */
-  def probeJoin(spark: SparkSession, batch: DataFrame, batchId: Long,
-                cfg: NearDupConfig): DataFrame = {
-    ensureTable(spark, cfg)
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), col("doc_id"))
-    bandsOf(batch).join(idx.withColumnRenamed("doc_id", "old_id"), Seq("band_val"))
-      .select(col("doc_id"), col("old_id"))
   }
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Durable state is the distinct window-fingerprint relation of all
   * text ever served — one `(band_val, batch_id)` row per fingerprint
-  * (the [[BandStore]] scaffolding; `band_val` carries the 8-token
-  * window md5 here), bucketed on the probe key so the per-batch join
-  * plans ZERO index-side exchange, exactly like the band indexes. The
+  * (a bucketed [[DurableStore]]; `band_val` carries the 8-token
+  * window md5 here), so the per-batch join plans ZERO index-side
+  * exchange, exactly like the band indexes. The
   * store is corpus-token sized in ROWS but holds no text — 16-byte
   * hashes only (the paper's suffix array is 8× the corpus; this is the
   * store a distributed ESD actually keeps).
@@ -32,25 +32,17 @@ import org.apache.spark.sql.functions._
   * duplicated windows only) and each doc re-derives its tokens locally
   * to excise covered spans — text crosses exactly one keyed exchange,
   * the batch operator's contract.
-  *
-  * Replay/crash protocol: the [[CommitProtocol]] intent/commit fencing
-  * and the `batch_id =!= current` probe filter, verbatim from the band
-  * indexes — re-served batchIds recompute identical verdicts against
-  * the index minus their own appends and append nothing.
   */
 object SubstrIndex {
 
   final case class SubstrConfig(dir: String, w: Int = 8, buckets: Int = 8) {
-    def fpsDir: String = s"$dir/fps"
-    def commitsDir: String = s"$dir/commits"
-    def tableName: String = BandStore.tableName("graft_substr_fps", dir)
+    def store: DurableStore = DurableStore.bucketed(dir, "fps",
+      "band_val STRING, batch_id BIGINT", buckets, "graft_substr_fps")
   }
-
-  private val TableCols = "band_val STRING, batch_id BIGINT"
 
   /** The (band_val, doc_id, pos) sliding-window relation of a doc
     * batch — [[Dedup.substrDedup]]'s narrow arm. */
-  private def windowsOf(docs: DataFrame, w: Int): DataFrame =
+  private[graft] def windowsOf(docs: DataFrame, w: Int): DataFrame =
     Spread(docs)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= w)
@@ -59,15 +51,9 @@ object SubstrIndex {
           p => md5(array_join(slice(col("toks"), p + 1, lit(w)), " "))))
         .as(Seq("pos", "band_val")))
 
-  private def ensureTable(spark: SparkSession, cfg: SubstrConfig): Unit =
-    BandStore.ensure(spark, cfg.tableName, TableCols, cfg.fpsDir, cfg.buckets)
-
-  /** Freeze an initial index from a corpus snapshot (batch_id −1). */
+  /** Freeze an initial index from a corpus snapshot. */
   def init(spark: SparkSession, indexDocs: DataFrame, cfg: SubstrConfig): Unit =
-    BandStore.reset(spark, cfg.tableName, cfg.fpsDir, cfg.commitsDir,
-      windowsOf(indexDocs, cfg.w).select("band_val").distinct()
-        .withColumn("batch_id", lit(-1L)),
-      cfg.buckets)
+    cfg.store.reset(windowsOf(indexDocs, cfg.w).select("band_val").distinct())
 
   /** Serve one micro-batch of `(doc_id, text, ...)` docs: returns the
     * batch operator's relation — (doc_id, n_tokens, n_removed,
@@ -109,28 +95,26 @@ object SubstrIndex {
     * stages over a SUPERSET of the docs that will reach this index
     * (windows are row-local, so restricting to the admitted members
     * afterward — [[verdictsFromProbe]]'s `members` — is bit-identical
-    * to probing the admitted docs only). Owns the replay fence: the
-    * protocol's beginOrRecover (rollback of half-appends) runs before
-    * the store is read, exactly as the fused serve did. */
-  private[streaming] final case class ProbeStage(
-      probe: DataFrame, proto: CommitProtocol, replay: Boolean)
+    * to probing the admitted docs only). Opens the store batch (rollback
+    * of half-appends) before the store is read. */
+  private[streaming] final case class ProbeStage(probe: DataFrame, store: DurableStore.Batch)
 
   private[streaming] def probeStaged(
       spark: SparkSession, docs: DataFrame, batchId: Long,
       cfg: SubstrConfig): ProbeStage = {
-    ensureTable(spark, cfg)
-    val proto = CommitProtocol(cfg.fpsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
-    if (proto.rolledBack) spark.catalog.refreshTable(cfg.tableName)
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), lit(true).as("_hit"))
-    val probe = JobLabel(spark, s"substr b$batchId: probe pin") {
-      windowsOf(docs, cfg.w)
-        .join(idx, Seq("band_val"), "left")
+    val store = cfg.store.open(spark, batchId)
+    val probed = JobLabel(spark, s"substr b$batchId: probe pin") {
+      probe(windowsOf(docs, cfg.w), store)
         .localCheckpoint() } // consumed by election, both loser arms, the append
-    ProbeStage(probe, proto, replay)
+    ProbeStage(probed, store)
   }
+
+  /** The serve's store probe: the batch's windows LEFT-joined to every
+    * other batch's stored fingerprints on the bucket key, `_hit` flagging
+    * the known ones — zero index-side exchange (StreamingSpec plans this). */
+  private[graft] def probe(windows: DataFrame, store: DurableStore.Batch): DataFrame =
+    windows.join(store.prior.select(col("band_val"), lit(true).as("_hit")),
+      Seq("band_val"), "left")
 
   /** The VERDICT half: election + span removal over a pinned
     * [[probeStaged]] result, with the commit forked into `arms`. `docs` are the documents the
@@ -199,38 +183,9 @@ object SubstrIndex {
         size(col("toks")).cast("long").as("n_tokens"),
         (size(col("toks")) - size(col("kept_arr"))).cast("long").as("n_removed"),
         md5(array_join(col("kept_arr"), " ")).as("kept_md5"))
-    if (!st.replay) arms.fork(s"substr b$batchId: commit") { st.proto.commit {
-      BandStore.append(
-        fresh.select("band_val").distinct().withColumn("batch_id", lit(batchId)),
-        cfg.tableName, cfg.fpsDir, cfg.buckets)
-    } }
+    if (!st.store.replay) arms.fork(s"substr b$batchId: commit") {
+      st.store.commit(fresh.select("band_val").distinct())
+    }
     verdicts
   }
-
-  /** Plan snapshot surface (r18, [[graft.streaming.ProbeSubstrPlans]]):
-    * the store-probe relation(s) of one serve, exactly as
-    * [[serveBatchStaged]] builds them pre-pin — the assertion surface
-    * for the store-probed-once / zero-index-exchange claims. */
-  private[streaming] def printProbePlans(spark: SparkSession, batch: DataFrame,
-                                         batchId: Long, cfg: SubstrConfig): Unit = {
-    ensureTable(spark, cfg)
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), lit(true).as("_hit"))
-    val occ = windowsOf(batch, cfg.w)
-    println("================ substr store probe: ONE left-join probe (hit flag carries both arms) ================")
-    occ.join(idx, Seq("band_val"), "left").explain("formatted")
-  }
-
-  /** Rewrite the accreted append files into one file per bucket —
-    * rows, bucket spec, replay semantics and commit markers preserved
-    * ([[BandStore.compact]]). Run between micro-batches. */
-  def compact(spark: SparkSession, cfg: SubstrConfig): Unit =
-    BandStore.compact(spark, cfg.tableName, cfg.fpsDir, cfg.commitsDir, cfg.buckets)
-
-  /** Policy form: compact only past `maxFiles` accreted files
-    * ([[BandStore.maybeCompact]]). */
-  def maybeCompact(spark: SparkSession, cfg: SubstrConfig,
-                   maxFiles: Int): Boolean =
-    BandStore.maybeCompact(spark, cfg.tableName, cfg.fpsDir, cfg.commitsDir, cfg.buckets, maxFiles)
 }

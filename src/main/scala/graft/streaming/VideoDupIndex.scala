@@ -17,16 +17,12 @@ import org.apache.spark.sql.functions._
   * any whole-file hash misses.
   *
   * Mechanics mirror [[CodeDupIndex]] otherwise: the accepted corpus's
-  * (frame-sig, doc_id) rows live in a band_val-bucketed [[BandStore]]
+  * (frame-sig, doc_id) rows live in a bucketed [[DurableStore]]
   * (band_val = the frame signature, so the probe join is zero-exchange
   * on the index side); arriving videos probe the store AND the
   * earlier-doc_id members of their own batch (arrival-order election);
   * the per-pair shared-signature count is the verification step (the
-  * hamming analog); verdicts pin before the store mutates; appends are
-  * [[CommitProtocol]]-fenced so crash/replay serve bit-identical
-  * verdicts and append nothing twice; [[BandStore.compact]] +
-  * [[CommitProtocol.recoverPending]] keep the file count bounded with
-  * replay intact.
+  * hamming analog); verdicts pin before the store mutates.
   *
   * At 100 TB: per batch the work is one narrow decode map (frames →
   * signatures), one bucketed probe join keyed on the signature, and a
@@ -38,10 +34,8 @@ object VideoDupIndex {
 
   final case class VideoDupConfig(dir: String, minShared: Int = 3,
       buckets: Int = 8, maxOccupancy: Int = 256) {
-    def bandsDir: String = s"$dir/bands"
-    def commitsDir: String = s"$dir/commits"
-    def tableName: String = BandStore.tableName("graft_videodup_bands", dir)
-    def tableCols: String = "band_val STRING, doc_id BIGINT, batch_id BIGINT"
+    def store: DurableStore = DurableStore.bucketed(dir, "bands",
+      "band_val STRING, doc_id BIGINT, batch_id BIGINT", buckets, "graft_videodup_bands")
   }
 
   /** Distinct (doc_id, band_val = frame signature) rows of a doc batch —
@@ -51,9 +45,6 @@ object VideoDupIndex {
   def videoSigs(docs: DataFrame): DataFrame =
     Multimodal.videoFrameSigs(docs).toDF()
       .select(col("doc_id"), col("fsig").as("band_val")).distinct()
-
-  private def ensureTable(spark: SparkSession, cfg: VideoDupConfig): Unit =
-    BandStore.ensure(spark, cfg.tableName, cfg.tableCols, cfg.bandsDir, cfg.buckets)
 
   /** The occupancy cap every ingest path applies before rows reach the
     * store or a join: signatures shared by more than `maxOccupancy`
@@ -67,14 +58,11 @@ object VideoDupIndex {
       .drop("_bsz")
   }
 
-  /** Freeze an initial index from a doc snapshot (batch_id −1 =
-    * pre-stream); markers reset too. The snapshot passes the same
-    * occupancy cap as every serve-side append, so no stored key starts
-    * degenerate. */
+  /** Freeze an initial index from a doc snapshot. The snapshot passes
+    * the same occupancy cap as every serve-side append, so no stored key
+    * starts degenerate. */
   def init(spark: SparkSession, indexDocs: DataFrame, cfg: VideoDupConfig): Unit =
-    BandStore.reset(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir,
-      capped(videoSigs(indexDocs), cfg.maxOccupancy)
-        .withColumn("batch_id", lit(-1L)), cfg.buckets)
+    cfg.store.reset(capped(videoSigs(indexDocs), cfg.maxOccupancy))
 
   /** Serve one micro-batch of docs: one verdict row per arriving video —
     * `(doc_id, is_new, n_matches, best_match, best_shared)` where
@@ -90,11 +78,7 @@ object VideoDupIndex {
     * external captures). */
   def serveSigs(spark: SparkSession, sigs0: DataFrame, batchId: Long,
                 cfg: VideoDupConfig): DataFrame = {
-    ensureTable(spark, cfg)
-    val proto = CommitProtocol(cfg.bandsDir, cfg.commitsDir, batchId)
-    val replay = proto.beginOrRecover()
-    if (proto.rolledBack) spark.catalog.refreshTable(cfg.tableName)
-
+    val store = cfg.store.open(spark, batchId)
     // r15 (review): the arriving sigs are pinned FIRST — both the band
     // relation and the verdict spine read them, and via serveBatch the
     // sigs subtree is the per-file AVI decode, which would otherwise
@@ -107,20 +91,7 @@ object VideoDupIndex {
     // shared tally — the same recall trade videoDups documents.
     val bands = capped(sigs, cfg.maxOccupancy)
       .localCheckpoint() // 3 consumers below
-    // r16 (advisor): re-apply the cap on the INDEX side too — a key can
-    // accrete past maxOccupancy across many batches (each adds ≤cap
-    // novel carriers while shared counts stay below minShared), so the
-    // per-batch cap alone doesn't bound the candidate join over the
-    // stream's lifetime the way Multimodal.videoDups bounds the whole
-    // relation. The window's ClusteredDistribution(band_val) is already
-    // satisfied by the store's bucket spec, so the probe join still
-    // plans zero index-side exchange (StreamingSpec pins this).
-    val idx = capped(
-      spark.table(cfg.tableName).filter(col("batch_id") =!= lit(batchId)),
-      cfg.maxOccupancy)
-      .select(col("band_val"), col("doc_id").as("old_id"))
-    val idxCand = bands.join(idx, Seq("band_val"))
-      .select(col("doc_id"), col("old_id"))
+    val idxCand = probe(bands, store, cfg)
     val inBatchCand = bands.as("a").join(
       bands.as("b"),
       col("a.band_val") === col("b.band_val") &&
@@ -145,33 +116,24 @@ object VideoDupIndex {
         coalesce(col("best_shared"), lit(-1L)).as("best_shared"))
       .localCheckpoint() // pin BEFORE the index these plans read mutates
 
-    if (!replay) {
-      proto.commit {
-        BandStore.append(
-          bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
-            .select(col("band_val"), col("doc_id"), lit(batchId).as("batch_id")),
-          cfg.tableName, cfg.bandsDir, cfg.buckets)
-      }
-    }
+    store.commit(
+      bands.join(verdicts.filter(col("is_new")).select("doc_id"), Seq("doc_id")))
     verdicts
   }
 
-  def compact(spark: SparkSession, cfg: VideoDupConfig): Unit =
-    BandStore.compact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets)
-
-  def maybeCompact(spark: SparkSession, cfg: VideoDupConfig,
-                   maxFiles: Int): Boolean =
-    BandStore.maybeCompact(spark, cfg.tableName, cfg.bandsDir, cfg.commitsDir, cfg.buckets, maxFiles)
-
-  /** The probe join over the CURRENT index — the assertion surface for
-    * the zero-index-exchange claim. */
-  def probeJoin(spark: SparkSession, sigs: DataFrame, batchId: Long,
-                cfg: VideoDupConfig): DataFrame = {
-    ensureTable(spark, cfg)
-    val idx = spark.table(cfg.tableName)
-      .filter(col("batch_id") =!= lit(batchId))
-      .select(col("band_val"), col("doc_id").as("old_id"))
-    sigs.join(idx, Seq("band_val"))
+  /** The serve's store probe: the batch's `(doc_id, band_val)` sigs
+    * joined to every other batch's stored sigs on the bucket key.
+    * r16 (advisor): the occupancy cap applies on the INDEX side too — a
+    * key can accrete past maxOccupancy across many batches (each adds
+    * ≤cap novel carriers while shared counts stay below minShared), so
+    * the per-batch cap alone doesn't bound the candidate join over the
+    * stream's lifetime the way Multimodal.videoDups bounds the whole
+    * relation. The cap's window needs ClusteredDistribution(band_val),
+    * which the bucket spec already satisfies, so the join still plans
+    * zero index-side exchange (StreamingSpec plans this). */
+  private[graft] def probe(sigs: DataFrame, store: DurableStore.Batch,
+                           cfg: VideoDupConfig): DataFrame =
+    sigs.join(capped(store.prior, cfg.maxOccupancy)
+        .select(col("band_val"), col("doc_id").as("old_id")), Seq("band_val"))
       .select(col("doc_id"), col("old_id"))
-  }
 }

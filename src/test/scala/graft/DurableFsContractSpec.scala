@@ -120,14 +120,14 @@ class DurableFsContractSpec extends AnyFunSuite with WallBudget {
       assert(s0 > 0L)
       // forged crash: batch 1 wrote its intent and appended its ledger
       // row, then died before the commit marker
-      val beforeList = CommitProtocol.listParquet(cfg.ledgerDir)
-      DurableFs.writeAtomic(s"${cfg.commitsDir}/1.intent",
+      val beforeList = cfg.store.files
+      DurableFs.writeAtomic(s"${cfg.store.commitsDir}/1.intent",
         beforeList.toSeq.sorted.mkString("\n"))
       Seq((12345L, 1L)).toDF("tok", "batch_id")
-        .write.mode("append").parquet(cfg.ledgerDir)
+        .write.mode("append").parquet(cfg.store.dataDir)
       assert(spent() === s0 + 12345L,
         "the orphan is visible in the raw fold pre-recovery (the hazard)")
-      BudgetStream.compact(spark, cfg)
+      cfg.store.compact(spark)
       assert(spent() === s0,
         "compact must roll the crashed half-append back, never fold it in")
       // the crashed batch re-serves as NEW on the restored total

@@ -794,7 +794,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       Seq((20L, novelText)).toDF("doc_id", "text"), 2L, cfg))
     assert(v2(20L) === ((false, 1L, 11L)))
     // replay of batch 1: verdicts identical, index does not grow
-    def bandFiles = new java.io.File(cfg.bandsDir).listFiles()
+    def bandFiles = new java.io.File(cfg.store.dataDir).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     val before = bandFiles
     val v1r = collect(NearDupIndex.serveBatch(spark, batch1, 1L, cfg))
@@ -829,7 +829,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
   }
 
   test("image-dup index: verdicts equal brute hamming, arrival-order election, replay exact, bucketed probe") {
-    import graft.streaming.ImageDupIndex
+    import graft.streaming.{CodeDupIndex, ImageDupIndex}
     import graft.streaming.ImageDupIndex.ImageDupConfig
     import graft.operators.Multimodal
     val cfg = ImageDupConfig(tmp("img-idx"))
@@ -876,7 +876,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(v2(copyId) === expect(copyId, idxIds ++ accepted1))
     assert(v2(copyId)._4 === 0)
     // replay of batch 1: verdicts bit-identical, index does not grow
-    def bandFiles = new java.io.File(cfg.bandsDir).listFiles()
+    def bandFiles = new java.io.File(cfg.store.dataDir).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     val before = bandFiles
     val v1r = collectV(ImageDupIndex.serveBatch(spark, batch1, 1L, cfg))
@@ -887,7 +887,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = ImageDupIndex.probeJoin(spark, batch2, 99L, cfg)
+      val plan = CodeDupIndex.probe(CodeDupIndex.bandsOf(ImageDupIndex.codesOf(batch2), "phash"),
+        cfg.store.open(spark, 99L), "phash")
         .queryExecution.executedPlan
       def kids(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -917,7 +918,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       // parse can exist anywhere in the probe path (the hazard the r17
       // batch retrievals measured at 4x)
       import org.apache.spark.sql.types.{IntegerType, LongType}
-      val storeSchema = spark.table(cfg.cfg.tableName).schema
+      val storeSchema = cfg.store.rows(spark).schema
       assert(storeSchema("phash").dataType === LongType,
         "band store must hold the pre-parsed code long")
       assert(storeSchema("band_val").dataType === IntegerType,
@@ -962,13 +963,13 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
   }
 
   test("band-store compaction: one file per bucket, verdicts and replay unchanged, probe still bucketed") {
-    import graft.streaming.ImageDupIndex
+    import graft.streaming.{CodeDupIndex, ImageDupIndex}
     import graft.streaming.ImageDupIndex.ImageDupConfig
     val all = Tables.documents(spark, TestSpark.Sf)
     val idxDocs = all.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val b1 = all.filter(pmod(col("doc_id"), lit(6)) === 0)
     val b2 = all.filter(pmod(col("doc_id"), lit(6)) === 3)
-    def files(cfg: ImageDupConfig) = new java.io.File(cfg.bandsDir).listFiles()
+    def files(cfg: ImageDupConfig) = new java.io.File(cfg.store.dataDir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     def collectV(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
@@ -983,13 +984,13 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val v1 = collectV(ImageDupIndex.serveBatch(spark, b1, 1L, cfg)) // replay, pre-compaction
     val grown = files(cfg)
     assert(grown > cfg.buckets, "appends must have accreted files")
-    ImageDupIndex.compact(spark, cfg)
+    cfg.store.compact(spark)
     assert(files(cfg) === cfg.buckets, "compaction leaves one file per bucket")
     // r14 pin: the rewrite must run `buckets` tasks wide (hash-aligned
     // repartition on band_val), never a single-task coalesce — the
     // full-index rewrite is corpus-scale at 100 TB
-    val rewritePlan = graft.streaming.BandStore
-      .compactionPlan(spark, cfg.tableName, cfg.buckets).queryExecution.optimizedPlan
+    val rewritePlan = cfg.store
+      .compactionPlan(spark).queryExecution.optimizedPlan
     val repart = rewritePlan.collect {
       case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r }
     assert(repart.nonEmpty, s"compaction rewrite must repartition by band_val:\n$rewritePlan")
@@ -1011,17 +1012,18 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // the full compaction past it
     val accreted = files(cfg)
     assert(accreted > cfg.buckets, "batch 2 must have accreted files again")
-    assert(!ImageDupIndex.maybeCompact(spark, cfg, maxFiles = accreted + 1),
+    assert(!cfg.store.maybeCompact(spark, maxFiles = accreted + 1),
       "below threshold must be a no-op")
     assert(files(cfg) === accreted, "no-op must not touch files")
-    assert(ImageDupIndex.maybeCompact(spark, cfg, maxFiles = cfg.buckets),
+    assert(cfg.store.maybeCompact(spark, maxFiles = cfg.buckets),
       "past threshold must compact")
     assert(files(cfg) === cfg.buckets)
     // and the probe still scans the store bucketed
     import org.apache.spark.sql.execution.FileSourceScanExec
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = ImageDupIndex.probeJoin(spark, b2, 99L, cfg)
+      val plan = CodeDupIndex.probe(CodeDupIndex.bandsOf(ImageDupIndex.codesOf(b2), "phash"),
+        cfg.store.open(spark, 99L), "phash")
         .queryExecution.executedPlan
       val scan = PlanAudit.nodes(plan).collectFirst {
         case s: FileSourceScanExec
@@ -1047,21 +1049,21 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     ImageDupIndex.init(spark, idxDocs, cfg)
     val v1 = collectV(ImageDupIndex.serveBatch(spark, b1, 1L, cfg))
     // crash state A: staging dir left behind (crash before any rename)
-    val staging = Paths.get(cfg.bandsDir.stripSuffix("/") + ".compacting")
+    val staging = Paths.get(cfg.store.dataDir.stripSuffix("/") + ".compacting")
     Files.createDirectories(staging)
     Files.writeString(staging.resolve("garbage.parquet"), "not parquet")
     val vA = collectV(ImageDupIndex.serveBatch(spark, b1, 1L, cfg))
     assert(vA === v1, "a stray staging dir must not affect the live store")
-    ImageDupIndex.compact(spark, cfg) // also clears the stray staging
+    cfg.store.compact(spark) // also clears the stray staging
     assert(!Files.isDirectory(staging) ||
       Files.list(staging).count() === 0 || !Files.exists(staging.resolve("garbage.parquet")),
       "compaction must clear stray staging state")
     // crash state B: between the two swap renames — live dir moved to
     // .old, staged copy never moved in
-    val dirP = Paths.get(cfg.bandsDir)
-    val old = Paths.get(cfg.bandsDir.stripSuffix("/") + ".old")
+    val dirP = Paths.get(cfg.store.dataDir)
+    val old = Paths.get(cfg.store.dataDir.stripSuffix("/") + ".old")
     Files.move(dirP, old)
-    spark.catalog.refreshTable(cfg.tableName)
+    cfg.store.refresh(spark)
     val vB = collectV(ImageDupIndex.serveBatch(spark, b1, 1L, cfg))
     assert(vB === v1, "mid-swap crash must recover from the .old copy")
     assert(Files.isDirectory(dirP) && !Files.isDirectory(old),
@@ -1091,7 +1093,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       assert(best === vid - 1000000L, s"variant $vid best=$best")
       assert(ham <= 2, s"variant $vid hamming=$ham")
     }
-    def files() = new java.io.File(c.cfg.bandsDir).listFiles()
+    def files() = new java.io.File(c.store.dataDir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     val before = files()
     // replay of batch 1: identical verdicts, zero appends
@@ -1120,7 +1122,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
   test("video dup index: one-batch serve ≡ batch videoDups; twins rejected cross-batch; crashed half-append never folds into compaction") {
     // r15: the fifth modality's streaming ingest dedup — shot-level
     // shared-frame-signature containment over the durable band store
-    import graft.streaming.{BandStore, CommitProtocol, DurableFs, VideoDupIndex}
+    import graft.streaming.{DurableFs, VideoDupIndex}
     import graft.streaming.VideoDupIndex.VideoDupConfig
     import graft.operators.Multimodal
     val docs = Tables.documents(spark, TestSpark.Sf).filter(col("doc_id") < 100)
@@ -1158,7 +1160,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       assert(!isNew, s"twin $d must be rejected against the index") }
     // novel sigs append once; replay recomputes identical verdicts and
     // appends nothing
-    def files() = new java.io.File(cfg.bandsDir).listFiles()
+    def files() = new java.io.File(cfg.store.dataDir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     val before = files()
     val fresh = sigs.filter(col("doc_id") < 20)
@@ -1176,19 +1178,18 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // marker — compaction must roll the orphan back (r15 advisor:
     // CommitProtocol.recoverPending), never fold it into the rewrite
     val orphanBatch = 99L
-    DurableFs.writeAtomic(s"${cfg.commitsDir}/$orphanBatch.intent",
-      CommitProtocol.listParquet(cfg.bandsDir).toSeq.sorted.mkString("\n"))
-    BandStore.append(
+    DurableFs.writeAtomic(s"${cfg.store.commitsDir}/$orphanBatch.intent",
+      cfg.store.files.toSeq.sorted.mkString("\n"))
+    cfg.store.append(
       twins.select(concat(lit("o"), col("band_val")).as("band_val"),
         (col("doc_id") + 7000000L).as("doc_id"),
-        lit(orphanBatch).as("batch_id")),
-      cfg.tableName, cfg.bandsDir, cfg.buckets)
+        lit(orphanBatch).as("batch_id")))
     assert(files() > afterFresh, "the forged orphan append must land first")
-    VideoDupIndex.compact(spark, cfg)
-    assert(spark.table(cfg.tableName)
+    cfg.store.compact(spark)
+    assert(cfg.store.rows(spark)
       .filter(col("batch_id") === orphanBatch).count() === 0L,
       "crashed half-append must be rolled back, not compacted in")
-    assert(!DurableFs.exists(s"${cfg.commitsDir}/$orphanBatch.intent"),
+    assert(!DurableFs.exists(s"${cfg.store.commitsDir}/$orphanBatch.intent"),
       "recovery must consume the intent marker")
     // and the earlier batch still replays identically post-compaction
     val v1c = collectV(VideoDupIndex.serveSigs(spark, twins, 1L, cfg))
@@ -1244,13 +1245,13 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     def collectV(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getBoolean(2)))).toMap
     val v1 = collectV(IncrementalIndex.serveBatch(spark, b1, 1L, cfg))
-    def files() = graft.streaming.CommitProtocol.listParquet(cfg.fingerprintsDir).size
+    def files() = cfg.store.files.size
     val grown = files()
-    assert(!IncrementalIndex.maybeCompact(spark, cfg, maxFiles = grown + 1),
+    assert(!cfg.store.maybeCompact(spark, maxFiles = grown + 1),
       "below threshold: no-op")
-    assert(IncrementalIndex.maybeCompact(spark, cfg, maxFiles = 1, width = 2),
+    assert(cfg.store.maybeCompact(spark, maxFiles = 1),
       "past threshold: compacts")
-    assert(files() === 2, "compaction leaves `width` files")
+    assert(files() === cfg.store.width, "compaction leaves `width` files")
     // replay of the pre-compaction batch: identical verdicts, no append
     val before = files()
     val v1r = collectV(IncrementalIndex.serveBatch(spark, b1, 1L, cfg))
@@ -1261,16 +1262,16 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val v2 = collectV(IncrementalIndex.serveBatch(spark, b1, 2L, cfg))
     assert(v2.values.forall(!_._2), "batch-1 content re-served as batch 2 is all duplicate")
     // forged mid-swap crash via the abstraction: live dir moved aside
-    graft.streaming.DurableFs.move(cfg.fingerprintsDir,
-      cfg.fingerprintsDir.stripSuffix("/") + ".old")
+    graft.streaming.DurableFs.move(cfg.store.dataDir,
+      cfg.store.dataDir.stripSuffix("/") + ".old")
     val v2r = collectV(IncrementalIndex.serveBatch(spark, b2, 3L, cfg))
     assert(v2r.nonEmpty, "mid-swap crash must recover and serve")
-    assert(graft.streaming.DurableFs.isDirectory(cfg.fingerprintsDir) &&
-      !graft.streaming.DurableFs.exists(cfg.fingerprintsDir.stripSuffix("/") + ".old"))
+    assert(graft.streaming.DurableFs.isDirectory(cfg.store.dataDir) &&
+      !graft.streaming.DurableFs.exists(cfg.store.dataDir.stripSuffix("/") + ".old"))
   }
 
   test("DurableFs: the Hadoop-FS durability surface — atomic markers, swap moves, crash forged through it") {
-    // r14 (judge r13 #6): BandStore/CommitProtocol durability runs on
+    // r14 (judge r13 #6): DurableStore/CommitProtocol durability runs on
     // the Hadoop FileSystem API. Unit-pin the primitives on the local
     // backend (today's semantics), then forge a mid-swap crash USING
     // the abstraction itself and prove the store recovers.
@@ -1294,7 +1295,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(DurableFs.listFiles(s"$base/nope").isEmpty)
     DurableFs.deleteTree(s"$base/nope"); DurableFs.deleteIfExists(s"$base/nope")
     // forge the compaction mid-swap crash VIA the abstraction: live dir
-    // moved aside exactly as BandStore.compact's first swap rename does
+    // moved aside exactly as DurableStore.compact's first swap rename does
     import graft.streaming.ImageDupIndex
     import graft.streaming.ImageDupIndex.ImageDupConfig
     val all = Tables.documents(spark, TestSpark.Sf)
@@ -1304,13 +1305,13 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     ImageDupIndex.init(spark, idxDocs, cfg)
     val v1 = ImageDupIndex.serveBatch(spark, b1, 1L, cfg).collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    DurableFs.move(cfg.bandsDir, cfg.bandsDir.stripSuffix("/") + ".old")
-    spark.catalog.refreshTable(cfg.tableName)
+    DurableFs.move(cfg.store.dataDir, cfg.store.dataDir.stripSuffix("/") + ".old")
+    cfg.store.refresh(spark)
     val v2 = ImageDupIndex.serveBatch(spark, b1, 1L, cfg).collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(v2 === v1, "mid-swap crash forged through DurableFs must recover")
-    assert(DurableFs.isDirectory(cfg.bandsDir) &&
-      !DurableFs.exists(cfg.bandsDir.stripSuffix("/") + ".old"))
+    assert(DurableFs.isDirectory(cfg.store.dataDir) &&
+      !DurableFs.exists(cfg.store.dataDir.stripSuffix("/") + ".old"))
   }
 
   test("near-dup index: bucketed band store probes with zero index-side exchange; crash rollback") {
@@ -1331,7 +1332,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // it once). Broadcast would win at this size; force the SMJ path.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = NearDupIndex.probeJoin(spark, batch, 99L, cfg)
+      val plan = NearDupIndex.probe(NearDupIndex.bandsOf(batch), cfg.store.open(spark, 99L))
         .queryExecution.executedPlan
       def kids(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -1371,11 +1372,11 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(v2(2000L)._1 === false && v2(2001L)._1 === true)
     // forge the crash state: commit marker gone, intent (pre-append
     // listing) present, the appended files still on disk
-    val commits = java.nio.file.Paths.get(cfg.commitsDir)
+    val commits = java.nio.file.Paths.get(cfg.store.commitsDir)
     val marker = commits.resolve("2")
     val appended = java.nio.file.Files.readAllLines(marker)
     assert(!appended.isEmpty)
-    val all = new java.io.File(cfg.bandsDir).list()
+    val all = new java.io.File(cfg.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(commits.resolve("2.intent"),
       (all -- appended.toArray.map(_.toString)).toSeq.sorted
@@ -1386,12 +1387,68 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(java.nio.file.Files.exists(marker) &&
       !java.nio.file.Files.exists(commits.resolve("2.intent")))
     // the accepted doc's bands exist exactly once (no double append)
-    assert(spark.table(cfg.tableName)
+    assert(cfg.store.rows(spark)
       .filter(col("doc_id") === 2001L).count() === 4L)
     // and a third batch still sees the index correctly
     val v3 = collectV(NearDupIndex.serveBatch(spark,
       Seq((3000L, "wholly new second batch document text")).toDF("doc_id", "text"), 3L, cfg))
     assert(v3(3000L) === ((false, 1L, 2001L)))
+  }
+
+  test("bucketed stores: every serve's own store probe plans zero index-side exchange") {
+    // the probe each serve builds (not a hand-built twin of it), planned
+    // with broadcast off: the bucketed store scan must reach the join with
+    // no shuffle, for all four bucketed stores (Image stands for the
+    // CodeDupIndex pair); video's index side carries the occupancy cap
+    import graft.streaming.{CodeDupIndex, ImageDupIndex, NearDupIndex, SubstrIndex, VideoDupIndex}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val docs = Tables.documents(spark, TestSpark.Sf)
+    val idxDocs = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+    val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+    val near = NearDupIndex.NearDupConfig(tmp("probe-near"))
+    val img = ImageDupIndex.ImageDupConfig(tmp("probe-img"))
+    val vid = VideoDupIndex.VideoDupConfig(tmp("probe-vid"))
+    val sub = SubstrIndex.SubstrConfig(tmp("probe-sub"))
+    NearDupIndex.init(spark, idxDocs, near)
+    ImageDupIndex.init(spark, idxDocs, img)
+    VideoDupIndex.init(spark, idxDocs, vid)
+    SubstrIndex.init(spark, idxDocs, sub)
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        Seq(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    /** The index side of the join over the store at `dataDir`. */
+    def indexSide(dataDir: String, probe: org.apache.spark.sql.DataFrame): SparkPlan = {
+      val plan = probe.queryExecution.executedPlan
+      def storeScan(p: SparkPlan): Option[FileSourceScanExec] = PlanAudit.nodes(p).collectFirst {
+        case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(dataDir)) => s }
+      val join = PlanAudit.nodes(plan).find(p =>
+        p.nodeName.contains("Join") && kids(p).exists(storeScan(_).isDefined))
+        .getOrElse(fail(s"no join over the store $dataDir in:\n$plan"))
+      val side = kids(join).find(storeScan(_).isDefined).get
+      assert(PlanAudit.nodes(side).collectFirst { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"index side of the probe join must not shuffle:\n$plan")
+      assert(storeScan(side).get.bucketedScan, s"store scan must be bucketed:\n$plan")
+      side
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      indexSide(near.store.dataDir,
+        NearDupIndex.probe(NearDupIndex.bandsOf(batch), near.store.open(spark, 99L)))
+      indexSide(img.store.dataDir,
+        CodeDupIndex.probe(CodeDupIndex.bandsOf(ImageDupIndex.codesOf(batch), "phash"),
+          img.store.open(spark, 99L), "phash"))
+      val vidSide = indexSide(vid.store.dataDir,
+        VideoDupIndex.probe(VideoDupIndex.videoSigs(batch), vid.store.open(spark, 99L), vid))
+      assert(PlanAudit.nodes(vidSide).exists(_.nodeName == "Window"),
+        "the video probe must cap index-side occupancy")
+      indexSide(sub.store.dataDir,
+        SubstrIndex.probe(SubstrIndex.windowsOf(batch, sub.w), sub.store.open(spark, 99L)))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("incremental dedup index: streamed verdicts match batch incrementalNew; replay is exact") {
@@ -1472,7 +1529,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // the commit marker must make it a read-only re-serve — identical
     // verdicts (even though the index already holds this batch's
     // fingerprints) and no new index files or sketch growth
-    val filesBefore = new java.io.File(s"${cfg.fingerprintsDir}").list().toSet
+    val filesBefore = new java.io.File(s"${cfg.store.dataDir}").list().toSet
     val bloomBefore = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(cfg.bloomPath)).toSeq
     val lastSlice = spark.read.parquet(s"$srcDir/slice-0003.parquet")
@@ -1482,7 +1539,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(replayed.count() === original.count())
     assert(replayed.except(original).count() === 0)
     assert(original.except(replayed).count() === 0)
-    assert(new java.io.File(s"${cfg.fingerprintsDir}").list().toSet === filesBefore)
+    assert(new java.io.File(s"${cfg.store.dataDir}").list().toSet === filesBefore)
     assert(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(cfg.bloomPath)).toSeq === bloomBefore)
   }
@@ -1541,11 +1598,11 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(v === Map(10L -> false, 11L -> true))
     // forge the crash state (append landed, marker didn't): commit
     // marker → intent marker carrying the pre-append listing
-    val commits = java.nio.file.Paths.get(cfg.commitsDir)
+    val commits = java.nio.file.Paths.get(cfg.store.commitsDir)
     val marker = commits.resolve("1")
     val appended = java.nio.file.Files.readAllLines(marker)
     assert(!appended.isEmpty)
-    val all = new java.io.File(cfg.fingerprintsDir).list()
+    val all = new java.io.File(cfg.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(commits.resolve("1.intent"),
       (all -- appended.toArray.map(_.toString)).toSeq.sorted
@@ -1557,7 +1614,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(vr === v, "post-crash re-run must produce identical verdicts")
     assert(java.nio.file.Files.exists(marker) &&
       !java.nio.file.Files.exists(commits.resolve("1.intent")))
-    assert(spark.read.parquet(cfg.fingerprintsDir)
+    assert(spark.read.parquet(cfg.store.dataDir)
       .groupBy("fingerprint").count().filter(col("count") > 1).count() === 0L,
       "no fingerprint may be double-appended")
     // a later batch verifies against the clean index
@@ -1578,7 +1635,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       (3L, idxText) // exact dup in the snapshot: near index keeps ONE copy
     ).toDF("doc_id", "text"), cfg)
     // the near store holds bands for the canonical copies only (2 docs × 4)
-    assert(spark.table(cfg.near.tableName).count() === 8L)
+    assert(cfg.near.store.rows(spark).count() === 8L)
 
     val batch = Seq(
       (10L, idxText),                                             // exact dup of idx 1
@@ -1609,18 +1666,18 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
 
     // replay: identical verdicts, neither index grows
     def files(d: String) = new java.io.File(d).list().count(_.endsWith(".parquet"))
-    val (fpBefore, bandBefore) = (files(cfg.exact.fingerprintsDir), files(cfg.near.bandsDir))
+    val (fpBefore, bandBefore) = (files(cfg.exact.store.dataDir), files(cfg.near.store.dataDir))
     val vr = collectV(IngestDedup.serveBatch(spark, batch, 1L, cfg))
     assert(vr === v, "composed replay must be bit-identical")
-    assert(files(cfg.exact.fingerprintsDir) === fpBefore &&
-      files(cfg.near.bandsDir) === bandBefore)
+    assert(files(cfg.exact.store.dataDir) === fpBefore &&
+      files(cfg.near.store.dataDir) === bandBefore)
 
     // half-crash: stage 2 crashed between append and marker while stage 1
     // committed — forge it, re-serve, verdicts identical, no double bands
-    val nearCommits = java.nio.file.Paths.get(cfg.near.commitsDir)
+    val nearCommits = java.nio.file.Paths.get(cfg.near.store.commitsDir)
     val marker = nearCommits.resolve("1")
     val appended = java.nio.file.Files.readAllLines(marker)
-    val all = new java.io.File(cfg.near.bandsDir).list()
+    val all = new java.io.File(cfg.near.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(nearCommits.resolve("1.intent"),
       (all -- appended.toArray.map(_.toString)).toSeq.sorted
@@ -1629,7 +1686,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val vh = collectV(IngestDedup.serveBatch(spark, batch, 1L, cfg))
     assert(vh === v, "half-crashed composition must recover to identical verdicts")
     import org.apache.spark.sql.functions.{col => c}
-    assert(spark.table(cfg.near.tableName).filter(c("doc_id") === 12L).count() === 4L,
+    assert(cfg.near.store.rows(spark).filter(c("doc_id") === 12L).count() === 4L,
       "accepted doc's bands must exist exactly once after recovery")
 
     // r18 (overlapped commits, judge r17 #2): the REORDERED half-crash —
@@ -1642,10 +1699,10 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // bits only route rows to the verification join, which answers
     // exactly against the rolled-back index), re-commit, and leave the
     // already-committed near store untouched (read-only replay).
-    val exCommits = java.nio.file.Paths.get(cfg.exact.commitsDir)
+    val exCommits = java.nio.file.Paths.get(cfg.exact.store.commitsDir)
     val exMarker = exCommits.resolve("1")
     val exAppended = java.nio.file.Files.readAllLines(exMarker)
-    val exAll = new java.io.File(cfg.exact.fingerprintsDir).list()
+    val exAll = new java.io.File(cfg.exact.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(exCommits.resolve("1.intent"),
       (exAll -- exAppended.toArray.map(_.toString)).toSeq.sorted
@@ -1654,12 +1711,12 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val vre = collectV(IngestDedup.serveBatch(spark, batch, 1L, cfg))
     assert(vre === v,
       "reordered half-crash (exact pending, near committed) must replay identically")
-    assert(files(cfg.exact.fingerprintsDir) === fpBefore &&
-      files(cfg.near.bandsDir) === bandBefore,
+    assert(files(cfg.exact.store.dataDir) === fpBefore &&
+      files(cfg.near.store.dataDir) === bandBefore,
       "recovery must re-append exact exactly once and never touch near")
-    assert(spark.read.parquet(cfg.exact.fingerprintsDir)
+    assert(spark.read.parquet(cfg.exact.store.dataDir)
       .filter(c("batch_id") === 1L).select("fingerprint").distinct().count() ===
-      spark.read.parquet(cfg.exact.fingerprintsDir).filter(c("batch_id") === 1L).count(),
+      spark.read.parquet(cfg.exact.store.dataDir).filter(c("batch_id") === 1L).count(),
       "exact store must hold each batch-1 fingerprint exactly once after recovery")
   }
 
@@ -1683,7 +1740,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     // the near store's commit marker write fails after its append ran
     val cfg = IngestConfig(tmp("ingest-fault"))
     IngestDedup.init(spark, idx, cfg)
-    val marker = s"${cfg.near.commitsDir}/1"
+    val marker = s"${cfg.near.store.commitsDir}/1"
     val failing = new org.apache.hadoop.fs.RawLocalFileSystem {
       override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
           replication: Short, blockSize: Long,
@@ -1840,7 +1897,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(streamed.count() === batch.count())
     assert(streamed.except(batch).count() === 0 && batch.except(streamed).count() === 0)
     // replay: identical verdicts, the store does not grow
-    def files() = new java.io.File(cfg.fpsDir).list().count(_.endsWith(".parquet"))
+    def files() = new java.io.File(cfg.store.dataDir).list().count(_.endsWith(".parquet"))
     val before = files()
     val replayed = SubstrIndex.serveBatch(spark, docs, 0L, cfg)
     assert(replayed.except(streamed).count() === 0 &&
@@ -1878,8 +1935,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(v2r === v2, "post-commit replay must be bit-identical")
     // compaction: at most one file per bucket (empty buckets write
     // nothing on this tiny fp set), verdicts unchanged
-    SubstrIndex.compact(spark, cfg2)
-    assert(new java.io.File(cfg2.fpsDir).list().count(_.endsWith(".parquet"))
+    cfg2.store.compact(spark)
+    assert(new java.io.File(cfg2.store.dataDir).list().count(_.endsWith(".parquet"))
       <= cfg2.buckets)
     val v2c = SubstrIndex.serveBatch(spark, Seq(
       (3L, b1text),
@@ -2065,7 +2122,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       r.getAs[Boolean]("keep") == r.getAs[Boolean]("pos")).toDouble / late.length
     assert(acc > 0.6, s"prequential accuracy of the last batch: $acc")
     // replay: identical verdicts, the log does not grow
-    def files() = new java.io.File(cfg.gradsDir).list().count(_.endsWith(".parquet"))
+    def files() = new java.io.File(cfg.store.dataDir).list().count(_.endsWith(".parquet"))
     val before = files()
     val replayed = ClfStream.serveBatch(spark, batchOf(N - 1), (N - 1).toLong, cfg)
       .collect()
@@ -2074,11 +2131,11 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(files() === before, "replay must not append")
     // forged crash: last batch's commit marker gone, intent present,
     // appended files on disk — recovery rolls back and re-commits
-    val commits = java.nio.file.Paths.get(cfg.commitsDir)
+    val commits = java.nio.file.Paths.get(cfg.store.commitsDir)
     val marker = commits.resolve((N - 1).toString)
     val appended = java.nio.file.Files.readAllLines(marker)
     assert(!appended.isEmpty)
-    val all = new java.io.File(cfg.gradsDir).list()
+    val all = new java.io.File(cfg.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(commits.resolve(s"${N - 1}.intent"),
       (all -- appended.toArray.map(_.toString)).toSeq.sorted
@@ -2094,8 +2151,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(disagree2.count() === 0, "post-crash model must not double-count")
     // compaction: fewer files, rows + batch_ids intact → replay and
     // model both unchanged
-    ClfStream.compact(spark, cfg, width = 2)
-    assert(files() <= 2)
+    cfg.store.compact(spark)
+    assert(files() <= cfg.store.width)
     val disagree3 = batchW.join(ClfStream.model(spark, cfg), Seq("bucket"), "full_outer")
       .filter(coalesce(col("bw"), lit(0L)) =!= coalesce(col("w"), lit(0L)))
     assert(disagree3.count() === 0, "compaction must preserve the model")
@@ -2181,7 +2238,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(verdicts.exists(v => v.exists(_.getAs[Boolean]("kept"))
       && v.exists(r => !r.getAs[Boolean]("kept"))), "some batch straddles the budget")
     // replay: identical verdicts, ledger does not grow
-    def files() = new java.io.File(cfg.ledgerDir).list().count(_.endsWith(".parquet"))
+    def files() = new java.io.File(cfg.store.dataDir).list().count(_.endsWith(".parquet"))
     val before = files()
     val replayed = BudgetStream.serveBatch(spark, batchOf(N - 1), (N - 1).toLong, cfg)
       .collect()
@@ -2190,11 +2247,11 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(files() === before, "replay must not append")
     // forged crash on the last batch: marker deleted, intent restored —
     // recovery rolls back the orphan append and re-commits identically
-    val commits = java.nio.file.Paths.get(cfg.commitsDir)
+    val commits = java.nio.file.Paths.get(cfg.store.commitsDir)
     val marker = commits.resolve((N - 1).toString)
     val appended = java.nio.file.Files.readAllLines(marker)
     assert(!appended.isEmpty)
-    val all = new java.io.File(cfg.ledgerDir).list()
+    val all = new java.io.File(cfg.store.dataDir).list()
       .filter(_.endsWith(".parquet")).toSet
     java.nio.file.Files.write(commits.resolve(s"${N - 1}.intent"),
       (all -- appended.toArray.map(_.toString)).toSeq.sorted
@@ -2209,8 +2266,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     assert(spentRow === expect.filter(_._4).map(_._2).sum,
       "post-crash ledger fold must not double-count")
     // compaction: fewer files, fold + replay intact
-    BudgetStream.compact(spark, cfg, width = 1)
-    assert(files() <= 1)
+    cfg.store.compact(spark)
+    assert(files() <= cfg.store.width)
     assert(BudgetStream.spent(spark, cfg).collect().head.getAs[Long]("tok") === spentRow)
     val postCompact = BudgetStream.serveBatch(spark, batchOf(N - 1), (N - 1).toLong, cfg)
       .collect()
