@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the two [[EventSink]]s: parquet directories ([[ParquetDirSink]],
   * [[defaultGoodSink]]), the date-partitioned lake
   * ([[graft.sinks.LakeSink]]), or the config-selected client streams
-  * ([[graft.sinks.ClientSinks.sinkFromSettings]] /
-  * [[graft.sinks.ClientSinks.badSinkFromSettings]]). Micro-batching with
+  * ([[graft.sinks.ClientSinks.sinkFor]] with `Leg.Good` /
+  * `Leg.Bad`). Micro-batching with
   * a processing-time trigger is the engine analog of the reference's
   * byte/record/time buffer flush (`KinesisSink.scala:87-142`): the time
   * limit maps to the trigger interval ([[DefaultTrigger]]), and the

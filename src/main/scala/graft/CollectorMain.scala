@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.Trigger
   * `cfg.sink`: good records land as thrift wire bytes + partition key +
   * request time, bad rows as flat bad-row columns plus their
   * self-describing JSON. A deployment that ships to a client stream calls
-  * [[CollectorApp.start]] with [[graft.sinks.ClientSinks.sinkFromSettings]]
-  * and [[graft.sinks.ClientSinks.badSinkFromSettings]] instead.
+  * [[CollectorApp.start]] with [[graft.sinks.ClientSinks.sinkFor]]
+  * (`Leg.Good` and `Leg.Bad`) instead.
   */
 object CollectorMain {
 

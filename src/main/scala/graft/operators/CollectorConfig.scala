@@ -141,7 +141,6 @@ final case class TelemetrySettings(
     instanceId: Option[String] = None,
     autoGeneratedId: Option[String] = None)
 
-/** R9 StatsD export settings (reference `monitoring.metrics.statsd`). */
 /** R8: the reference's experimental self-warmup knobs
   * (`model.scala:218-223`, example configs `experimental.warmup`). */
 final case class WarmupSettings(
@@ -169,6 +168,7 @@ final case class KafkaSqsBackupSettings(
     maxBackoffMs: Long = 5000,
     maxRetries: Int = 5)
 
+/** R9 StatsD export settings (reference `monitoring.metrics.statsd`). */
 final case class StatsdSettings(
     enabled: Boolean = false,
     hostname: String = "localhost",

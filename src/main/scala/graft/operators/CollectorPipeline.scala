@@ -446,8 +446,27 @@ object CollectorPipeline {
     * is left VERBATIM in the location when the macro config is disabled;
     * a custom placeholder token replaces the default `${SP_NUID}`. */
   def redirects(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val uEnc = qp(col("querystring"), "u")
-    val target = expr("try_url_decode(u_enc)")
+    val placeholder =
+      cfg.redirectMacroPlaceholder.getOrElse("${SP_NUID}")
+    val location =
+      if (!cfg.redirectMacroEnabled) col("target")
+      else regexp_replace(col("target"),
+        lit(java.util.regex.Pattern.quote(placeholder)), networkUserId)
+    // F8: `/r/*` is 404/absent unless enabled (reference
+    // `CollectorRoute.scala:43-49`); the literal folds away when on
+    withRedirectTarget(env.filter(isRedirect && lit(cfg.enableDefaultRedirect)), cfg)
+      .select(
+        col("event_id"),
+        col("target"),
+        col("allowed"),
+        when(col("allowed"), location).otherwise(lit(null)).as("location"))
+  }
+
+  /** Adds the redirect columns [[redirects]] and [[responses]] share:
+    * `target`, the decoded `u` param, and `allowed`, true when the target
+    * decodes and its host is on the allowlist. An EMPTY `redirectDomains`
+    * set allows any host (F4 default). */
+  private def withRedirectTarget(env: DataFrame, cfg: CollectorConfig): DataFrame = {
     // tolerant host extraction (the reference parses with java.net.URL,
     // which accepts e.g. ${SP_NUID} in the query; Spark's parse_url
     // throws and try_parse_url nulls the whole URL): authority minus
@@ -455,29 +474,15 @@ object CollectorPipeline {
     val host = regexp_extract(col("target"),
       "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)", 1)
     val hostOrNull = when(host === "", lit(null)).otherwise(host)
-    val allowed =
-      if (cfg.redirectDomains.isEmpty) lit(true) // no restriction (F4 default)
+    val onList =
+      if (cfg.redirectDomains.isEmpty) lit(true)
       else cfg.redirectDomains
         .map(d => hostOrNull === d || hostOrNull.endsWith("." + d))
         .reduce(_ || _)
-    val placeholder =
-      cfg.redirectMacroPlaceholder.getOrElse("${SP_NUID}")
-    val location =
-      if (!cfg.redirectMacroEnabled) col("target")
-      else regexp_replace(col("target"),
-        lit(java.util.regex.Pattern.quote(placeholder)), networkUserId)
     env
-      // F8: `/r/*` is 404/absent unless enabled (reference
-      // `CollectorRoute.scala:43-49`); the literal folds away when on
-      .filter(isRedirect && lit(cfg.enableDefaultRedirect))
-      .withColumn("u_enc", uEnc)
-      .withColumn("target", target)
-      .withColumn("allowed", when(col("target").isNotNull, allowed).otherwise(lit(false)))
-      .select(
-        col("event_id"),
-        col("target"),
-        col("allowed"),
-        when(col("allowed"), location).otherwise(lit(null)).as("location"))
+      .withColumn("u_enc", qp(col("querystring"), "u"))
+      .withColumn("target", expr("try_url_decode(u_enc)"))
+      .withColumn("allowed", when(col("target").isNotNull, onList).otherwise(lit(false)))
   }
 
   /** Response-kind projection (SURVEY §7.4 hard part 2: per-request
@@ -490,18 +495,6 @@ object CollectorPipeline {
     * answers 400, GET/HEAD vendor routes are pixel-expected (GIF),
     * POST vendor routes answer "ok". */
   def responses(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val uEnc = qp(col("querystring"), "u")
-    val target = expr("try_url_decode(u_enc)")
-    // tolerant host extraction (the reference parses with java.net.URL,
-    // which accepts e.g. ${SP_NUID} in the query; Spark's parse_url
-    // throws and try_parse_url nulls the whole URL): authority minus
-    // userinfo and port, null when there is no scheme://host shape
-    val host = regexp_extract(col("target"),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)", 1)
-    val hostOrNull = when(host === "", lit(null)).otherwise(host)
-    val allowed = cfg.redirectDomains
-      .map(d => hostOrNull === d || hostOrNull.endsWith("." + d))
-      .reduce(_ || _)
     val segKnown =
       col("path").rlike("^/com\\.segment/v1/(i|t|p|s|g|a)$") &&
         lit(cfg.analyticsJsBridgeEnabled)
@@ -511,14 +504,12 @@ object CollectorPipeline {
     val amp =
       col("path").rlike("^/com\\.amplitude/2/(httpapi|batch)$") &&
         lit(cfg.amplitudeBridgeEnabled)
-    env
-      .withColumn("u_enc", uEnc)
-      .withColumn("target", target)
+    withRedirectTarget(env, cfg)
       .select(
         col("event_id"),
         when(isPixel, lit("gif"))
           .when(isRedirect && !lit(cfg.enableDefaultRedirect), lit("404"))
-          .when(isRedirect && col("target").isNotNull && allowed, lit("302"))
+          .when(isRedirect && col("allowed"), lit("302"))
           .when(isRedirect, lit("400"))
           .when((segKnown || amp) && col("method") === "POST", lit("json"))
           .when(segUnknown, lit("400"))

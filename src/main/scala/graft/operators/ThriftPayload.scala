@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.thrift.protocol.{TBinaryProtocol, TField, TList, TStruct, TType}
 import org.apache.thrift.transport.TMemoryBuffer
@@ -147,54 +147,6 @@ object ThriftPayload {
     opt("hostname", r.hostname)
     opt("networkUserId", r.networkUserId)
     sb.append(')').toString
-  }
-
-  /** Exact TBinaryProtocol size of [[serialize]]'s output as a pure column
-    * expression over the `CollectorPipeline.payloads` projection: each set
-    * string field costs 3 (field header) + 4 (length prefix) + bytes; the
-    * i64 timestamp 3 + 8; a non-empty headers list 3 + 5 (list header) +
-    * Σ(4 + bytes); plus the 1-byte stop. Byte parity with the serializer is
-    * asserted in SplitBatchSpec, so SizeViolation `actual_size` matches the
-    * reference's `wholeEventBytes` (`SplitBatch.scala:84`) without paying a
-    * serialization in the size gate. Stays inside whole-stage codegen. */
-  def wireSizeCol: Column = {
-    def f(c: Column) = when(c.isNotNull, octet_length(c) + 7).otherwise(lit(0))
-    Seq(
-      col("schema_uri"), col("ip"), col("encoding"), col("collector"),
-      col("user_agent"), col("referer_uri"), col("path"), col("querystring"),
-      col("body"), col("content_type"), col("hostname"), col("network_userid"))
-      .map(f)
-      .foldLeft(lit(12): Column)(_ + _) + // i64 timestamp (11) + stop (1)
-      when(col("headers").isNotNull && size(col("headers")) > 0,
-        aggregate(col("headers"), lit(8), (acc, h) => acc + octet_length(h) + 4))
-        .otherwise(lit(0))
-  }
-
-  /** Column version of [[toStringRepr]] over the payloads projection —
-    * feeds the SizeViolation `payload_prefix` truncation. */
-  def toStringCol: Column = {
-    def req(name: String, c: Column) =
-      concat(lit(s", $name:"), coalesce(c.cast("string"), lit("null")))
-    def opt(name: String, c: Column) =
-      when(c.isNotNull, concat(lit(s", $name:"), c)).otherwise(lit(""))
-    concat(
-      lit("CollectorPayload(schema:"), coalesce(col("schema_uri"), lit("null")),
-      req("ipAddress", col("ip")),
-      req("timestamp", col("timestamp_ms")),
-      req("encoding", col("encoding")),
-      req("collector", col("collector")),
-      opt("userAgent", col("user_agent")),
-      opt("refererUri", col("referer_uri")),
-      opt("path", col("path")),
-      opt("querystring", col("querystring")),
-      opt("body", col("body")),
-      when(col("headers").isNotNull && size(col("headers")) > 0,
-        concat(lit(", headers:["), array_join(col("headers"), ", "), lit("]")))
-        .otherwise(lit("")),
-      opt("contentType", col("content_type")),
-      opt("hostname", col("hostname")),
-      opt("networkUserId", col("network_userid")),
-      lit(")"))
   }
 
   /** One decoded wire record for the oracle-checked round-trip query:

@@ -19,7 +19,7 @@ import graft.sinks.ClientSinks.{KinesisClient, OutRecord}
   *
   * Error semantics match the trait contract: an index-aligned
   * `Seq[Option[String]]`, `None` = stored, `Some(code)` = retry this
-  * record ([[ClientSinks.KinesisEventSink]] then resends only the
+  * record ([[ClientSinks.kinesis]] then resends only the
   * flagged subset). A missing SDK surfaces at FACTORY time
   * ([[available]] / `ClassNotFoundException`), never mid-batch.
   */

@@ -17,7 +17,7 @@ import graft.sinks.ClientSinks.{SqsClient, SqsMessage}
   * per-entry failures come back in the response's `Failed` list keyed by
   * the entry id. This binding assigns ids "0".."9" (the chunk index) and
   * maps them back to an index-aligned `Seq[Option[String]]` — `None` =
-  * stored, `Some(code)` = resend ([[ClientSinks.SqsEventSink]] retries
+  * stored, `Some(code)` = resend ([[ClientSinks.sqs]] retries
   * only that subset). A missing SDK surfaces at FACTORY time
   * ([[available]] / `ClassNotFoundException`), never mid-batch.
   */

@@ -19,7 +19,7 @@ import graft.sinks.ClientSinks.PubSubClient
   * collapses to: publish the whole chunk, await every future, and return
   * an index-aligned `Seq[Option[String]]` — `None` = the message id
   * arrived, `Some(code)` = that future failed
-  * ([[ClientSinks.PubSubEventSink]] then re-publishes only the failed
+  * ([[ClientSinks.pubsub]] then re-publishes only the failed
   * subset, exhaustion replaying from the checkpoint). `ApiFuture`
   * extends `java.util.concurrent.Future`, so the await is interface-typed
   * — no SDK class named in the hot path.

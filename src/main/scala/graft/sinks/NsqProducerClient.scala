@@ -12,7 +12,7 @@ import graft.sinks.ClientSinks.NsqClient
   * `new NSQProducer().addAddress(host, port).start()` per sink, and
   * each chunk delivered as `producer.produceMulti(topic, javaList)` —
   * no key, no per-record status; any failure throws and the micro-batch
-  * replays from the checkpoint ([[ClientSinks.NsqEventSink]] adds no
+  * replays from the checkpoint ([[ClientSinks.nsq]] adds no
   * retry, matching the reference).
   */
 object NsqProducerClient {

@@ -14,7 +14,7 @@ import graft.sinks.ClientSinks.RabbitClient
   * `init` fails fast on a missing exchange), and each event published as
   * `channel.basicPublish(exchange, "", null, bytes)` — routingKey always
   * empty, no publisher confirms; retry/backoff lives in
-  * [[ClientSinks.RabbitEventSink]] (bounded attempts, the declared
+  * [[ClientSinks.rabbit]] (bounded attempts, the declared
   * §7.4.4 divergence from the reference's retry-forever).
   */
 object RabbitMqChannelClient {

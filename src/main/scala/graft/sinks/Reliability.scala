@@ -67,6 +67,11 @@ final class CircuitBreaker(
   *   3. if both fail, rethrow — Spark fails the micro-batch and the
   *      checkpoint replays it (strictly stronger than the reference's
   *      drop-after-retries, SURVEY §7.4.4).
+  * An interrupt is no sink failure: stopping the query interrupts its
+  * batch thread, and the interrupted write's job can still be finishing
+  * into the same output, so a retry or a failover there could land the
+  * batch twice. It propagates at once and the checkpoint replays the
+  * batch on restart.
   * `sleeper` is injected so tests don't wait out real backoffs.
   */
 final class FailoverSink(
@@ -89,7 +94,7 @@ final class FailoverSink(
         retry.reset()
         done = true
       } catch {
-        case e: Throwable =>
+        case e: Throwable if !interrupted(e) =>
           lastErr = e
           breaker.onFailure()
           attempt += 1
@@ -107,6 +112,13 @@ final class FailoverSink(
       }
     }
   }
+
+  private def interrupted(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: InterruptedException | _: java.io.InterruptedIOException |
+          _: java.nio.channels.ClosedByInterruptException => true
+      case _ => false
+    }
 }
 
 /** R5/R12: the reference's background sink STARTUP check

@@ -61,18 +61,6 @@ final class Base64StdoutSink(payloadCol: String, toStderr: Boolean = false)
   }
 }
 
-/** Kafka writer builder (K5 native mapping): the reference's Kafka sink is
-  * exactly Spark's kafka sink — key bytes = partition key, value bytes =
-  * payload. Runtime requires the spark-sql-kafka connector on the
-  * classpath (not present in this container — builder provided for
-  * completeness, exercised only for plan construction). */
-object KafkaSinkBuilder {
-  def frame(batch: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    batch.select(
-      col(keyCol).cast("binary").as("key"),
-      col(valueCol).cast("binary").as("value"))
-}
-
 /** Replay-safe parquet sink: each micro-batch lands in its own
   * `batch_id=N` partition directory with overwrite, so a batch replayed
   * after an unclean restart overwrites itself instead of duplicating —

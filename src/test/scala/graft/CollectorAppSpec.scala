@@ -104,7 +104,7 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       spark,
       spark.readStream.schema(envBatch.schema).parquet(srcDir),
       cfg,
-      goodSink = new ClientSinks.KinesisEventSink("events", () => MockClients.kinesis(0)),
+      goodSink = ClientSinks.kinesis("events", () => MockClients.kinesis(0)),
       badSink = new ParquetDirSink(badDir, "bad"),
       checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())

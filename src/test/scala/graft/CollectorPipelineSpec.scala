@@ -525,5 +525,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     assert(loc(redirectRow(8L, "u=http%3A%2F%2Funknown.acme.com%2F12"),
       rCfg.copy(redirectDomains = Set.empty))
       === "http://unknown.acme.com/12")
+    assert(CollectorPipeline.responses(redirectRow(8L, "u=http%3A%2F%2Funknown.acme.com%2F12"),
+      rCfg.copy(redirectDomains = Set.empty)).collect().head.getAs[String]("response_kind") === "302")
   }
 }

@@ -164,19 +164,21 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with WallBudget {
     val (server, running) = CollectorMain.wireHttp(spark, d("spool"), d("good"), d("bad"),
       d("ckpt"), org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L),
       CollectorConfig.testScale)
-    def batchesWithRows: Int = running.query.recentProgress.count(_.numInputRows > 0)
-    def awaitBatches(n: Int): Unit = {
+    // rows of the finished micro-batches: the query stops only after the
+    // batch holding the last request ended, never in the middle of a write
+    def rowsDone: Long = running.query.recentProgress.map(_.numInputRows).sum
+    def awaitRows(n: Long): Unit = {
       val deadline = System.nanoTime() + 60000000000L
-      while (batchesWithRows < n && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(batchesWithRows >= n, "no micro-batch picked up the requests")
+      while (rowsDone < n && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(rowsDone >= n, s"the micro-batches took $rowsDone of $n requests")
     }
     val started = try {
       // the first batch pays the one-off set-up (query start, first log files)
       assert(pixel(server.port, 0) === 200)
-      awaitBatches(1)
+      awaitRows(1)
       processStarts {
         (1 to 5).foreach(i => assert(pixel(server.port, i) === 200))
-        awaitBatches(2)
+        awaitRows(6)
         val store = d("store")
         CommitProtocol(store, d("store-commits"), 0L).commit {
           spark.range(10).write.mode("append").parquet(store)

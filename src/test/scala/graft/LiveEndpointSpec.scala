@@ -1,5 +1,6 @@
 package graft
 
+import graft.sinks.ClientSinks.Leg
 import org.scalatest.funsuite.AnyFunSuite
 
 /** R14 (judge r13 #8): the GATED live-endpoint integration tests for the
@@ -7,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`kinesis/src/it/.../Kinesis.scala`); this sandbox has neither SDK
   * jars nor egress, so these tests CANCEL (skip-reported, never silently
   * passed) unless both are present. The day a Kinesis/SQS-compatible
-  * endpoint exists, they drive `ClientSinks.sinkFromSettings` —
+  * endpoint exists, they drive `ClientSinks.sinkFor` —
   * the production wiring, reflection SDK binding and all — end-to-end
   * and read the records back through the SDK consumer calls.
   *
@@ -107,8 +108,8 @@ class LiveEndpointSpec extends AnyFunSuite with WallBudget {
       assert(status() === "ACTIVE", s"stream $stream never became ACTIVE")
 
       // the PRODUCTION path: config-driven sink, reflection SDK factory
-      val sink = graft.sinks.ClientSinks.sinkFromSettings(
-        settingsFor("kinesis", stream, endpoint),
+      val sink = graft.sinks.ClientSinks.sinkFor(
+        settingsFor("kinesis", stream, endpoint), Leg.Good,
         java.nio.file.Files.createTempDirectory("live-k1").toString)
       val want = (0 until 10).map(i => s"live-k1-$i").toSet
       sink.write(payloadBatch("live-k1", 10), 0L)
@@ -163,8 +164,8 @@ class LiveEndpointSpec extends AnyFunSuite with WallBudget {
       queueUrl.map { u => // queue URL's authority IS the endpoint
         val x = java.net.URI.create(u); s"${x.getScheme}://${x.getAuthority}" })
     try {
-      val sink = graft.sinks.ClientSinks.sinkFromSettings(
-        settingsFor("sqs", queueUrl.get, None),
+      val sink = graft.sinks.ClientSinks.sinkFor(
+        settingsFor("sqs", queueUrl.get, None), Leg.Good,
         java.nio.file.Files.createTempDirectory("live-k2").toString)
       val want = (0 until 10).map(i => s"live-k2-$i").toSet
       sink.write(payloadBatch("live-k2", 10), 0L)
@@ -201,15 +202,15 @@ class LiveEndpointSpec extends AnyFunSuite with WallBudget {
 
   test("two-phase contract: without SDK jars the live wiring builds but fails at factory time, not silently") {
     // the sandbox-executable half of the live ITs: the SAME
-    // sinkFromSettings wiring must construct cleanly (config resolution,
+    // sinkFor wiring must construct cleanly (config resolution,
     // credential-mode validation, retry schedule — all driver-side) and
     // then fail with ClassNotFoundException at the executor-side factory
     // on the first write. Silent success here would mean a jarless
     // deployment ships a black-hole sink.
     assume(!graft.sinks.AwsKinesisClient.available(),
       "SDK present — the live ITs above cover this environment")
-    val sink = graft.sinks.ClientSinks.sinkFromSettings(
-      settingsFor("kinesis", "nope", Some("http://localhost:1")),
+    val sink = graft.sinks.ClientSinks.sinkFor(
+      settingsFor("kinesis", "nope", Some("http://localhost:1")), Leg.Good,
       java.nio.file.Files.createTempDirectory("live-gate").toString)
     val e = intercept[org.apache.spark.SparkException] {
       sink.write(payloadBatch("gate", 2), 0L)

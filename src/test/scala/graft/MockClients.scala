@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.ClientSinks.{KinesisClient, NsqClient, OutRecord, PubSubClient, RabbitClient, SqsClient, SqsMessage}
+import graft.sinks.ClientSinks.{KafkaClient, KinesisClient, NsqClient, OutRecord, PubSubClient, RabbitClient, SqsClient, SqsMessage}
 
 import scala.collection.mutable
 
@@ -150,5 +150,42 @@ object MockClients {
     pCalls.clear(); pStored.clear(); pFailedOnce.clear(); nCalls.clear()
     rAttempts.clear(); rStored.clear(); rBackoffs.clear(); rPublishes.clear()
     kfCalls.clear(); kfStored.clear(); kfFailedOnce.clear()
+  }
+
+  /** Lifecycle probe: every client [[probe]] opens, how often each was
+    * closed, and the largest call any of them received. */
+  private val probeCloses = mutable.ArrayBuffer.empty[Int]
+  private var probeLargest = 0
+
+  def resetProbe(): Unit = synchronized { probeCloses.clear(); probeLargest = 0 }
+  /** One entry per opened client: its close count. */
+  def probeCloseCounts: Seq[Int] = synchronized(probeCloses.toSeq)
+  def probeLargestCall: Int = synchronized(probeLargest)
+
+  /** One client of every kind. `mode` "clean" stores everything, "flag"
+    * flags every record (a client without per-record status throws
+    * instead), "throw" throws from every call. */
+  def probe(mode: String): KinesisClient with SqsClient with PubSubClient with KafkaClient
+      with NsqClient with RabbitClient = {
+    val id = synchronized { probeCloses += 0; probeCloses.size - 1 }
+    new KinesisClient with SqsClient with PubSubClient with KafkaClient with NsqClient with RabbitClient {
+      private def respond(n: Int): Seq[Option[String]] = {
+        MockClients.synchronized { probeLargest = math.max(probeLargest, n) }
+        mode match {
+          case "clean" => Seq.fill(n)(None)
+          case "flag" => Seq.fill(n)(Some("Flagged"))
+          case _ => throw new RuntimeException("probe client down")
+        }
+      }
+      private def status(n: Int): Unit =
+        if (respond(n).exists(_.nonEmpty)) throw new RuntimeException("probe publish failed")
+      def putRecords(stream: String, records: Seq[OutRecord]) = respond(records.size)
+      def sendMessageBatch(queue: String, messages: Seq[SqsMessage]) = respond(messages.size)
+      def publish(topic: String, messages: Seq[Array[Byte]]) = respond(messages.size)
+      def send(topic: String, records: Seq[OutRecord]) = respond(records.size)
+      def produceMulti(topic: String, messages: Seq[Array[Byte]]): Unit = status(messages.size)
+      def basicPublish(exchange: String, routingKey: String, body: Array[Byte]): Unit = status(1)
+      override def close(): Unit = MockClients.synchronized(probeCloses(id) += 1)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sinks.{CircuitBreaker, ClientSinks, CollectingSink, FailoverSink, RetryPolicy}
+import graft.sinks.ClientSinks.{Clients, Leg, Retries}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ReliabilitySpec extends AnyFunSuite with WallBudget {
@@ -72,6 +73,23 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assertThrows[RuntimeException](sink.write(batch, 1L))
   }
 
+  test("failover: an interrupt (query stop) propagates at once, no retry and no fallback") {
+    for (stop <- Seq[Throwable](new InterruptedException("stop"),
+        new RuntimeException("write failed", new java.io.InterruptedIOException("stop")))) {
+      var writes = 0
+      val primary = new graft.sinks.EventSink {
+        val name = "p"
+        def write(b: org.apache.spark.sql.DataFrame, id: Long): Unit = { writes += 1; throw stop }
+      }
+      val fallback = new CollectingSink("f")
+      val sink = new FailoverSink(primary, fallback,
+        new RetryPolicy(1, 2, maxRetries = 3, seed = 1),
+        new CircuitBreaker(10, 1000), sleeper = _ => ())
+      assert(intercept[Throwable](sink.write(batch, 4L)) eq stop)
+      assert(writes === 1 && fallback.batches.isEmpty, stop.toString)
+    }
+  }
+
   test("idempotent sink: a replayed batch overwrites itself, no duplication") {
     val dir = java.nio.file.Files.createTempDirectory("idem").toString
     val sink = new graft.sinks.IdempotentParquetSink(dir)
@@ -89,8 +107,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       .toDF("thrift", "partition_key")
     // every 7th record errors on its first send; the retry must carry
     // ONLY those (reference partial-failure semantics, KinesisSink:157-181)
-    val sink = new ClientSinks.KinesisEventSink("s1",
-      () => MockClients.kinesis(failOnceEvery = 7), sleeper = _ => ())
+    val sink = ClientSinks.kinesis("s1",
+      () => MockClients.kinesis(failOnceEvery = 7), retries = Retries(sleeper = _ => ()))
     sink.write(df, 0L)
     val calls = MockClients.kinesisCalls
     assert(calls.forall(_.size <= ClientSinks.KinesisMaxPerRequest))
@@ -109,7 +127,7 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     MockClients.reset()
     val df = (0 until 53).map(i => (s"p$i".getBytes("UTF-8"), s"k$i"))
       .toDF("thrift", "partition_key")
-    val sink = new ClientSinks.SqsEventSink("q1", () => MockClients.sqs(), sleeper = _ => ())
+    val sink = ClientSinks.sqs("q1", () => MockClients.sqs(), retries = Retries(sleeper = _ => ()))
     sink.write(df, 0L)
     assert(MockClients.sqsCalls.forall(_.size <= ClientSinks.SqsMaxBatchSize))
     val stored = MockClients.sqsStored
@@ -124,8 +142,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
   test("client sink exhaustion throws so the micro-batch replays") {
     MockClients.reset()
     val df = Seq(("x".getBytes("UTF-8"), "k")).toDF("thrift", "partition_key")
-    val sink = new ClientSinks.KinesisEventSink("s1",
-      () => MockClients.kinesisAlwaysFailing(), maxRetries = 2, sleeper = _ => ())
+    val sink = ClientSinks.kinesis("s1",
+      () => MockClients.kinesisAlwaysFailing(), retries = Retries(max = 2, sleeper = _ => ()))
     val e = intercept[Exception](sink.write(df, 0L))
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ chain(x.getCause))
@@ -136,9 +154,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     MockClients.reset()
     val df = (0 until 12).map(i => (s"p$i".getBytes("UTF-8"), s"k$i"))
       .toDF("thrift", "partition_key")
-    val primary = new ClientSinks.KinesisEventSink("s1",
-      () => MockClients.kinesisAlwaysFailing(), maxRetries = 0, sleeper = _ => ())
-    val fallback = new ClientSinks.SqsEventSink("q1", () => MockClients.sqs(), sleeper = _ => ())
+    val primary = ClientSinks.kinesis("s1",
+      () => MockClients.kinesisAlwaysFailing(), retries = Retries(max = 0, sleeper = _ => ()))
+    val fallback = ClientSinks.sqs("q1", () => MockClients.sqs(), retries = Retries(sleeper = _ => ()))
     val sink = new FailoverSink(primary, fallback,
       new RetryPolicy(1, 2, maxRetries = 1, seed = 1),
       new CircuitBreaker(10, 1000), sleeper = _ => ())
@@ -149,8 +167,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
   test("pubsub client sink: batched publish, only flagged messages retried") {
     MockClients.resetExtras()
     val df = (0 until 2100).map(i => Tuple1(s"m-$i".getBytes("UTF-8"))).toDF("thrift")
-    val sink = new ClientSinks.PubSubEventSink("t1",
-      () => MockClients.pubsub(failOnceEvery = 5), sleeper = _ => ())
+    val sink = ClientSinks.pubsub("t1",
+      () => MockClients.pubsub(failOnceEvery = 5), retries = Retries(sleeper = _ => ()))
     sink.write(df, 0L)
     assert(MockClients.pubsubCalls.forall(_.size <= ClientSinks.PubSubMaxPerRequest))
     assert(MockClients.pubsubStored.size === 2100)
@@ -161,29 +179,31 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
   test("nsq client sink: unkeyed chunked produceMulti; failure replays the batch") {
     MockClients.resetExtras()
     val df = (0 until 1234).map(i => Tuple1(s"n-$i".getBytes("UTF-8"))).toDF("thrift")
-    new ClientSinks.NsqEventSink("t1", () => MockClients.nsq()).write(df, 0L)
+    ClientSinks.nsq("t1", () => MockClients.nsq()).write(df, 0L)
     assert(MockClients.nsqCalls.forall(_.size <= 500))
     assert(MockClients.nsqCalls.map(_.size).sum === 1234)
     assertThrows[Exception](
-      new ClientSinks.NsqEventSink("t1", () => MockClients.nsqFailing()).write(df, 1L))
+      ClientSinks.nsq("t1", () => MockClients.nsqFailing()).write(df, 1L))
   }
 
   test("rabbitmq client sink: per-event exponential backoff, bounded attempts") {
     MockClients.resetExtras()
     val df = Seq(Tuple1("r-1".getBytes("UTF-8"))).toDF("thrift")
-    val sink = new ClientSinks.RabbitEventSink("ex",
+    val sink = ClientSinks.rabbit("ex",
       () => MockClients.rabbit(failuresPerEvent = 4),
-      minBackoffMs = 100, multiplier = 2.0, maxBackoffMs = 300,
-      sleeper = MockClients.recordBackoff)
+      retries = Retries(ClientSinks.RabbitMaxAttempts - 1,
+        ClientSinks.exponentialBackoff(minMs = 100, multiplier = 2.0, maxMs = 300),
+        MockClients.recordBackoff))
     sink.write(df, 0L)
     assert(MockClients.rabbitStored.map(new String(_, "UTF-8")) === Seq("r-1"))
     // reference formula: min, then min(mult*current, max), capped
     assert(MockClients.rabbitBackoffs === Seq(100L, 200L, 300L, 300L))
     // poison event: attempts bounded, error propagates for checkpoint replay
     MockClients.resetExtras()
-    assertThrows[Exception](new ClientSinks.RabbitEventSink("ex",
-      () => MockClients.rabbit(failuresPerEvent = 100), maxAttempts = 3,
-      sleeper = MockClients.recordBackoff).write(df, 1L))
+    assertThrows[Exception](ClientSinks.rabbit("ex",
+      () => MockClients.rabbit(failuresPerEvent = 100),
+      retries = Retries(max = 3 - 1, ClientSinks.exponentialBackoff(100, 2.0, 10000),
+        MockClients.recordBackoff)).write(df, 1L))
   }
 
   test("open breaker skips primary straight to fallback (fast failover R3)") {
@@ -216,9 +236,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     // exhausts exactly the configured budget then throws for replay
     // (MockClients' static state is the executor-visible observer)
     MockClients.reset()
-    val sink = ClientSinks.sinkFromSettings(
-      cfg.sink, parquetDir = sys.error("unused"),
-      kinesis = Some(() => MockClients.kinesisAlwaysFailing()), sleeper = _ => ())
+    val sink = ClientSinks.sinkFor(
+      cfg.sink, Leg.Good, parquetDir = sys.error("unused"),
+      clients = Clients(kinesis = Some(() => MockClients.kinesisAlwaysFailing())), sleeper = _ => ())
     assert(sink.name === "kinesis(gstream)") // stream name from streams.good
     import org.apache.spark.sql.functions.{col => c}
     intercept[Exception] {
@@ -238,7 +258,7 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assert(!AwsKinesisClient.available())
     // and constructing the client without the SDK fails AT THE FACTORY
     // CALL with the class name, never a partial write: the factory shape
-    // KinesisEventSink(stream, () => AwsKinesisClient()) means the task
+    // ClientSinks.kinesis(stream, () => AwsKinesisClient()) means the task
     // dies before any record is attempted
     intercept[ClassNotFoundException] { AwsKinesisClient() }
   }
@@ -256,9 +276,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assert(cfg.sink.sqsGoodBuffer === Some("sqs-buf"))
     assert(cfg.sink.sqsBadBuffer === Some("sqs-buf-bad"))
     MockClients.reset()
-    val sink = ClientSinks.sinkFromSettings(cfg.sink, parquetDir = sys.error("unused"),
-      kinesis = Some(() => MockClients.kinesisAlwaysFailing()),
-      sqs = Some(() => MockClients.sqs()), sleeper = _ => ())
+    val sink = ClientSinks.sinkFor(cfg.sink, Leg.Good, parquetDir = sys.error("unused"),
+      clients = Clients(kinesis = Some(() => MockClients.kinesisAlwaysFailing()),
+      sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
     assert(sink.name === "failover(kinesis(gstream)->sqs(sqs-buf))")
     val wire = (0 until 23).map(i => (s"p$i".getBytes("UTF-8"), s"k$i"))
       .toDF("thrift", "partition_key")
@@ -267,9 +287,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assert(MockClients.sqsStored.map(_.kinesisKey).toSet ===
       (0 until 23).map(i => s"k$i").toSet)
     // no buffer configured → the sink is the bare Kinesis leg
-    val bare = ClientSinks.sinkFromSettings(
-      cfg.sink.copy(sqsGoodBuffer = None), parquetDir = sys.error("unused"),
-      kinesis = Some(() => MockClients.kinesis(0)), sleeper = _ => ())
+    val bare = ClientSinks.sinkFor(
+      cfg.sink.copy(sqsGoodBuffer = None), Leg.Good, parquetDir = sys.error("unused"),
+      clients = Clients(kinesis = Some(() => MockClients.kinesis(0))), sleeper = _ => ())
     assert(bare.name === "kinesis(gstream)")
   }
 
@@ -282,8 +302,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       """{"collector": {"streams": {"good": "raw-good", "sink": {
         |  "enabled": "google-pub-sub", "googleProjectId": "proj-1"
         |}}}}""".stripMargin).sink
-    val psSink = ClientSinks.sinkFromSettings(ps, sys.error("unused"),
-      pubsub = Some(() => MockClients.pubsub()), sleeper = _ => ())
+    val psSink = ClientSinks.sinkFor(ps, Leg.Good, sys.error("unused"),
+      clients = Clients(pubsub = Some(() => MockClients.pubsub())), sleeper = _ => ())
     assert(psSink.name === "pubsub(projects/proj-1/topics/raw-good)")
     psSink.write(wire, 0L)
     assert(MockClients.pubsubStored.size === 1)
@@ -293,8 +313,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
         |  "enabled": "nsq", "host": "nsqHost", "port": 4150
         |}}}}""".stripMargin).sink
     assert(nq.nsqHost === "nsqHost" && nq.nsqPort === 4150)
-    val nqSink = ClientSinks.sinkFromSettings(nq, sys.error("unused"),
-      nsq = Some(() => MockClients.nsq()))
+    val nqSink = ClientSinks.sinkFor(nq, Leg.Good, sys.error("unused"),
+      clients = Clients(nsq = Some(() => MockClients.nsq())))
     assert(nqSink.name === "nsq(raw)")
     nqSink.write(wire, 0L)
     assert(MockClients.nsqCalls.map(_.size).sum === 1)
@@ -307,8 +327,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
         |  "backoffPolicy": {"minBackoff": 100, "maxBackoff": 10000, "multiplier": 2}
         |}}}}""".stripMargin).sink
     assert(rq.rabbitUsername === "u1" && rq.rabbitVirtualHost === "/vh")
-    val rqSink = ClientSinks.sinkFromSettings(rq, sys.error("unused"),
-      rabbit = Some(() => MockClients.rabbit()), sleeper = _ => ())
+    val rqSink = ClientSinks.sinkFor(rq, Leg.Good, sys.error("unused"),
+      clients = Clients(rabbit = Some(() => MockClients.rabbit())), sleeper = _ => ())
     assert(rqSink.name === "rabbitmq(raw-ex)")
     rqSink.write(wire, 0L)
     assert(MockClients.rabbitPublishes.exists { case (ex, rk) =>
@@ -317,7 +337,7 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     // on the executor with the client class name (the reflection
     // contract); Spark surfaces it wrapped in a task failure
     val err = intercept[Exception] {
-      ClientSinks.sinkFromSettings(nq, sys.error("unused")).write(wire.coalesce(1), 1L)
+      ClientSinks.sinkFor(nq, Leg.Good, sys.error("unused")).write(wire.coalesce(1), 1L)
     }
     def causes(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
@@ -388,10 +408,10 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     val bad = SinkSettings(kind = "sqs", awsAccessKey = "iam", awsSecretKey = "nope")
     val err = intercept[IllegalArgumentException] { ClientSinks.sdkSqsFactory(bad) }
     assert(err.getMessage === "accessKey and secretKey must both be set to 'iam' or neither")
-    // and sinkFromSettings falls back to the SDK factory when none is
+    // and sinkFor falls back to the SDK factory when none is
     // injected — the config error still surfaces at wiring
     intercept[IllegalArgumentException] {
-      ClientSinks.sinkFromSettings(bad, "/tmp/unused")
+      ClientSinks.sinkFor(bad, Leg.Good, "/tmp/unused")
     }
     // explicit static keys resolve to the static mode end-to-end
     val stat = SinkSettings(kind = "sqs", awsAccessKey = "AKIA", awsSecretKey = "sk")
@@ -456,8 +476,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assert(props("buffer.memory") === "3145728" && props("linger.ms") === "5000")
     assert(props("max.block.ms") === "111" && props("request.timeout.ms") === "222")
     assert(props("delivery.timeout.ms") === "333" && props("metadata.max.age.ms") === "444")
-    val sink = ClientSinks.sinkFromSettings(cfg.sink, sys.error("unused"),
-      kafka = Some(() => MockClients.kafka(failOnceEvery = 3)), sleeper = _ => ())
+    val sink = ClientSinks.sinkFor(cfg.sink, Leg.Good, sys.error("unused"),
+      clients = Clients(kafka = Some(() => MockClients.kafka(failOnceEvery = 3))), sleeper = _ => ())
     assert(sink.name === "kafka(raw-topic)")
     val wire = (0 until 9).map(i => (s"p-$i".getBytes("UTF-8"), s"k$i"))
       .toDF("thrift", "partition_key")
@@ -495,9 +515,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     MockClients.reset(); MockClients.resetExtras()
     val fast = cfg.sink.copy(minBackoffMs = 1, maxBackoffMs = 2, maxRetries = 1,
       kafkaSqsBackup = Some(b.copy(minBackoffMs = 1, maxBackoffMs = 2)))
-    val sink = ClientSinks.sinkFromSettings(fast, sys.error("unused"),
-      kafka = Some(() => MockClients.kafkaAlwaysFailing()),
-      sqs = Some(() => MockClients.sqs()), sleeper = _ => ())
+    val sink = ClientSinks.sinkFor(fast, Leg.Good, sys.error("unused"),
+      clients = Clients(kafka = Some(() => MockClients.kafkaAlwaysFailing()),
+      sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
     assert(sink.name ===
       "failover(kafka(good)->sqs(https://sqs.us-east-1.amazonaws.com/123456789/good-events))")
     val wire = (0 until 13).map(i => (s"p$i".getBytes("UTF-8"), s"k$i"))
@@ -508,8 +528,8 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       (0 until 13).map(i => s"k$i").toSet)
     // no backup block → the sink is the bare Kafka leg
     MockClients.resetExtras()
-    val bare = ClientSinks.sinkFromSettings(fast.copy(kafkaSqsBackup = None),
-      sys.error("unused"), kafka = Some(() => MockClients.kafka()), sleeper = _ => ())
+    val bare = ClientSinks.sinkFor(fast.copy(kafkaSqsBackup = None), Leg.Good,
+      sys.error("unused"), clients = Clients(kafka = Some(() => MockClients.kafka())), sleeper = _ => ())
     assert(bare.name === "kafka(good)")
     // and the default factory surfaces the absent kafka-clients jar at
     // factory time (the reflection contract)
@@ -549,9 +569,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     // r12: failed publishes retry on the FIXED retryInterval cadence
     // (reference GooglePubSubSink.scala:113-126), never a jitter schedule
     MockClients.resetExtras()
-    val sink = ClientSinks.sinkFromSettings(cfg.sink.copy(maxRetries = 3),
+    val sink = ClientSinks.sinkFor(cfg.sink.copy(maxRetries = 3), Leg.Good,
       sys.error("unused"),
-      pubsub = Some(() => MockClients.pubsub(failOnceEvery = 1)),
+      clients = Clients(pubsub = Some(() => MockClients.pubsub(failOnceEvery = 1))),
       sleeper = MockClients.recordBackoff) // static: survives closure serialization
     sink.write(Seq(Tuple1("pi-1".getBytes("UTF-8"))).toDF("thrift").coalesce(1), 0L)
     val sleeps = MockClients.rabbitBackoffs
@@ -571,9 +591,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
         |  "backoffPolicy": {"minBackoff": 1, "maxBackoff": 2, "maxRetries": 1}
         |}}}}""".stripMargin)
     MockClients.reset()
-    val bad = ClientSinks.badSinkFromSettings(cfg.sink, sys.error("unused"),
-      kinesis = Some(() => MockClients.kinesisAlwaysFailing()),
-      sqs = Some(() => MockClients.sqs()), sleeper = _ => ())
+    val bad = ClientSinks.sinkFor(cfg.sink, Leg.Bad, sys.error("unused"),
+      clients = Clients(kinesis = Some(() => MockClients.kinesisAlwaysFailing()),
+      sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
     assert(bad.name === "failover(kinesis(b-str)->sqs(buf-bad))")
     // the bad leg carries the self-describing JSON under its own columns
     val wire = Seq(("{\"bad\":1}".getBytes("UTF-8"), "e-1"))
@@ -588,9 +608,9 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
         |    "backoffPolicy": {"minBackoff": 1, "maxBackoff": 2, "maxRetries": 1}},
         |  "backoffPolicy": {"minBackoff": 1, "maxBackoff": 2, "maxRetries": 1}
         |}}}}""".stripMargin)
-    val kbad = ClientSinks.badSinkFromSettings(kcfg.sink, sys.error("unused"),
-      kafka = Some(() => MockClients.kafkaAlwaysFailing()),
-      sqs = Some(() => MockClients.sqs()), sleeper = _ => ())
+    val kbad = ClientSinks.sinkFor(kcfg.sink, Leg.Bad, sys.error("unused"),
+      clients = Clients(kafka = Some(() => MockClients.kafkaAlwaysFailing()),
+      sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
     assert(kbad.name === "failover(kafka(b)->sqs(q-bad))")
     // rabbit bad leg publishes with routingKeyBad to the bad exchange
     MockClients.resetExtras()
@@ -598,17 +618,17 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       """{"collector": {"streams": {"good": "raw", "bad": "bad-ex", "sink": {
         |  "enabled": "rabbitmq", "routingKeyGood": "rk-g", "routingKeyBad": "rk-b"
         |}}}}""".stripMargin)
-    val rbad = ClientSinks.badSinkFromSettings(rcfg.sink, sys.error("unused"),
-      rabbit = Some(() => MockClients.rabbit()), sleeper = _ => ())
+    val rbad = ClientSinks.sinkFor(rcfg.sink, Leg.Bad, sys.error("unused"),
+      clients = Clients(rabbit = Some(() => MockClients.rabbit())), sleeper = _ => ())
     rbad.write(wire, 1L)
     assert(MockClients.rabbitPublishes.contains(("bad-ex", "rk-b")))
     // stdout's bad twin is stderr (reference StdoutSink: good->out, bad->err)
-    assert(ClientSinks.badSinkFromSettings(
-      graft.operators.SinkSettings(kind = "stdout"), "unused").name === "stderr")
+    assert(ClientSinks.sinkFor(
+      graft.operators.SinkSettings(kind = "stdout"), Leg.Bad, "unused").name === "stderr")
     // and the good-leg names are unchanged by the refactor
-    assert(ClientSinks.sinkFromSettings(cfg.sink, sys.error("unused"),
-      kinesis = Some(() => MockClients.kinesis(0)),
-      sqs = Some(() => MockClients.sqs()), sleeper = _ => ())
+    assert(ClientSinks.sinkFor(cfg.sink, Leg.Good, sys.error("unused"),
+      clients = Clients(kinesis = Some(() => MockClients.kinesis(0)),
+      sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
       .name === "failover(kinesis(g-str)->sqs(buf-good))")
   }
 
@@ -644,13 +664,66 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
   test("unknown sink kinds fail loudly at wiring time, never silently parquet") {
     import graft.operators.SinkSettings
     val err = intercept[IllegalArgumentException] {
-      ClientSinks.sinkFromSettings(SinkSettings(kind = "kineses"), "unused")
+      ClientSinks.sinkFor(SinkSettings(kind = "kineses"), Leg.Good, "unused")
     }
     assert(err.getMessage.contains("kineses"))
     // the honest kinds still dispatch
-    assert(ClientSinks.sinkFromSettings(SinkSettings(kind = "stdout"), "unused")
+    assert(ClientSinks.sinkFor(SinkSettings(kind = "stdout"), Leg.Good, "unused")
       .name === "stdout")
-    assert(ClientSinks.sinkFromSettings(SinkSettings(kind = "parquet"), "/tmp/x")
+    assert(ClientSinks.sinkFor(SinkSettings(kind = "parquet"), Leg.Good, "/tmp/x")
       .name === "parquet")
+  }
+
+  test("client sinks close each partition's client exactly once (clean, retries exhausted, " +
+    "send throws) and never send more than the kind's cap") {
+    val rows = spark.sparkContext
+      .parallelize((0 until 2200).map(i => (s"lc-$i".getBytes("UTF-8"), s"k${i % 8}")), 2)
+      .toDF("thrift", "partition_key")
+    val quick = Retries(max = 2, sleeper = _ => ())
+    // kind, its sink over probe clients in a mode, the kind's per-call cap
+    val kinds: Seq[(String, String => ClientSinks.ClientSink[_, _], Int)] = Seq(
+      ("kinesis", m => ClientSinks.kinesis("s", () => MockClients.probe(m), retries = quick),
+        ClientSinks.KinesisMaxPerRequest),
+      ("sqs", m => ClientSinks.sqs("q", () => MockClients.probe(m), retries = quick),
+        ClientSinks.SqsMaxBatchSize),
+      ("pubsub", m => ClientSinks.pubsub("t", () => MockClients.probe(m), retries = quick),
+        ClientSinks.PubSubMaxPerRequest),
+      ("kafka", m => ClientSinks.kafka("t", () => MockClients.probe(m), retries = quick),
+        ClientSinks.KafkaMaxPerRequest),
+      ("nsq", m => ClientSinks.nsq("t", () => MockClients.probe(m)), ClientSinks.NsqMaxPerCall),
+      ("rabbitmq", m => ClientSinks.rabbit("ex", () => MockClients.probe(m), retries = quick), 1))
+    for ((kind, sinkIn, cap) <- kinds; mode <- Seq("clean", "flag", "throw")) {
+      MockClients.resetProbe()
+      val sink = sinkIn(mode)
+      assert(sink.cap === cap, kind)
+      if (mode == "clean") sink.write(rows, 0L)
+      else intercept[Exception](sink.write(rows, 0L))
+      // a failed job can return before its sibling task has closed its client
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (MockClients.probeCloseCounts.contains(0) && System.nanoTime() < deadline) Thread.sleep(20)
+      val closes = MockClients.probeCloseCounts
+      assert(closes.nonEmpty && closes.forall(_ == 1), s"$kind/$mode: close count per client $closes")
+      if (mode == "clean") {
+        assert(closes.size === 2, s"$kind: one client per partition")
+        // 1100 rows per partition: chunks are full up to the cap
+        assert(MockClients.probeLargestCall === math.min(cap, 1100), kind)
+      } else assert(MockClients.probeLargestCall <= cap, s"$kind/$mode")
+    }
+  }
+
+  test("one client sink: no foreachPartition under graft/sinks outside ClientSink and Base64StdoutSink") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/sinks")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val uses = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("foreachPartition") => (p.getFileName.toString, s"$p:${i + 1}: $l")
+        }
+      }.toList
+    // one in ClientSinks.ClientSink, one in Sinks.Base64StdoutSink
+    assert(uses.map(_._1).sorted === Seq("ClientSinks.scala", "Sinks.scala"), uses.map(_._2).mkString("\n"))
   }
 }

@@ -112,28 +112,6 @@ class SplitBatchSpec extends AnyFunSuite with WallBudget {
         "encoding:null, collector:null, path:" + "p" * 5)
   }
 
-  test("wireSizeCol and toStringCol match the serializer byte-for-byte on every payload") {
-    import graft.sources.EventEnvelopeAdapter
-    import org.apache.spark.sql.functions.col
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val p = CollectorPipeline.payloads(
-      EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), CollectorConfig.testScale)
-    val declared = p
-      .select(col("event_id"), ThriftPayload.wireSizeCol.as("n"), ThriftPayload.toStringCol.as("r"))
-      .as[(Long, Int, String)].collect()
-      .map { case (id, n, r) => id -> ((n, r)) }.toMap
-    val actual = ThriftPayload.encode(p).collect().map { w =>
-      val rec = ThriftPayload.deserialize(w.thrift)
-      w.event_id -> ((w.thrift.length, ThriftPayload.toStringRepr(rec)))
-    }.toMap
-    assert(declared.size === actual.size)
-    actual.foreach { case (id, (n, r)) =>
-      assert(declared(id)._1 === n, s"wire size mismatch for event $id")
-      assert(declared(id)._2 === r, s"toString mismatch for event $id")
-    }
-  }
-
   /** Payload rows of the `CollectorPipeline.payloads` shape, hand-built. */
   private def payloadRows(recs: Seq[(Long, PayloadRecord)]): org.apache.spark.sql.DataFrame = {
     val spark = TestSpark.spark

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload, WirePayload}
 import graft.sinks.{LakeSink, ParquetDirSink}
+import graft.sinks.ClientSinks.{Clients, Leg}
 import graft.sources.EventEnvelopeAdapter
 import graft.streaming.{SessEvent, Sessionize, WindowedAgg}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -55,12 +56,12 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val cfg = CollectorConfig.testScale.copy(sink = cfg0.sink)
 
     StreamRecorder.reset()
-    val good = graft.sinks.ClientSinks.sinkFromSettings(
-      cfg.sink, parquetDir = sys.error("config selected kinesis"),
-      kinesis = Some(() => StreamRecorder))
-    val bad = graft.sinks.ClientSinks.badSinkFromSettings(
-      cfg.sink, parquetDir = sys.error("config selected kinesis"),
-      kinesis = Some(() => StreamRecorder))
+    val good = graft.sinks.ClientSinks.sinkFor(
+      cfg.sink, Leg.Good, parquetDir = sys.error("config selected kinesis"),
+      clients = Clients(kinesis = Some(() => StreamRecorder)))
+    val bad = graft.sinks.ClientSinks.sinkFor(
+      cfg.sink, Leg.Bad, parquetDir = sys.error("config selected kinesis"),
+      clients = Clients(kinesis = Some(() => StreamRecorder)))
 
     val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
     val srcDir = tmp("cfg-e2e-src")
