@@ -182,7 +182,7 @@ object ClientSinks {
       factory: () => C,
       cols: Seq[String],
       record: Row => A,
-      val cap: Int,
+      cap: Int,
       call: (C, Seq[A]) => Seq[Option[String]],
       retries: Retries) extends EventSink with Serializable {
     def write(batch: DataFrame, batchId: Long): Unit = {

@@ -113,12 +113,20 @@ final class FailoverSink(
     }
   }
 
-  private def interrupted(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+  /** An interrupt anywhere in the cause chain (Spark wraps a task's
+    * failure as the cause of its job's). A `SocketTimeoutException` is an
+    * `InterruptedIOException` too, but it is a transient client failure:
+    * it stays retryable. The walk stops at a cause it has already seen. */
+  private def interrupted(e: Throwable): Boolean = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Throwable, java.lang.Boolean])
+    Iterator.iterate(e)(_.getCause).takeWhile(c => c != null && seen.add(c)).exists {
+      case _: java.net.SocketTimeoutException => false
       case _: InterruptedException | _: java.io.InterruptedIOException |
           _: java.nio.channels.ClosedByInterruptException => true
       case _ => false
     }
+  }
 }
 
 /** R5/R12: the reference's background sink STARTUP check

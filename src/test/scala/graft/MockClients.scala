@@ -153,25 +153,33 @@ object MockClients {
   }
 
   /** Lifecycle probe: every client [[probe]] opens, how often each was
-    * closed, and the largest call any of them received. */
-  private val probeCloses = mutable.ArrayBuffer.empty[Int]
-  private var probeLargest = 0
+    * closed, and the largest call any of them received, per probe run. A
+    * run is fixed when its sink is built, so a straggler task of an earlier
+    * run's failed job never counts toward a later run. */
+  final case class Probe(run: Int, mode: String)
+  private var probeRuns = 0
+  private val probeCloses = mutable.Map.empty[Int, mutable.ArrayBuffer[Int]]
+  private val probeLargest = mutable.Map.empty[Int, Int]
 
-  def resetProbe(): Unit = synchronized { probeCloses.clear(); probeLargest = 0 }
-  /** One entry per opened client: its close count. */
-  def probeCloseCounts: Seq[Int] = synchronized(probeCloses.toSeq)
-  def probeLargestCall: Int = synchronized(probeLargest)
+  /** A new probe run whose clients answer in `mode`. */
+  def newProbe(mode: String): Probe = synchronized { probeRuns += 1; Probe(probeRuns, mode) }
+  /** One entry per client opened in the run: its close count. */
+  def probeCloseCounts(p: Probe): Seq[Int] = synchronized(probeCloses.get(p.run).toSeq.flatten)
+  def probeLargestCall(p: Probe): Int = synchronized(probeLargest.getOrElse(p.run, 0))
 
   /** One client of every kind. `mode` "clean" stores everything, "flag"
     * flags every record (a client without per-record status throws
     * instead), "throw" throws from every call. */
-  def probe(mode: String): KinesisClient with SqsClient with PubSubClient with KafkaClient
+  def probe(p: Probe): KinesisClient with SqsClient with PubSubClient with KafkaClient
       with NsqClient with RabbitClient = {
-    val id = synchronized { probeCloses += 0; probeCloses.size - 1 }
+    val closes = synchronized(probeCloses.getOrElseUpdate(p.run, mutable.ArrayBuffer.empty[Int]))
+    val id = synchronized { closes += 0; closes.size - 1 }
     new KinesisClient with SqsClient with PubSubClient with KafkaClient with NsqClient with RabbitClient {
       private def respond(n: Int): Seq[Option[String]] = {
-        MockClients.synchronized { probeLargest = math.max(probeLargest, n) }
-        mode match {
+        MockClients.synchronized {
+          probeLargest(p.run) = math.max(probeLargest.getOrElse(p.run, 0), n)
+        }
+        p.mode match {
           case "clean" => Seq.fill(n)(None)
           case "flag" => Seq.fill(n)(Some("Flagged"))
           case _ => throw new RuntimeException("probe client down")
@@ -185,7 +193,7 @@ object MockClients {
       def send(topic: String, records: Seq[OutRecord]) = respond(records.size)
       def produceMulti(topic: String, messages: Seq[Array[Byte]]): Unit = status(messages.size)
       def basicPublish(exchange: String, routingKey: String, body: Array[Byte]): Unit = status(1)
-      override def close(): Unit = MockClients.synchronized(probeCloses(id) += 1)
+      override def close(): Unit = MockClients.synchronized(closes(id) += 1)
     }
   }
 }

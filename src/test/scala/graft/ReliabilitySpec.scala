@@ -90,6 +90,29 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     }
   }
 
+  test("failover: a socket timeout (also as a cause, also in a cyclic cause chain) is retried, then fails over") {
+    // job aborted -> read timed out -> job aborted -> ...
+    val loop = new RuntimeException("job aborted")
+    val timeout = new java.net.SocketTimeoutException("read timed out")
+    loop.initCause(timeout)
+    timeout.initCause(loop)
+    for (fail <- Seq[Throwable](new java.net.SocketTimeoutException("read timed out"),
+        new RuntimeException("job aborted", new java.net.SocketTimeoutException("read timed out")),
+        loop)) {
+      var writes = 0
+      val primary = new graft.sinks.EventSink {
+        val name = "p"
+        def write(b: org.apache.spark.sql.DataFrame, id: Long): Unit = { writes += 1; throw fail }
+      }
+      val fallback = new CollectingSink("f")
+      val sink = new FailoverSink(primary, fallback,
+        new RetryPolicy(1, 2, maxRetries = 3, seed = 1),
+        new CircuitBreaker(10, 1000), sleeper = _ => ())
+      sink.write(batch, 5L)
+      assert(writes === 4 && fallback.batches === Seq(5L), fail.toString)
+    }
+  }
+
   test("idempotent sink: a replayed batch overwrites itself, no duplication") {
     val dir = java.nio.file.Files.createTempDirectory("idem").toString
     val sink = new graft.sinks.IdempotentParquetSink(dir)
@@ -680,34 +703,33 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       .parallelize((0 until 2200).map(i => (s"lc-$i".getBytes("UTF-8"), s"k${i % 8}")), 2)
       .toDF("thrift", "partition_key")
     val quick = Retries(max = 2, sleeper = _ => ())
-    // kind, its sink over probe clients in a mode, the kind's per-call cap
-    val kinds: Seq[(String, String => ClientSinks.ClientSink[_, _], Int)] = Seq(
-      ("kinesis", m => ClientSinks.kinesis("s", () => MockClients.probe(m), retries = quick),
+    // kind, its sink over one probe run's clients, the kind's per-call cap
+    val kinds: Seq[(String, MockClients.Probe => ClientSinks.ClientSink[_, _], Int)] = Seq(
+      ("kinesis", p => ClientSinks.kinesis("s", () => MockClients.probe(p), retries = quick),
         ClientSinks.KinesisMaxPerRequest),
-      ("sqs", m => ClientSinks.sqs("q", () => MockClients.probe(m), retries = quick),
+      ("sqs", p => ClientSinks.sqs("q", () => MockClients.probe(p), retries = quick),
         ClientSinks.SqsMaxBatchSize),
-      ("pubsub", m => ClientSinks.pubsub("t", () => MockClients.probe(m), retries = quick),
+      ("pubsub", p => ClientSinks.pubsub("t", () => MockClients.probe(p), retries = quick),
         ClientSinks.PubSubMaxPerRequest),
-      ("kafka", m => ClientSinks.kafka("t", () => MockClients.probe(m), retries = quick),
+      ("kafka", p => ClientSinks.kafka("t", () => MockClients.probe(p), retries = quick),
         ClientSinks.KafkaMaxPerRequest),
-      ("nsq", m => ClientSinks.nsq("t", () => MockClients.probe(m)), ClientSinks.NsqMaxPerCall),
-      ("rabbitmq", m => ClientSinks.rabbit("ex", () => MockClients.probe(m), retries = quick), 1))
+      ("nsq", p => ClientSinks.nsq("t", () => MockClients.probe(p)), ClientSinks.NsqMaxPerCall),
+      ("rabbitmq", p => ClientSinks.rabbit("ex", () => MockClients.probe(p), retries = quick), 1))
     for ((kind, sinkIn, cap) <- kinds; mode <- Seq("clean", "flag", "throw")) {
-      MockClients.resetProbe()
-      val sink = sinkIn(mode)
-      assert(sink.cap === cap, kind)
+      val run = MockClients.newProbe(mode)
+      val sink = sinkIn(run)
       if (mode == "clean") sink.write(rows, 0L)
       else intercept[Exception](sink.write(rows, 0L))
       // a failed job can return before its sibling task has closed its client
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (MockClients.probeCloseCounts.contains(0) && System.nanoTime() < deadline) Thread.sleep(20)
-      val closes = MockClients.probeCloseCounts
+      while (MockClients.probeCloseCounts(run).contains(0) && System.nanoTime() < deadline) Thread.sleep(20)
+      val closes = MockClients.probeCloseCounts(run)
       assert(closes.nonEmpty && closes.forall(_ == 1), s"$kind/$mode: close count per client $closes")
       if (mode == "clean") {
         assert(closes.size === 2, s"$kind: one client per partition")
         // 1100 rows per partition: chunks are full up to the cap
-        assert(MockClients.probeLargestCall === math.min(cap, 1100), kind)
-      } else assert(MockClients.probeLargestCall <= cap, s"$kind/$mode")
+        assert(MockClients.probeLargestCall(run) === math.min(cap, 1100), kind)
+      } else assert(MockClients.probeLargestCall(run) <= cap, s"$kind/$mode")
     }
   }
 
