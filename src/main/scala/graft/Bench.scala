@@ -409,7 +409,7 @@ object Bench {
         graft.sources.EventEnvelopeAdapter.envelopes(spark, sfDir)
           .write.mode("overwrite").parquet(dir("lake-src"))
       } {
-        collector("lake", fileStream(dir("lake-src")), new graft.sinks.LakeSink(dir("lake-good")))
+        collector("lake", fileStream(dir("lake-src")), graft.sinks.LakeSink(dir("lake-good")))
         require(spark.read.parquet(dir("lake-good")).count() > 0)
       }
     }
@@ -548,7 +548,7 @@ object Bench {
           require(driveHttp(port, threads = 8) == 0L, "server errors")
           server.flush()
           collector("lakehttp", server.stream(spark),
-            new graft.sinks.LakeSink(dir("lakehttp-good")))
+            graft.sinks.LakeSink(dir("lakehttp-good")))
           // the lake layout actually materialized: date partition dirs
           val dirs = new java.io.File(dir("lakehttp-good")).listFiles()
           require(dirs != null && dirs.exists(_.getName.startsWith("event_date=")),
@@ -606,6 +606,22 @@ object Bench {
       }
     }
 
+    // a serve leg's timed body: drain `src` under AvailableNow through one
+    // serve loop, appending each micro-batch's verdicts to
+    // `<name>-verdicts` (checkpoint `ckpt-<name>`)
+    def serve(src: org.apache.spark.sql.DataFrame, name: String)(
+        serveBatch: (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame): Unit = {
+      src.writeStream
+        .option("checkpointLocation", dir(s"ckpt-$name"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          serveBatch(batch, id).write.mode("append").parquet(dir(s"$name-verdicts"))
+        }
+        .start()
+        .awaitTermination()
+      require(spark.read.parquet(dir(s"$name-verdicts")).count() > 0)
+    }
+
     if (wanted("stream_incremental")) {
       // incremental dedup serve: durable fingerprint index + merged
       // bloom sketch, verdicts per micro-batch (IncrementalIndex)
@@ -617,18 +633,7 @@ object Bench {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .write.mode("overwrite").parquet(dir("inc-src"))
       } {
-        val q = fileStream(dir("inc-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-inc"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            IncrementalIndex.serveBatch(spark, batch, id, cfg)
-              .write.mode("append").parquet(dir("inc-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("inc-verdicts")).count() > 0)
+        serve(fileStream(dir("inc-src")), "inc")(IncrementalIndex.serveBatch(spark, _, _, cfg))
       }
     }
 
@@ -643,18 +648,7 @@ object Bench {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .write.mode("overwrite").parquet(dir("nd-src"))
       } {
-        val q = fileStream(dir("nd-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-nd"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            NearDupIndex.serveBatch(spark, batch, id, ndCfg)
-              .write.mode("append").parquet(dir("nd-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("nd-verdicts")).count() > 0)
+        serve(fileStream(dir("nd-src")), "nd")(NearDupIndex.serveBatch(spark, _, _, ndCfg))
       }
     }
 
@@ -672,18 +666,7 @@ object Bench {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0).select("doc_id")
           .write.mode("overwrite").parquet(dir("img-src"))
       } {
-        val q = fileStream(dir("img-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-img"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            ImageDupIndex.serveBatch(spark, batch, id, imCfg)
-              .write.mode("append").parquet(dir("img-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("img-verdicts")).count() > 0)
+        serve(fileStream(dir("img-src")), "img")(ImageDupIndex.serveBatch(spark, _, _, imCfg))
       }
     }
 
@@ -698,18 +681,7 @@ object Bench {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .write.mode("overwrite").parquet(dir("ig-src"))
       } {
-        val q = fileStream(dir("ig-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-ig"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            IngestDedup.serveBatch(spark, batch, id, igCfg)
-              .write.mode("append").parquet(dir("ig-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("ig-verdicts")).count() > 0)
+        serve(fileStream(dir("ig-src")), "ig")(IngestDedup.serveBatch(spark, _, _, igCfg))
       }
     }
 
@@ -724,18 +696,7 @@ object Bench {
         docs.filter(pmod(col("doc_id"), lit(3)) === 0)
           .write.mode("overwrite").parquet(dir("su-src"))
       } {
-        val q = fileStream(dir("su-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-su"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            SubstrIndex.serveBatch(spark, batch, id, suCfg)
-              .write.mode("append").parquet(dir("su-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("su-verdicts")).count() > 0)
+        serve(fileStream(dir("su-src")), "su")(SubstrIndex.serveBatch(spark, _, _, suCfg))
       }
     }
 
@@ -751,18 +712,7 @@ object Bench {
         graft.operators.QualityRules.plantedSpamDocs(Tables.documents(spark, sfDir))
           .write.mode("overwrite").parquet(dir("clf-src"))
       } {
-        val q = fileStream(dir("clf-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-clf"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            ClfStream.serveBatch(spark, batch, id, clfCfg)
-              .write.mode("append").parquet(dir("clf-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("clf-verdicts")).count() > 0)
+        serve(fileStream(dir("clf-src")), "clf")(ClfStream.serveBatch(spark, _, _, clfCfg))
       }
     }
 
@@ -782,18 +732,7 @@ object Bench {
         BudgetStream.init(spark, bgCfg)
         docs.write.mode("overwrite").parquet(dir("bg-src"))
       } {
-        val q = fileStream(dir("bg-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-bg"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            BudgetStream.serveBatch(spark, batch, id, bgCfg)
-              .write.mode("append").parquet(dir("bg-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("bg-verdicts")).count() > 0)
+        serve(fileStream(dir("bg-src")), "bg")(BudgetStream.serveBatch(spark, _, _, bgCfg))
       }
     }
 
@@ -833,18 +772,7 @@ object Bench {
           .select("doc_id")
           .write.mode("overwrite").parquet(dir("ad-src"))
       } {
-        val q = fileStream(dir("ad-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-ad"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            AudioDupIndex.serveBatch(spark, batch, id, adCfg)
-              .write.mode("append").parquet(dir("ad-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("ad-verdicts")).count() > 0)
+        serve(fileStream(dir("ad-src")), "ad")(AudioDupIndex.serveBatch(spark, _, _, adCfg))
       }
     }
 
@@ -863,18 +791,7 @@ object Bench {
           .select("doc_id")
           .write.mode("overwrite").parquet(dir("vd-src"))
       } {
-        val q = fileStream(dir("vd-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-vd"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            VideoDupIndex.serveBatch(spark, batch, id, vdCfg)
-              .write.mode("append").parquet(dir("vd-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("vd-verdicts")).count() > 0)
+        serve(fileStream(dir("vd-src")), "vd")(VideoDupIndex.serveBatch(spark, _, _, vdCfg))
       }
     }
 
@@ -890,22 +807,12 @@ object Bench {
         CrawlPipeline.writeWarcShards(docs.repartition(8), dir("cp-src"))
         cpRules = CrawlPipeline.pinnedRules(spark)
       } {
-        val q = spark.readStream.format("binaryFile")
+        val warcs = spark.readStream.format("binaryFile")
           .schema(CrawlPipeline.BinaryFileSchema)
           .option("pathGlobFilter", "*.warc*")
           .option("maxFilesPerTrigger", "2")
           .load(dir("cp-src"))
-          .writeStream
-          .option("checkpointLocation", dir("ckpt-cp"))
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            CrawlPipeline.serveBatch(spark, batch, id, cpCfg, cpRules)
-              .write.mode("append").parquet(dir("cp-verdicts"))
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        require(spark.read.parquet(dir("cp-verdicts")).count() > 0)
+        serve(warcs, "cp")(CrawlPipeline.serveBatch(spark, _, _, cpCfg, cpRules))
       }
     }
 

@@ -26,6 +26,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * byte/record/time buffer flush (`KinesisSink.scala:87-142`): the time
   * limit maps to the trigger interval ([[DefaultTrigger]]), and the
   * checkpoint replays a batch whose sink write failed (SURVEY §7.4.4).
+  * A file sink fences each batch by its id, so a replay never appends a
+  * written batch twice: the file legs are exactly-once per query; the
+  * client streams are at-least-once.
   *
   * A [[PipelineMonitor]] listener serves /health (R5/R9) and detaches
   * itself once this query has terminated. Behind the live edge the source
@@ -102,7 +105,8 @@ object CollectorApp {
 
   /** Default good-side sink: durable parquet primary with a parquet
     * fallback dir, jittered retries and a circuit breaker — the shape the
-    * reference runs as Kinesis→SQS (R2). */
+    * reference runs as Kinesis→SQS (R2). A replayed batch goes back to
+    * the directory that took it. */
   def defaultGoodSink(primaryDir: String, fallbackDir: String): EventSink =
     new FailoverSink(
       new ParquetDirSink(primaryDir, "good-primary"),

@@ -13,9 +13,9 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Usage: `runMain graft.CollectorMain <envelopeDir> <goodDir> <badDir>
   * <checkpointDir> [triggerMs]`. Envelopes arrive as parquet files
-  * dropped into `envelopeDir` — the file-source analog of the HTTP
-  * listener (Kafka in prod via [[graft.sources.KafkaEnvelopeSource]];
-  * the ingress tier itself is out of engine scope, SURVEY §7.1). Both
+  * dropped into `envelopeDir` (Kafka in prod via
+  * [[graft.sources.KafkaEnvelopeSource]]); `--http` binds the live edge
+  * ([[wireHttp]]) and streams its spool instead. Both
   * modes run [[CollectorApp.start]] with parquet sinks and do not read
   * `cfg.sink`: good records land as thrift wire bytes + partition key +
   * request time, bad rows as flat bad-row columns plus their
@@ -108,8 +108,9 @@ object CollectorMain {
     // (interface/port/ssl/limits and all collector knobs) — the drop-in
     // path for an operator migrating off the reference (docs/USAGE.md)
     val cfgIdx = args.indexOf("--config")
+    require(cfgIdx < 0 || cfgIdx + 1 < args.length, Usage)
     val cfg =
-      if (cfgIdx >= 0 && cfgIdx + 1 < args.length) {
+      if (cfgIdx >= 0) {
         val f = java.nio.file.Paths.get(args(cfgIdx + 1))
         // reference parity: scopt's validate fails loudly on a missing file
         require(java.nio.file.Files.exists(f), s"Configuration file $f does not exist")

@@ -72,6 +72,15 @@ final class CircuitBreaker(
   * into the same output, so a retry or a failover there could land the
   * batch twice. It propagates at once and the checkpoint replays the
   * batch on restart.
+  *
+  * A replay stays on the arm that took the batch: when an arm already
+  * [[EventSink.holds]] it, the write goes straight there (a no-op for a
+  * committed file sink, a rollback and rewrite for a half-written one),
+  * never through the retry → fallback path, which could land the batch
+  * in the other directory too. The fallback is asked first: it is only
+  * written after the primary gave the batch up. A held arm that fails
+  * fails the batch, and the checkpoint replays it to that arm again.
+  * Client sinks hold nothing, so their replays take the full path.
   * `sleeper` is injected so tests don't wait out real backoffs.
   */
 final class FailoverSink(
@@ -83,7 +92,12 @@ final class FailoverSink(
 
   val name = s"failover(${primary.name}->${fallback.name})"
 
-  def write(batch: DataFrame, batchId: Long): Unit = {
+  def write(batch: DataFrame, batchId: Long): Unit =
+    if (fallback.holds(batchId)) fallback.write(batch, batchId)
+    else if (primary.holds(batchId)) primary.write(batch, batchId)
+    else retryThenFallback(batch, batchId)
+
+  private def retryThenFallback(batch: DataFrame, batchId: Long): Unit = {
     var attempt = 0
     var done = false
     var lastErr: Throwable = null

@@ -127,6 +127,23 @@ private[graft] object DurableFs {
     finally in.close()
   }
 
+  /** Paths relative to `dir` of the plain files under it, walking every
+    * sub-directory but the hidden ones (a `_` or `.` name, which Spark's
+    * readers skip too); empty when the directory is absent. */
+  def listVisible(dir: String): Seq[String] = {
+    val f = fs(dir)
+    def walk(d: HPath, prefix: String): Seq[String] =
+      f.listStatus(d).toSeq.filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.flatMap { s =>
+        val rel = prefix + s.getPath.getName
+        if (s.isDirectory) walk(s.getPath, s"$rel/") else Seq(rel)
+      }
+    val d = new HPath(dir)
+    if (f.exists(d)) walk(d, "") else Seq.empty
+  }
+
   /** Names of the plain files directly under `dir` (no recursion);
     * empty when the directory is absent. */
   def listFiles(dir: String): Seq[String] = {

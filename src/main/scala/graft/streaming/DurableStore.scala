@@ -217,10 +217,11 @@ object DurableStore {
 }
 
 /** The intent/commit fence of one store batch ([[DurableStore]] has the
-  * argument). [[beginOrRecover]]: a COMMIT marker means replay (and a
-  * stale intent beside it is dropped); an INTENT without one means a
-  * crashed half-append, whose orphans — the live listing minus the
-  * intent's snapshot — are deleted. [[commit]]: intent marker carrying
+  * argument) or one file-sink batch ([[graft.sinks.ParquetDirSink]]).
+  * [[beginOrRecover]]: a COMMIT marker means replay (and a stale intent
+  * beside it is dropped); an INTENT without one means a crashed
+  * half-append, whose orphans — the live listing minus the intent's
+  * snapshot — are deleted. [[commit]]: intent marker carrying
   * the current listing, the append, commit marker carrying the appended
   * files, intent dropped. Markers are written temp-then-rename, so a torn
   * marker is never read as a (partial) file list. */
@@ -252,8 +253,14 @@ final class CommitProtocol(dataDir: String, commitsDir: String, batchId: Long) {
   def committedFiles: Set[String] =
     if (DurableFs.exists(commitPath)) CommitProtocol.readMarker(commitPath) else Set.empty
 
-  /** Fence `append` between the intent and commit markers. */
+  /** Did this batch's fence open: is its intent or commit marker there? */
+  def opened: Boolean = DurableFs.exists(commitPath) || DurableFs.exists(intentPath)
+
+  /** Fence `append` between the intent and commit markers. A job killed
+    * mid-append leaves its committed task output in `_temporary`, where
+    * the next job commit would merge it in; it is cleared first. */
   def commit(append: => Unit): Unit = {
+    DurableFs.deleteTree(s"$dataDir/_temporary")
     val before = CommitProtocol.listParquet(dataDir)
     writeMarkerAtomic(intentPath, before)
     append
@@ -292,10 +299,9 @@ object CommitProtocol {
     deleted
   }
 
-  /** Flat listing of the committed parquet files in a directory
-    * (Spark's in-flight `_temporary`/dot files excluded). */
+  /** The committed parquet files under a directory, as paths relative to
+    * it: partition subdirectories are walked; Spark's hidden `_`/`.` paths
+    * (in-flight `_temporary`, fence markers) are not. */
   def listParquet(dir: String): Set[String] =
-    DurableFs.listFiles(dir)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .toSet
+    DurableFs.listVisible(dir).filter(_.endsWith(".parquet")).toSet
 }

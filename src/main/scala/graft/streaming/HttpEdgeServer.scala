@@ -60,9 +60,11 @@ final class EdgeMetrics {
   * (`KinesisSink.scala:87-142` byte/record/time flush): `flushEvery`
   * plays recordLimit and the trigger interval plays timeLimit, and a
   * production deployment would point the same envelope schema at Kafka
-  * (`sources/KafkaEnvelopeSource`) instead of files. Exactly-once from
-  * the spool onward is the file-source + checkpoint contract. The
-  * HTTP→spool hop is AT-MOST-ONCE for the buffered tail: envelopes whose
+  * (`sources/KafkaEnvelopeSource`) instead of files. From the spool
+  * onward the file source and the checkpoint replay every batch, and the
+  * file sinks fence each batch by id ([[graft.sinks.ParquetDirSink]]), so
+  * their output is exactly-once per query; a client sink is
+  * at-least-once. The HTTP→spool hop is AT-MOST-ONCE for the buffered tail: envelopes whose
   * 200s were already sent sit only in the in-memory buffer until the
   * next trigger (or `flushEvery` records) publishes them, and are lost
   * on crash — the same acknowledged-but-buffered regime as the

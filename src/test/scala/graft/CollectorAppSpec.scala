@@ -88,6 +88,14 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       CollectorPipeline.badRows(envBatch, cfg).count())
   }
 
+  test("CollectorMain: a trailing --config with no path fails with the usage line") {
+    val d = Files.createTempDirectory("main-args").toString
+    val e = intercept[IllegalArgumentException] {
+      CollectorMain.main(Array(s"$d/env", s"$d/good", s"$d/bad", s"$d/ckpt", "--config"))
+    }
+    assert(e.getMessage.contains("usage: CollectorMain"), e.getMessage)
+  }
+
   test("app wired to the kinesis client sink delivers every good wire record") {
     // the production wiring with the client-backed kinesis sink: the
     // mock wire client receives exactly the size-gated good records with

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.{CircuitBreaker, ClientSinks, CollectingSink, FailoverSink, RetryPolicy}
+import graft.sinks.{CircuitBreaker, ClientSinks, CollectingSink, FailoverSink, ParquetDirSink, RetryPolicy}
 import graft.sinks.ClientSinks.{Clients, Leg, Retries}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,15 +113,29 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     }
   }
 
-  test("idempotent sink: a replayed batch overwrites itself, no duplication") {
-    val dir = java.nio.file.Files.createTempDirectory("idem").toString
-    val sink = new graft.sinks.IdempotentParquetSink(dir)
-    sink.write(batch, 0L)
-    sink.write(batch, 1L)
-    sink.write(batch, 1L) // replay of batch 1 after an unclean restart
-    val out = spark.read.parquet(dir)
-    assert(out.count() === 4) // 2 rows x 2 distinct batches
-    assert(out.select("batch_id").distinct().count() === 2)
+  /** Run `body` as streaming query `id` would: the fence keys its
+    * markers by this local property. */
+  private def asQuery[A](id: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", id)
+    try body finally sc.setLocalProperty("sql.streaming.queryId", null)
+  }
+
+  test("file sink: a replayed batch writes nothing, no duplication") {
+    val dir = java.nio.file.Files.createTempDirectory("fenced").toString
+    val sink = new ParquetDirSink(dir)
+    asQuery("q1") {
+      sink.write(batch, 0L)
+      sink.write(batch, 1L)
+      sink.write(batch, 1L) // replay of batch 1 after an unclean restart
+    }
+    assert(spark.read.parquet(dir).count() === 4) // 2 rows x 2 distinct batches
+    // a fresh checkpoint restarts its batch ids at 0: not a replay
+    asQuery("q2")(sink.write(batch, 0L))
+    assert(spark.read.parquet(dir).count() === 6)
+    // the markers sit under a `_` path; readers list only part files
+    val visible = new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(visible.nonEmpty && visible.forall(_.endsWith(".parquet")), visible.mkString(","))
   }
 
   test("kinesis client sink: ≤500-record calls, only flagged records retried, no dup/loss") {
@@ -534,11 +548,22 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     assert(b.threadPoolSize === 10)
     assert(b.awsAccessKey === "iam" && b.awsSecretKey === "iam")
     assert(b.minBackoffMs === 500 && b.maxBackoffMs === 5000 && b.maxRetries === 5)
-    // e2e: Kafka down → every event lands on the backup queue
+  }
+
+  test("kafka sqs backup: Kafka down → all 13 events on the backup queue") {
+    import graft.operators.CollectorConfig
+    val cfg = CollectorConfig.fromJson(
+      """{"collector": {"streams": {"good": "good", "sink": {
+        |  "enabled": "kafka", "brokers": "localhost:9092",
+        |  "backoffPolicy": {"minBackoff": 1, "maxBackoff": 2, "maxRetries": 1},
+        |  "sqs": {
+        |    "goodQueueUrl": "https://sqs.us-east-1.amazonaws.com/123456789/good-events",
+        |    "badQueueUrl": "https://sqs.us-east-1.amazonaws.com/123456789/bad-events",
+        |    "backoffPolicy": {"minBackoff": 1, "maxBackoff": 2}
+        |  }
+        |}}}}""".stripMargin)
     MockClients.reset(); MockClients.resetExtras()
-    val fast = cfg.sink.copy(minBackoffMs = 1, maxBackoffMs = 2, maxRetries = 1,
-      kafkaSqsBackup = Some(b.copy(minBackoffMs = 1, maxBackoffMs = 2)))
-    val sink = ClientSinks.sinkFor(fast, Leg.Good, sys.error("unused"),
+    val sink = ClientSinks.sinkFor(cfg.sink, Leg.Good, sys.error("unused"),
       clients = Clients(kafka = Some(() => MockClients.kafkaAlwaysFailing()),
       sqs = Some(() => MockClients.sqs())), sleeper = _ => ())
     assert(sink.name ===
@@ -551,7 +576,7 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       (0 until 13).map(i => s"k$i").toSet)
     // no backup block → the sink is the bare Kafka leg
     MockClients.resetExtras()
-    val bare = ClientSinks.sinkFor(fast.copy(kafkaSqsBackup = None), Leg.Good,
+    val bare = ClientSinks.sinkFor(cfg.sink.copy(kafkaSqsBackup = None), Leg.Good,
       sys.error("unused"), clients = Clients(kafka = Some(() => MockClients.kafka())), sleeper = _ => ())
     assert(bare.name === "kafka(good)")
     // and the default factory surfaces the absent kafka-clients jar at
@@ -559,7 +584,7 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
     import graft.sinks.KafkaProducerClient
     assert(!KafkaProducerClient.available())
     intercept[ClassNotFoundException] {
-      KafkaProducerClient(ClientSinks.kafkaProducerProps(fast))
+      KafkaProducerClient(ClientSinks.kafkaProducerProps(cfg.sink))
     }
   }
 
@@ -747,5 +772,26 @@ class ReliabilitySpec extends AnyFunSuite with WallBudget {
       }.toList
     // one in ClientSinks.ClientSink, one in Sinks.Base64StdoutSink
     assert(uses.map(_._1).sorted === Seq("ClientSinks.scala", "Sinks.scala"), uses.map(_._2).mkString("\n"))
+  }
+
+  test("one file sink: no DataFrameWriter under graft/sinks or in CollectorApp outside ParquetDirSink") {
+    import scala.jdk.CollectionConverters._
+    val sinks = java.nio.file.Paths.get("src/main/scala/graft/sinks")
+    assert(java.nio.file.Files.isDirectory(sinks),
+      s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val files = java.nio.file.Files.walk(sinks).iterator().asScala.filter(_.toString.endsWith(".scala")).toList :+
+      java.nio.file.Paths.get("src/main/scala/graft/CollectorApp.scala")
+    val writer = """\.write\b(?!\s*\()""".r // `.write` the DataFrameWriter, not `sink.write(...)`
+    val outside = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+      // ParquetDirSink's body: from its declaration to the next top-level `}`
+      val from = lines.indexWhere(_.startsWith("final class ParquetDirSink"))
+      val to = if (from < 0) -1 else lines.indexWhere(_ == "}", from)
+      def inSink(i: Int) = from >= 0 && i > from && i < to
+      lines.zipWithIndex.collect {
+        case (l, i) if writer.findFirstIn(l).isDefined && !inSink(i) => s"$p:${i + 1}: $l"
+      }
+    }
+    assert(outside.isEmpty, outside.mkString("\n"))
   }
 }

@@ -120,7 +120,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       spark,
       spark.readStream.schema(envBatch.schema)
         .option("maxFilesPerTrigger", "4").parquet(srcDir),
-      cfg, new LakeSink(lakeDir), new ParquetDirSink(badDir, "bad"), tmp("lake-stream-ckpt"),
+      cfg, LakeSink(lakeDir), new ParquetDirSink(badDir, "bad"), tmp("lake-stream-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     running.query.awaitTermination(180000)
 
