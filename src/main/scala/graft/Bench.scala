@@ -975,11 +975,14 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT asks for the partial line
     val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .orElse(if (only.isEmpty) Some("bench_full.json") else None)
-    def flushLedger(partial: Boolean): Unit = benchOut.foreach { path =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (renderFull(partial) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not write $path: $e") }
+    /** Write the ledger to `benchOut`; the path when it was written. */
+    def flushLedger(partial: Boolean): Option[String] = benchOut.filter { path =>
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(path),
+          (renderFull(partial) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        true
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] could not write $path: $e"); false }
     }
 
     // warm-up: JIT, codegen cache, parquet footer cache — capped at 30%
@@ -1148,7 +1151,7 @@ object Bench {
     // `parsed: null` — the full line outgrew the window at r2).
     val fullLine = renderFull(partial = false)
     println(fullLine)
-    flushLedger(partial = false)
+    val written = flushLedger(partial = false)
     spark.stop()
     val headline = Seq("c_payload", "c_thrift_wire", "q1_agg", "q3_join",
       "q5_join", "d_exact", "d_minhash", "d_lsh_pairs", "d_jaccard",
@@ -1162,8 +1165,11 @@ object Bench {
     val errNames = results.toSeq.collect { case (k, None) => k }
     val suspectN = finalSuspect.size
     val total = results.valuesIterator.flatten.sum
+    // the ledger file this run wrote, or null (a filtered run writes none)
+    val ledgerPath = written.fold("null")(p =>
+      "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
     val compact =
-      f"""{"metric":"total","value":$total%.1f,"unit":"sec","sf":"$sfDir","legs":${results.size},"errors_n":$errN,"errors":${clip(errNames)},"regressions_n":${finalRegressions.size},"regressions":${clip(finalRegressions)},"timeboxed":$timeboxed,"skipped_n":${skippedLegs.size + skippedSolos.size},"warmups_skipped":$warmupsSkipped,"budget_sec":$budgetSec,"elapsed_sec":$elapsedSec%.0f,"cpus":$cpus,"floor_cpus":$floorCpus,"suspect_n":$suspectN,"queries":$headJson,"full_ledger":"bench_full.json"}"""
+      f"""{"metric":"total","value":$total%.1f,"unit":"sec","sf":"$sfDir","legs":${results.size},"errors_n":$errN,"errors":${clip(errNames)},"regressions_n":${finalRegressions.size},"regressions":${clip(finalRegressions)},"timeboxed":$timeboxed,"skipped_n":${skippedLegs.size + skippedSolos.size},"warmups_skipped":$warmupsSkipped,"budget_sec":$budgetSec,"elapsed_sec":$elapsedSec%.0f,"cpus":$cpus,"floor_cpus":$floorCpus,"suspect_n":$suspectN,"queries":$headJson,"full_ledger":$ledgerPath}"""
     println(compact)
     // one visible triage line per non-fatal flag (judge r17 #9)
     finalSuspect.foreach(s => System.err.println(s"BENCH SUSPECT (triage): $s"))

@@ -3,7 +3,7 @@ package graft
 import graft.operators.CollectorConfig
 import graft.sinks.ParquetDirSink
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 /** Runnable collector — the library's answer to the reference's
   * per-sink mains (e.g. `kinesis/.../KinesisCollector.scala:29-65`,
@@ -45,8 +45,9 @@ object CollectorMain {
   /** LIVE HTTP mode — the full reference shape in one process: bind the
     * [[graft.streaming.HttpEdgeServer]] edge, stream its spool (whose
     * buffered tail the source publishes at every trigger) through the
-    * assembled dataflow, answer `/health` from the pipeline monitor, and
-    * honor the reference's SIGTERM order (health down BEFORE the drain
+    * assembled dataflow, answer `/health` from the pipeline monitor, push
+    * StatsD when `monitoring.metrics.statsd` is enabled, and honor the
+    * reference's SIGTERM order (health down BEFORE the drain
     * window and query stop — `Collector.scala:206-233`). Returns
     * (server, running) so tests can drive it; `main` awaits. */
   def wireHttp(spark: SparkSession, spoolDir: String, goodDir: String,
@@ -66,6 +67,21 @@ object CollectorMain {
       badSink = new ParquetDirSink(badDir, "bad"),
       checkpointDir = checkpointDir,
       trigger = trigger)
+    // R9: the StatsD push (reference `Collector.scala:138-160`) of the
+    // query's health and the edge's request metrics; it flushes a last
+    // time and closes when the query ends or the edge stops
+    graft.streaming.StatsdEmitter.fromSettings(cfg.statsd, running.monitor, Some(server.metrics))
+      .foreach { statsd =>
+        server.closeOnStop(statsd)
+        val id = running.query.id
+        spark.streams.addListener(new StreamingQueryListener {
+          def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+          def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+            if (e.id == id) { statsd.close(); spark.streams.removeListener(this) }
+        })
+        if (!running.query.isActive) statsd.close()
+      }
     println(s"graft-collector listening on http://${cfg.interface}:$port" +
       (if (cfg.ssl.enable) s" + https://${cfg.interface}:${server.httpsPort}" else ""))
     // R8: experimental self-warmup against the live port (reference

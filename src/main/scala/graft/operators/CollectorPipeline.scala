@@ -16,9 +16,14 @@ final case class Routed(
 /** The collector dataflow (reference semantics, Spark-first shapes).
   *
   * Input: the request-envelope DataFrame from
-  * [[graft.sources.EventEnvelopeAdapter]] (columns: event_id, method, path,
-  * querystring, body, content_type, user_agent, referer, hostname,
-  * remote_ip, sp_anonymous, cookie_sp, cookie_dnt, headers, timestamp_ms).
+  * [[graft.sources.EventEnvelopeAdapter]] or the edge's spool, with the
+  * columns of [[graft.streaming.HttpEdge.envelopeSchema]]: event_id,
+  * method, path, raw_uri, body, content_type, user_agent, referer,
+  * hostname, remote_ip, origin, sp_anonymous, cookie_sp, cookie_dnt,
+  * headers, timestamp_ms, querystring. The per-request response
+  * decisions (Set-Cookie, CORS, redirect, bounce Location, response kind)
+  * live in [[graft.streaming.HttpEdge]]; the columns here decide what is
+  * stored.
   *
   * Every transform here is a pure column expression (no UDFs), so the whole
   * payload build stays inside one WholeStageCodegen span fused into the
@@ -33,7 +38,6 @@ final case class Routed(
   *  - P7 path remap        `CollectorService.scala:102-108`
   *  - F1 do-not-track      `CollectorRoute.scala:182-191`
   *  - F3 SP-Anonymous      `CollectorRoute.scala:33-38` + P4/P5/P6
-  *  - F4 redirect allowlist `CollectorService.scala:390-399`
   *  - F7 bad querystring   `CollectorService.scala:184-195`
   */
 object CollectorPipeline {
@@ -161,52 +165,6 @@ object CollectorPipeline {
       qp(col("querystring"), "nuid").isNull && col("cookie_sp").isNull &&
       qp(col("querystring"), cfg.bounceParamName).isNull &&
       pixelExpected && !isRedirect
-
-  /** F2 projection: which pixel-expected requests bounce, and where to.
-    * The location appends the reference's literal marker value `true`
-    * (`CollectorService.scala:458`: `name -> "true"`) to the ORIGINAL
-    * querystring — a request with no/empty querystring still gets a
-    * well-formed `path?name=true` location, never null. */
-  def bounces(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val qsPrefix =
-      when(col("querystring").isNull || col("querystring") === "", lit(""))
-        .otherwise(concat(col("querystring"), lit("&")))
-    val rel = concat(col("path"), lit("?"), qsPrefix,
-      lit(cfg.bounceParamName + "=true"))
-    // forwardedProtocolHeader (reference `CollectorService.scala:444-455`):
-    // a valid http/https value in the configured header upgrades the
-    // Location to absolute on that scheme; invalid values are ignored
-    // with the relative fallback. Pure HOF filter over the header lines.
-    val location = cfg.bounceForwardedProtocolHeader match {
-      case None => rel
-      case Some(name) =>
-        val value = lower(trim(regexp_extract(
-          try_element_at(filter(col("headers"),
-            h => lower(h).startsWith(name.toLowerCase + ":")), lit(1)),
-          "(?i)^" + java.util.regex.Pattern.quote(name) + ":\\s*(.*)$", 1)))
-        when(value.isin("http", "https"),
-          concat(value, lit("://"), col("hostname"), rel)).otherwise(rel)
-    }
-    env
-      .filter(pixelExpected && !isRedirect)
-      .select(
-        col("event_id"),
-        bounceSuppressed(cfg).as("bounced"),
-        when(bounceSuppressed(cfg), location).as("location"))
-  }
-
-  /** P8: Set-Cookie domain resolution — first configured domain that any
-    * Origin host matches exactly or as a dot-suffix wins; else the
-    * fallback (reference `CollectorService.scala:485-518`). `origins` is
-    * an array-of-hosts column. Pure coalesce-over-exists, no UDF. */
-  def cookieDomain(
-      origins: Column, domains: Seq[String], fallback: Option[String]): Column = {
-    val matches = domains.map { d =>
-      when(exists(origins, h => h === d || h.endsWith("." + d)), lit(d))
-    }
-    val fb = fallback.map(lit).getOrElse(lit(null).cast("string"))
-    coalesce(matches :+ fb: _*)
-  }
 
   /** Routes that produce a tracking payload (everything the adapter emits
     * is trackable; ops endpoints are out of engine scope). */
@@ -361,159 +319,5 @@ object CollectorPipeline {
     val size = SplitBatch.badRowFields(payloads(env, cfg), cfg.maxBytes).toDF()
       .withColumn("bad_row_type", lit("SizeViolation"))
     generic.unionByName(size).select(col("event_id"), badRowJson(cfg).as("bad_row_json"))
-  }
-
-  /** P9: the Set-Cookie response header (reference
-    * `CollectorService.scala:407-433`): suppressed under do-not-track and
-    * SP-Anonymous; otherwise `name=networkUserId` with absolute expiry
-    * (request time + configured lifetime), the P8-resolved domain
-    * ([[cookieDomain]] over the Origin host), `Path=/`, and the configured
-    * Secure / HttpOnly / SameSite flags — rendered as the header value
-    * string. Config flags fold to literals in codegen. */
-  def setCookieHeaders(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val originHost = regexp_replace(col("origin"), "^https?://", "")
-    val origins = filter(array(originHost), h => h.isNotNull)
-    val domain = cookieDomain(origins, cfg.cookieDomains, cfg.fallbackDomain)
-    // cookie.enabled is the reference's master switch for the Set-Cookie
-    // header (`CollectorService.scala:407-410`); folds to false when off
-    val emitted = lit(cfg.cookieEnabled) && !dntSuppressed(cfg) && !anon
-    val flags =
-      (if (cfg.cookieSecure) "; Secure" else "") +
-        (if (cfg.cookieHttpOnly) "; HttpOnly" else "") +
-        cfg.cookieSameSite.map("; SameSite=" + _).getOrElse("")
-    env.select(
-      col("event_id"),
-      emitted.as("emitted"),
-      when(emitted, concat(
-        lit(cfg.cookieName + "="), networkUserId,
-        // RFC-1123 wire format, UTC-pinned — what Pekko's HttpCookie
-        // renders (reference `CollectorService.scala:420-431`)
-        lit("; Expires="),
-        date_format(
-          timestamp_millis(col("timestamp_ms") + lit(cfg.cookieExpirationMs)),
-          "EEE, dd MMM yyyy HH:mm:ss 'GMT'"),
-        when(domain.isNotNull, concat(lit("; Domain="), domain)).otherwise(lit("")),
-        lit("; Path=/"), lit(flags))).as("set_cookie"))
-  }
-
-  /** F5: per-request CORS origin decision with the reference's exact
-    * matching (`AmplitudeBridge.scala:60-112`):
-    *  - `*` allows any origin;
-    *  - `*.example.com` matches `sub.example.com` (dotted suffix) and the
-    *    bare base `example.com`;
-    *  - an exact domain matches itself and any dotted subdomain.
-    * Decision (reference `buildCorsHeaders`): no Origin header → allow-all
-    * (`allow_origin = "*"`); whitelisting active (enabled and no `*` in the
-    * list) → echo the origin when allowed, else no CORS header (null) and a
-    * 403 preflight; whitelisting inactive → echo. The domain list is config
-    * (driver-side), so the match unrolls to a codegen'd OR-chain — no
-    * per-row list traversal. */
-  def corsDecisions(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val host = regexp_replace(col("origin"), "^https?://", "")
-    def matches(d: String): Column =
-      if (d == "*") lit(true)
-      else if (d.startsWith("*.")) host.endsWith(d.substring(1)) || host === d.substring(2)
-      else host === d || host.endsWith("." + d)
-    val hostAllowed = cfg.corsDomains.map(matches).reduceOption(_ || _).getOrElse(lit(false))
-    val whitelisting = cfg.corsEnabled && !cfg.corsDomains.contains("*")
-    val allowed =
-      when(col("origin").isNull, lit(true))
-        .otherwise(if (whitelisting) hostAllowed else lit(true))
-    val allowOrigin =
-      when(col("origin").isNull, lit("*"))
-        .otherwise(
-          if (whitelisting) when(hostAllowed, col("origin")).otherwise(lit(null).cast("string"))
-          else col("origin"))
-    env.select(
-      col("event_id"),
-      col("origin"),
-      host.as("origin_host"),
-      allowed.as("allowed"),
-      allowOrigin.as("allow_origin"),
-      when(allowed, lit(200)).otherwise(lit(403)).as("preflight_status"))
-  }
-
-  /** S4/F4: redirect resolution for `/r/...` rows — decode `u`, gate on
-    * the domain allowlist, and (when `redirectMacro.enabled`) substitute
-    * the placeholder with the resolved network user id. `location` is
-    * null when rejected; malformed percent-escapes (e.g. a trailing '%')
-    * decode to null via try_url_decode and are rejected per-row, never
-    * failing the job.
-    *
-    * Reference semantics pinned by the CollectorServiceSpec:549-605
-    * goldens: an EMPTY `redirectDomains` set means NO restriction (any
-    * decodable target 302s — the reference's shipped default); the macro
-    * is left VERBATIM in the location when the macro config is disabled;
-    * a custom placeholder token replaces the default `${SP_NUID}`. */
-  def redirects(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val placeholder =
-      cfg.redirectMacroPlaceholder.getOrElse("${SP_NUID}")
-    val location =
-      if (!cfg.redirectMacroEnabled) col("target")
-      else regexp_replace(col("target"),
-        lit(java.util.regex.Pattern.quote(placeholder)), networkUserId)
-    // F8: `/r/*` is 404/absent unless enabled (reference
-    // `CollectorRoute.scala:43-49`); the literal folds away when on
-    withRedirectTarget(env.filter(isRedirect && lit(cfg.enableDefaultRedirect)), cfg)
-      .select(
-        col("event_id"),
-        col("target"),
-        col("allowed"),
-        when(col("allowed"), location).otherwise(lit(null)).as("location"))
-  }
-
-  /** Adds the redirect columns [[redirects]] and [[responses]] share:
-    * `target`, the decoded `u` param, and `allowed`, true when the target
-    * decodes and its host is on the allowlist. An EMPTY `redirectDomains`
-    * set allows any host (F4 default). */
-  private def withRedirectTarget(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    // tolerant host extraction (the reference parses with java.net.URL,
-    // which accepts e.g. ${SP_NUID} in the query; Spark's parse_url
-    // throws and try_parse_url nulls the whole URL): authority minus
-    // userinfo and port, null when there is no scheme://host shape
-    val host = regexp_extract(col("target"),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)", 1)
-    val hostOrNull = when(host === "", lit(null)).otherwise(host)
-    val onList =
-      if (cfg.redirectDomains.isEmpty) lit(true)
-      else cfg.redirectDomains
-        .map(d => hostOrNull === d || hostOrNull.endsWith("." + d))
-        .reduce(_ || _)
-    env
-      .withColumn("u_enc", qp(col("querystring"), "u"))
-      .withColumn("target", expr("try_url_decode(u_enc)"))
-      .withColumn("allowed", when(col("target").isNotNull, onList).otherwise(lit(false)))
-  }
-
-  /** Response-kind projection (SURVEY §7.4 hard part 2: per-request
-    * response semantics as columns, served by `streaming/HttpEdge` —
-    * column-parity-pinned). DNT suppression changes sinking, not the
-    * response. R10: method- and gate-aware like the reference route
-    * table — bridge JSON only for POSTs on an ENABLED bridge
-    * (`CollectorService.scala:356-367`; segment letters + amplitude
-    * httpapi/batch shapes exact), an unknown segment event letter
-    * answers 400, GET/HEAD vendor routes are pixel-expected (GIF),
-    * POST vendor routes answer "ok". */
-  def responses(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val segKnown =
-      col("path").rlike("^/com\\.segment/v1/(i|t|p|s|g|a)$") &&
-        lit(cfg.analyticsJsBridgeEnabled)
-    val segUnknown =
-      col("path").rlike("^/com\\.segment/v1/[^/]+$") &&
-        lit(cfg.analyticsJsBridgeEnabled) && !segKnown
-    val amp =
-      col("path").rlike("^/com\\.amplitude/2/(httpapi|batch)$") &&
-        lit(cfg.amplitudeBridgeEnabled)
-    withRedirectTarget(env, cfg)
-      .select(
-        col("event_id"),
-        when(isPixel, lit("gif"))
-          .when(isRedirect && !lit(cfg.enableDefaultRedirect), lit("404"))
-          .when(isRedirect && col("allowed"), lit("302"))
-          .when(isRedirect, lit("400"))
-          .when((segKnown || amp) && col("method") === "POST", lit("json"))
-          .when(segUnknown, lit("400"))
-          .when(col("method").isin("GET", "HEAD"), lit("gif"))
-          .otherwise(lit("ok")).as("response_kind"))
   }
 }

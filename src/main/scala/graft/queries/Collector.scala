@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.operators.{Bridges, CollectorConfig, CollectorPipeline, SplitBatch, ThriftPayload}
 import graft.sources.EventEnvelopeAdapter
+import graft.streaming.HttpEdge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,10 @@ import org.apache.spark.sql.functions._
   * over the deterministic envelope stream. The Spark side does the real
   * work (str_to_map, from_json, posexplode, HOF filters, mapPartitions
   * packing); the DuckDB oracle recomputes expected outputs analytically
-  * from the same event rows ([[CollectorOracles]]).
+  * from the same event rows ([[CollectorOracles]]). The response queries
+  * (`c_redirect`, `c_cors`, `c_set_cookie`, `c_response`,
+  * `c_response_bridge`, `c_bounce`) run the live edge's own decision
+  * functions over the envelopes ([[HttpEdge.decide]]).
   */
 object Collector {
 
@@ -53,12 +57,22 @@ object Collector {
   val cBadRowsJson: Q = (s, d) =>
     CollectorPipeline.badRowsJson(env(s, d), CollectorConfig.wireRouteScale)
 
-  /** S4/F4: redirect target resolution + allowlist + macro substitution
-    * (macro ENABLED so the `${SP_NUID}` fixture slice substitutes — the
-    * disabled-verbatim and custom-placeholder behaviors are pinned by the
-    * CollectorPipelineSpec reference goldens). */
-  val cRedirect: Q = (s, d) =>
-    CollectorPipeline.redirects(env(s, d), CollectorConfig.redirectScale)
+  /** S4/F4 over `/r/...` rows (none when the default redirect is off):
+    * the decoded target, whether the allowlist admits it, and the
+    * location [[HttpEdge.redirect]] answers (null when rejected). */
+  def redirect(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    HttpEdge.decide(env, cfg) { r =>
+      if (!HttpEdge.isRedirect(r.path) || !cfg.enableDefaultRedirect) None
+      else {
+        val (target, allowed, location) = HttpEdge.redirect(r, cfg)
+        Some((r.eventId, target, allowed, location))
+      }
+    }.toDF("event_id", "target", "allowed", "location")
+
+  /** S4/F4 under the macro-ENABLED config, so the `${SP_NUID}` fixture
+    * slice substitutes (the disabled-verbatim and custom-placeholder
+    * behaviors are pinned by the CollectorPipelineSpec reference goldens). */
+  val cRedirect: Q = (s, d) => redirect(env(s, d), CollectorConfig.redirectScale)
 
   /** F2 second pass under the driver oracle: pixel payloads with
     * bounce tracking on — the marker slice must STORE with the configured
@@ -69,25 +83,55 @@ object Collector {
       .filter(col("path").isin("/i", "/ice.png"))
       .select(col("event_id"), col("network_userid"))
 
-  /** F5: CORS origin decisions under the whitelisting config. */
-  val cCors: Q = (s, d) =>
-    CollectorPipeline.corsDecisions(env(s, d), CollectorConfig.corsScale)
+  /** F5: every row's CORS decision ([[HttpEdge.cors]]) and the status
+    * its preflight answers. */
+  def cors(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    HttpEdge.decide(env, cfg) { r =>
+      val (allowed, allowOrigin) = HttpEdge.cors(r, cfg)
+      Some((r.eventId, r.origin, r.origin.map(HttpEdge.originHost), allowed, allowOrigin,
+        HttpEdge.preflightStatus(allowed)))
+    }.toDF("event_id", "origin", "origin_host", "allowed", "allow_origin", "preflight_status")
 
-  /** P9: rendered Set-Cookie headers under the cookie-domain config. */
-  val cSetCookie: Q = (s, d) =>
-    CollectorPipeline.setCookieHeaders(env(s, d), CollectorConfig.cookieScale)
+  /** P9: every row's Set-Cookie header ([[HttpEdge.setCookieHeader]]),
+    * null when suppressed. */
+  def setCookie(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    HttpEdge.decide(env, cfg) { r =>
+      val header = HttpEdge.setCookieHeader(r, cfg)
+      Some((r.eventId, header.isDefined, header))
+    }.toDF("event_id", "emitted", "set_cookie")
 
-  /** Response-kind projection (pixel GIF / 302 / 400 / bridge json / ok). */
-  val cResponse: Q = (s, d) => CollectorPipeline.responses(env(s, d), cfg)
+  /** Every row's response kind ([[HttpEdge.responseKind]]: pixel GIF /
+    * 302 / 400 / 404 / bridge json / ok). */
+  def response(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    HttpEdge.decide(env, cfg)(r => Some((r.eventId, HttpEdge.responseKind(r, cfg))))
+      .toDF("event_id", "response_kind")
+
+  /** F2 over pixel-expected, non-redirect rows: whether the request
+    * bounces and the Location [[HttpEdge.bounceLocation]] answers. */
+  def bounce(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    HttpEdge.decide(env, cfg) { r =>
+      if (!HttpEdge.pixelExpected(r) || HttpEdge.isRedirect(r.path)) None
+      else {
+        val location = HttpEdge.bounceLocation(r, cfg)
+        Some((r.eventId, location.isDefined, location))
+      }
+    }.toDF("event_id", "bounced", "location")
+
+  /** F5 under the whitelisting config. */
+  val cCors: Q = (s, d) => cors(env(s, d), CollectorConfig.corsScale)
+
+  /** P9 under the cookie-domain config. */
+  val cSetCookie: Q = (s, d) => setCookie(env(s, d), CollectorConfig.cookieScale)
+
+  /** Response kinds under testScale (both bridges disabled). */
+  val cResponse: Q = (s, d) => response(env(s, d), cfg)
 
   /** R10: response kinds under ENABLED bridges — the POST bridge rows
     * answer the reference's jsonResponse. */
-  val cResponseBridge: Q = (s, d) =>
-    CollectorPipeline.responses(env(s, d), CollectorConfig.bridgesScale)
+  val cResponseBridge: Q = (s, d) => response(env(s, d), CollectorConfig.bridgesScale)
 
-  /** F2: bounce decisions under a bounce-enabled config. */
-  val cBounce: Q = (s, d) =>
-    CollectorPipeline.bounces(env(s, d), CollectorConfig.bounceScale)
+  /** F2 under a bounce-enabled config. */
+  val cBounce: Q = (s, d) => bounce(env(s, d), CollectorConfig.bounceScale)
 
   /** P5 distributional check: events per partition key. */
   val cPartitionCounts: Q = (s, d) =>

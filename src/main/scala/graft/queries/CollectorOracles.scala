@@ -174,9 +174,9 @@ object CollectorOracles {
        |  FROM pay
        |)""".stripMargin
 
-  /** Mirror of CollectorPipeline.corsDecisions host matching under the
-    * corsScale config (`*.allowed.example.com`, `partner.io`); `h` must be
-    * the origin-host expression. LIKE keeps the dotted-suffix semantics
+  /** The origin-host match `HttpEdge.cors` (the live edge's CORS
+    * decision) makes under the corsScale config (`*.allowed.example.com`,
+    * `partner.io`), as SQL; `h` must be the origin-host expression. LIKE keeps the dotted-suffix semantics
     * (no regex metacharacters in the fixture domains). */
   private def corsHostAllowed(h: String): String =
     s"($h LIKE '%.allowed.example.com' OR $h = 'allowed.example.com' OR " +

@@ -1,8 +1,8 @@
 package graft.sources
 
+import graft.streaming.HttpEdge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Production envelope ingestion: request envelopes as JSON on a Kafka
   * topic (what an HTTP ingress tier would publish — the engine boundary
@@ -16,30 +16,14 @@ import org.apache.spark.sql.types._
   */
 object KafkaEnvelopeSource {
 
-  /** The request-envelope wire schema (FIXTURES.md §1). */
-  val EnvelopeSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("method", StringType),
-    StructField("path", StringType),
-    StructField("querystring", StringType),
-    StructField("body", StringType),
-    StructField("content_type", StringType),
-    StructField("user_agent", StringType),
-    StructField("referer", StringType),
-    StructField("hostname", StringType),
-    StructField("remote_ip", StringType),
-    StructField("sp_anonymous", StringType),
-    StructField("cookie_sp", StringType),
-    StructField("cookie_dnt", StringType),
-    StructField("headers", ArrayType(StringType)),
-    StructField("timestamp_ms", LongType)))
-
-  /** Kafka `value` bytes (JSON envelope) → envelope columns. Works on any
+  /** Kafka `value` bytes (JSON envelope, the edge's spool record
+    * [[HttpEdge.envelopeJson]]) → the envelope columns of
+    * [[HttpEdge.envelopeSchema]]. Works on any
     * DataFrame with a binary/string `value` column — the decode step is
     * testable without a broker. */
   def decodeFrames(frames: DataFrame): DataFrame =
     frames
-      .select(from_json(col("value").cast("string"), EnvelopeSchema).as("env"))
+      .select(from_json(col("value").cast("string"), HttpEdge.envelopeSchema).as("env"))
       .select(col("env.*"))
 
   /** The streaming source: subscribe + decode. */

@@ -1,12 +1,15 @@
 package graft.streaming
 
 import graft.operators.CollectorConfig
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.functions.{col, lit}
 
 import java.nio.charset.StandardCharsets
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.Locale
 import java.util.regex.{Matcher, Pattern}
+import scala.reflect.runtime.universe.TypeTag
 
 /** One HTTP request at the edge, as the server hands it to the response /
   * envelope logic. `eventId` is a server-assigned monotonic id (the
@@ -39,18 +42,15 @@ final case class EdgeResponse(
     headers.collectFirst { case (n, v) if n.equalsIgnoreCase(name) => v }
 }
 
-/** S6/P9 made literal: the per-request response tier of the collector —
-  * the same decisions the pipeline computes as columns
-  * ([[graft.operators.CollectorPipeline]] `responses` / `setCookieHeaders`
-  * / `corsDecisions` / `redirects` / `bounces`), re-expressed as pure
-  * per-request functions so a real HTTP server can answer synchronously
-  * while the envelope itself flows into the streaming pipeline.
+/** S6/P9 made literal: the per-request response tier of the collector,
+  * the one definition of every response decision (response kind,
+  * Set-Cookie, CORS, redirect, bounce) as pure per-request functions, so
+  * a real HTTP server answers synchronously while the envelope itself
+  * flows into the streaming pipeline. Spark runs the same functions over
+  * envelope rows ([[decide]]) for the `c_*` response queries
+  * ([[graft.queries.Collector]]), which the DuckDB oracle checks.
   *
-  * Column-parity is the contract: `HttpEdgeSpec` replays the full
-  * sf0.001 envelope corpus through BOTH implementations and asserts the
-  * decisions agree row-for-row (every fixture slice — malformed
-  * querystrings, anonymous, DNT, bounce, macro redirects — crosses both).
-  * Route table and header assembly mirror the reference
+  * Route table and header assembly follow the reference
   * (`CollectorRoute.scala:57-160`, `CollectorService.scala:120-199`):
   * bounce Location, Set-Cookie, Cache-Control, P3P,
   * Access-Control-Allow-Origin, Access-Control-Allow-Credentials.
@@ -62,7 +62,7 @@ object HttpEdge {
   val PixelBytes: Array[Byte] = java.util.Base64.getDecoder
     .decode("R0lGODlhAQABAPAAAP///wAAACH5BAEAAAAALAAAAAABAAEAAAICRAEAOw==")
 
-  // ---- querystring (P2/P3/F7 mirrors of CollectorPipeline) ----
+  // ---- querystring (P2/P3/F7, as CollectorPipeline's columns) ----
 
   private val QsRe = Pattern.compile("^[^?]*\\?([^#]*)(?:#.*)?$")
 
@@ -76,14 +76,14 @@ object HttpEdge {
   private val TokenRe =
     Pattern.compile("^[A-Za-z0-9_.~%+-]+(=[A-Za-z0-9_.~%+:/-]*)?$")
 
-  /** F7 mirror of `CollectorPipeline.qsValid` (split keeps trailing
-    * empties, exactly like Spark's two-arg `split`). */
+  /** F7, as `CollectorPipeline.qsValid` (split keeps trailing empties,
+    * exactly like Spark's two-arg `split`). */
   def qsValid(qs: Option[String]): Boolean = qs match {
     case None | Some("") => true
     case Some(s) => s.split("&", -1).forall(t => TokenRe.matcher(t).matches())
   }
 
-  /** P3 mirror of `str_to_map(qs, "&", "=")` under LAST_WIN: entries split
+  /** P3, as `str_to_map(qs, "&", "=")` under LAST_WIN: entries split
     * on the FIRST `=`, bare keys map to null (absent here). */
   def qsMap(qs: String): Map[String, String] =
     qs.split("&", -1).foldLeft(Map.empty[String, String]) { (acc, entry) =>
@@ -98,7 +98,7 @@ object HttpEdge {
     if (!qsValid(qs)) None
     else qs.flatMap(s => qsMap(s).get(key)).flatMap(Option(_))
 
-  /** Deterministic UUID mirror of `CollectorPipeline.uuidify`. */
+  /** Deterministic UUID, as `CollectorPipeline.uuidify`. */
   def uuidify(s: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val h = md.digest(s.getBytes(StandardCharsets.UTF_8))
@@ -106,7 +106,7 @@ object HttpEdge {
     s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-${h.substring(16, 20)}-${h.substring(20, 32)}"
   }
 
-  // ---- per-request decisions (F1/F3/P6/P8/F2/F5/S4 mirrors) ----
+  // ---- per-request decisions (F1/F3/P6/P8/F2/F5/S4) ----
 
   def anon(req: EdgeRequest): Boolean = req.spAnonymous.isDefined
 
@@ -127,7 +127,7 @@ object HttpEdge {
           else uuidify("nuid-gen" + req.eventId))
     }
 
-  /** P6 as `setCookieHeaders` uses it (no bounce fallback). */
+  /** P6 as [[setCookieHeader]] uses it (no bounce fallback). */
   def cookieNuid(req: EdgeRequest, cfg: CollectorConfig): String =
     if (anon(req)) CollectorConfig.NilUuid
     else {
@@ -137,12 +137,17 @@ object HttpEdge {
         .getOrElse(uuidify("nuid-gen" + req.eventId))
     }
 
-  private def originHosts(req: EdgeRequest): Seq[String] =
-    req.origin.toSeq.flatMap(_.split("\\s+"))
-      .map(_.replaceFirst("^https?://", "")).filter(_.nonEmpty)
+  private val OriginScheme = Pattern.compile("^https?://")
 
-  /** P8 mirror: first configured domain any Origin host matches exactly
-    * or as dot-suffix; else the fallback. */
+  /** An Origin header value without its `http://`/`https://` scheme: the
+    * host [[cors]] and [[cookieDomain]] match, `c_cors`' `origin_host`. */
+  def originHost(origin: String): String = OriginScheme.matcher(origin).replaceFirst("")
+
+  private def originHosts(req: EdgeRequest): Seq[String] =
+    req.origin.toSeq.flatMap(_.split("\\s+")).map(originHost).filter(_.nonEmpty)
+
+  /** P8: first configured domain any Origin host matches exactly or as
+    * dot-suffix; else the fallback. */
   def cookieDomain(req: EdgeRequest, cfg: CollectorConfig): Option[String] = {
     val hosts = originHosts(req)
     cfg.cookieDomains
@@ -154,8 +159,11 @@ object HttpEdge {
     .ofPattern("EEE, dd MMM yyyy HH:mm:ss 'GMT'", Locale.US)
     .withZone(ZoneOffset.UTC)
 
-  /** P9 mirror of `setCookieHeaders`: None under DNT / SP-Anonymous /
-    * cookie.enabled=false, else the rendered header value. */
+  /** P9 (reference `CollectorService.scala:407-433`): None under DNT /
+    * SP-Anonymous / cookie.enabled=false, else the rendered header value:
+    * `name=networkUserId`, absolute RFC-1123 expiry (request time +
+    * configured lifetime), the P8 domain, `Path=/` and the configured
+    * Secure / HttpOnly / SameSite flags. */
   def setCookieHeader(req: EdgeRequest, cfg: CollectorConfig): Option[String] =
     if (!cfg.cookieEnabled || dntSuppressed(req, cfg) || anon(req)) None
     else {
@@ -172,13 +180,19 @@ object HttpEdge {
           "; Path=/" + flags)
     }
 
-  /** F5 mirror of `corsDecisions`: (allowed, allowOriginHeaderValue). */
+  /** F5, the reference's origin matching (`AmplitudeBridge.scala:60-112`:
+    * `*` allows any origin; `*.example.com` matches `sub.example.com` and
+    * the bare base; an exact domain matches itself and any dotted
+    * subdomain): (allowed, allowOriginHeaderValue). No Origin header →
+    * allow-all `*`; whitelisting active (enabled and no `*` in the list)
+    * → echo the origin when allowed, else no header and a 403 preflight;
+    * whitelisting inactive → echo. */
   def cors(req: EdgeRequest, cfg: CollectorConfig): (Boolean, Option[String]) = {
     val whitelisting = cfg.corsEnabled && !cfg.corsDomains.contains("*")
     req.origin match {
       case None => (true, Some("*"))
       case Some(o) =>
-        val host = o.replaceFirst("^https?://", "")
+        val host = originHost(o)
         val hostAllowed = cfg.corsDomains.exists { d =>
           if (d == "*") true
           else if (d.startsWith("*.")) host.endsWith(d.substring(1)) || host == d.substring(2)
@@ -193,7 +207,7 @@ object HttpEdge {
   private val HostRe =
     Pattern.compile("^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)")
 
-  /** `try_url_decode` mirror: None on malformed escapes. */
+  /** `try_url_decode`: None on malformed escapes. */
   def tryUrlDecode(s: String): Option[String] =
     try Some(java.net.URLDecoder.decode(s, "UTF-8"))
     catch { case _: IllegalArgumentException => None }
@@ -203,7 +217,13 @@ object HttpEdge {
     if (m.find() && m.group(1).nonEmpty) Some(m.group(1)) else None
   }
 
-  /** S4/F4 mirror of `redirects`: (target, allowed, location). */
+  /** S4/F4 for a `/r/...` request: (target, allowed, location). `target`
+    * is the decoded `u` param; `allowed` is true when it decodes and its
+    * host is on the allowlist (an EMPTY `redirectDomains` set allows any
+    * host, the reference's shipped default); `location` is None when
+    * rejected, else the target with the macro placeholder replaced by
+    * the network user id when `redirectMacro.enabled` (left verbatim
+    * when disabled; reference CollectorServiceSpec:549-605). */
   def redirect(req: EdgeRequest, cfg: CollectorConfig)
       : (Option[String], Boolean, Option[String]) = {
     val target = qp(querystring(req.rawUri), "u").flatMap(tryUrlDecode)
@@ -259,8 +279,10 @@ object HttpEdge {
     isPixel(req.path) ||
       ((req.method == "GET" || req.method == "HEAD") && !isRedirect(req.path))
 
-  /** F2 mirror of `bounceSuppressed` + `bounces`: Some(location) when this
-    * request must 302-to-self with the bounce marker. R10: the gate is the
+  /** F2, as the pipeline's `bounceSuppressed` gate: Some(location) when
+    * this request must 302-to-self with the bounce marker, appended to
+    * the original querystring (`path?name=true` when there is none).
+    * R10: the gate is the
     * reference's `pixelExpected && !redirect` (`CollectorService.scala:
     * 136-137`) — GET/HEAD vendor/version routes bounce too, not just
     * `/i`/`/ice.png` — and the marker value is the reference's literal
@@ -277,7 +299,7 @@ object HttpEdge {
       val rel = req.path + "?" + prefix + cfg.bounceParamName + "=true"
       // forwardedProtocolHeader (`CollectorService.scala:444-455`): a
       // valid http/https value in the configured header makes the
-      // Location absolute on that scheme (mirror of the pipeline column)
+      // Location absolute on that scheme; invalid values are ignored
       val scheme = cfg.bounceForwardedProtocolHeader.flatMap { name =>
         req.headers.collectFirst {
           case h if h.toLowerCase.startsWith(name.toLowerCase + ":") =>
@@ -288,7 +310,8 @@ object HttpEdge {
     }
   }
 
-  /** Response-kind mirror of `responses` (same CASE order). R10: method-
+  /** The response kind (`gif` / `302` / `400` / `404` / `json` / `ok`);
+    * DNT suppression changes sinking, not the response. R10: method-
     * and gate-aware like the reference route table — bridge JSON only
     * for a POST on an ENABLED bridge (`CollectorService.scala:356-367`:
     * jsonResponse only when a bridge event rode in), GET/HEAD vendor
@@ -339,8 +362,7 @@ object HttpEdge {
     val p = req.path
     if (req.method == "OPTIONS") {
       val (allowed, allowOrigin) = cors(req, cfg)
-      val status = if (allowed) 200 else 403
-      EdgeResponse(status,
+      EdgeResponse(preflightStatus(allowed),
         allowOrigin.map("Access-Control-Allow-Origin" -> _).toSeq ++ Seq(
           "Access-Control-Allow-Credentials" -> "true",
           "Access-Control-Allow-Headers" -> "Content-Type, SP-Anonymous",
@@ -382,6 +404,9 @@ object HttpEdge {
     }
   }
 
+  /** The preflight (OPTIONS) status of a [[cors]] decision. */
+  def preflightStatus(allowed: Boolean): Int = if (allowed) 200 else 403
+
   /** Vendor/version, pixel, redirect and bridge paths all produce an
     * envelope (`CollectorRoute.scala:90-152`: exactly-two-segment paths,
     * `/i`, `/ice.png`). */
@@ -393,7 +418,7 @@ object HttpEdge {
     }
   }
 
-  /** R10 method gate, mirroring the reference's route-table directives
+  /** R10 method gate, following the reference's route-table directives
     * (`CollectorRoute.scala:95-152`): pixel paths accept GET|HEAD only,
     * vendor/version paths POST|GET|HEAD, enabled-bridge paths POST only
     * (their routes are `post { ... }`), ops endpoints GET (HEAD allowed —
@@ -447,6 +472,48 @@ object HttpEdge {
           else EdgeResponse(200, headers, utf8("ok"))
       }
     }
+  }
+
+  // ---- the same decisions over envelope rows ----
+
+  /** The envelope columns an [[EdgeRequest]] is read from, by position. */
+  private[graft] val RequestCols = Seq("event_id", "timestamp_ms", "method", "raw_uri", "body",
+    "content_type", "user_agent", "referer", "hostname", "remote_ip", "origin",
+    "sp_anonymous", "cookie_sp", "cookie_dnt", "headers")
+
+  /** One envelope row (the [[RequestCols]] projection) as the request the
+    * edge saw: the inverse of [[envelopeJson]]. The cookie columns come
+    * back under the configured names; a null method, raw URI or hostname
+    * (hostile input, never a spooled envelope) reads as empty. */
+  private[graft] def request(r: Row, cfg: CollectorConfig): EdgeRequest = {
+    def s(i: Int): String = if (r.isNullAt(i)) "" else r.getString(i)
+    def o(i: Int): Option[String] = Option(r.getString(i))
+    EdgeRequest(r.getLong(0), r.getLong(1), s(2), s(3), o(4), o(5), o(6), o(7), s(8),
+      o(9), o(10), o(11),
+      o(12).map(cfg.cookieName -> _).toMap ++ o(13).map(cfg.dntCookieName -> _),
+      if (r.isNullAt(14)) Nil else r.getSeq[String](14))
+  }
+
+  /** Envelope columns no response decision reads. */
+  private val UnreadCols = Set("body", "content_type", "user_agent", "referer", "remote_ip")
+
+  /** Run the edge's per-request decisions over envelope rows: one narrow
+    * typed pass (no exchange, no UDF) that reads each row positionally
+    * into the [[EdgeRequest]] the live edge answered and emits what `f`
+    * decides for it (None drops the row). The response queries in
+    * [[graft.queries.Collector]] are `f`s over [[respond]]'s functions.
+    * The pass feeds the columns no response decision reads as null, and
+    * the headers too unless `cfg` bounces with a forwarded-protocol
+    * header (the only decision that reads them, [[bounceLocation]]), so
+    * Spark never builds them. */
+  def decide[T <: Product : TypeTag](env: DataFrame, cfg: CollectorConfig)(
+      f: EdgeRequest => Option[T]): Dataset[T] = {
+    implicit val enc: Encoder[T] = Encoders.product[T]
+    val headersRead = cfg.bounceEnabled && cfg.bounceForwardedProtocolHeader.isDefined
+    val cols = RequestCols.map { c =>
+      if (UnreadCols(c) || (c == "headers" && !headersRead)) lit(null).as(c) else col(c)
+    }
+    env.select(cols: _*).mapPartitions(_.flatMap(r => f(request(r, cfg))))
   }
 
   // ---- envelope spooling ----

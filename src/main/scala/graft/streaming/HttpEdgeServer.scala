@@ -49,7 +49,8 @@ final class EdgeMetrics {
   *
   *  - every request is answered synchronously by [[HttpEdge.respond]]
   *    (pixel GIF, 302 redirects with the nuid macro, Set-Cookie / CORS /
-  *    P3P headers, ops endpoints — all column-parity-pinned);
+  *    P3P headers, ops endpoints — the decisions the oracle-checked
+  *    `c_*` response queries run);
   *  - every TRACKING request appends one envelope record to a JSONL
   *    spool, atomically published (write-temp + rename) in files of at
   *    most `flushEvery` requests so [[stream]] — the `json` file source
@@ -315,14 +316,21 @@ final class HttpEdgeServer(
       buffered = 0
     }
 
-  /** Publish the tail, unbind, and drop the handle [[stream]]'s source
-    * publishes through, so nothing outlives the edge. */
+  private val closeAtStop = new java.util.concurrent.ConcurrentLinkedQueue[AutoCloseable]()
+
+  /** Close `c` when this edge [[stop]]s. */
+  def closeOnStop(c: AutoCloseable): Unit = closeAtStop.add(c)
+
+  /** Publish the tail, unbind, drop the handle [[stream]]'s source
+    * publishes through and close what [[closeOnStop]] registered, so
+    * nothing outlives the edge. */
   def stop(): Unit = synchronized {
     flushLocked()
     if (server != null) server.stop(0)
     httpsServerOpt.foreach(_.stop(0))
     if (pool != null) pool.shutdown()
     HttpEdgeServer.live.remove(streamKey)
+    Iterator.continually(closeAtStop.poll()).takeWhile(_ != null).foreach(_.close())
   }
 
   /** True while a [[stream]] source can publish through this edge. */

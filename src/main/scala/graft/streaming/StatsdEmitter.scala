@@ -72,7 +72,10 @@ final class StatsdEmitter(
     this
   }
 
-  override def close(): Unit = {
+  private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** A last flush, then stop; once (later calls do nothing). */
+  override def close(): Unit = if (closed.compareAndSet(false, true)) {
     try flush() finally {
       // cancel explicitly: with a caller-supplied scheduler (ownsExec
       // false) shutdownNow never runs, and an uncancelled task would keep

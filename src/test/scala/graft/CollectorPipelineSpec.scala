@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.{Bridges, CollectorConfig, CollectorPipeline, SinkSettings}
+import graft.queries.Collector
 import graft.sources.EventEnvelopeAdapter
+import graft.streaming.{EdgeRequest, HttpEdge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -74,7 +76,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
   }
 
   test("redirects: allowlisted hosts 302, others rejected with null location") {
-    val r = CollectorPipeline.redirects(env, cfg).cache()
+    val r = Collector.redirect(env, cfg).cache()
     assert(r.count() > 0)
     assert(r.filter(col("allowed") && !col("target").contains(".example.com")).count() === 0)
     assert(r.filter(!col("allowed") && col("location").isNotNull).count() === 0)
@@ -84,32 +86,30 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
 
   test("F8: disabled default redirect drops /r/* rows and 404s the response") {
     val off = cfg.copy(enableDefaultRedirect = false)
-    assert(CollectorPipeline.redirects(env, off).count() === 0)
-    val kinds = CollectorPipeline.responses(env, off)
+    assert(Collector.redirect(env, off).count() === 0)
+    val kinds = Collector.response(env, off)
       .join(env.select(col("event_id"), col("path")), "event_id")
       .filter(col("path").startsWith("/r/"))
       .select("response_kind").distinct()
       .collect().map(_.getString(0)).toSet
     assert(kinds === Set("404"))
     // enabled config (the oracle default) still emits both 302 and 400
-    assert(CollectorPipeline.redirects(env, cfg).count() > 0)
+    assert(Collector.redirect(env, cfg).count() > 0)
   }
 
   test("cookie domain: first configured domain matching any origin wins, else fallback") {
-    import spark2.implicits._
-    val d = Seq(
-      (1L, Seq("a.shop.example.com", "other.net")),
-      (2L, Seq("example.org")),
-      (3L, Seq("sub.other.net")),
-      (4L, Seq.empty[String]),
-    ).toDF("id", "origins")
-    val out = d.select(col("id"), CollectorPipeline.cookieDomain(
-      col("origins"), Seq("example.com", "other.net"), Some("fallback.example"))
-      .as("dom")).as[(Long, String)].collect().toMap
-    assert(out(1L) === "example.com") // config order, not origin order
-    assert(out(2L) === "fallback.example")
-    assert(out(3L) === "other.net")
-    assert(out(4L) === "fallback.example")
+    val domains = CollectorConfig(cookieDomains = Seq("example.com", "other.net"),
+      fallbackDomain = Some("fallback.example"))
+    // an Origin header listing several origins (space-separated)
+    def dom(origins: String*): String = HttpEdge.cookieDomain(EdgeRequest(
+      eventId = 1L, timestampMs = 0L, method = "GET", rawUri = "/i", body = None,
+      contentType = None, userAgent = None, referer = None, host = "h", remoteIp = None,
+      origin = Some(origins.mkString(" ")).filter(_.nonEmpty), spAnonymous = None,
+      cookies = Map.empty, headers = Nil), domains).orNull
+    assert(dom("a.shop.example.com", "other.net") === "example.com") // config order, not origin order
+    assert(dom("example.org") === "fallback.example")
+    assert(dom("sub.other.net") === "other.net")
+    assert(dom() === "fallback.example")
   }
 
   test("S7 config source: reference-shaped document parses into the config model") {
@@ -350,6 +350,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
       col("event_id"),
       lit("GET").as("method"),
       lit("/i").as("path"),
+      lit("/i" + qs.map("?" + _).getOrElse("")).as("raw_uri"),
       optLit(qs).as("querystring"),
       lit(null).cast("string").as("body"),
       lit(null).cast("string").as("content_type"),
@@ -379,7 +380,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     // "attach the cookie to the response" — a cookie present means NO
     // bounce, and the stored payload carries the cookie's nuid
     val withCookie = pixelRow(1L, None, Some("cookie-nuid"))
-    val r1 = CollectorPipeline.bounces(withCookie, bCfg).collect().head
+    val r1 = Collector.bounce(withCookie, bCfg).collect().head
     assert(!r1.getAs[Boolean]("bounced"))
     assert(r1.getAs[String]("location") === null)
     val p1 = CollectorPipeline.payloads(withCookie, bCfg).collect().head
@@ -388,25 +389,25 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     // "not store stuff if bouncing and provide a location header" — no
     // cookie, no bounce marker: redirect out, nothing reaches payloads
     val firstPass = pixelRow(2L, None, None)
-    val r2 = CollectorPipeline.bounces(firstPass, bCfg).collect().head
+    val r2 = Collector.bounce(firstPass, bCfg).collect().head
     assert(r2.getAs[Boolean]("bounced"))
     assert(r2.getAs[String]("location") === "/i?bounce=true")
     assert(CollectorPipeline.payloads(firstPass, bCfg).count() === 0)
     // original querystring is preserved in the bounce location
     val withQs = pixelRow(3L, Some("e=pv&aid=app1"), None)
-    assert(CollectorPipeline.bounces(withQs, bCfg).collect().head
+    assert(Collector.bounce(withQs, bCfg).collect().head
       .getAs[String]("location") === "/i?e=pv&aid=app1&bounce=true")
 
     // "store stuff if having already bounced with the fallback nuid" —
     // marker present, still no cookie: store with the configured fallback
     val secondPass = pixelRow(4L, Some("bounce=1"), None)
-    val r4 = CollectorPipeline.bounces(secondPass, bCfg).collect().head
+    val r4 = Collector.bounce(secondPass, bCfg).collect().head
     assert(!r4.getAs[Boolean]("bounced"))
     val p4 = CollectorPipeline.payloads(secondPass, bCfg).collect().head
     assert(p4.getAs[String]("network_userid") === "new-nuid")
 
     // bounce disabled (the default config) never redirects
-    assert(CollectorPipeline.bounces(firstPass, CollectorConfig())
+    assert(Collector.bounce(firstPass, CollectorConfig())
       .filter(col("bounced")).count() === 0)
   }
 
@@ -414,10 +415,9 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     * `CollectorServiceSpec.scala:700-717` ("location header with
     * forwarded protocol"): a valid http/https value in the configured
     * header makes the bounce Location absolute on that scheme; an
-    * invalid value falls back. Both the pipeline column and the edge
-    * mirror are asserted. */
+    * invalid value falls back. Asserted over an envelope row and over a
+    * request built directly. */
   test("bounce forwardedProtocolHeader goldens: absolute scheme when valid, fallback otherwise") {
-    import graft.streaming.{EdgeRequest, HttpEdge}
     val bCfg = CollectorConfig(bounceEnabled = true, bounceParamName = "bounce",
       bounceForwardedProtocolHeader = Some("X-Forwarded-Proto"))
     def withHeaders(hs: Seq[String]) = {
@@ -426,7 +426,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
         .withColumn("headers", typedLit(hs))
     }
     def loc(hs: Seq[String]): String =
-      CollectorPipeline.bounces(withHeaders(hs), bCfg).collect().head.getAs[String]("location")
+      Collector.bounce(withHeaders(hs), bCfg).collect().head.getAs[String]("location")
     // reference golden: "https://st?a=b&bounce=true" shape (our host is
     // the fixture's hostname 'h', path '/i')
     assert(loc(Seq("X-Forwarded-Proto: https")) === "https://h/i?a=b&bounce=true")
@@ -436,7 +436,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     assert(loc(Nil) === "/i?a=b&bounce=true")
     // case-insensitive header match, value trimmed
     assert(loc(Seq("x-forwarded-proto:  HTTPS ")) === "https://h/i?a=b&bounce=true")
-    // edge mirror row-for-row
+    // the same decision on a request built directly
     def edgeLoc(hs: Seq[String]): Option[String] =
       HttpEdge.bounceLocation(EdgeRequest(
         eventId = 10L, timestampMs = 0L, method = "GET", rawUri = "/i?a=b",
@@ -457,7 +457,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     assert(stored > 0, "DNT rows suppressed despite the gate being off")
     // and cookie.enabled = false silences the Set-Cookie header entirely
     val cookieOff = CollectorConfig.cookieScale.copy(cookieEnabled = false)
-    val cookies = CollectorPipeline.setCookieHeaders(env, cookieOff)
+    val cookies = Collector.setCookie(env, cookieOff)
     assert(cookies.filter(col("emitted")).count() === 0)
     assert(cookies.filter(col("set_cookie").isNotNull).count() === 0)
   }
@@ -469,6 +469,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
       col("event_id"),
       lit("GET").as("method"),
       lit("/r/tp2").as("path"),
+      lit("/r/tp2?" + qs).as("raw_uri"),
       lit(qs).as("querystring"),
       lit(null).cast("string").as("body"),
       lit(null).cast("string").as("content_type"),
@@ -492,15 +493,15 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
   test("redirect goldens: macro gating, custom placeholder, allowlist, empty-list permissive") {
     val rCfg = CollectorConfig(redirectDomains = Set("localhost"))
     def loc(df: org.apache.spark.sql.DataFrame, cfg: CollectorConfig): String =
-      CollectorPipeline.redirects(df, cfg).collect().head.getAs[String]("location")
+      Collector.redirect(df, cfg).collect().head.getAs[String]("location")
 
     // "give back a 302 if redirecting and there is a u query param"
     assert(loc(redirectRow(1L, "u=http%3A%2F%2Flocalhost%2F12"), rCfg)
       === "http://localhost/12")
     // "give back a 400 if redirecting and there are no u query params"
-    val noU = CollectorPipeline.redirects(redirectRow(2L, "e=pv"), rCfg).collect().head
+    val noU = Collector.redirect(redirectRow(2L, "e=pv"), rCfg).collect().head
     assert(noU.getAs[String]("target") === null && !noU.getAs[Boolean]("allowed"))
-    assert(CollectorPipeline.responses(redirectRow(2L, "e=pv"), rCfg)
+    assert(Collector.response(redirectRow(2L, "e=pv"), rCfg)
       .collect().head.getAs[String]("response_kind") === "400")
     // "ignore a cookie replacement macro on redirect if not enabled"
     assert(loc(redirectRow(3L, "u=http%3A%2F%2Flocalhost%2F%3Fuid%3D%24%7BSP_NUID%7D&nuid=1234"), rCfg)
@@ -517,7 +518,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     assert(loc(redirectRow(6L, "u=http%3A%2F%2Flocalhost%2Fa%253Db"), rCfg)
       === "http://localhost/a%3Db")
     // "give back a 400 if redirecting to a disallowed domain"
-    val bad = CollectorPipeline.redirects(
+    val bad = Collector.redirect(
       redirectRow(7L, "u=http%3A%2F%2Finvalid.acme.com%2F12"), rCfg).collect().head
     assert(!bad.getAs[Boolean]("allowed") && bad.getAs[String]("location") === null)
     // "give back a 302 ... with no restrictions on domains" (empty set =
@@ -525,7 +526,7 @@ class CollectorPipelineSpec extends AnyFunSuite with WallBudget {
     assert(loc(redirectRow(8L, "u=http%3A%2F%2Funknown.acme.com%2F12"),
       rCfg.copy(redirectDomains = Set.empty))
       === "http://unknown.acme.com/12")
-    assert(CollectorPipeline.responses(redirectRow(8L, "u=http%3A%2F%2Funknown.acme.com%2F12"),
+    assert(Collector.response(redirectRow(8L, "u=http%3A%2F%2Funknown.acme.com%2F12"),
       rCfg.copy(redirectDomains = Set.empty)).collect().head.getAs[String]("response_kind") === "302")
   }
 }

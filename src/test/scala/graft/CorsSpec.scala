@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{CollectorConfig, CollectorPipeline}
+import graft.operators.CollectorConfig
+import graft.queries.Collector
+import graft.streaming.{EdgeRequest, HttpEdge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,20 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class CorsSpec extends AnyFunSuite with WallBudget {
   private lazy val spark = TestSpark.spark
 
-  private def envOf(origins: (Long, String)*) = {
-    val s = spark
-    import s.implicits._
-    origins.toSeq.toDF("event_id", "origin")
-  }
-
-  private def decide(cfg: CollectorConfig, origins: (Long, String)*): Map[Long, (Boolean, String)] = {
-    val s = spark
-    import s.implicits._
-    CollectorPipeline.corsDecisions(envOf(origins: _*), cfg)
-      .select(col("event_id"), col("allowed"), col("allow_origin"))
-      .as[(Long, Boolean, String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-  }
+  private def decide(cfg: CollectorConfig, origins: (Long, String)*): Map[Long, (Boolean, String)] =
+    origins.map { case (id, origin) =>
+      val (allowed, allowOrigin) = HttpEdge.cors(EdgeRequest(
+        eventId = id, timestampMs = 0L, method = "GET", rawUri = "/i", body = None,
+        contentType = None, userAgent = None, referer = None, host = "h", remoteIp = None,
+        origin = Option(origin), spAnonymous = None, cookies = Map.empty, headers = Nil), cfg)
+      id -> (allowed, allowOrigin.orNull)
+    }.toMap
 
   private val whitelist = CollectorConfig(
     corsEnabled = true, corsDomains = Seq("*.allowed.example.com", "partner.io"))
@@ -67,7 +63,7 @@ class CorsSpec extends AnyFunSuite with WallBudget {
 
   test("Set-Cookie: suppressed under DNT and SP-Anonymous, domain from Origin, flags rendered") {
     val env = graft.sources.EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
-    val out = CollectorPipeline.setCookieHeaders(env, CollectorConfig.cookieScale).cache()
+    val out = Collector.setCookie(env, CollectorConfig.cookieScale).cache()
     // DNT (event_id % 13 == 0) and anon (% 11 == 0) rows never emit
     assert(out.filter((col("event_id") % 13 === 0 || col("event_id") % 11 === 0)
       && col("emitted")).count() === 0)
@@ -82,7 +78,7 @@ class CorsSpec extends AnyFunSuite with WallBudget {
 
   test("preflight status is 403 exactly on blocked rows over the envelope stream") {
     val env = graft.sources.EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
-    val out = CollectorPipeline.corsDecisions(env, CollectorConfig.corsScale).cache()
+    val out = Collector.cors(env, CollectorConfig.corsScale).cache()
     assert(out.filter(!col("allowed") && col("preflight_status") =!= 403).count() === 0)
     assert(out.filter(col("allowed") && col("preflight_status") =!= 200).count() === 0)
     // fixture exercises both outcomes

@@ -3,8 +3,7 @@ package graft
 import graft.operators.{CollectorConfig, CollectorPipeline}
 import graft.sources.EventEnvelopeAdapter
 import graft.sinks.ParquetDirSink
-import graft.streaming.{EdgeRequest, HttpEdge, HttpEdgeServer}
-import org.apache.spark.sql.Row
+import graft.streaming.{HttpEdge, HttpEdgeServer}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.{BufferedOutputStream, ByteArrayOutputStream}
@@ -12,123 +11,45 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-/** The HTTP edge tier: column parity with the pipeline over the full
-  * sf0.001 corpus, plus live-socket behavior of every route.
+/** The HTTP edge tier: its decisions over envelope rows, plus
+  * live-socket behavior of every route.
   */
 class HttpEdgeSpec extends AnyFunSuite with WallBudget {
   private val spark = TestSpark.spark
   import CollectorConfig._
 
-  // ---- corpus → EdgeRequest ----
-
-  private def opt(r: Row, name: String): Option[String] =
-    Option(r.getAs[String](name))
-
-  private def edgeRequest(r: Row, cfg: CollectorConfig): EdgeRequest = {
-    val cookies =
-      opt(r, "cookie_sp").map(cfg.cookieName -> _).toMap ++
-        opt(r, "cookie_dnt").map(cfg.dntCookieName -> _).toMap
-    EdgeRequest(
-      eventId = r.getAs[Long]("event_id"),
-      timestampMs = r.getAs[Long]("timestamp_ms"),
-      method = r.getAs[String]("method"),
-      rawUri = r.getAs[String]("raw_uri"),
-      body = opt(r, "body"),
-      contentType = opt(r, "content_type"),
-      userAgent = opt(r, "user_agent"),
-      referer = opt(r, "referer"),
-      host = r.getAs[String]("hostname"),
-      remoteIp = opt(r, "remote_ip"),
-      origin = opt(r, "origin"),
-      spAnonymous = opt(r, "sp_anonymous"),
-      cookies = cookies,
-      headers = r.getSeq[String](r.fieldIndex("headers")).toList)
-  }
-
-  private lazy val corpus: Array[Row] =
-    EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf).collect()
-
-  private def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Row] =
-    df.collect().map(r => r.getAs[Long]("event_id") -> r).toMap
-
-  test("edge response kind matches the pipeline's responses column on every corpus row") {
-    val expected = byId(
-      CollectorPipeline.responses(EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), testScale))
-    corpus.foreach { r =>
-      val req = edgeRequest(r, testScale)
-      assert(HttpEdge.responseKind(req, testScale) ===
-        expected(req.eventId).getAs[String]("response_kind"),
-        s"event ${req.eventId} uri=${req.rawUri}")
-    }
-  }
-
-  test("edge Set-Cookie matches setCookieHeaders on every corpus row (cookieScale)") {
-    val expected = byId(
-      CollectorPipeline.setCookieHeaders(EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), cookieScale))
-    corpus.foreach { r =>
-      val req = edgeRequest(r, cookieScale)
-      val exp = expected(req.eventId)
-      val got = HttpEdge.setCookieHeader(req, cookieScale)
-      assert(got.isDefined === exp.getAs[Boolean]("emitted"), s"event ${req.eventId}")
-      assert(got === Option(exp.getAs[String]("set_cookie")), s"event ${req.eventId}")
-    }
-  }
-
-  test("edge CORS decision matches corsDecisions on every corpus row (corsScale)") {
-    val expected = byId(
-      CollectorPipeline.corsDecisions(EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), corsScale))
-    corpus.foreach { r =>
-      val req = edgeRequest(r, corsScale)
-      val exp = expected(req.eventId)
-      val (allowed, allowOrigin) = HttpEdge.cors(req, corsScale)
-      assert(allowed === exp.getAs[Boolean]("allowed"), s"event ${req.eventId}")
-      assert(allowOrigin === Option(exp.getAs[String]("allow_origin")), s"event ${req.eventId}")
-    }
-  }
-
-  test("edge redirect resolution matches redirects on every /r/* corpus row (redirectScale)") {
-    val expected = byId(
-      CollectorPipeline.redirects(EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), redirectScale))
-    val redirectRows = corpus.filter(r => r.getAs[String]("path").startsWith("/r/"))
-    assert(redirectRows.nonEmpty)
-    redirectRows.foreach { r =>
-      val req = edgeRequest(r, redirectScale)
-      val exp = expected(req.eventId)
-      val (target, allowed, location) = HttpEdge.redirect(req, redirectScale)
-      assert(target === Option(exp.getAs[String]("target")), s"event ${req.eventId}")
-      assert(allowed === (Option(exp.get(exp.fieldIndex("allowed"))) == Some(true)),
-        s"event ${req.eventId}")
-      assert(location === Option(exp.getAs[String]("location")), s"event ${req.eventId}")
-    }
-  }
-
-  test("edge bounce location matches bounces on every pixel corpus row (bounceScale)") {
-    val expected = byId(
-      CollectorPipeline.bounces(EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf), bounceScale))
-    val pixels = corpus.filter(r => Set("/i", "/ice.png")(r.getAs[String]("path")))
-    assert(pixels.nonEmpty)
-    pixels.foreach { r =>
-      val req = edgeRequest(r, bounceScale)
-      val exp = expected(req.eventId)
-      val got = HttpEdge.bounceLocation(req, bounceScale)
-      assert(got.isDefined === exp.getAs[Boolean]("bounced"), s"event ${req.eventId}")
-      assert(got === Option(exp.getAs[String]("location")), s"event ${req.eventId}")
-    }
-  }
-
   test("edge envelope JSON round-trips through the spark schema to the adapter's columns") {
+    // the envelope-row → EdgeRequest conversion (HttpEdge.request) is the
+    // inverse of envelopeJson: every corpus row spools back to its columns
+    import org.apache.spark.sql.functions.col
     val cfg = testScale
-    val lines = corpus.take(500).map(r => HttpEdge.envelopeJson(edgeRequest(r, cfg), cfg))
+    val env = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
+    val lines = env.select(HttpEdge.RequestCols.map(col): _*).collect()
+      .map(r => HttpEdge.envelopeJson(HttpEdge.request(r, cfg), cfg))
     val dir = Files.createTempDirectory("edge-envelopes")
     Files.write(dir.resolve("part-00000.jsonl"),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     val readBack = spark.read.schema(HttpEdge.envelopeSchema).json(dir.toString)
-    val direct = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
-      .filter(org.apache.spark.sql.functions.col("event_id")
-        .isin(corpus.take(500).map(_.getAs[Long]("event_id")).toSeq: _*))
-      .select(readBack.columns.map(org.apache.spark.sql.functions.col): _*)
+    val direct = env.select(readBack.columns.map(col): _*)
+    assert(readBack.count() > 0L)
     assert(readBack.exceptAll(direct).count() === 0L)
     assert(direct.exceptAll(readBack).count() === 0L)
+  }
+
+  test("one response tier: graft/operators defines none of the response decisions") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val decision = """\bdef\s+(setCookieHeaders|corsDecisions|redirects|bounces|responses|cookieDomain)\b""".r
+    val defs = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if decision.findFirstIn(l).isDefined => s"$p:${i + 1}: $l"
+        }
+      }.toList
+    // each response decision has one definition, in streaming/HttpEdge
+    assert(defs.isEmpty, defs.mkString("\n"))
   }
 
   // ---- live socket tests ----
@@ -772,52 +693,21 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
     }
   }
 
-  test("edge decisions match the pipeline on the 400-envelope hostile fuzz corpus") {
-    import org.apache.spark.sql.functions.{col => fcol}
+  test("edge-backed response projections answer every hostile envelope") {
+    import graft.queries.Collector
     val fuzz = HostileCorpus.corpus
-    // edge view of a hostile envelope: the raw URI is path?querystring
-    // (the corpus has no '#'/'?' collisions, so the extraction regex
-    // recovers the querystring column exactly)
-    def req(e: HostileCorpus.Env, cfg: CollectorConfig): EdgeRequest = {
-      val rawUri = Option(e.path).getOrElse("") +
-        Option(e.querystring).map("?" + _).getOrElse("")
-      EdgeRequest(
-        eventId = e.event_id, timestampMs = e.timestamp_ms,
-        method = e.method, rawUri = rawUri,
-        body = Option(e.body), contentType = Option(e.content_type),
-        userAgent = Option(e.user_agent), referer = Option(e.referer),
-        host = Option(e.hostname).getOrElse(""), remoteIp = Option(e.remote_ip),
-        origin = Option(e.origin), spAnonymous = Option(e.sp_anonymous),
-        cookies = Option(e.cookie_sp).map(cfg.cookieName -> _).toMap ++
-          Option(e.cookie_dnt).map(cfg.dntCookieName -> _).toMap,
-        headers = e.headers.toList)
-    }
     val df = spark.createDataFrame(fuzz)
-      .withColumn("raw_uri",
-        org.apache.spark.sql.functions.concat_ws("",
-          org.apache.spark.sql.functions.coalesce(fcol("path"),
-            org.apache.spark.sql.functions.lit("")),
-          org.apache.spark.sql.functions.when(fcol("querystring").isNotNull,
-            org.apache.spark.sql.functions.concat(
-              org.apache.spark.sql.functions.lit("?"), fcol("querystring")))))
-    // response kinds (dntEnabled testScale), cookies (cookieScale), CORS
-    // (corsScale) — parity row-for-row over all 400 hostile envelopes
-    val kinds = byId(CollectorPipeline.responses(df, testScale))
-    val cookies = byId(CollectorPipeline.setCookieHeaders(df, cookieScale))
-    val cors = byId(CollectorPipeline.corsDecisions(df, corsScale))
-    fuzz.foreach { e =>
-      val rT = req(e, testScale)
-      assert(HttpEdge.responseKind(rT, testScale) ===
-        kinds(e.event_id).getAs[String]("response_kind"), s"kind @${e.event_id}")
-      val rC = req(e, cookieScale)
-      val exp = cookies(e.event_id)
-      assert(HttpEdge.setCookieHeader(rC, cookieScale) ===
-        Option(exp.getAs[String]("set_cookie")), s"cookie @${e.event_id}")
-      val rO = req(e, corsScale)
-      val ec = cors(e.event_id)
-      val (allowed, allowOrigin) = HttpEdge.cors(rO, corsScale)
-      assert(allowed === ec.getAs[Boolean]("allowed"), s"cors-allowed @${e.event_id}")
-      assert(allowOrigin === Option(ec.getAs[String]("allow_origin")), s"cors-origin @${e.event_id}")
-    }
+    // a null path reads as the empty path (its raw_uri is null too)
+    def path(e: HostileCorpus.Env) = Option(e.path).getOrElse("")
+    def getOrHead(e: HostileCorpus.Env) = e.method == "GET" || e.method == "HEAD"
+    val redirects = fuzz.count(e => HttpEdge.isRedirect(path(e)))
+    val pixelExpected = fuzz.count(e =>
+      HttpEdge.isPixel(path(e)) || (getOrHead(e) && !HttpEdge.isRedirect(path(e))))
+    assert(fuzz.exists(_.raw_uri == null) && redirects > 0 && pixelExpected > 0)
+    assert(Collector.response(df, testScale).count() === fuzz.size)
+    assert(Collector.setCookie(df, cookieScale).count() === fuzz.size)
+    assert(Collector.cors(df, corsScale).count() === fuzz.size)
+    assert(Collector.redirect(df, redirectScale).count() === redirects)
+    assert(Collector.bounce(df, bounceScale).count() === pixelExpected)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{CollectorConfig, CollectorPipeline, ThriftPayload, WirePayload}
+import graft.queries.Collector
 import graft.sinks.{LakeSink, ParquetDirSink}
 import graft.sinks.ClientSinks.{Clients, Leg}
 import graft.sources.EventEnvelopeAdapter
@@ -223,8 +224,9 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
   }
 
   test("CORS, Set-Cookie and wire-route transforms run unchanged on a stream") {
-    // the r3 operators are pure projections/mapPartitions, so the SAME
-    // functions must produce batch-identical output under micro-batching
+    // the edge-backed CORS / Set-Cookie projections are one narrow
+    // mapPartitions, so the SAME functions must produce batch-identical
+    // output under micro-batching
     val envBatch = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
     val srcDir = tmp("env-src2")
     envBatch.write.mode("overwrite").parquet(srcDir)
@@ -237,8 +239,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        CollectorPipeline.corsDecisions(batch, CollectorConfig.corsScale)
-          .join(CollectorPipeline.setCookieHeaders(batch, CollectorConfig.cookieScale)
+        Collector.cors(batch, CollectorConfig.corsScale)
+          .join(Collector.setCookie(batch, CollectorConfig.cookieScale)
             .withColumnRenamed("emitted", "cookie_emitted")
             .drop("set_cookie"), "event_id")
           .write.mode("append").parquet(outDir)
@@ -247,8 +249,8 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
       .start()
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir)
-    val batchEq = CollectorPipeline.corsDecisions(envBatch, CollectorConfig.corsScale)
-      .join(CollectorPipeline.setCookieHeaders(envBatch, CollectorConfig.cookieScale)
+    val batchEq = Collector.cors(envBatch, CollectorConfig.corsScale)
+      .join(Collector.setCookie(envBatch, CollectorConfig.cookieScale)
         .withColumnRenamed("emitted", "cookie_emitted")
         .drop("set_cookie"), "event_id")
     assert(streamed.count() === batchEq.count())
@@ -637,7 +639,7 @@ class StreamingSpec extends AnyFunSuite with WallBudget {
     val env = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf)
     val frames = env.select(to_json(struct(env.columns.map(col): _*)).cast("binary").as("value"))
     val decoded = graft.sources.KafkaEnvelopeSource.decodeFrames(frames)
-    assert(decoded.schema === graft.sources.KafkaEnvelopeSource.EnvelopeSchema)
+    assert(decoded.schema === graft.streaming.HttpEdge.envelopeSchema)
     assert(decoded.count() === env.count())
     assert(decoded.select("event_id", "path", "querystring")
       .except(env.select("event_id", "path", "querystring")).count() === 0)

@@ -274,6 +274,41 @@ class ThriftMonitorSpec extends AnyFunSuite with WallBudget {
       assert(gotLines === Seq(
         "snowplow.collector.good:7|c|#app:graft,env:te_st",
         "snowplow.collector.bad:1|c|#app:graft,env:te_st"))
+
+      // CollectorMain --http with statsd enabled pushes the edge's request
+      // metrics, and stops pushing once the query ends
+      def receive(): Option[Seq[String]] =
+        try {
+          val p = new DatagramPacket(buf, buf.length)
+          server.receive(p)
+          Some(new String(p.getData, 0, p.getLength, java.nio.charset.StandardCharsets.UTF_8)
+            .split('\n').toSeq)
+        } catch { case _: java.net.SocketTimeoutException => None }
+      def dir(n: String) = java.nio.file.Files.createTempDirectory(s"statsd-$n").toString
+      val cfg = CollectorConfig.testScale.copy(statsd = settings.copy(tags = Map.empty, periodMs = 100L))
+      val (edge, running) = graft.CollectorMain.wireHttp(spark, dir("spool"), dir("good"),
+        dir("bad"), dir("ckpt"), org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L), cfg)
+      try {
+        val conn = java.net.URI.create(s"http://127.0.0.1:${edge.port}/i?e=pv").toURL
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        try assert(conn.getResponseCode === 200) finally conn.disconnect()
+        def within20s = { val end = System.nanoTime() + 20L * 1000000000L; () => System.nanoTime() < end }
+        val seeing = within20s
+        var seen = false
+        while (!seen && seeing())
+          seen = receive().exists(_.contains("snowplow.collector.http.requests.get.200:1|c"))
+        assert(seen, "no datagram carried the edge's GET 200 count")
+        running.query.stop()
+        // a gap of ten push periods: the emitter closed with the query
+        server.setSoTimeout(1000)
+        val waiting = within20s
+        var quiet = false
+        while (!quiet && waiting()) quiet = receive().isEmpty
+        assert(quiet, "datagrams kept arriving after the query stopped")
+      } finally {
+        running.query.stop()
+        edge.stop()
+      }
     } finally server.close()
   }
 
