@@ -47,10 +47,10 @@ object CollectorApp {
 
   /** Wire and start the dataflow on an unbounded envelope DataFrame.
     *
-    * [[CollectorPipeline.route]] is part of the streaming plan: each
-    * envelope's payload is built and serialized once per trigger, and the
-    * micro-batch the engine hands [[collect]] is already the narrow routed
-    * rows (no bodies or headers, no exchange). The good leg
+    * [[CollectorPipeline.route]] is part of the streaming plan: one typed
+    * pass builds and serializes each envelope's payload once per trigger,
+    * and the micro-batch the engine hands [[collect]] is already the
+    * narrow routed rows (no bodies or headers, no exchange). The good leg
     * ([[CollectorPipeline.goodLeg]]) holds only events whose serialized
     * size is below `maxBytes` (the reference's sink gate
     * `SplitBatch.scala:87`: no record on the good wire ever reaches
@@ -59,7 +59,10 @@ object CollectorApp {
     * with their self-describing JSON. Oversized splittable POSTs are
     * bad-rowed whole here; the split-aware routing is
     * [[graft.operators.SplitBatch.routeWire]]. With file sinks a
-    * micro-batch runs two jobs, one per sink write. */
+    * micro-batch runs two jobs, one per sink write; behind the edge's
+    * spool each job runs one task per `spark.sql.files.openCostInBytes`
+    * of input, so a live batch of a few MB runs one task per leg
+    * ([[graft.streaming.HttpEdgeServer.stream]]). */
   def start(
       spark: SparkSession,
       envelopes: DataFrame,
@@ -83,7 +86,8 @@ object CollectorApp {
 
   /** One micro-batch: one [[BatchArms]] scope persists the routed rows,
     * writes the good leg on the query thread and the bad leg as the
-    * scope's one arm, and unpersists once both ended.
+    * scope's one arm, and unpersists once both ended. Each leg's write
+    * runs one task per partition of the batch, which its source sizes.
     *
     * The legs are independent jobs over the same persisted batch; run one
     * after the other they leave the cluster idle through each leg's tail.

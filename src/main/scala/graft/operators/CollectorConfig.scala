@@ -107,6 +107,11 @@ final case class CollectorConfig(
 ) {
   def collectorName: String = s"$appName-$appVersion-$sinkName"
 
+  /** [[dntCookieValue]] as the full-value pattern the F1 test runs,
+    * compiled once per config. */
+  @transient lazy val dntPattern: java.util.regex.Pattern =
+    java.util.regex.Pattern.compile("^(?:" + dntCookieValue + ")$")
+
   /** The P3P response header value, reference-exact
     * (`CollectorService.scala:167`). */
   def p3pHeader: String =

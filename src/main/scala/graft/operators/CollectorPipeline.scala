@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.streaming.HttpEdge
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** One envelope's outcome in [[CollectorPipeline.route]]: a good wire
@@ -25,9 +26,14 @@ final case class Routed(
   * live in [[graft.streaming.HttpEdge]]; the columns here decide what is
   * stored.
   *
-  * Every transform here is a pure column expression (no UDFs), so the whole
-  * payload build stays inside one WholeStageCodegen span fused into the
-  * source scan — at 100 TB this stage is a narrow map with zero shuffles.
+  * Two forms of the same payload build. [[payloads]] and the predicates
+  * ([[qsValid]], [[dntSuppressed]], [[bounceSuppressed]], ...) are column
+  * expressions: the definition the DuckDB oracle checks. [[route]], what
+  * the live collector and [[badRows]] run, builds each payload in one
+  * typed pass with the edge's per-request functions
+  * ([[graft.streaming.HttpEdge.Qs]], `networkUserId`, `dnt`, `bounces`,
+  * `uuidify`); CollectorRouteSpec pins it to the columns. Both are narrow
+  * maps with zero shuffles.
   *
   * Reference citations (see SURVEY.md §2):
   *  - P1 buildEvent        reference `core/.../CollectorService.scala:251-305`
@@ -81,13 +87,14 @@ object CollectorPipeline {
     when(qsValid(qs), element_at(qsMap(qs), key)).otherwise(lit(null))
 
   /** F1: drop the event when DNT tracking is enabled AND the DNT cookie
-    * value matches the configured regex (full match, as the reference's
-    * `matches`; the `doNotTrackCookie.enabled` gate is the reference's —
-    * disabled config ⇒ constant false, folds away in codegen). */
+    * value matches the configured regex (anchored as a full match, like
+    * the reference's `matches`, but tested with `rlike`'s `find(0)`, so
+    * `$` also matches before a trailing line terminator; the
+    * `doNotTrackCookie.enabled` gate is the reference's — disabled
+    * config ⇒ constant false, folds away in codegen). */
   def dntSuppressed(cfg: CollectorConfig): Column =
     if (!cfg.dntEnabled) lit(false)
-    else col("cookie_dnt").isNotNull &&
-      col("cookie_dnt").rlike("^(?:" + cfg.dntCookieValue + ")$")
+    else col("cookie_dnt").isNotNull && col("cookie_dnt").rlike(cfg.dntPattern.pattern)
 
   /** F3: SP-Anonymous header present. */
   def anon: Column = col("sp_anonymous").isNotNull
@@ -137,14 +144,18 @@ object CollectorPipeline {
       when(col("path") === from, lit(to)).otherwise(acc)
     }
 
-  /** P4: header redaction — Remote-Address / Raw-Request-URI always
-    * dropped; X-Forwarded-For / X-Real-Ip / Cookie also dropped under
-    * SP-Anonymous. Pure higher-order `filter`, no UDF. */
-  def filteredHeaders: Column =
-    filter(col("headers"), h =>
-      !h.startsWith("Remote-Address:") && !h.startsWith("Raw-Request-URI:") &&
-        (!anon || (!h.startsWith("X-Forwarded-For:") &&
-          !h.startsWith("X-Real-Ip:") && !h.startsWith("Cookie:"))))
+  /** P4: header lines always redacted, and those redacted under
+    * SP-Anonymous, by prefix. */
+  private val Redacted = Seq("Remote-Address:", "Raw-Request-URI:")
+  private val RedactedAnon = Seq("X-Forwarded-For:", "X-Real-Ip:", "Cookie:")
+
+  /** P4: header redaction — [[Redacted]] always dropped, [[RedactedAnon]]
+    * also under SP-Anonymous; a null element is dropped too (its
+    * predicate is NULL). Pure higher-order `filter`, no UDF. */
+  def filteredHeaders: Column = {
+    def kept(h: Column, prefixes: Seq[String]) = prefixes.map(p => !h.startsWith(p)).reduce(_ && _)
+    filter(col("headers"), h => kept(h, Redacted) && (!anon || kept(h, RedactedAnon)))
+  }
 
   /** The reference's `pixelExpected` route flag as a column
     * (`CollectorRoute.scala:115-152`): pixel paths and GET/HEAD
@@ -174,77 +185,117 @@ object CollectorPipeline {
   def isSegment: Column = col("path").startsWith("/com.segment/")
 
   /** P1: the full CollectorPayload projection over an envelope DataFrame.
-    * Good rows only: DNT-suppressed (F1) and malformed-querystring (F7)
-    * rows are excluded (the latter surface in [[badRows]]). */
+    * Good rows only: DNT-suppressed (F1), bounce-suppressed (F2) and
+    * malformed-querystring (F7) rows are excluded (the latter surface in
+    * [[badRows]]). The column definition [[route]] is pinned to. */
   def payloads(env: DataFrame, cfg: CollectorConfig): DataFrame =
     env
       .filter(!dntSuppressed(cfg) && qsValid(col("querystring")) &&
         !bounceSuppressed(cfg))
-      .select(payloadCols(cfg, lit(CollectorConfig.PayloadSchemaUri)): _*)
-
-  /** [[payloads]]' columns, with `schema_uri` given by the caller. */
-  private def payloadCols(cfg: CollectorConfig, schemaUri: Column): Seq[Column] = Seq(
-    col("event_id"),
-    schemaUri.as("schema_uri"),
-    ip.as("ip"),
-    col("timestamp_ms"),
-    lit("UTF-8").as("encoding"),
-    lit(cfg.collectorName).as("collector"),
-    col("querystring"),
-    col("body"),
-    remappedPath(cfg).as("path"),
-    col("user_agent"),
-    col("referer").as("referer_uri"),
-    col("hostname"),
-    (if (cfg.bounceEnabled) networkUserIdWithBounce(cfg) else networkUserId)
-      .as("network_userid"),
-    col("content_type"),
-    partitionKey(cfg).as("partition_key"),
-    array_join(filteredHeaders, "|").as("headers_str"),
-    // the true list — headers_str is a display/oracle projection only
-    // (a '|' inside a header value would corrupt a split-based rebuild)
-    filteredHeaders.as("headers"))
+      .select(
+        col("event_id"),
+        lit(CollectorConfig.PayloadSchemaUri).as("schema_uri"),
+        ip.as("ip"),
+        col("timestamp_ms"),
+        lit("UTF-8").as("encoding"),
+        lit(cfg.collectorName).as("collector"),
+        col("querystring"),
+        col("body"),
+        remappedPath(cfg).as("path"),
+        col("user_agent"),
+        col("referer").as("referer_uri"),
+        col("hostname"),
+        (if (cfg.bounceEnabled) networkUserIdWithBounce(cfg) else networkUserId)
+          .as("network_userid"),
+        col("content_type"),
+        partitionKey(cfg).as("partition_key"),
+        array_join(filteredHeaders, "|").as("headers_str"),
+        // the true list — headers_str is a display/oracle projection only
+        // (a '|' inside a header value would corrupt a split-based rebuild)
+        filteredHeaders.as("headers"))
 
   /** The collector's one routing pass over envelopes — the reference's
-    * serialize once, then route (`SplitBatch.scala:81-113`). At most one
-    * row per envelope, each carrying the request's `timestamp_ms`:
+    * build, serialize once, then route (`CollectorService.scala:251-305`,
+    * `SplitBatch.scala:81-113`). At most one row per envelope, each
+    * carrying the request's `timestamp_ms`:
     *  - a malformed querystring (F7) gives a GenericError row
-    *    (`payload_prefix` = the querystring, `actual_size` = its bytes).
-    *    It is decided first, so DNT does not suppress it;
+    *    (`payload_prefix` = the querystring, `actual_size` = its UTF-8
+    *    bytes). It is decided first, so DNT does not suppress it;
     *  - DNT- (F1) and bounce-suppressed (F2) requests emit nothing;
-    *  - every other request's payload is serialized once. It is a good row
-    *    (`partition_key` + `thrift`) when its wire size is below
-    *    `maxBytes`, else a SizeViolation row (F6: `actual_size` = the wire
-    *    size, `payload_prefix` = `maxBytes / 10` chars of the thrift
-    *    toString()) — the reference's gate `wholeEventBytes >= maxBytes`.
-    *    Its `reason` is [[SplitBatch.GetNotSplittable]] for a bodiless
-    *    event and [[SplitBatch.PostNotSplit]] for a POST: this flat gate
-    *    bad-rows an oversized POST whole where the reference would try to
-    *    split it (a declared divergence; the split-aware routing is
+    *  - every other request's payload (P1-P7) is built and serialized
+    *    once. It is a good row (`partition_key` + `thrift`) when its wire
+    *    size is below `maxBytes`, else a SizeViolation row (F6:
+    *    `actual_size` = the wire size, `payload_prefix` = `maxBytes / 10`
+    *    chars of the thrift toString()) — the reference's gate
+    *    `wholeEventBytes >= maxBytes`. Its `reason` is
+    *    [[SplitBatch.GetNotSplittable]] for a bodiless event and
+    *    [[SplitBatch.PostNotSplit]] for a POST: this flat gate bad-rows an
+    *    oversized POST whole where the reference would try to split it (a
+    *    declared divergence; the split-aware routing is
     *    [[SplitBatch.routeWire]]).
-    * One [[ThriftPayload.payloadPass]] with no exchange on a stream, so it
-    * runs inside the streaming plan ([[graft.CollectorApp.start]]) as
-    * well as over a batch. [[goodLeg]] and [[badLeg]] are its two legs. */
-  def route(env: DataFrame, cfg: CollectorConfig): DataFrame = {
-    val qsOk = qsValid(col("querystring"))
-    val maxBytes = cfg.maxBytes
-    val rows = env
-      .filter(!qsOk || (!dntSuppressed(cfg) && !bounceSuppressed(cfg)))
-      .select(payloadCols(cfg, when(qsOk, lit(CollectorConfig.PayloadSchemaUri))) :+
-        octet_length(col("querystring")).cast("long").as("qs_bytes"): _*)
-    ThriftPayload.payloadPass[Routed](rows, "partition_key", "querystring", "qs_bytes", "timestamp_ms") { () =>
-      (r, rec, wire) => {
-        val ts = r.getLong(4)
-        def bad(kind: String, prefix: String, size: Long, reason: String) =
-          Routed(r.getLong(0), good = false, null, null, ts, kind, prefix, Some(size), reason)
-        Iterator.single(
-          if (rec == null) bad("GenericError", r.getString(2), r.getLong(3), null)
-          else if (wire.length < maxBytes)
-            Routed(r.getLong(0), good = true, r.getString(1), wire, ts, null, null, None, null)
-          else bad("SizeViolation", ThriftPayload.toStringRepr(rec).take(maxBytes / 10), wire.length,
-            if (rec.body == null) SplitBatch.GetNotSplittable else SplitBatch.PostNotSplit))
+    * One typed `mapPartitions` over the envelope columns with one thrift
+    * [[ThriftPayload.Serializer]] per partition: no Catalyst projection
+    * to plan and generate code for at every trigger. It decides with the
+    * edge's per-request functions ([[HttpEdge]]) and gives the rows of
+    * [[payloads]]' columns. No exchange on a stream ([[Spread]] is the
+    * identity there), so it runs inside the streaming plan
+    * ([[graft.CollectorApp.start]]) as well as over a batch. [[goodLeg]]
+    * and [[badLeg]] are its two legs. */
+  def route(env: DataFrame, cfg: CollectorConfig): DataFrame =
+    Spread(env).select(RouteCols.map(col): _*)
+      .mapPartitions { rows =>
+        val build = new PayloadBuilder(cfg)
+        rows.flatMap(build.route)
+      }(Encoders.product[Routed]).toDF()
+
+  /** The envelope columns [[route]] reads, in [[PayloadBuilder]]'s order. */
+  private val RouteCols = Seq("event_id", "timestamp_ms", "querystring", "method", "path",
+    "body", "content_type", "user_agent", "referer", "hostname", "remote_ip",
+    "sp_anonymous", "cookie_sp", "cookie_dnt", "headers")
+
+  /** [[route]]'s per-partition state and its per-envelope decision. */
+  private final class PayloadBuilder(cfg: CollectorConfig) {
+    private val ser = new ThriftPayload.Serializer
+    private val collector = cfg.collectorName
+    private val maxBytes = cfg.maxBytes
+
+    def route(r: Row): Option[Routed] = {
+      def s(i: Int): String = r.getString(i)
+      val id = r.getLong(0)
+      val ts = r.getLong(1)
+      val qs = new HttpEdge.Qs(s(2))
+      def bad(kind: String, prefix: String, size: Long, reason: String) =
+        Some(Routed(id, good = false, null, null, ts, kind, prefix, Some(size), reason))
+      val anon = !r.isNullAt(11)
+      val path = s(4)
+      val remoteIp = s(10)
+      val cookieSp = s(12)
+      if (!qs.valid)
+        bad("GenericError", qs.raw, qs.raw.getBytes(java.nio.charset.StandardCharsets.UTF_8).length, null)
+      else if (HttpEdge.dnt(cfg, s(13)) || HttpEdge.bounces(cfg, anon, qs, cookieSp, s(3), path))
+        None
+      else {
+        val headers =
+          if (r.isNullAt(14)) null
+          else r.getSeq[String](14).filter(h => h != null && !Redacted.exists(h.startsWith) &&
+            (!anon || !RedactedAnon.exists(h.startsWith)))
+        val rec = PayloadRecord(
+          CollectorConfig.PayloadSchemaUri,
+          if (anon || remoteIp == null) "unknown" else remoteIp,
+          ts, "UTF-8", collector, s(7), s(8),
+          cfg.paths.foldLeft(path) { case (acc, (from, to)) => if (from == path) to else acc },
+          qs.raw, s(5), headers, s(6), s(9),
+          HttpEdge.networkUserId(anon, qs, cookieSp, id, cfg, withBounce = true))
+        val wire = ser(rec)
+        if (wire.length < maxBytes) {
+          val key =
+            if (cfg.useIpAsPartitionKey && !anon && remoteIp != null) remoteIp
+            else HttpEdge.uuidify("pk" + id)
+          Some(Routed(id, good = true, key, wire, ts, null, null, None, null))
+        } else bad("SizeViolation", ThriftPayload.toStringRepr(rec).take(maxBytes / 10), wire.length,
+          if (rec.body == null) SplitBatch.GetNotSplittable else SplitBatch.PostNotSplit)
       }
-    }.toDF()
+    }
   }
 
   /** [[route]]'s good leg: the wire records every good sink ships

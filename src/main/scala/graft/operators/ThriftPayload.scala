@@ -253,19 +253,16 @@ object ThriftPayload {
     "referer_uri", "path", "querystring", "body", "headers", "content_type",
     "hostname", "network_userid")
 
-  /** The one serializer pass behind [[CollectorPipeline.route]],
-    * [[encode]], [[SplitBatch.routeWire]] and [[SplitBatch.badRowFields]]:
+  /** The one serializer pass behind [[encode]], [[SplitBatch.routeWire]]
+    * and [[SplitBatch.badRowFields]] (over [[CollectorPipeline.payloads]]):
     * select `event_id`, the `lead` columns and the 14 record columns
     * (nothing else), read each Row positionally into a [[PayloadRecord]]
     * (a typed encoder's deserialization costs more than the thrift write
     * itself), serialize it with one reused [[Serializer]] per partition —
     * the Spark analog of the reference's thread-local TSerializer — and
     * hand (row, record, wire bytes) to the per-partition function `mk`
-    * builds. A row whose `schema_uri` is null carries no CollectorPayload
-    * (route's malformed-querystring rows): it reaches `f` with a null
-    * record and null wire bytes. Narrow, and inside a streaming plan
-    * too ([[Spread]] is the identity there); `lead` column `i` is at row
-    * position `1 + i`. */
+    * builds. Narrow ([[Spread]] rebalances a batch input); `lead` column
+    * `i` is at row position `1 + i`. */
   private[operators] def payloadPass[T <: Product : TypeTag](payloads: DataFrame, lead: String*)(
       mk: () => (Row, PayloadRecord, Array[Byte]) => Iterator[T]): Dataset[T] = {
     implicit val enc: org.apache.spark.sql.Encoder[T] = Encoders.product[T]
@@ -277,14 +274,11 @@ object ThriftPayload {
         val f = mk()
         it.flatMap { r =>
           def s(i: Int): String = r.getString(at + i)
-          if (r.isNullAt(at)) f(r, null, null)
-          else {
-            val rec = PayloadRecord(
-              s(0), s(1), r.getLong(at + 2), s(3), s(4), s(5), s(6), s(7), s(8), s(9),
-              if (r.isNullAt(at + 10)) null else r.getSeq[String](at + 10),
-              s(11), s(12), s(13))
-            f(r, rec, ser(rec))
-          }
+          val rec = PayloadRecord(
+            s(0), s(1), r.getLong(at + 2), s(3), s(4), s(5), s(6), s(7), s(8), s(9),
+            if (r.isNullAt(at + 10)) null else r.getSeq[String](at + 10),
+            s(11), s(12), s(13))
+          f(r, rec, ser(rec))
         }
       }
   }

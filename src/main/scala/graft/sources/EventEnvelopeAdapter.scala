@@ -215,19 +215,22 @@ object EventEnvelopeAdapter {
 
   /** Raw header lines as stored in payload.headers (reference
     * `CollectorService.scala:466-478`); includes Remote-Address, which the
-    * header filter must always strip. */
+    * header filter must always strip. Only the present headers: the
+    * `concat` of a one-element array per present line, which Spark
+    * generates code for (a higher-order `filter` over `array(...)` it
+    * does not). */
   def headers: Column = {
     val parts = Seq(
       concat(lit("Host: "), hostname),
       concat(lit("User-Agent: "), userAgent),
-      when(referer.isNotNull, concat(lit("Referer: "), referer)),
-      when(remoteIp.isNotNull, concat(lit("X-Forwarded-For: "), remoteIp)),
-      when(remoteIp.isNotNull, concat(lit("Remote-Address: "), remoteIp)),
-      when(cookieSp.isNotNull, concat(lit("Cookie: sp="), cookieSp)),
-      when(contentType.isNotNull, contentType),
+      concat(lit("Referer: "), referer),
+      concat(lit("X-Forwarded-For: "), remoteIp),
+      concat(lit("Remote-Address: "), remoteIp),
+      concat(lit("Cookie: sp="), cookieSp),
+      contentType,
     )
-    // array() keeps nulls; compact them so the array only has present headers
-    filter(array(parts: _*), h => h.isNotNull)
+    val none = typedLit(Seq.empty[String])
+    concat(parts.map(h => when(h.isNotNull, array(h)).otherwise(none)): _*)
   }
 
   /** The full envelope DataFrame: one projection over the events scan, so

@@ -31,7 +31,9 @@ final case class EdgeRequest(
     spAnonymous: Option[String],
     cookies: Map[String, String],
     headers: Seq[String]) {
-  def path: String = rawUri.takeWhile(c => c != '?' && c != '#')
+  lazy val path: String = rawUri.takeWhile(c => c != '?' && c != '#')
+  /** The querystring, extracted and parsed once for every decision. */
+  lazy val qs: HttpEdge.Qs = new HttpEdge.Qs(HttpEdge.querystring(rawUri).orNull)
 }
 
 /** status / headers (ordered, repeatable names) / body bytes. */
@@ -62,7 +64,15 @@ object HttpEdge {
   val PixelBytes: Array[Byte] = java.util.Base64.getDecoder
     .decode("R0lGODlhAQABAPAAAP///wAAACH5BAEAAAAALAAAAAABAAEAAAICRAEAOw==")
 
-  // ---- querystring (P2/P3/F7, as CollectorPipeline's columns) ----
+  // ---- per-request fields (P2/P3/P6/F1/F2/F7) ----
+  //
+  // The one Scala implementation of the decisions the stored payload and
+  // the response share: the edge answers with them and
+  // `CollectorPipeline.route` builds each payload with them. They give
+  // what `CollectorPipeline`'s column definitions give on every input
+  // (the columns stay the oracle-checked definition): the regex tests are
+  // `Matcher.find(0)`, which is Spark's `rlike`, so a `$` also matches
+  // before a trailing line terminator.
 
   private val QsRe = Pattern.compile("^[^?]*\\?([^#]*)(?:#.*)?$")
 
@@ -76,66 +86,99 @@ object HttpEdge {
   private val TokenRe =
     Pattern.compile("^[A-Za-z0-9_.~%+-]+(=[A-Za-z0-9_.~%+:/-]*)?$")
 
-  /** F7, as `CollectorPipeline.qsValid` (split keeps trailing empties,
-    * exactly like Spark's two-arg `split`). */
-  def qsValid(qs: Option[String]): Boolean = qs match {
-    case None | Some("") => true
-    case Some(s) => s.split("&", -1).forall(t => TokenRe.matcher(t).matches())
+  /** One request's querystring (`raw`, null when absent), split once. */
+  final class Qs(val raw: String) {
+    // split keeps trailing empties, exactly like Spark's two-arg `split`
+    private val tokens =
+      if (raw == null || raw.isEmpty) Array.empty[String] else raw.split("&", -1)
+
+    /** F7, as `CollectorPipeline.qsValid`: absent or empty parses; else
+      * every `&`-token must match the token pattern. */
+    val valid: Boolean = tokens.forall(t => TokenRe.matcher(t).find(0))
+
+    /** P3, as `CollectorPipeline.qp`: `element_at(str_to_map(qs, "&",
+      * "="), key)` under LAST_WIN (entries split on the FIRST `=`), null
+      * when the querystring is malformed or the key is unset or bare. */
+    def param(key: String): String = {
+      var i = if (valid) tokens.length - 1 else -1
+      while (i >= 0) {
+        val t = tokens(i)
+        val eq = t.indexOf('=')
+        if ((if (eq < 0) t.length else eq) == key.length && t.startsWith(key))
+          return if (eq < 0) null else t.substring(eq + 1)
+        i -= 1
+      }
+      null
+    }
   }
 
-  /** P3, as `str_to_map(qs, "&", "=")` under LAST_WIN: entries split
-    * on the FIRST `=`, bare keys map to null (absent here). */
-  def qsMap(qs: String): Map[String, String] =
-    qs.split("&", -1).foldLeft(Map.empty[String, String]) { (acc, entry) =>
-      val kv = entry.split("=", 2)
-      acc + (kv(0) -> (if (kv.length < 2) null else kv(1)))
+  private val Hex = "0123456789abcdef".toCharArray
+  private val Md5 = ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
+
+  /** Deterministic UUID, as `CollectorPipeline.uuidify`: the lowercase
+    * md5 hex of the UTF-8 bytes as 8-4-4-4-12. */
+  def uuidify(s: String): String = {
+    val h = Md5.get.digest(s.getBytes(StandardCharsets.UTF_8))
+    val c = new Array[Char](36)
+    var j = 0
+    for (i <- 0 until 16) {
+      if (i == 4 || i == 6 || i == 8 || i == 10) { c(j) = '-'; j += 1 }
+      c(j) = Hex((h(i) >> 4) & 0xf); c(j + 1) = Hex(h(i) & 0xf); j += 2
+    }
+    new String(c)
+  }
+
+  /** F1, as `CollectorPipeline.dntSuppressed`: DNT tracking is on and the
+    * DNT cookie value (null when absent) matches the configured regex. */
+  def dnt(cfg: CollectorConfig, cookie: String): Boolean =
+    cfg.dntEnabled && cookie != null && cfg.dntPattern.matcher(cookie).find(0)
+
+  /** P6, as `CollectorPipeline.networkUserId` (`withBounce` false) and
+    * `networkUserIdWithBounce`: the nil UUID when anonymous; else the
+    * `nuid` param, else the `sp` cookie (null when absent), else under an
+    * enabled bounce the fallback id when the marker param is present,
+    * else a deterministic id from the event id. */
+  def networkUserId(anon: Boolean, qs: Qs, cookieSp: String, eventId: Long,
+      cfg: CollectorConfig, withBounce: Boolean): String =
+    if (anon) CollectorConfig.NilUuid
+    else {
+      val nuid = qs.param("nuid")
+      if (nuid != null) nuid
+      else if (cookieSp != null) cookieSp
+      else if (withBounce && cfg.bounceEnabled && qs.param(cfg.bounceParamName) != null)
+        cfg.bounceFallbackNuid
+      else uuidify("nuid-gen" + eventId)
     }
 
-  /** `qp`: a single param, None when the querystring is malformed/absent
-    * or the key unset (null-valued bare keys also read as None — matches
-    * `element_at` returning SQL NULL). */
-  def qp(qs: Option[String], key: String): Option[String] =
-    if (!qsValid(qs)) None
-    else qs.flatMap(s => qsMap(s).get(key)).flatMap(Option(_))
-
-  /** Deterministic UUID, as `CollectorPipeline.uuidify`. */
-  def uuidify(s: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(s.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-${h.substring(16, 20)}-${h.substring(20, 32)}"
-  }
+  /** F2, as `CollectorPipeline.bounceSuppressed`: does a fresh user's
+    * request on a pixel-expected, non-redirect route (`pixelExpected &&
+    * !redirect`: off `/r/`, a pixel path or GET/HEAD) bounce? A null
+    * path or method (hostile envelope rows only) makes the column
+    * predicate SQL NULL, which drops the row like a bounce: it counts as
+    * one here. */
+  def bounces(cfg: CollectorConfig, anon: Boolean, qs: Qs, cookieSp: String,
+      method: String, path: String): Boolean =
+    cfg.bounceEnabled && !anon && qs.valid && qs.param("nuid") == null &&
+      cookieSp == null && qs.param(cfg.bounceParamName) == null &&
+      (path == null || (!isRedirect(path) &&
+        (method == null || method == "GET" || method == "HEAD" || isPixel(path))))
 
   // ---- per-request decisions (F1/F3/P6/P8/F2/F5/S4) ----
 
   def anon(req: EdgeRequest): Boolean = req.spAnonymous.isDefined
 
   def dntSuppressed(req: EdgeRequest, cfg: CollectorConfig): Boolean =
-    cfg.dntEnabled && req.cookies.get(cfg.dntCookieName).exists(v =>
-      Pattern.matches("^(?:" + cfg.dntCookieValue + ")$", v))
+    dnt(cfg, req.cookies.getOrElse(cfg.dntCookieName, null))
 
   /** P6 with the F2 bounce fallback (`networkUserIdWithBounce`). */
   def networkUserId(req: EdgeRequest, cfg: CollectorConfig): String =
-    if (anon(req)) CollectorConfig.NilUuid
-    else {
-      val qs = querystring(req.rawUri)
-      qp(qs, "nuid")
-        .orElse(req.cookies.get(cfg.cookieName))
-        .getOrElse(
-          if (qp(qs, cfg.bounceParamName).isDefined && cfg.bounceEnabled)
-            cfg.bounceFallbackNuid
-          else uuidify("nuid-gen" + req.eventId))
-    }
+    networkUserId(anon(req), req.qs, req.cookies.getOrElse(cfg.cookieName, null),
+      req.eventId, cfg, withBounce = true)
 
   /** P6 as [[setCookieHeader]] uses it (no bounce fallback). */
   def cookieNuid(req: EdgeRequest, cfg: CollectorConfig): String =
-    if (anon(req)) CollectorConfig.NilUuid
-    else {
-      val qs = querystring(req.rawUri)
-      qp(qs, "nuid")
-        .orElse(req.cookies.get(cfg.cookieName))
-        .getOrElse(uuidify("nuid-gen" + req.eventId))
-    }
+    networkUserId(anon(req), req.qs, req.cookies.getOrElse(cfg.cookieName, null),
+      req.eventId, cfg, withBounce = false)
 
   private val OriginScheme = Pattern.compile("^https?://")
 
@@ -226,7 +269,7 @@ object HttpEdge {
     * when disabled; reference CollectorServiceSpec:549-605). */
   def redirect(req: EdgeRequest, cfg: CollectorConfig)
       : (Option[String], Boolean, Option[String]) = {
-    val target = qp(querystring(req.rawUri), "u").flatMap(tryUrlDecode)
+    val target = Option(req.qs.param("u")).flatMap(tryUrlDecode)
     val allowed = target.exists { t =>
       cfg.redirectDomains.isEmpty || {
         val h = targetHost(t)
@@ -288,14 +331,10 @@ object HttpEdge {
     * `/i`/`/ice.png` — and the marker value is the reference's literal
     * `true` (`CollectorService.scala:458`). */
   def bounceLocation(req: EdgeRequest, cfg: CollectorConfig): Option[String] = {
-    val qs = querystring(req.rawUri)
-    val suppressed = cfg.bounceEnabled && !anon(req) && qsValid(qs) &&
-      qp(qs, "nuid").isEmpty && req.cookies.get(cfg.cookieName).isEmpty &&
-      qp(qs, cfg.bounceParamName).isEmpty &&
-      pixelExpected(req) && !isRedirect(req.path)
-    if (!suppressed) None
+    if (!bounces(cfg, anon(req), req.qs, req.cookies.getOrElse(cfg.cookieName, null),
+        req.method, req.path)) None
     else {
-      val prefix = qs.filter(_.nonEmpty).map(_ + "&").getOrElse("")
+      val prefix = Option(req.qs.raw).filter(_.nonEmpty).map(_ + "&").getOrElse("")
       val rel = req.path + "?" + prefix + cfg.bounceParamName + "=true"
       // forwardedProtocolHeader (`CollectorService.scala:444-455`): a
       // valid http/https value in the configured header makes the
@@ -444,10 +483,6 @@ object HttpEdge {
   private def respondTracking(req: EdgeRequest, cfg: CollectorConfig): EdgeResponse = {
     val p = req.path
     val kind = responseKind(req, cfg)
-    // GET on a vendor/version route is pixel-expected in the reference
-    // (`CollectorRoute.scala:115-130`) — same GIF as /i
-    val pixelExpected = isPixel(p) ||
-      ((req.method == "GET" || req.method == "HEAD") && !isRedirect(p))
     val bounce = bounceLocation(req, cfg)
     if (isRedirect(p)) {
       if (kind == "404") EdgeResponse(404, Nil, utf8("404 not found"))
@@ -460,11 +495,14 @@ object HttpEdge {
         }
       }
     } else {
-      val headers = trackingHeaders(req, cfg, pixelExpected, bounce)
+      // GET on a vendor/version route is pixel-expected in the reference
+      // (`CollectorRoute.scala:115-130`) — same GIF as /i
+      val pixel = pixelExpected(req)
+      val headers = trackingHeaders(req, cfg, pixel, bounce)
       bounce match {
         case Some(_) => EdgeResponse(302, headers, Array.emptyByteArray)
         case None =>
-          if (pixelExpected)
+          if (pixel)
             EdgeResponse(200, headers :+ ("Content-Type" -> "image/gif"), PixelBytes)
           else if (kind == "json")
             EdgeResponse(200, headers :+ ("Content-Type" -> "application/json"),
@@ -539,8 +577,7 @@ object HttpEdge {
     * is a drop-in streaming source for [[graft.CollectorApp.start]]. The
     * `cookie_sp` / `cookie_dnt` columns carry the request cookies under
     * the CONFIGURED names (the pipeline reads them positionally). */
-  def envelopeJson(req: EdgeRequest, cfg: CollectorConfig): String = {
-    val qs = querystring(req.rawUri)
+  def envelopeJson(req: EdgeRequest, cfg: CollectorConfig): String =
     "{" +
       s""""event_id":${req.eventId},""" +
       s""""method":${jstr(req.method)},""" +
@@ -558,9 +595,8 @@ object HttpEdge {
       s""""cookie_dnt":${jopt(req.cookies.get(cfg.dntCookieName))},""" +
       s""""headers":[${req.headers.map(jstr).mkString(",")}],""" +
       s""""timestamp_ms":${req.timestampMs},""" +
-      s""""querystring":${jopt(qs)}""" +
+      s""""querystring":${jopt(Option(req.qs.raw))}""" +
       "}"
-  }
 
   /** The envelope schema for `spark.readStream.schema(...).json(spool)`. */
   def envelopeSchema: org.apache.spark.sql.types.StructType = {

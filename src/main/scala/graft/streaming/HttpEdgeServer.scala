@@ -31,9 +31,17 @@ final class EdgeMetrics {
       .add(nanos / 1000L)
   }
 
+  /** Takes back a [[record]] whose response never reached its client. */
+  def retract(method: String, status: Int, nanos: Long): Unit = {
+    counts.get((method, status)).decrement()
+    durationMicros.get(method).add(-(nanos / 1000L))
+  }
+
+  /** The requests counted so far by (method, status); a retracted
+    * request leaves no entry. */
   def requestCounts: Map[(String, Int), Long] = {
     import scala.jdk.CollectionConverters._
-    counts.asScala.map { case (k, v) => k -> v.sum() }.toMap
+    counts.asScala.map { case (k, v) => k -> v.sum() }.filter(_._2 > 0).toMap
   }
 
   def durationMicrosByMethod: Map[String, Long] = {
@@ -285,8 +293,17 @@ final class HttpEdgeServer(
       val noBody = resp.body.isEmpty || req.method == "HEAD"
       ex.sendResponseHeaders(resp.status, if (noBody) -1L else resp.body.length.toLong)
       if (!noBody) ex.getResponseBody.write(resp.body)
-      ex.close()
-      metrics.record(req.method, resp.status, System.nanoTime() - t0)
+      // counted before the close that ends the client's read, so a client
+      // that read its whole response finds it counted; a close that fails
+      // (the peer reset before the body was flushed) takes the count back
+      val nanos = System.nanoTime() - t0
+      metrics.record(req.method, resp.status, nanos)
+      try ex.close()
+      catch {
+        case e: Throwable =>
+          metrics.retract(req.method, resp.status, nanos)
+          throw e
+      }
     } catch {
       case scala.util.control.NonFatal(_) =>
         // a hostile request must never kill the edge (FuzzSpec discipline)
@@ -341,7 +358,9 @@ final class HttpEdgeServer(
     * source ([[SpoolSourceProvider]]) is the `json` file source over the
     * spool that calls [[flush]] before each offset query, so every
     * envelope received before a trigger lands in that trigger's batch
-    * and no flusher thread is needed. */
+    * and no flusher thread is needed. Each batch is packed into one
+    * partition per `spark.sql.files.openCostInBytes` of spool files
+    * ([[SpoolSource.getBatch]]). */
   def stream(spark: SparkSession): DataFrame = {
     HttpEdgeServer.live.put(streamKey, this)
     spark.readStream.format(classOf[SpoolSourceProvider].getName)

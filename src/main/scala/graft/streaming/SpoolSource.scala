@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
-import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
 import org.apache.spark.sql.sources.StreamSourceProvider
@@ -32,10 +32,10 @@ final class SpoolSourceProvider extends StreamSourceProvider {
   }
 }
 
-/** [[FileStreamSource]] with a publish step before each offset query; every
-  * other call goes straight to it. The edge is looked up by key on each
-  * call, so a stopped edge (which published its tail on stop) is simply
-  * no longer asked. */
+/** [[FileStreamSource]] with a publish step before each offset query and a
+  * batch sized by its bytes ([[getBatch]]); every other call goes straight
+  * to it. The edge is looked up by key on each call, so a stopped edge
+  * (which published its tail on stop) is simply no longer asked. */
 private[streaming] final class SpoolSource(files: FileStreamSource, edge: String)
     extends Source with SupportsTriggerAvailableNow {
 
@@ -51,7 +51,29 @@ private[streaming] final class SpoolSource(files: FileStreamSource, edge: String
   }
   override def getDefaultReadLimit: ReadLimit = files.getDefaultReadLimit
   override def reportLatestOffset(): OffsetV2 = files.reportLatestOffset()
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = files.getBatch(start, end)
+
+  /** The file source's batch packed into ⌈bytes / openCostInBytes⌉
+    * partitions, at least one and at most the default parallelism, by a
+    * narrow coalesce (no exchange). `spark.sql.files.openCostInBytes` is
+    * Spark's own estimate of a file open's fixed cost, and the scan gives
+    * each spool file smaller than it a partition of its own: a trigger's
+    * few small files would run one task per file in each leg, each task
+    * paying the write job's fixed cost. So a live batch of a few MB runs
+    * one task per leg, and a backlog or replay batch of at least the
+    * default parallelism times that cost keeps full width. The byte count
+    * is the batch relation's file index, listed already. */
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val batch = files.getBatch(start, end)
+    val qe = batch.queryExecution
+    qe.logical.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+    }.fold(batch) { bytes =>
+      val openCost = qe.sparkSession.sessionState.conf.filesOpenCostInBytes
+      val width = qe.sparkSession.sparkContext.defaultParallelism
+      batch.coalesce(math.min(width.toLong, math.max(1L, (bytes + openCost - 1) / openCost)).toInt)
+    }
+  }
   override def initialOffset(): OffsetV2 = files.initialOffset()
   override def deserializeOffset(json: String): OffsetV2 = files.deserializeOffset(json)
   override def commit(end: OffsetV2): Unit = files.commit(end)

@@ -187,4 +187,41 @@ class CollectorAppSpec extends AnyFunSuite with WallBudget {
       assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
     } finally jobs.close()
   }
+
+  test("a spool micro-batch runs one task per leg when small and full width for a backlog") {
+    import graft.streaming.{EdgeRequest, HttpEdge, SpoolSourceProvider}
+    val cfg = CollectorConfig.testScale
+    val width = spark.sparkContext.defaultParallelism
+    val openCost = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.openCostInBytes"))
+    def dir(p: String) = Files.createTempDirectory(p).toString
+    def pixel(id: Long, body: Option[String]) = EdgeRequest(id, 1700000000000L, "GET",
+      s"/i?e=pv&n=$id", body, None, Some("UA/1.0"), None, "c.example.com", Some("10.0.0.1"),
+      None, None, Map("sp" -> s"sp-$id"), Seq("Host: c.example.com"))
+    /** Tasks of each job the collector query ran over a spool of `files`. */
+    def tasksPerJob(files: Seq[Seq[EdgeRequest]]): Seq[Int] = {
+      val spool = dir("tasks-spool")
+      files.zipWithIndex.foreach { case (reqs, i) =>
+        Files.write(java.nio.file.Paths.get(spool, f"part-$i%05d.jsonl"),
+          reqs.map(HttpEdge.envelopeJson(_, cfg)).mkString("", "\n", "\n").getBytes("UTF-8"))
+      }
+      val jobs = new JobStarts(spark.sparkContext)
+      try {
+        val running = CollectorApp.start(spark,
+          spark.readStream.format(classOf[SpoolSourceProvider].getName)
+            .option("edge", "none").load(spool),
+          cfg, new ParquetDirSink(dir("tasks-good"), "good"), new ParquetDirSink(dir("tasks-bad"), "bad"),
+          dir("tasks-ckpt"), org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        running.query.awaitTermination(120000)
+        jobs.tasksWhere("sql.streaming.queryId", _ == running.query.id.toString)
+      } finally jobs.close()
+    }
+    // three small files, one scan partition each: one task per leg
+    val small = tasksPerJob((0 until 3).map(f => (0 until 50).map(i => pixel(f * 50L + i, None))))
+    assert(small === Seq(1, 1), s"tasks per job: $small")
+    // a backlog of width × openCostInBytes keeps the session's width
+    val body = Some("b" * (openCost / 4).toInt)
+    val backlog = tasksPerJob((0 until 4 * width).map(f => Seq(pixel(f.toLong, body))))
+    assert(backlog === Seq(width, width), s"tasks per job: $backlog")
+  }
 }

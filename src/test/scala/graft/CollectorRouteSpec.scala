@@ -47,20 +47,26 @@ class CollectorRouteSpec extends AnyFunSuite with WallBudget {
   }
 
   test("route's legs equal encode(payloads) gated at maxBytes and generic ∪ size violations") {
-    val env = EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf).cache()
+    // the hostile corpus adds null paths (a NULL bounce predicate under
+    // bounceScale drops the row), null and empty querystrings, bare and
+    // repeated keys, non-ASCII bytes and megabyte bodies
+    val inputs = Seq(
+      "sf" -> EventEnvelopeAdapter.envelopes(spark, TestSpark.Sf).cache(),
+      "hostile" -> spark.createDataFrame(HostileCorpus.corpus).cache())
     try {
-      Seq(
-        "testScale" -> CollectorConfig.testScale,
-        "wireRouteScale" -> CollectorConfig.wireRouteScale,
-        "bounceScale" -> CollectorConfig.bounceScale).foreach { case (name, cfg) =>
+      for ((input, env) <- inputs; (name, cfg) <- Seq(
+          "testScale" -> CollectorConfig.testScale,
+          "wireRouteScale" -> CollectorConfig.wireRouteScale,
+          "bounceScale" -> CollectorConfig.bounceScale)) {
+        val clue = s"$input/$name"
         val (goodBefore, badBefore) = before(env, cfg)
         val (goodAfter, badAfter) = after(env, cfg)
-        assert(goodBefore.nonEmpty && badBefore.map(_._2).toSet === Set("GenericError", "SizeViolation"), name)
-        assert(bag(goodAfter) === bag(goodBefore), name)
-        assert(bag(badAfter) === bag(badBefore), name)
-        assert(CollectorPipeline.badRows(env, cfg).count() === badBefore.size, name)
+        assert(goodBefore.nonEmpty && badBefore.map(_._2).toSet === Set("GenericError", "SizeViolation"), clue)
+        assert(bag(goodAfter) === bag(goodBefore), clue)
+        assert(bag(badAfter) === bag(badBefore), clue)
+        assert(CollectorPipeline.badRows(env, cfg).count() === badBefore.size, clue)
       }
-    } finally env.unpersist()
+    } finally inputs.foreach(_._2.unpersist())
   }
 
   private def envelopes(rows: Row*): DataFrame =
@@ -115,6 +121,16 @@ class CollectorRouteSpec extends AnyFunSuite with WallBudget {
     val noQs = routed(envelopes(pixel(6, null, cookieSp = "sp-6")), cfg)(6)
     assert(noQs.getAs[Boolean]("good"))
     assert(ThriftPayload.deserialize(noQs.getAs[Array[Byte]]("thrift")).querystring === null)
+
+    // rlike is Matcher.find(0), so `$` matches before a trailing newline:
+    // this querystring parses and this DNT cookie suppresses, as the
+    // columns decide
+    val dnt1 = cfg.copy(dntCookieValue = "1")
+    val newline = envelopes(
+      pixel(7, "e=pv&x=1\n", cookieSp = "sp-7"), pixel(8, "e=pv", cookieSp = "sp-8", dnt = "1\n"))
+    val nl = routed(newline, dnt1)
+    assert(nl.keySet === Set(7L) && nl(7).getAs[Boolean]("good"))
+    assert(CollectorPipeline.payloads(newline, dnt1).collect().map(_.getLong(0)).toSet === Set(7L))
   }
 
   test("bad leg JSON: badRowsJson's envelope for generic rows and oversized GETs; " +

@@ -52,6 +52,25 @@ class HttpEdgeSpec extends AnyFunSuite with WallBudget {
     assert(defs.isEmpty, defs.mkString("\n"))
   }
 
+  test("a trailing newline: the edge's querystring and DNT tests follow the columns' rlike") {
+    import graft.streaming.EdgeRequest
+    import org.apache.spark.sql.functions.col
+    val cfg = testScale.copy(dntCookieValue = "1")
+    def setCookie(id: Long, uri: String, cookies: Map[String, String]): Option[String] =
+      HttpEdge.respond(EdgeRequest(id, 1700000000000L, "GET", uri, None, None, None, None,
+        "c.example.com", Some("10.0.0.1"), None, None, cookies, Nil), cfg).header("Set-Cookie")
+    // `x=1\n` is a valid token, so the querystring's nuid names the user
+    assert(setCookie(1, "/i?nuid=abc&x=1\n", Map.empty).exists(_.startsWith("sp=abc; Expires=")))
+    // `1\n` matches ^(?:1)$: DNT, so no cookie
+    assert(setCookie(2, "/i?e=pv", Map("sp-dnt" -> "1\n")) === None)
+    assert(setCookie(3, "/i?e=pv", Map("sp-dnt" -> "1")) === None)
+    assert(setCookie(4, "/i?e=pv", Map("sp-dnt" -> "0")).isDefined)
+    val cols = spark.createDataFrame(Seq(("nuid=abc&x=1\n", "1\n"))).toDF("querystring", "cookie_dnt")
+      .select(CollectorPipeline.qsValid(col("querystring")), CollectorPipeline.dntSuppressed(cfg))
+      .head()
+    assert(cols.getBoolean(0) && cols.getBoolean(1))
+  }
+
   // ---- live socket tests ----
 
   private def rawHttp(
